@@ -9,8 +9,10 @@ move while the wall clock did).
 
 Normalization strips everything that legitimately differs run-to-run or
 machine-to-machine: expression/plan/RDD ids, JIT call sites, the SF
-directory, lambda counters, and huge collected-state literal arrays
-(bloom bitmaps).
+directory, lambda counters, huge collected-state literal arrays (bloom
+bitmaps), and what follows the core count: partition and split counts, and
+in caches materialized at build time, the run-time stage sizes and the
+coalescing reads AQE adds.
 """
 
 from __future__ import annotations
@@ -32,7 +34,60 @@ def normalize_plan(plan: str) -> str:
     plan = re.sub(r" at \S+:\d+", " at <SITE>:0", plan)  # call-site string is JIT-dependent
     # collected-state literals (e.g. bloom bitmap word arrays) are data-dependent
     plan = re.sub(r"\[[0-9,\- ]{500,}\]", "<LIT_ARRAY>", plan)
-    return plan
+    # partition and split counts follow the core count (shuffle.partitions,
+    # default parallelism), so the same code prints a different plan per box
+    plan = re.sub(r", \d+\)(, (?:ENSURE_REQUIREMENTS|REPARTITION_BY_|REBALANCE_PARTITIONS_BY_))", r", N)\1", plan)
+    plan = re.sub(r"RoundRobinPartitioning\(\d+\)", "RoundRobinPartitioning(N)", plan)
+    plan = re.sub(r"splits=Some\(\d+\)", "splits=Some(N)", plan)
+    # run-time sizes of materialized query stages (partial aggregates emit
+    # one row per group per partition)
+    plan = re.sub(r"Statistics\(sizeInBytes=[^)]*\)", "Statistics(N)", plan)
+    return _drop_coalescing_reads(plan)
+
+
+def _drop_coalescing_reads(plan: str) -> str:
+    """Remove the ``AQEShuffleRead`` nodes from the final plans of caches a
+    builder materialized: AQE adds one only when the shuffle's partitions
+    are smaller than its target size, which follows the partition count.
+    The node's child takes its place in the tree, its details block goes,
+    and the operator ids after it close up."""
+    if "AQEShuffleRead" not in plan:
+        return plan
+    lines = plan.split("\n")
+    dropped: set[int] = set()
+    out: list[str] = []
+    i = 0
+    while i < len(lines):
+        if re.match(r"\(\d+\) AQEShuffleRead$", lines[i]):  # details, to its blank line
+            while i < len(lines) and lines[i]:
+                i += 1
+            i += 1
+            continue
+        node = re.search(r"[+:]- AQEShuffleRead \((\d+)\)$", lines[i])
+        if not node:
+            out.append(lines[i])
+            i += 1
+            continue
+        dropped.add(int(node.group(1)))
+        col, marker = node.start(), lines[i][node.start() : node.start() + 3]
+        i += 1
+        # the single child sits 3 columns deeper; its subtree's lines carry
+        # a continuation (blank or ':') where the dropped node's marker was
+        child = True
+        while i < len(lines) and len(lines[i]) > col + 3 and lines[i][col + 1 : col + 3] == "  ":
+            ln = lines[i]
+            out.append(ln[:col] + marker + ln[col + 6 :] if child else ln[: col + 3] + ln[col + 6 :])
+            child = False
+            i += 1
+
+    # operator ids: tree nodes, details headers, and references to a node
+    ids = (
+        r"(?<= \()\d+(?=\)$|\), Statistics\()|(?<=^\()\d+(?=\) )"
+        r"|(?:(?<=Reuses operator id: )|(?<=Hosting operator id = ))\d+"
+    )
+    return re.sub(
+        ids, lambda m: str(int(m[0]) - sum(d < int(m[0]) for d in dropped)), "\n".join(out), flags=re.M
+    )
 
 
 def plan_text(df: DataFrame) -> str:

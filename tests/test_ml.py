@@ -76,6 +76,18 @@ def test_house_pipeline_beats_majority_class(spark, sf_dir):
     assert m["macro_f1"] >= 0.8
 
 
+def test_house_pipeline_rerun_reuses_generated_code(spark, sf_dir):
+    """A repeated q49 run must reuse the classes its first run generated:
+    the pipeline generates ~120 distinct classes, more than Spark's default
+    codegen cache holds, so an undersized cache recompiles all of them."""
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = codegen.METRIC_COMPILATION_TIME()
+    _metrics(spark, sf_dir, "q49_house_pipeline")
+    before = compiles.getCount()
+    _metrics(spark, sf_dir, "q49_house_pipeline")
+    assert compiles.getCount() - before <= 10
+
+
 def test_stratified_split_preserves_class_ratios(spark, sf_dir):
     from pyspark.sql import functions as F
 
