@@ -153,7 +153,7 @@ def save_ivf_index_from_store(
     from ..catalog import load_table
     from ..plans.similarity import as_double, norm
 
-    from ..streaming.events import _IVF_ASSIGN_SCHEMA, _read_store_deltas
+    from ..streaming.events import _IVF, _part
 
     center_rows = (
         spark.read.schema("cell int, centroid array<double>")
@@ -161,9 +161,7 @@ def save_ivf_index_from_store(
         .orderBy("cell")
         .collect()
     )
-    assign = _read_store_deltas(
-        spark, os.path.join(store_dir, "assign"), _IVF_ASSIGN_SCHEMA
-    ).select("vec_id", "cell")
+    assign = _part(_IVF, "assign").fold(spark, store_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("e")
     )
@@ -233,14 +231,12 @@ def save_pq_index_from_store(
     No encode runs — the store's codes are already bit-identical to a
     batch rebuild (the shared _pq_encode_frame kernel), so the promoted
     index serves q200's exact ranking."""
-    from ..streaming.events import _PQ_CODES_SCHEMA, _read_store_deltas
+    from ..streaming.events import _PQ, _part
 
     books = spark.read.schema("m int, k int, centroid array<double>").parquet(
         os.path.join(store_dir, "books")
     )
-    codes = _read_store_deltas(
-        spark, os.path.join(store_dir, "codes"), _PQ_CODES_SCHEMA
-    ).select("vec_id", "codes", "nc")
+    codes = _part(_PQ, "codes").fold(spark, store_dir)
     n_m = books.agg(F.countDistinct("m").alias("n")).collect()[0]["n"]
     dim_row = books.orderBy("m", "k").first()
     books.coalesce(1).write.mode("overwrite").parquet(

@@ -16,6 +16,8 @@ model — SURVEY §4 notes there is no reference behavior to copy.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -23,6 +25,7 @@ from pyspark.sql import types as T
 
 from ..catalog import _stored_as_nanos, epoch_us, normalize_events_ts
 from ..functions.stats import dec_sum
+from ..plans.cdc import CDC_OPS_SCHEMA, latest_cdc_ops
 
 
 def stream_events(spark: SparkSession, sf_dir: str, watermark: str = "1 hour") -> DataFrame:
@@ -109,7 +112,6 @@ def view_click_join_stream(
         "click_id",
         (epoch_us(F.col("c_ts")) - epoch_us(F.col("v_ts"))).alias("gap_us"),
     )
-
 
 
 def _drain_available_now(q, timeout_sec: int, label: str) -> None:
@@ -227,6 +229,430 @@ def run_stream_upsert(
     )
 
 
+# ---------------------------------------------------------------------------
+# Staged stores. Every foreachBatch store below stages one ``batch_id=N``
+# delta per micro-batch (per part, for a store with sub-dirs), and its folds
+# read the deltas back. Each compactable store is declared ONCE as a tuple
+# of _Part (the declarations follow the helpers): a part names its sub-dir
+# (None for a flat store, whose store dir IS the partitioned dir), its read
+# schema and its merge. Compaction, crash healing, the floor remap and the
+# fold reads all derive from that declaration.
+#
+# Compaction merges each part's deltas into ONE delta living at the part's
+# MAX existing batch_id (see _compact_partitioned) and records the highest
+# folded id in the store's floor marker; every later ingest remaps its raw
+# id above that floor (see _effective_batch_id).
+#
+# CONTRACT: compact only while no stream is writing the store AND the last
+# drain completed (all batches committed). A replayed batch overwrites its
+# own batch_id dir; compacting an uncommitted batch's delta would
+# double-count it on replay, and the dup-flow keeper lookup's
+# `batch_id < N` filter would see batch N's own compacted keepers. Between
+# availableNow drains — the natural maintenance window — both hazards are
+# impossible.
+#
+# BOUNDED DOUBLE-COUNT CAVEAT: the floor remap trades replay idempotence for
+# history safety on exactly ONE pathological schedule — an uncommitted batch
+# whose delta was compacted anyway (a violation of the window contract
+# above: crash between the delta write and the checkpoint commit,
+# compaction run before the stream resumes). The replayed raw id then lands
+# ABOVE the floor instead of overwriting its own (now folded) delta, so
+# ADDITIVE stores (counts/volume/basket/attribution-revenue/revenue-partials/
+# decode-health/dup-flow edges) count that one batch twice; latest-wins
+# folds (CDC) and unique-row folds (LSH state) are unchanged. This schedule
+# cannot manufacture a dup-flow SELF-edge (the replayed keeper counted as a
+# dup of itself): the keeper store records keeper_doc_id and the ingest
+# drops any dup row whose doc IS the stored keeper — only the bounded edge
+# double-count remains. The alternative — skipping raw ids at-or-below a
+# folded high-water mark — cannot distinguish this replay from a
+# fresh-checkpoint restart (both re-present low raw ids) without
+# introspecting the engine's checkpoint, and would silently DROP data on
+# the restart path; a bounded duplicate of one batch is the better failure.
+# Honoring the maintenance-window contract makes the schedule impossible in
+# the first place.
+# ---------------------------------------------------------------------------
+
+
+class _Part(NamedTuple):
+    """One staged part of a store: ``batch_id=N`` deltas under ``sub`` (the
+    store dir itself when None), read with ``schema``, folded by ``merge``."""
+
+    sub: str | None
+    schema: str
+    merge: Callable[[DataFrame], DataFrame]
+
+    def path(self, store_dir: str) -> str:
+        return store_dir if self.sub is None else os.path.join(store_dir, self.sub)
+
+    def read(self, spark: SparkSession, store_dir: str) -> DataFrame:
+        return _read_store_deltas(spark, self.path(store_dir), self.schema)
+
+    def fold(self, spark: SparkSession, store_dir: str) -> DataFrame:
+        return self.merge(self.read(spark, store_dir))
+
+
+def _columns(schema: str) -> list[str]:
+    return [c.split()[0] for c in schema.split(", ")]
+
+
+def _summed(sub: str | None, schema: str, *keys: str) -> _Part:
+    """A part of additive deltas: the merge sums every non-key column per key."""
+    values = [c for c in _columns(schema) if c not in keys]
+    return _Part(
+        sub, schema, lambda df: df.groupBy(*keys).agg(*[F.sum(c).alias(c) for c in values])
+    )
+
+
+def _rewritten(sub: str | None, schema: str) -> _Part:
+    """A part whose rows are unique across deltas: the merge rewrites them."""
+    return _Part(sub, schema, lambda df: df.select(*_columns(schema)))
+
+
+def _part(parts: tuple[_Part, ...], sub: str | None = None) -> _Part:
+    return next(p for p in parts if p.sub == sub)
+
+
+def _stage(df: DataFrame, delta_root: str, batch_id: int) -> str:
+    """Write one micro-batch's delta to ``delta_root/batch_id=N`` and return
+    its path. The write overwrites, so a replayed batch replaces its own
+    delta: at-least-once in, exactly-once effect on the store."""
+    path = os.path.join(delta_root, f"batch_id={batch_id}")
+    df.write.mode("overwrite").parquet(path)
+    return path
+
+
+def _read_store_deltas(spark: SparkSession, store_dir: str, schema: str) -> DataFrame:
+    """The one staged-store delta reader: heal a crashed compaction, then
+    read every ``batch_id=*`` delta with the DECLARED schema plus the
+    ``batch_id`` partition column. The explicit schema matters because an
+    empty micro-batch stages a part-file-less batch_id dir, and schema
+    INFERENCE over zero parquet files raises; the declared schema reads it
+    as simply empty. A store that has never been written returns an empty
+    frame of the same shape, so every fold's zero-batch contract is
+    uniform."""
+    _recover_compaction(store_dir)
+    full = schema + ", batch_id bigint"
+    if not os.path.exists(store_dir):
+        return spark.createDataFrame([], full)
+    return (
+        spark.read.schema(full)
+        .option("basePath", store_dir)
+        .parquet(f"{store_dir}/batch_id=*")
+    )
+
+
+def _monitor_log(spark: SparkSession, log_dir: str, schema: str) -> DataFrame:
+    """Shared append-only evaluation-log reader (see _read_store_deltas),
+    ordered by batch then any key columns."""
+    cols = _columns(schema)
+    return _read_store_deltas(spark, log_dir, schema).select(
+        "batch_id", *cols
+    ).orderBy("batch_id", *[c for c in cols if c in ("key", "source")])
+
+
+_FLOOR_MARKER = "_compaction_floor"
+
+
+def _floor_marker_path(store_dir: str) -> str:
+    """Where a store's compaction-floor marker lives: INSIDE the store
+    directory, for every store shape. Stores with sub-dirs keep it in the
+    stable parent beside the swapped sub-dirs; flat stores keep it beside
+    their ``batch_id=*`` partition dirs — the leading underscore makes
+    Spark's parquet reader skip it, and _compact_partitioned copies it into
+    the rebuilt directory BEFORE the rename-rename swap, so the marker
+    always travels with the store (a directory-level copy, move, or backup
+    cannot detach the floor from the data it protects)."""
+    return os.path.join(store_dir, _FLOOR_MARKER)
+
+
+def _read_compaction_floor(store_dir: str, flat: bool = False) -> int | None:
+    """The highest batch_id folded by the last compaction (None before the
+    first compaction). ``flat`` additionally checks the legacy sibling
+    location (``<store>._compaction_floor``) that older flat stores carry."""
+    try:
+        with open(_floor_marker_path(store_dir)) as f:
+            return int(f.read().strip())
+    except (OSError, ValueError):
+        pass
+    if flat:
+        try:
+            with open(store_dir.rstrip(os.sep) + "." + _FLOOR_MARKER) as f:
+                return int(f.read().strip())
+        except (OSError, ValueError):
+            pass
+    return None
+
+
+def _write_compaction_floor(store_dir: str, floor: int) -> None:
+    path = _floor_marker_path(store_dir)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(str(floor))
+    os.replace(tmp, path)
+
+
+def _effective_batch_id(store_dir: str, batch_id: int, parts: tuple[_Part, ...]) -> int:
+    """Heal every part of a declared store, then remap a raw micro-batch id
+    above the store's compaction floor.
+
+    Compaction folds history into the MAX existing batch_id, so a replay of
+    that raw id — crash between the delta write and the checkpoint commit
+    with a compaction run before the stream resumes, or a fresh-checkpoint
+    restart whose ids begin again at 0 — would otherwise mode('overwrite')
+    the single folded delta and silently destroy all prior history. Once a
+    floor exists, EVERY raw id maps to floor+1+raw_id: injective and
+    strictly monotone, so replayed and continuing batches can never collide
+    with each other or with the compacted delta. Before the first
+    compaction this is the identity.
+
+    Healing comes first: a compaction that died between its two renames
+    leaves a part's live dir missing with `.old` holding all history; an
+    ingest that recreated the live dir would make the next
+    _recover_compaction delete the backup — silent history loss."""
+    for part in parts:
+        _recover_compaction(part.path(store_dir))
+    floor = _read_compaction_floor(store_dir, flat=parts[0].sub is None)
+    return batch_id if floor is None else floor + 1 + batch_id
+
+
+def _recover_compaction(store_dir: str) -> None:
+    """Heal a compaction interrupted between its two renames: if the live
+    name is missing but the `.old` backup exists, restore the backup (and
+    drop the half-promoted build). Called by _compact_partitioned, by
+    _effective_batch_id and by _read_store_deltas (so by every store fold),
+    so a crashed compaction can never read as an empty store — at worst the
+    next compaction redoes the merge."""
+    import shutil
+
+    old = store_dir + ".old"
+    if os.path.exists(store_dir):
+        if os.path.exists(old):  # completed swap, stale backup
+            shutil.rmtree(old, ignore_errors=True)
+    elif os.path.exists(old):
+        os.rename(old, store_dir)
+        shutil.rmtree(store_dir + ".compacting", ignore_errors=True)
+
+
+def _compact_partitioned(spark: SparkSession, store_dir: str, part: _Part) -> int | None:
+    """Fold every batch_id delta of one part and swap the part's dir for a
+    single-delta copy living at the MAX existing batch_id — not 0, so a
+    stream mistakenly restarted on a FRESH checkpoint (ids restart at 0)
+    overwrites at most an empty low-id delta instead of the whole
+    compacted history. The swap is rename-rename with a `.old` backup; a
+    crash between the renames is healed by _recover_compaction (run this
+    in the maintenance window — no concurrent readers/writers)."""
+    import re
+    import shutil
+
+    live = part.path(store_dir)
+    _recover_compaction(live)
+    if not os.path.exists(live):
+        return None
+    ids = [int(m.group(1)) for d in os.listdir(live) if (m := re.match(r"batch_id=(\d+)$", d))]
+    target = max(ids) if ids else 0
+    tmp = live + ".compacting"
+    shutil.rmtree(tmp, ignore_errors=True)
+    _stage(part.fold(spark, store_dir), tmp, target)
+    # carry the floor marker into the rebuilt dir BEFORE the swap: a crash
+    # between the swap and the caller's _write_compaction_floor must leave
+    # the previous floor in place, never strip it (an unfloored store would
+    # let a folded-id replay overwrite the compacted delta).
+    marker = _floor_marker_path(live)
+    if os.path.exists(marker):
+        shutil.copyfile(marker, _floor_marker_path(tmp))
+    old = live + ".old"
+    shutil.rmtree(old, ignore_errors=True)
+    os.rename(live, old)
+    os.rename(tmp, live)
+    shutil.rmtree(old, ignore_errors=True)
+    return target
+
+
+def _compact(spark: SparkSession, store_dir: str, parts: tuple[_Part, ...]) -> None:
+    """Compact every part of a declared store (maintenance window only, see
+    the section contract), then record the highest folded id as its floor."""
+    floors = [
+        floor for p in parts if (floor := _compact_partitioned(spark, store_dir, p)) is not None
+    ]
+    if floors:
+        _write_compaction_floor(store_dir, max(floors))
+
+
+# -- the compactable stores ---------------------------------------------------
+# Unless a part says otherwise, deltas are additive (summed per key — the
+# section's double-count caveat applies) or unique rows (rewritten as is).
+
+_KEPT = (_summed(None, "source string, kept_docs bigint, kept_tokens bigint", "source"),)
+_VOLUME = (
+    _summed(
+        None,
+        "source string, lang string, n_docs bigint, n_tokens bigint, n_chars bigint",
+        "source",
+        "lang",
+    ),
+)
+_FERT = (
+    _summed(None, "source string, n_docs bigint, norm_chars bigint, n_words bigint", "source"),
+)
+_SHINGLES = (_summed(None, "sh bigint, source string, cnt bigint", "sh", "source"),)
+_HEALTH = (
+    _summed(
+        None,
+        "source string, fmt string, status string, n_docs bigint",
+        "source",
+        "fmt",
+        "status",
+    ),
+)
+# latest op per key: associative under the unique-seq contract
+_CDC = (_Part(None, CDC_OPS_SCHEMA, latest_cdc_ops),)
+# one row per doc at its current (min) label: an idempotent min/max fold,
+# exact under any schedule (no double-count caveat)
+_ND_LABELS = (
+    _Part(
+        None,
+        "doc_id bigint, source string, nt bigint, label bigint",
+        lambda df: df.groupBy("doc_id")
+        .agg(F.max("source").alias("source"), F.max("nt").alias("nt"), F.min("label").alias("label"))
+        .select("doc_id", "source", "nt", "label"),
+    ),
+)
+# keepers: fp is unique across deltas by construction
+_DUP_FLOW = (
+    _rewritten("keepers", "fp string, keeper_source string, keeper_doc_id long"),
+    _summed(
+        "edges",
+        "fp string, keeper_source string, dup_source string, n_docs bigint",
+        "fp",
+        "keeper_source",
+        "dup_source",
+    ),
+)
+# state: one row per ingested doc; pairs: each unordered pair lives in the
+# one delta of the batch that completed it
+_LSH = (
+    _rewritten(
+        "state", "doc_id bigint, sh array<string>, bands array<struct<band:int,key:bigint>>"
+    ),
+    _rewritten("pairs", "doc_a bigint, doc_b bigint, jac double"),
+)
+_BASKET = (
+    _summed("pairs", "p1 bigint, p2 bigint, n_both bigint", "p1", "p2"),
+    _summed("items", "p bigint, n_p bigint", "p"),
+    _summed("baskets", "n_orders bigint"),
+)
+# the monitor/ evaluation log is not a part: it is never compacted, and the
+# shared floor keeps later log ids clear of existing rows
+_REVENUE = (_summed("partials", "day_idx int, u_partial bigint", "day_idx"),)
+# clicks keep the per-user MAX key, which suffices under the time-ordered
+# contract: keys grow with ts, so a user's newest click is the only one any
+# FUTURE purchase's [lo, hi) range can pick — if the newest is older than
+# lo, every discarded older click was too
+_ATTRIBUTION = (
+    _summed("revenue", "campaign bigint, n_purchases bigint, rev_units bigint", "campaign"),
+    _Part(
+        "clicks",
+        "user_id bigint, click_key decimal(38,0)",
+        lambda df: df.groupBy("user_id").agg(F.max("click_key").alias("click_key")),
+    ),
+)
+# assign/codes: one row per vec_id (the anti-join ingest contract); the
+# log/ evaluation record is kept as written
+_IVF = (
+    _rewritten("assign", "vec_id bigint, cell int"),
+    _summed("counts", "cell int, n_vecs bigint", "cell"),
+)
+_PQ = (
+    _rewritten("codes", "vec_id bigint, codes array<int>, nc double"),
+    _summed("counts", "m int, code int, n_vecs bigint", "m", "code"),
+)
+
+
+def _psi_counts(key_cols: list[str]) -> tuple[_Part, ...]:
+    """The (keyed or unkeyed) PSI bin-counts store: additive per bin."""
+    schema = ", ".join([f"{k} string" for k in key_cols] + ["bin int", "n bigint"])
+    return (_summed(None, schema, *key_cols, "bin"),)
+
+
+def compact_kept_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the kept-mass store (dedup_adjusted_budget_from_store)."""
+    _compact(spark, store_dir, _KEPT)
+
+
+def compact_volume_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the report-card volume store."""
+    _compact(spark, store_dir, _VOLUME)
+
+
+def compact_fert_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the scorecard's fertility store."""
+    _compact(spark, store_dir, _FERT)
+
+
+def compact_shingle_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the shingle-occurrence store — the store that earns
+    compaction: its deltas grow with distinct shingles per batch, and the
+    fold collapses every shingle's history to one row."""
+    _compact(spark, store_dir, _SHINGLES)
+
+
+def compact_decode_health_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the decode-health counts store."""
+    _compact(spark, store_dir, _HEALTH)
+
+
+def compact_cdc_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the CDC op store to one latest-op-per-key delta."""
+    _compact(spark, store_dir, _CDC)
+
+
+def compact_near_dup_labels_store(spark: SparkSession, labels_dir: str) -> None:
+    """Compact the near-dup label store to one row per doc."""
+    _compact(spark, labels_dir, _ND_LABELS)
+
+
+def compact_counts_store(
+    spark: SparkSession, store_dir: str, key_cols: list[str] | None = None
+) -> None:
+    """Compact a (keyed or unkeyed) PSI bin-counts store."""
+    _compact(spark, store_dir, _psi_counts(list(key_cols or [])))
+
+
+def compact_dup_flow_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the dup-flow store (keepers and edges)."""
+    _compact(spark, store_dir, _DUP_FLOW)
+
+
+def compact_lsh_dedup_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the LSH near-dup store (state and pairs)."""
+    _compact(spark, store_dir, _LSH)
+
+
+def compact_basket_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the basket-count store (pairs, items and baskets)."""
+    _compact(spark, store_dir, _BASKET)
+
+
+def compact_revenue_monitor_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the revenue-monitor store's day partials."""
+    _compact(spark, store_dir, _REVENUE)
+
+
+def compact_attribution_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the attribution store (revenue and clicks)."""
+    _compact(spark, store_dir, _ATTRIBUTION)
+
+
+def compact_ivf_assign_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the IVF ingest store (assignments and cell counts)."""
+    _compact(spark, store_dir, _IVF)
+
+
+def compact_pq_code_store(spark: SparkSession, store_dir: str) -> None:
+    """Compact the PQ ingest store (codes and code counts)."""
+    _compact(spark, store_dir, _PQ)
+
+
 def run_stream_tdigest(
     events: DataFrame,
     key_col: str,
@@ -253,11 +679,7 @@ def run_stream_tdigest(
     from ..operators.sketches import tdigest_partials
 
     def append_partials(batch: DataFrame, batch_id: int) -> None:
-        (
-            tdigest_partials(batch, key_col, value_col, delta)
-            .write.mode("overwrite")
-            .parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
-        )
+        _stage(tdigest_partials(batch, key_col, value_col, delta), store_dir, batch_id)
 
     _run_foreach_batch(
         events, append_partials, checkpoint_dir, timeout_sec, "run_stream_tdigest"
@@ -269,9 +691,11 @@ def sketch_store_quantiles(
 ) -> DataFrame:
     """Answer per-key quantiles from an incremental sketch store (KBs),
     merging all appended partials — the 100 TB corpus itself is not read."""
-    from ..operators.sketches import tdigest_finalize
+    from ..operators.sketches import _SKETCH_SCHEMA, tdigest_finalize
 
-    partials = spark.read.parquet(store_dir).select("key", "means", "weights")
+    partials = _read_store_deltas(spark, store_dir, _SKETCH_SCHEMA).select(
+        "key", "means", "weights"
+    )
     return tdigest_finalize(partials, probs, delta)
 
 
@@ -292,11 +716,7 @@ def run_stream_heavy_hitters(
     from ..operators.sketches import heavy_hitters_partials
 
     def append_partials(batch: DataFrame, batch_id: int) -> None:
-        (
-            heavy_hitters_partials(batch, items_col, capacity)
-            .write.mode("overwrite")
-            .parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
-        )
+        _stage(heavy_hitters_partials(batch, items_col, capacity), store_dir, batch_id)
 
     _run_foreach_batch(
         stream, append_partials, checkpoint_dir, timeout_sec, "run_stream_heavy_hitters"
@@ -307,9 +727,9 @@ def hh_store_topk(spark: SparkSession, store_dir: str, k: int = 20) -> DataFrame
     """Certified top-k from an incremental heavy-hitters store: merges all
     appended truncated-counter partials; batch_id comes back as a partition
     column from the ``batch_id=N`` directory layout."""
-    from ..operators.sketches import heavy_hitters_finalize
+    from ..operators.sketches import _HH_PARTIAL_SCHEMA, heavy_hitters_finalize
 
-    partials = spark.read.parquet(store_dir)
+    partials = _read_store_deltas(spark, store_dir, _HH_PARTIAL_SCHEMA)
     return heavy_hitters_finalize(partials, k, partial_id_cols=("batch_id", "pid"))
 
 
@@ -353,13 +773,10 @@ def run_stream_dq_audit(
     own batch_id directory, so at-least-once delivery still sums to
     exactly-once counts.
     """
-    import os
-
     from ..operators.quality import check_predicates
 
     def audit(batch: DataFrame, batch_id: int) -> None:
-        report = check_predicates(batch, checks)
-        report.write.mode("overwrite").parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
+        _stage(check_predicates(batch, checks), store_dir, batch_id)
 
     _run_foreach_batch(
         events, audit, checkpoint_dir, timeout_sec, "run_stream_dq_audit"
@@ -395,9 +812,7 @@ def run_stream_integrity_audit(
             F.count(F.lit(1)).alias("n_rows"),
             F.count(F.when(F.col(fk_col).isNull(), 1)).alias("n_null_fk"),
         )
-        counts.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "counts", f"batch_id={batch_id}")
-        )
+        _stage(counts, os.path.join(store_dir, "counts"), batch_id)
         orphans = (
             batch.filter(F.col(fk_col).isNotNull())
             .join(
@@ -408,9 +823,7 @@ def run_stream_integrity_audit(
             .groupBy(F.col(fk_col).alias("fk"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        orphans.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "orphans", f"batch_id={batch_id}")
-        )
+        _stage(orphans, os.path.join(store_dir, "orphans"), batch_id)
 
     _run_foreach_batch(
         facts, audit, checkpoint_dir, timeout_sec, "run_stream_integrity_audit"
@@ -420,7 +833,9 @@ def run_stream_integrity_audit(
 def integrity_report_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """One-row fold of the integrity store: total rows, null FKs, orphan
     rows, distinct orphan keys — reads only the staged partials (counts
-    are 1 row/batch; orphans are linear in actual violations)."""
+    are 1 row/batch; orphans are linear in actual violations). Orphan keys
+    are read as bigint: every q206 star-schema FK is an integer key, and
+    int keys widen on read."""
     counts = (
         _read_store_deltas(
             spark, os.path.join(store_dir, "counts"), "n_rows bigint, n_null_fk bigint"
@@ -430,20 +845,12 @@ def integrity_report_from_store(spark: SparkSession, store_dir: str) -> DataFram
             F.sum("n_null_fk").cast("bigint").alias("n_null_fk"),
         )
     )
-    odir = os.path.join(store_dir, "orphans")
-    if os.path.exists(odir):
-        orph = (
-            spark.read.option("basePath", odir)
-            .parquet(f"{odir}/batch_id=*")
-            .agg(
-                F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_orphans"),
-                F.countDistinct("fk").cast("bigint").alias("n_orphan_keys"),
-            )
-        )
-    else:
-        orph = counts.sparkSession.createDataFrame(
-            [(0, 0)], "n_orphans bigint, n_orphan_keys bigint"
-        )
+    orph = _read_store_deltas(
+        spark, os.path.join(store_dir, "orphans"), "fk bigint, n bigint"
+    ).agg(
+        F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_orphans"),
+        F.countDistinct("fk").cast("bigint").alias("n_orphan_keys"),
+    )
     return counts.crossJoin(F.broadcast(orph))
 
 
@@ -493,31 +900,26 @@ def _dup_flow_ingest(
     compaction floor — see _effective_batch_id — so a replay of a folded
     raw id can never overwrite the compacted keeper/edge history).
 
-    ``kept_dir`` (round-10, the ingest-suite path): additionally stage a
+    ``kept_dir`` (the ingest-suite path): additionally stage a
     per-source (kept_docs, kept_tokens) partial over THIS batch's new
     keepers — the batch must then carry ``n_toks``. Kept mass is additive
     across batches (each fp group's keeper is new exactly once), which is
     what lets dedup_adjusted_budget_from_store re-plan the token budget
     incrementally without ever re-reading the corpus."""
     spark = batch.sparkSession
-    keepers_dir = os.path.join(store_dir, "keepers")
-    # heal a crashed compaction BEFORE writing (see _effective_batch_id)
-    _recover_compaction(keepers_dir)
-    _recover_compaction(os.path.join(store_dir, "edges"))
-    eff_id = _effective_batch_id(store_dir, batch_id)
+    eff_id = _effective_batch_id(store_dir, batch_id, _DUP_FLOW)
     w = Window.partitionBy("fp").orderBy("doc_id")
     cols = ["doc_id", "source", "fp"] + (["n_toks"] if kept_dir is not None else [])
     ranked = batch.select(*cols).withColumn(
         "rn", F.row_number().over(w)
     )
-    # keeper_doc_id (round 11): which document created the keeper entry —
-    # read as null from pre-r11 deltas (explicit schema over parquet
-    # missing the column), which simply disables the self-edge guard for
-    # that row, matching the old behavior
+    # keeper_doc_id: which document created the keeper entry — read as null
+    # from deltas written before the column existed (explicit schema over
+    # parquet missing the column), which simply disables the self-edge
+    # guard for that row
     prior = (
-        _read_store_deltas(
-            spark, keepers_dir, "fp string, keeper_source string, keeper_doc_id long"
-        )
+        _part(_DUP_FLOW, "keepers")
+        .read(spark, store_dir)
         .where(F.col("batch_id") < eff_id)
         .select(
             "fp",
@@ -534,20 +936,23 @@ def _dup_flow_ingest(
         new_keeper_rows = hit.where(
             F.col("store_keeper").isNull() & (F.col("rn") == 1)
         )
-        new_keeper_rows.select(
-            "fp",
-            F.col("source").alias("keeper_source"),
-            F.col("doc_id").alias("keeper_doc_id"),
-        ).write.mode("overwrite").parquet(
-            os.path.join(keepers_dir, f"batch_id={eff_id}")
+        _stage(
+            new_keeper_rows.select(
+                "fp",
+                F.col("source").alias("keeper_source"),
+                F.col("doc_id").alias("keeper_doc_id"),
+            ),
+            os.path.join(store_dir, "keepers"),
+            eff_id,
         )
         if kept_dir is not None:
-            k_eff = _effective_batch_id(kept_dir, batch_id, flat=True)
-            new_keeper_rows.groupBy("source").agg(
-                F.count(F.lit(1)).cast("bigint").alias("kept_docs"),
-                F.sum("n_toks").cast("bigint").alias("kept_tokens"),
-            ).write.mode("overwrite").parquet(
-                os.path.join(kept_dir, f"batch_id={k_eff}")
+            _stage(
+                new_keeper_rows.groupBy("source").agg(
+                    F.count(F.lit(1)).cast("bigint").alias("kept_docs"),
+                    F.sum("n_toks").cast("bigint").alias("kept_tokens"),
+                ),
+                kept_dir,
+                _effective_batch_id(kept_dir, batch_id, _KEPT),
             )
         # within-batch keeper source per fp (the rn==1 row's source)
         batch_first = hit.where(F.col("rn") == 1).select(
@@ -556,14 +961,14 @@ def _dup_flow_ingest(
         dup_rows = (
             hit.join(batch_first, "fp")
             .where(F.col("store_keeper").isNotNull() | (F.col("rn") > 1))
-            # self-edge guard (VERDICT r10 item 7): a document can never be
-            # a duplicate of ITSELF. The only way doc_id equals the store
-            # keeper's doc id is the bounded-double-count replay schedule
-            # (this batch's keeper delta was compacted before its commit,
-            # so the replay sees its OWN keeper entry below the floor) —
-            # drop exactly those rows, so the accepted one-batch edge
-            # double-count can never also manufacture a self-edge. Null
-            # store_keeper_doc (pre-r11 delta) keeps the old behavior.
+            # self-edge guard: a document can never be a duplicate of
+            # ITSELF. The only way doc_id equals the store keeper's doc id
+            # is the bounded-double-count replay schedule (this batch's
+            # keeper delta was compacted before its commit, so the replay
+            # sees its OWN keeper entry below the floor) — drop exactly
+            # those rows, so the accepted one-batch edge double-count can
+            # never also manufacture a self-edge. A null store_keeper_doc
+            # (a delta without the column) keeps every row.
             .where(
                 F.col("store_keeper_doc").isNull()
                 | (F.col("doc_id") != F.col("store_keeper_doc"))
@@ -577,9 +982,7 @@ def _dup_flow_ingest(
         edges = dup_rows.groupBy("fp", "keeper_source", "dup_source").agg(
             F.count(F.lit(1)).alias("n_docs")
         )
-        edges.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "edges", f"batch_id={eff_id}")
-        )
+        _stage(edges, os.path.join(store_dir, "edges"), eff_id)
     finally:
         hit.unpersist()
 
@@ -640,14 +1043,10 @@ def dup_flow_matrix_from_store(spark: SparkSession, store_dir: str) -> DataFrame
     """q146's (keeper_source, dup_source, n_docs, n_groups) matrix from an
     incremental dup-flow store — read only the edge deltas (linear in
     duplicates), never the corpus."""
-    edges_dir = os.path.join(store_dir, "edges")
-    edges = _read_store_deltas(
-        spark,
-        edges_dir,
-        "fp string, keeper_source string, dup_source string, n_docs bigint",
-    )
     return (
-        edges.groupBy("keeper_source", "dup_source")
+        _part(_DUP_FLOW, "edges")
+        .read(spark, store_dir)
+        .groupBy("keeper_source", "dup_source")
         .agg(
             F.sum("n_docs").alias("n_docs"),
             F.countDistinct("fp").alias("n_groups"),
@@ -663,21 +1062,14 @@ def dup_flow_matrix_from_store(spark: SparkSession, store_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _counts_read_schema(key_cols: list[str]) -> str:
-    return ", ".join([f"{k} string" for k in key_cols] + ["bin int", "n bigint"])
-
-
 def _stage_bin_counts(
     binned: DataFrame, batch_id: int, store_dir: str, key_cols: list[str]
-) -> None:
-    # batch_id arrives pre-remapped above the store's compaction floor
-    # (see _effective_batch_id) by every caller.
-    (
-        binned.groupBy(*key_cols, "bin")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(store_dir, f"batch_id={batch_id}"))
-    )
+) -> int:
+    """Stage one batch's bin counts under its effective batch id (remapped
+    above the store's compaction floor), which it returns."""
+    eff_id = _effective_batch_id(store_dir, batch_id, _psi_counts(key_cols))
+    _stage(binned.groupBy(*key_cols, "bin").agg(F.count(F.lit(1)).alias("n")), store_dir, eff_id)
+    return eff_id
 
 
 def _psi_fold(
@@ -705,7 +1097,8 @@ def _psi_fold(
     # zero micro-batches processed: empty fold -> ref-only bins, n_cur = 0
     # via the full_outer + fill below (uniform empty-store contract)
     cur = (
-        _read_store_deltas(spark, store_dir, _counts_read_schema(key_cols))
+        _part(_psi_counts(key_cols))
+        .read(spark, store_dir)
         .groupBy(*key_cols, "bin")
         .agg(F.sum("n").alias("n_cur"))
     )
@@ -758,8 +1151,7 @@ def _monitor_ingest(
     (the log dir follows the same effective id so a fresh-checkpoint
     restart can't overwrite a genuine old log row either)."""
     spark = batch.sparkSession
-    batch_id = _effective_batch_id(counts_dir, batch_id, flat=True)
-    _stage_bin_counts(binner(batch), batch_id, counts_dir, key_cols)
+    batch_id = _stage_bin_counts(binner(batch), batch_id, counts_dir, key_cols)
     rows = _psi_fold(spark, counts_dir, ref_counts, key_cols, 1e-9).collect()
     if key_cols:
         per: dict[tuple, list[float]] = {}
@@ -780,9 +1172,7 @@ def _monitor_ingest(
         n_cur = int(sum(r["n_cur"] for r in rows))
         out = [(psi_total, n_cur, psi_total >= psi_alert)]
         schema = "psi_total double, n_cur bigint, alert boolean"
-    spark.createDataFrame(out, schema).write.mode("overwrite").parquet(
-        os.path.join(log_dir, f"batch_id={batch_id}")
-    )
+    _stage(spark.createDataFrame(out, schema), log_dir, batch_id)
 
 
 def _keyed_binner(ref_edges: DataFrame, n_bins: int):
@@ -829,7 +1219,7 @@ def run_stream_psi_counts(
             batch.select(
                 bin_expr(F.col("v"), F.lit(lo), F.lit(width), n_bins).alias("bin")
             ),
-            _effective_batch_id(store_dir, batch_id, flat=True),
+            batch_id,
             store_dir,
             [],
         )
@@ -886,14 +1276,9 @@ def ks_from_digest_store(
         merge_partial_rows,
     )
 
-    _recover_compaction(store_dir)
+    store = _read_store_deltas(spark, store_dir, _SKETCH_SCHEMA)
     if not os.path.exists(store_dir):
         return float("nan"), 0
-    # explicit schema: an empty micro-batch stages a part-file-less
-    # batch_id dir (tdigest_partials yields nothing for zero rows), and
-    # schema inference over zero parquet files would raise instead of
-    # reading empty — the _psi_fold hardening contract
-    store = spark.read.schema(_SKETCH_SCHEMA).parquet(store_dir)
     if key is not None:
         store = store.where(F.col("key") == key)
     else:
@@ -913,36 +1298,6 @@ def ks_from_digest_store(
         float(ks_from_digests(ref_m, ref_w, cur_m, cur_w)),
         int(round(float(cur_w.sum()))),
     )
-
-
-def _read_store_deltas(spark: SparkSession, store_dir: str, schema: str) -> DataFrame:
-    """Shared staged-store delta reader (ADVICE r9 fold — this pattern was
-    repeated verbatim at every ``*_from_store`` / prior-state site): heal a
-    crashed compaction, then read every ``batch_id=*`` delta with the
-    DECLARED schema plus the ``batch_id`` partition column. The explicit
-    schema is the PSI-store lesson — an empty micro-batch stages a
-    part-file-less batch_id dir, and schema INFERENCE over zero parquet
-    files raises; the declared schema reads it as simply empty. A store
-    that has never been written returns an empty frame of the same shape,
-    so every fold's zero-batch contract is uniform."""
-    _recover_compaction(store_dir)
-    full = schema + ", batch_id bigint"
-    if not os.path.exists(store_dir):
-        return spark.createDataFrame([], full)
-    return (
-        spark.read.schema(full)
-        .option("basePath", store_dir)
-        .parquet(f"{store_dir}/batch_id=*")
-    )
-
-
-def _monitor_log(spark: SparkSession, log_dir: str, schema: str) -> DataFrame:
-    """Shared append-only evaluation-log reader (see _read_store_deltas),
-    ordered by batch then any key columns."""
-    cols = [c.split()[0] for c in schema.split(", ")]
-    return _read_store_deltas(spark, log_dir, schema).select(
-        "batch_id", *cols
-    ).orderBy("batch_id", *[c for c in cols if c in ("key", "source")])
 
 
 def run_stream_drift_monitor(
@@ -999,21 +1354,21 @@ def drift_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def _volume_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None:
+def _volume_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> int:
     """One micro-batch of the volume store (see run_stream_volume_counts):
     stage per-(source, lang) additive partials under batch_id=N (remapped
-    above the compaction floor — see _effective_batch_id)."""
-    eff_id = _effective_batch_id(store_dir, batch_id, flat=True)
-    (
-        batch.groupBy("source", "lang")
-        .agg(
+    above the compaction floor — see _effective_batch_id); returns N."""
+    eff_id = _effective_batch_id(store_dir, batch_id, _VOLUME)
+    _stage(
+        batch.groupBy("source", "lang").agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_toks").cast("bigint").alias("n_tokens"),
             F.sum("n_chars").cast("bigint").alias("n_chars"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(store_dir, f"batch_id={eff_id}"))
+        ),
+        store_dir,
+        eff_id,
     )
+    return eff_id
 
 
 def run_stream_volume_counts(
@@ -1059,7 +1414,7 @@ def run_stream_volume_monitor(
     k: int = 3,
     timeout_sec: int = 120,
 ) -> None:
-    """Volume-QUIET alert monitor (VERDICT r9 item 4) — the report-card
+    """Volume-QUIET alert monitor — the report-card
     volume store's operational twin, mirroring the decode-health monitor:
     per micro-batch, ingest the batch's (source, lang) volume partials
     into ``store_dir/counts`` (the exact staged-delta contract of
@@ -1090,10 +1445,9 @@ def run_stream_volume_monitor(
         from ..functions import text as X
 
         spark = batch.sparkSession
-        eff_id = _effective_batch_id(counts_dir, batch_id, flat=True)
         # raw documents schema in (the run_stream_ingest_suite contract);
         # token counts derived once per batch, same as the suite
-        _volume_ingest(
+        eff_id = _volume_ingest(
             batch.select(
                 "source",
                 "lang",
@@ -1105,12 +1459,8 @@ def run_stream_volume_monitor(
         )
         # this batch's per-source totals from its own just-staged partials
         own = (
-            _read_store_deltas(
-                spark,
-                counts_dir,
-                "source string, lang string, n_docs bigint, n_tokens bigint, "
-                "n_chars bigint",
-            )
+            _part(_VOLUME)
+            .read(spark, counts_dir)
             .where(F.col("batch_id") == eff_id)
             .groupBy("source")
             .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
@@ -1149,9 +1499,7 @@ def run_stream_volume_monitor(
                 "source", "n_docs", "share", "quiet", "quiet_streak", "alert"
             )
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(log_dir, f"batch_id={eff_id}")
-        )
+        _stage(out, log_dir, eff_id)
 
     _run_foreach_batch(
         docs, monitor, checkpoint_dir, timeout_sec, "run_stream_volume_monitor"
@@ -1182,22 +1530,13 @@ def report_card_from_store(
     whoever arrives first, each member of a multi-copy group is counted
     exactly once for its own source — so the fold equals batch q157 under
     any arrival order, not just id-ordered drops (pytest pins both)."""
-    vol = _read_store_deltas(
-        spark,
-        vol_store_dir,
-        "source string, lang string, n_docs bigint, n_tokens bigint, n_chars bigint",
-    )
-    agg = vol.groupBy("source").agg(
+    agg = _part(_VOLUME).read(spark, vol_store_dir).groupBy("source").agg(
         F.sum("n_docs").cast("bigint").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("n_tokens"),
         F.sum("n_chars").cast("bigint").alias("sum_chars"),
         F.countDistinct("lang").alias("n_langs"),
     )
-    edges = _read_store_deltas(
-        spark,
-        os.path.join(flow_store_dir, "edges"),
-        "fp string, keeper_source string, dup_source string, n_docs bigint",
-    )
+    edges = _part(_DUP_FLOW, "edges").read(spark, flow_store_dir)
     dup_side = edges.groupBy(F.col("dup_source").alias("source")).agg(
         F.sum("n_docs").cast("bigint").alias("n_dup")
     )
@@ -1225,9 +1564,6 @@ def report_card_from_store(
     )
 
 
-_KEPT_SCHEMA = "source string, kept_docs bigint, kept_tokens bigint"
-
-
 def dedup_adjusted_budget_from_store(
     spark: SparkSession,
     vol_store_dir: str,
@@ -1251,12 +1587,8 @@ def dedup_adjusted_budget_from_store(
     if budget_tokens is None:
         from ..plans.curation import _BUDGET_TOKENS as budget_tokens
     raw = (
-        _read_store_deltas(
-            spark,
-            vol_store_dir,
-            "source string, lang string, n_docs bigint, n_tokens bigint, "
-            "n_chars bigint",
-        )
+        _part(_VOLUME)
+        .read(spark, vol_store_dir)
         .groupBy("source")
         .agg(
             F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -1264,7 +1596,8 @@ def dedup_adjusted_budget_from_store(
         )
     )
     eff = (
-        _read_store_deltas(spark, kept_store_dir, _KEPT_SCHEMA)
+        _part(_KEPT)
+        .read(spark, kept_store_dir)
         .groupBy("source")
         .agg(F.sum("kept_tokens").cast("bigint").alias("eff_tokens"))
     )
@@ -1272,26 +1605,6 @@ def dedup_adjusted_budget_from_store(
 
     j = raw.join(eff, "source", "left").na.fill(0, ["eff_tokens"])
     return budget_plan_columns(j, budget_tokens)
-
-
-def compact_kept_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the kept-mass store: per-source kept docs/tokens are
-    additive (each fp group's keeper is staged exactly once across the
-    stream — additive ⇒ the section contract's one-batch double-count
-    caveat applies to an uncommitted delta compacted outside the
-    maintenance window). dedup_adjusted_budget_from_store reads
-    identically before and after."""
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        _KEPT_SCHEMA,
-        lambda df: df.groupBy("source").agg(
-            F.sum("kept_docs").alias("kept_docs"),
-            F.sum("kept_tokens").alias("kept_tokens"),
-        ),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
 
 
 def run_stream_ingest_suite(
@@ -1321,7 +1634,7 @@ def run_stream_ingest_suite(
     idempotence; a crash between the writes is healed by the replay
     overwriting every directory for that batch_id.
 
-    ``near_dup=True`` (round 11) widens the same single pass to the
+    ``near_dup=True`` widens the same single pass to the
     near-dup stores: the cached batch additionally drives the LSH ingest
     (``root_dir/lsh``) and the cluster-label store (``root_dir/labels``)
     — shingling and banding run once per drop alongside the fingerprint
@@ -1329,7 +1642,7 @@ def run_stream_ingest_suite(
     exact-fp budget, NEAR-dup budget) maintains itself from one read of
     the crawl. Returns two extra dirs in that case.
 
-    ``scorecard=True`` (round 11) further widens the pass to the three
+    ``scorecard=True`` further widens the pass to the three
     stores the live curation scorecard needs beyond flow+volume —
     fertility sums (``root_dir/fert``), decode-health counts
     (``root_dir/health``) and shingle-occurrence counts
@@ -1389,10 +1702,6 @@ def _enriched_docs_batch(batch: DataFrame, with_text: bool) -> DataFrame:
     )
 
 
-_FERT_SCHEMA = "source string, n_docs bigint, norm_chars bigint, n_words bigint"
-_SHINGLE_SCHEMA = "sh bigint, source string, cnt bigint"
-
-
 def _scorecard_ingest(
     batch: DataFrame, batch_id: int, fert_dir: str, health_dir: str, sh_dir: str
 ) -> None:
@@ -1419,10 +1728,8 @@ def _scorecard_ingest(
     from ..operators.multimodal import attach_media_mix
 
     nn = batch.filter(F.col("text").isNotNull())
-    eff_f = _effective_batch_id(fert_dir, batch_id, flat=True)
-    (
-        nn.groupBy("source")
-        .agg(
+    _stage(
+        nn.groupBy("source").agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(F.length(X.normalize(F.col("text"))).cast("bigint"))
             .cast("bigint")
@@ -1431,25 +1738,22 @@ def _scorecard_ingest(
             # size(tokens) on non-null text) — reuse its n_toks column
             # instead of a second tokenize pass
             F.sum("n_toks").cast("bigint").alias("n_words"),
-        )
-        .write.mode("overwrite")
-        .parquet(os.path.join(fert_dir, f"batch_id={eff_f}"))
+        ),
+        fert_dir,
+        _effective_batch_id(fert_dir, batch_id, _FERT),
     )
     _decode_health_ingest(
         attach_media_mix(batch.select("doc_id", "source")), batch_id, health_dir
     )
-    eff_s = _effective_batch_id(sh_dir, batch_id, flat=True)
-    (
+    _stage(
         nn.select(
             "source",
-            F.explode_outer(
-                X.shingles_of_tokens(X.tokens(F.col("text")), 3)
-            ).alias("s"),
+            F.explode_outer(X.shingles_of_tokens(X.tokens(F.col("text")), 3)).alias("s"),
         )
         .groupBy(F.xxhash64("s").alias("sh"), "source")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(sh_dir, f"batch_id={eff_s}"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
+        sh_dir,
+        _effective_batch_id(sh_dir, batch_id, _SHINGLES),
     )
 
 
@@ -1475,7 +1779,8 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
         spark, os.path.join(root_dir, "volume"), os.path.join(root_dir, "flow")
     ).select("source", "n_docs", "n_tokens", "dup_rate")
     fert = (
-        _read_store_deltas(spark, os.path.join(root_dir, "fert"), _FERT_SCHEMA)
+        _part(_FERT)
+        .read(spark, os.path.join(root_dir, "fert"))
         .groupBy("source")
         .agg(
             (
@@ -1483,9 +1788,7 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
             ).alias("chars_per_word")
         )
     )
-    health = _read_store_deltas(
-        spark, os.path.join(root_dir, "health"), _HEALTH_COUNT_SCHEMA
-    )
+    health = _part(_HEALTH).read(spark, os.path.join(root_dir, "health"))
     med = health.groupBy("source").agg(
         (
             F.sum(F.when(F.col("status") != "ok", F.col("n_docs")).otherwise(0))
@@ -1493,11 +1796,7 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
             / F.sum("n_docs")
         ).alias("malformed_share")
     )
-    sh = (
-        _read_store_deltas(spark, os.path.join(root_dir, "shingles"), _SHINGLE_SCHEMA)
-        .groupBy("sh", "source")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    sh = _part(_SHINGLES).fold(spark, os.path.join(root_dir, "shingles"))
     df_tab = sh.groupBy("sh").agg(F.sum("cnt").alias("df"))
     nov = (
         sh.join(df_tab, "sh")
@@ -1516,42 +1815,6 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
         .join(nov, "source", "left")
     )
     return scorecard_columns(j)
-
-
-def compact_fert_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the fertility store: per-source sums are additive;
-    curation_scorecard_from_stores reads identically before and after.
-    Additive ⇒ the section contract's one-batch double-count caveat
-    applies to an uncommitted delta compacted outside the maintenance
-    window."""
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        _FERT_SCHEMA,
-        lambda df: df.groupBy("source").agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("norm_chars").alias("norm_chars"),
-            F.sum("n_words").alias("n_words"),
-        ),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
-
-
-def compact_shingle_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the shingle-occurrence store: (sh, source) counts merge by
-    summation — the df fold and novelty shares read identically before
-    and after. This is the store that earns compaction: its deltas grow
-    with distinct shingles per batch, and the fold collapses every
-    shingle's history to one row."""
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        _SHINGLE_SCHEMA,
-        lambda df: df.groupBy("sh", "source").agg(F.sum("cnt").alias("cnt")),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
 
 
 _SCORECARD_LOG_SCHEMA = (
@@ -1588,8 +1851,8 @@ def run_stream_scorecard_monitor(
     aggregate dominating — O(distinct shingles), so a paging cadence at
     large corpus scale wants compact_shingle_store run on a maintenance
     schedule to keep the fold at one row per shingle) + an O(sources)
-    log row set. The log stages by effective batch id like every monitor
-    — replay idempotent, the degraded flag computed against
+    log row set. The log (never compacted) stages by raw batch id —
+    replay idempotent, the degraded flag computed against
     strictly-earlier rows only."""
 
     flow_dir = os.path.join(root_dir, "flow")
@@ -1609,20 +1872,18 @@ def run_stream_scorecard_monitor(
             _scorecard_ingest(enriched, batch_id, fert_dir, health_dir, sh_dir)
         finally:
             enriched.unpersist()
-        eff_id = _effective_batch_id(log_dir, batch_id, flat=True)
         sc = curation_scorecard_from_stores(spark, root_dir).select(
             "source", "n_flags", "recommendation", _rec_rank().alias("rk")
         )
         prev = (
             _read_store_deltas(spark, log_dir, _SCORECARD_LOG_SCHEMA)
-            .where(F.col("batch_id") < eff_id)
+            .where(F.col("batch_id") < batch_id)
             .groupBy("source")
             .agg(F.max_by("recommendation", "batch_id").alias("recommendation"))
             .select("source", _rec_rank().alias("prev_rk"))
         )
-        (
-            sc.join(prev, "source", "left")
-            .select(
+        _stage(
+            sc.join(prev, "source", "left").select(
                 "source",
                 "n_flags",
                 "recommendation",
@@ -1630,9 +1891,9 @@ def run_stream_scorecard_monitor(
                 (F.col("rk") > F.coalesce(F.col("prev_rk"), F.col("rk"))).alias(
                     "degraded"
                 ),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(log_dir, f"batch_id={eff_id}"))
+            ),
+            log_dir,
+            batch_id,
         )
 
     _run_foreach_batch(
@@ -1670,12 +1931,7 @@ def run_stream_psi_counts_by_key(
     binner = _keyed_binner(ref_edges, n_bins)
 
     def bin_counts(batch: DataFrame, batch_id: int) -> None:
-        _stage_bin_counts(
-            binner(batch),
-            _effective_batch_id(store_dir, batch_id, flat=True),
-            store_dir,
-            ["key"],
-        )
+        _stage_bin_counts(binner(batch), batch_id, store_dir, ["key"])
 
     _run_foreach_batch(
         values, bin_counts, checkpoint_dir, timeout_sec, "run_stream_psi_counts_by_key"
@@ -1745,19 +2001,12 @@ def drift_monitor_log_by_key(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental MinHash-LSH near-dup detection at ingest (VERDICT r5 item 7):
-# the streaming twin of batch q36 (plans/dedup.py lsh_jaccard_pairs). The
+# Incremental MinHash-LSH near-dup detection at ingest: the streaming twin of batch q36 (plans/dedup.py lsh_jaccard_pairs). The
 # q87/q146 fingerprint stores catch EXACT duplicates at ingest; a 100-TB
 # pipeline also near-dups at ingest — each arriving crawl drop's docs must
 # be checked against every previously ingested doc without rescanning the
 # corpus. Band buckets make that an equi-join against stored band keys.
 # ---------------------------------------------------------------------------
-
-_LSH_STATE_SCHEMA = (
-    "doc_id bigint, sh array<string>, bands array<struct<band:int,key:bigint>>"
-)
-_LSH_PAIRS_SCHEMA = "doc_a bigint, doc_b bigint, jac double"
-
 
 def _lsh_dedup_ingest(
     batch: DataFrame, batch_id: int, store_dir: str, labels_dir: str | None = None
@@ -1769,28 +2018,20 @@ def _lsh_dedup_ingest(
     replay — both writes are per-batch overwrites, and the state lookup
     filters batch_id < N so a replay never joins its own earlier write).
 
-    Compaction safety (ADVICE r6, collision-proofed ADVICE r7): once a
-    compaction has folded history into the max batch_id and recorded it in
-    the `_compaction_floor` marker, EVERY subsequent batch id is remapped
-    to floor+1+batch_id — uniformly, not only ids at or below the floor.
-    Uniform remap makes effective ids injective and strictly monotone in
-    the raw id (the earlier below-floor-only remap let a replayed/fresh
-    batch b collide with a genuine continuing batch floor+1+b, and
-    mode('overwrite') would silently destroy one delta). So: a replay of a
-    folded id (crash between write and checkpoint commit, or a
-    fresh-checkpoint restart at 0) lands above the compacted delta, its
-    state filter still sees the compacted history, and already-ingested
-    doc_ids are dropped by the anti-join — a no-op instead of a
-    double-ingest. Across compactions the floor only grows and the
-    maintenance-window contract folds every existing delta first, so no
-    live partition ever sits above a newer floor's remap range."""
+    Compaction safety: after a compaction every batch id is remapped
+    above the floor (see _effective_batch_id), so a replay of a folded id
+    (crash between write and checkpoint commit, or a fresh-checkpoint
+    restart at 0) lands above the compacted delta, its state filter still
+    sees the compacted history, and already-ingested doc_ids are dropped
+    by the anti-join — a no-op instead of a double-ingest. Across
+    compactions the floor only grows and the maintenance-window contract
+    folds every existing delta first, so no live partition ever sits
+    above a newer floor's remap range."""
     from ..functions import text as X
     from ..plans.dedup import _JACCARD_T, band_key_structs
 
     spark = batch.sparkSession
-    state_dir = os.path.join(store_dir, "state")
-    _recover_compaction(os.path.join(store_dir, "pairs"))  # heal crashed compaction
-    eff_id = _effective_batch_id(store_dir, batch_id)
+    eff_id = _effective_batch_id(store_dir, batch_id, _LSH)
     # null-shingle docs (null text) can never verify; drop like batch q36
     cur = (
         batch.select("doc_id", X.shingles(F.col("text"), 3).alias("sh"))
@@ -1798,7 +2039,8 @@ def _lsh_dedup_ingest(
         .withColumn("bands", F.array(*band_key_structs(F.col("sh"))))
     )
     state = (
-        _read_store_deltas(spark, state_dir, _LSH_STATE_SCHEMA)
+        _part(_LSH, "state")
+        .read(spark, store_dir)
         .where(F.col("batch_id") < eff_id)
         .drop("batch_id")
     )
@@ -1851,13 +2093,10 @@ def _lsh_dedup_ingest(
         .select("doc_a", "doc_b", (common.cast("double") / union).alias("jac"))
         .filter(F.col("jac") >= _JACCARD_T)
     )
-    pairs_delta = os.path.join(store_dir, "pairs", f"batch_id={eff_id}")
-    pairs.write.mode("overwrite").parquet(pairs_delta)
-    cur.select("doc_id", "sh", "bands").write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"batch_id={eff_id}")
-    )
+    pairs_delta = _stage(pairs, os.path.join(store_dir, "pairs"), eff_id)
+    _stage(cur.select("doc_id", "sh", "bands"), os.path.join(store_dir, "state"), eff_id)
     if labels_dir is not None:
-        # near-dup cluster-label maintenance (round 11): the batch must
+        # near-dup cluster-label maintenance: the batch must
         # carry (source, n_toks). Pairs are read BACK from the staged
         # delta — already materialized, so the candidate join never
         # recomputes, and a folded-id replay (empty cur ⇒ empty delta)
@@ -1866,7 +2105,7 @@ def _lsh_dedup_ingest(
             batch.select("doc_id", "source", "n_toks"),
             batch_id,
             labels_dir,
-            spark.read.schema(_LSH_PAIRS_SCHEMA).parquet(pairs_delta),
+            spark.read.schema(_part(_LSH, "pairs").schema).parquet(pairs_delta),
         )
 
 
@@ -1916,15 +2155,16 @@ def near_dup_pairs_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Batch q36's (doc_a, doc_b, jac) folded from the LSH ingest store —
     reads only the pair deltas (linear in near-dups), never the corpus."""
     return (
-        _read_store_deltas(spark, os.path.join(store_dir, "pairs"), _LSH_PAIRS_SCHEMA)
+        _part(_LSH, "pairs")
+        .read(spark, store_dir)
         .select("doc_a", "doc_b", "jac")
         .orderBy("doc_a", "doc_b")
     )
 
 
 # ---------------------------------------------------------------------------
-# Incremental NEAR-dup cluster labels + kept-mass accounting (VERDICT r10
-# item 3): the exact-fp kept store nets out only byte-identical
+# Incremental NEAR-dup cluster labels + kept-mass accounting: the exact-fp
+# kept store nets out only byte-identical
 # duplication, so its budget OVERSTATES each source's effective tokens vs
 # batch q226 (which nets near-dup clusters via connected components). The
 # LSH ingest already completes every near-dup pair at ingest; this store
@@ -1949,9 +2189,6 @@ def near_dup_pairs_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
 # corpus-wide fold per batch.
 # ---------------------------------------------------------------------------
 
-_ND_LABELS_SCHEMA = "doc_id bigint, source string, nt bigint, label bigint"
-
-
 def _near_dup_label_ingest(
     meta: DataFrame, batch_id: int, labels_dir: str, pairs: DataFrame
 ) -> None:
@@ -1960,9 +2197,10 @@ def _near_dup_label_ingest(
     batch COMPLETED (from the LSH ingest's staged delta — both docs in
     this batch, or one here and one stored)."""
     spark = meta.sparkSession
-    eff_id = _effective_batch_id(labels_dir, batch_id, flat=True)
+    eff_id = _effective_batch_id(labels_dir, batch_id, _ND_LABELS)
     prior_rows = (
-        _read_store_deltas(spark, labels_dir, _ND_LABELS_SCHEMA)
+        _part(_ND_LABELS)
+        .read(spark, labels_dir)
         .where(F.col("batch_id") < eff_id)
         .drop("batch_id")
     )
@@ -1980,9 +2218,7 @@ def _near_dup_label_ingest(
     )
     all_rows = prior_rows.unionByName(new_docs)
     if pairs.isEmpty():
-        new_docs.write.mode("overwrite").parquet(
-            os.path.join(labels_dir, f"batch_id={eff_id}")
-        )
+        _stage(new_docs, labels_dir, eff_id)
         return
     # current labels of the pairs' endpoints (tiny set): min over a doc's
     # staged rows IS its current label
@@ -2009,9 +2245,7 @@ def _near_dup_label_ingest(
     if label_edges.isEmpty():
         # every pair lies within an existing cluster — no merges; the
         # steady-state fast path once clusters have formed
-        new_docs.write.mode("overwrite").parquet(
-            os.path.join(labels_dir, f"batch_id={eff_id}")
-        )
+        _stage(new_docs, labels_dir, eff_id)
         return
     verts = (
         label_edges.select(F.col("src").alias("id"))
@@ -2028,9 +2262,7 @@ def _near_dup_label_ingest(
         all_rows.join(F.broadcast(remap), all_rows["label"] == remap["id"])
         .select("doc_id", "source", "nt", F.col("component").alias("label"))
     )
-    new_docs.unionByName(changed).write.mode("overwrite").parquet(
-        os.path.join(labels_dir, f"batch_id={eff_id}")
-    )
+    _stage(new_docs.unionByName(changed), labels_dir, eff_id)
 
 
 def run_stream_neardup_ingest_suite(
@@ -2086,7 +2318,8 @@ def dedup_adjusted_budget_from_labels_store(
     from ..plans.curation import budget_plan_columns
 
     cur = (
-        _read_store_deltas(spark, labels_dir, _ND_LABELS_SCHEMA)
+        _part(_ND_LABELS)
+        .read(spark, labels_dir)
         .groupBy("doc_id")
         .agg(
             F.min("label").alias("label"),
@@ -2121,301 +2354,12 @@ def cluster_sizes_from_labels_store(
     from ..plans.dedup import cluster_size_distribution
 
     cur = (
-        _read_store_deltas(spark, labels_dir, _ND_LABELS_SCHEMA)
+        _part(_ND_LABELS)
+        .read(spark, labels_dir)
         .groupBy("doc_id")
         .agg(F.min("label").alias("label"))
     )
     return cluster_size_distribution(cur, label_col="label")
-
-
-def compact_near_dup_labels_store(spark: SparkSession, labels_dir: str) -> None:
-    """Compact the near-dup label store to one row per doc at its current
-    (min) label. The fold is idempotent min/max, so compaction is exact
-    under any schedule; the floor marker keeps later ingest ids above the
-    folded delta like every flat store."""
-    floor = _compact_partitioned(
-        spark,
-        labels_dir,
-        _ND_LABELS_SCHEMA,
-        lambda df: df.groupBy("doc_id").agg(
-            F.max("source").alias("source"),
-            F.max("nt").alias("nt"),
-            F.min("label").alias("label"),
-        ).select("doc_id", "source", "nt", "label"),
-    )
-    if floor is not None:
-        _write_compaction_floor(labels_dir, floor)
-
-
-# ---------------------------------------------------------------------------
-# Store compaction: the maintenance half of the staged-delta contract.
-# Every foreachBatch store above appends one batch_id=N delta per
-# micro-batch, so store reads (keeper lookups, PSI folds) grow linearly
-# with batch COUNT even when the folded state is tiny. Compaction merges
-# all deltas into a single batch_id=0 delta with the identical fold.
-#
-# CONTRACT: run only while no stream is writing the store AND the last
-# drain completed (all batches committed). A replayed batch overwrites
-# its own batch_id dir; compacting an uncommitted batch's delta into
-# batch_id=0 would double-count it on replay, and the dup-flow keeper
-# lookup's `batch_id < N` filter would see batch N's own compacted
-# keepers. Between availableNow drains — the natural maintenance window
-# — both hazards are impossible.
-#
-# BOUNDED DOUBLE-COUNT CAVEAT (ADVICE r9): the floor remap trades replay
-# idempotence for history safety on exactly ONE pathological schedule —
-# an uncommitted batch whose delta was compacted anyway (a violation of
-# the window contract above: crash between the delta write and the
-# checkpoint commit, compaction run before the stream resumes). The
-# replayed raw id then lands ABOVE the floor instead of overwriting its
-# own (now folded) delta, so ADDITIVE stores (counts/volume/basket/
-# attribution-revenue/revenue-partials/decode-health/dup-flow edges)
-# count that one batch twice; latest-wins folds (CDC) and unique-row
-# folds (LSH state) are unchanged. The dup-flow SELF-edge this schedule
-# could once manufacture (the replayed keeper counted as a dup of
-# itself) is gone since round 11: the keeper store records
-# keeper_doc_id and the ingest drops any dup row whose doc IS the
-# stored keeper (VERDICT r10 item 7) — only the bounded edge
-# double-count remains.
-# The alternative — skipping raw ids at-or-below a folded high-water mark
-# — cannot distinguish this replay from a fresh-checkpoint restart (both
-# re-present low raw ids) without introspecting the engine's checkpoint,
-# and would silently DROP data on the restart path; a bounded duplicate
-# of one batch is the better failure. Honoring the maintenance-window
-# contract makes the schedule impossible in the first place.
-# ---------------------------------------------------------------------------
-
-
-_FLOOR_MARKER = "_compaction_floor"
-
-
-def _floor_marker_path(store_dir: str) -> str:
-    """Where a store's compaction-floor marker lives: INSIDE the store
-    directory, for every store shape (ADVICE r9). Two-level stores keep it
-    in the stable parent beside the swapped subdirs; flat stores keep it
-    beside their ``batch_id=*`` partition dirs — the leading underscore
-    makes Spark's parquet reader skip it, and _compact_partitioned copies
-    it into the rebuilt directory BEFORE the rename-rename swap, so the
-    marker always travels with the store (a directory-level copy, move,
-    or backup can no longer detach the floor from the data it protects)."""
-    return os.path.join(store_dir, _FLOOR_MARKER)
-
-
-def _read_compaction_floor(store_dir: str, flat: bool = False) -> int | None:
-    """The highest batch_id folded by the last compaction (None before the
-    first compaction). Written by every compact_*_store; once present,
-    ingests remap EVERY batch id above it (see _effective_batch_id).
-    ``flat`` additionally checks the pre-r10 sibling location
-    (``<store>._compaction_floor``) so stores written by earlier rounds
-    keep their floor."""
-    try:
-        with open(_floor_marker_path(store_dir)) as f:
-            return int(f.read().strip())
-    except (OSError, ValueError):
-        pass
-    if flat:
-        try:
-            with open(store_dir.rstrip(os.sep) + "." + _FLOOR_MARKER) as f:
-                return int(f.read().strip())
-        except (OSError, ValueError):
-            pass
-    return None
-
-
-def _write_compaction_floor(store_dir: str, floor: int) -> None:
-    path = _floor_marker_path(store_dir)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(str(floor))
-    os.replace(tmp, path)
-
-
-def _effective_batch_id(store_dir: str, batch_id: int, flat: bool = False) -> int:
-    """Remap a raw micro-batch id above the store's compaction floor
-    (ADVICE r6/r7, generalized to every compactable store in ADVICE r8):
-    compaction folds history into the MAX existing batch_id, so a replay
-    of that raw id — crash between the delta write and the checkpoint
-    commit with a compaction run before the stream resumes, or a
-    fresh-checkpoint restart whose ids begin again at 0 — would otherwise
-    mode('overwrite') the single folded delta and silently destroy all
-    prior history. Once a floor exists, EVERY raw id maps to
-    floor+1+raw_id: injective and strictly monotone, so replayed and
-    continuing batches can never collide with each other or with the
-    compacted delta. Before the first compaction this is the identity.
-
-    Flat stores are also HEALED here (round-9 hardening): a compaction
-    that died between its two renames leaves the live dir missing with
-    `.old` holding all history; an ingest that recreated the live dir
-    would make the next _recover_compaction delete the backup — silent
-    history loss. Healing before the first post-crash write closes the
-    stream-resumes-before-any-fold window. Two-level stores heal their
-    swapped SUBDIRS at their own ingest sites (the marker parent is never
-    swapped)."""
-    if flat:
-        _recover_compaction(store_dir)
-    floor = _read_compaction_floor(store_dir, flat=flat)
-    return batch_id if floor is None else floor + 1 + batch_id
-
-
-def _recover_compaction(store_dir: str) -> None:
-    """Heal a compaction interrupted between its two renames: if the live
-    name is missing but the `.old` backup exists, restore the backup (and
-    drop the half-promoted build). Called by _compact_partitioned and by
-    every store fold, so a crashed compaction can never read as an empty
-    store — at worst the next compaction redoes the merge."""
-    import shutil
-
-    old = store_dir + ".old"
-    if os.path.exists(store_dir):
-        if os.path.exists(old):  # completed swap, stale backup
-            shutil.rmtree(old, ignore_errors=True)
-    elif os.path.exists(old):
-        os.rename(old, store_dir)
-        shutil.rmtree(store_dir + ".compacting", ignore_errors=True)
-
-
-def _compact_partitioned(
-    spark: SparkSession, store_dir: str, schema: str, merge
-) -> int | None:
-    """Read every batch_id delta with the declared schema, merge, swap the
-    store for a single-delta copy living at the MAX existing batch_id —
-    not 0, so a stream mistakenly restarted on a FRESH checkpoint (ids
-    restart at 0) overwrites at most an empty low-id delta instead of the
-    whole compacted history. The swap is rename-rename with a `.old`
-    backup; a crash between the renames is healed by _recover_compaction
-    (run this in the maintenance window — no concurrent readers/writers)."""
-    import re
-    import shutil
-
-    _recover_compaction(store_dir)
-    if not os.path.exists(store_dir):
-        return None
-    ids = [
-        int(m.group(1))
-        for d in os.listdir(store_dir)
-        if (m := re.match(r"batch_id=(\d+)$", d))
-    ]
-    target = max(ids) if ids else 0
-    df = (
-        spark.read.schema(schema)
-        .option("basePath", store_dir)
-        .parquet(f"{store_dir}/batch_id=*")
-    )
-    merged = merge(df)
-    tmp = store_dir + ".compacting"
-    shutil.rmtree(tmp, ignore_errors=True)
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, f"batch_id={target}"))
-    # carry the floor marker into the rebuilt dir BEFORE the swap: a crash
-    # between the swap and the caller's _write_compaction_floor must leave
-    # the previous floor in place, never strip it (an unfloored store would
-    # let a folded-id replay overwrite the compacted delta).
-    marker = _floor_marker_path(store_dir)
-    if os.path.exists(marker):
-        shutil.copyfile(marker, _floor_marker_path(tmp))
-    old = store_dir + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(store_dir, old)
-    os.rename(tmp, store_dir)
-    shutil.rmtree(old, ignore_errors=True)
-    return target
-
-
-def compact_counts_store(
-    spark: SparkSession, store_dir: str, key_cols: list[str] | None = None
-) -> None:
-    """Compact a (keyed or unkeyed) PSI bin-counts store: additive counts
-    merge by summation; psi(_by_key)_from_store reads identically before
-    and after (pytest-pinned). Additive ⇒ subject to the one-batch
-    double-count caveat in the section contract above if an uncommitted
-    delta is compacted outside the maintenance window."""
-    keys = list(key_cols or [])
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        _counts_read_schema(keys),
-        lambda df: df.groupBy(*keys, "bin").agg(F.sum("n").alias("n")),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
-
-
-def compact_volume_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the report-card volume store: all five measures are
-    additive per (source, lang) cell — additive ⇒ the one-batch
-    double-count caveat (section contract above) applies to an
-    uncommitted delta compacted outside the maintenance window."""
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        "source string, lang string, n_docs bigint, n_tokens bigint, n_chars bigint",
-        lambda df: df.groupBy("source", "lang").agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("n_chars").alias("n_chars"),
-        ),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
-
-
-def compact_dup_flow_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the dup-flow store: keepers are one row per distinct kept
-    fingerprint (the union IS the merged state — fp is unique across
-    deltas by construction, so this is a plain rewrite), edges sum their
-    n_docs per (fp, keeper_source, dup_source). Continued ingestion after
-    compaction keeps working: the floor marker remaps every later ingest
-    id above the compacted delta (see _effective_batch_id), and the keeper
-    lookup's `batch_id < N` filter always includes it. Edge counts are
-    additive ⇒ a folded-id replay (window-contract violation) double-counts
-    that one batch's edges — but can no longer add self-edges (the
-    keeper_doc_id guard in _dup_flow_ingest); see the section contract's
-    bounded double-count caveat."""
-    k_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "keepers"),
-        "fp string, keeper_source string, keeper_doc_id long",
-        lambda df: df.select("fp", "keeper_source", "keeper_doc_id"),
-    )
-    e_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "edges"),
-        "fp string, keeper_source string, dup_source string, n_docs bigint",
-        lambda df: df.groupBy("fp", "keeper_source", "dup_source").agg(
-            F.sum("n_docs").alias("n_docs")
-        ),
-    )
-    floors = [f for f in (k_floor, e_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
-
-
-def compact_lsh_dedup_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the LSH near-dup store: state rows are one per ingested doc
-    (doc_id unique across deltas by the ingest contract) and each unordered
-    pair lives in exactly one delta, so both merges are plain rewrites.
-    Continued ingestion keeps working: new batches land above the
-    checkpoint's high-water mark and the state lookup's `batch_id < N`
-    filter always includes the compacted delta. The folded high-water mark
-    is recorded in a `_compaction_floor` marker; every later ingest remaps
-    its batch id to floor+1+id (uniformly — injective and monotone, see
-    _lsh_dedup_ingest), so neither a replay of a folded id nor a
-    fresh-checkpoint restart can overwrite the compacted delta or another
-    batch's delta (ADVICE r6/r7)."""
-    floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "state"),
-        _LSH_STATE_SCHEMA,
-        lambda df: df.select("doc_id", "sh", "bands"),
-    )
-    pairs_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "pairs"),
-        _LSH_PAIRS_SCHEMA,
-        lambda df: df.select("doc_a", "doc_b", "jac"),
-    )
-    floors = [f for f in (floor, pairs_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
 
 
 def run_stream_ks_monitor(
@@ -2453,20 +2397,18 @@ def run_stream_ks_monitor(
 
     def monitor(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        (
-            tdigest_partials(batch, key_col, value_col, delta)
-            .write.mode("overwrite")
-            .parquet(os.path.join(partials_dir, f"batch_id={batch_id}"))
-        )
+        _stage(tdigest_partials(batch, key_col, value_col, delta), partials_dir, batch_id)
         ks, n_cur = ks_from_digest_store(
             spark, partials_dir, ref_means, ref_weights, key=key, delta=delta
         )
         alert = bool(ks >= ks_alert) or n_cur == 0
-        spark.createDataFrame(
-            [(float(ks), int(n_cur), alert)],
-            "ks_stat double, n_cur bigint, alert boolean",
-        ).write.mode("overwrite").parquet(
-            os.path.join(log_dir, f"batch_id={batch_id}")
+        _stage(
+            spark.createDataFrame(
+                [(float(ks), int(n_cur), alert)],
+                "ks_stat double, n_cur bigint, alert boolean",
+            ),
+            log_dir,
+            batch_id,
         )
 
     _run_foreach_batch(
@@ -2512,23 +2454,15 @@ def run_stream_cdc_ops(
     existing store — unlike a swap-per-batch upsert, ingest cost never
     grows with state size; the store is bounded by distinct touched keys
     after compact_cdc_store."""
-    from ..plans.cdc import latest_cdc_ops
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
-        latest_cdc_ops(batch).write.mode("overwrite").parquet(
-            os.path.join(
-                store_dir,
-                f"batch_id={_effective_batch_id(store_dir, batch_id, flat=True)}",
-            )
-        )
+        _stage(latest_cdc_ops(batch), store_dir, _effective_batch_id(store_dir, batch_id, _CDC))
 
     _run_foreach_batch(ops, ingest, checkpoint_dir, timeout_sec, "run_stream_cdc_ops")
 
 
 def _cdc_store_latest(spark: SparkSession, store_dir: str) -> DataFrame:
-    from ..plans.cdc import CDC_OPS_SCHEMA, latest_cdc_ops
-
-    return latest_cdc_ops(_read_store_deltas(spark, store_dir, CDC_OPS_SCHEMA))
+    return _part(_CDC).fold(spark, store_dir)
 
 
 def cdc_snapshot_from_store(
@@ -2544,18 +2478,6 @@ def cdc_snapshot_from_store(
     return cdc_status_fingerprint(
         apply_cdc_ops(base, _cdc_store_latest(spark, store_dir))
     )
-
-
-def compact_cdc_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the CDC op store to one latest-op-per-key delta: the merge
-    IS latest_cdc_ops (associative under unique seqs), so folds before and
-    after compaction agree exactly and continued ingestion keeps working
-    (new ids land above the checkpoint's high-water mark)."""
-    from ..plans.cdc import CDC_OPS_SCHEMA, latest_cdc_ops
-
-    floor = _compact_partitioned(spark, store_dir, CDC_OPS_SCHEMA, latest_cdc_ops)
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
 
 
 # ---------------------------------------------------------------------------
@@ -2591,13 +2513,9 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
     )
 
     spark = batch.sparkSession
-    clicks_dir = os.path.join(store_dir, "clicks")
-    # heal a crashed compaction, then remap above the floor (see
-    # _effective_batch_id): a replay of a folded raw id must never
-    # overwrite the compacted clicks/revenue
-    _recover_compaction(clicks_dir)
-    _recover_compaction(os.path.join(store_dir, "revenue"))
-    eff_id = _effective_batch_id(store_dir, batch_id)
+    # a replay of a folded raw id must never overwrite the compacted
+    # clicks/revenue (see _effective_batch_id)
+    eff_id = _effective_batch_id(store_dir, batch_id, _ATTRIBUTION)
     ts_us = epoch_us(F.col("ts"))
     ck = F.when(
         F.col("event_type") == "click",
@@ -2621,22 +2539,22 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
     # cached: consumed by the clicks write AND the purchase attribution
     wb = enriched.withColumn("batch_best", F.max("click_key").over(fr)).cache()
     try:
-        wb.where(F.col("click_key").isNotNull()).groupBy("user_id").agg(
-            F.max("click_key").alias("click_key")
-        ).write.mode("overwrite").parquet(
-            os.path.join(clicks_dir, f"batch_id={eff_id}")
+        _stage(
+            wb.where(F.col("click_key").isNotNull())
+            .groupBy("user_id")
+            .agg(F.max("click_key").alias("click_key")),
+            os.path.join(store_dir, "clicks"),
+            eff_id,
         )
 
         purch = wb.where(F.col("event_type") == "purchase").select(
             "event_id", "user_id", "ts_us", "value", "batch_best"
         )
         # prior clicks from batches before this one (an empty prior — the
-        # first-ever batch — left-joins to null store_best, the same
-        # no-store contract the old else branch hand-built)
+        # first-ever batch — left-joins to null store_best)
         prior = (
-            _read_store_deltas(
-                spark, clicks_dir, "user_id bigint, click_key decimal(38,0)"
-            )
+            _part(_ATTRIBUTION, "clicks")
+            .read(spark, store_dir)
             .where(F.col("batch_id") < eff_id)
             .select("user_id", F.col("click_key").alias("store_key"))
         )
@@ -2666,9 +2584,7 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
                 ),
             )
         )
-        out.write.mode("overwrite").parquet(
-            os.path.join(store_dir, "revenue", f"batch_id={eff_id}")
-        )
+        _stage(out, os.path.join(store_dir, "revenue"), eff_id)
     finally:
         wb.unpersist()
 
@@ -2700,11 +2616,7 @@ def attribution_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     batch query bit-for-bit."""
     from decimal import Decimal
 
-    rows = _read_store_deltas(
-        spark,
-        os.path.join(store_dir, "revenue"),
-        "campaign bigint, n_purchases bigint, rev_units bigint",
-    )
+    rows = _part(_ATTRIBUTION, "revenue").read(spark, store_dir)
     return (
         rows.groupBy("campaign")
         .agg(
@@ -2756,15 +2668,10 @@ def _daily_units(batch: DataFrame):
     )
 
 
-def _fold_daily_series(spark: SparkSession, partials_dir: str) -> DataFrame:
+def _fold_daily_series(spark: SparkSession, store_dir: str) -> DataFrame:
     from decimal import Decimal
 
-    rows = (
-        spark.read.schema("day_idx int, u_partial bigint, batch_id bigint")
-        .option("basePath", partials_dir)
-        .parquet(f"{partials_dir}/batch_id=*")
-    )
-    return rows.groupBy("day_idx").agg(
+    return _part(_REVENUE, "partials").read(spark, store_dir).groupBy("day_idx").agg(
         (F.sum("u_partial").cast("decimal(38,0)") * F.lit(Decimal(1).scaleb(-4)))
         .cast("double")
         .alias("revenue"),
@@ -2784,31 +2691,27 @@ def run_stream_revenue_monitor(
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        partials_dir = os.path.join(store_dir, "partials")
-        _recover_compaction(partials_dir)  # heal crashed compaction
-        batch_id = _effective_batch_id(store_dir, batch_id)
-        _daily_units(batch).write.mode("overwrite").parquet(
-            os.path.join(partials_dir, f"batch_id={batch_id}")
-        )
-        flagged = score_daily_anomalies(
-            _fold_daily_series(spark, partials_dir)
-        ).cache()
+        batch_id = _effective_batch_id(store_dir, batch_id, _REVENUE)
+        _stage(_daily_units(batch), os.path.join(store_dir, "partials"), batch_id)
+        flagged = score_daily_anomalies(_fold_daily_series(spark, store_dir)).cache()
         try:
             top = flagged.orderBy(F.abs(F.col("zscore")).desc(), "day_idx").limit(1)
             row = top.collect()
             n = flagged.count()
-            spark.createDataFrame(
-                [
-                    (
-                        batch_id,
-                        n,
-                        float(row[0].zscore) if row else None,
-                        int(row[0].day_idx) if row else None,
-                    )
-                ],
-                "batch_id bigint, n_anomalies bigint, max_abs_z double, max_z_day bigint",
-            ).write.mode("overwrite").parquet(
-                os.path.join(store_dir, "monitor", f"batch_id={batch_id}")
+            _stage(
+                spark.createDataFrame(
+                    [
+                        (
+                            batch_id,
+                            n,
+                            float(row[0].zscore) if row else None,
+                            int(row[0].day_idx) if row else None,
+                        )
+                    ],
+                    "batch_id bigint, n_anomalies bigint, max_abs_z double, max_z_day bigint",
+                ),
+                os.path.join(store_dir, "monitor"),
+                batch_id,
             )
         finally:
             flagged.unpersist()
@@ -2823,29 +2726,24 @@ def revenue_anomalies_from_store(spark: SparkSession, store_dir: str) -> DataFra
     equals batch q169 tuple-for-tuple under any batch split."""
     from ..plans.timeseries import score_daily_anomalies
 
-    partials_dir = os.path.join(store_dir, "partials")
-    if not os.path.exists(partials_dir):
+    daily = _fold_daily_series(spark, store_dir)  # heals a crashed compaction
+    if not os.path.exists(os.path.join(store_dir, "partials")):
         return spark.createDataFrame(
             [],
             "day_idx bigint, revenue double, n_prior bigint, "
             "mean_28 double, sd_28 double, zscore double",
         )
-    return score_daily_anomalies(_fold_daily_series(spark, partials_dir))
+    return score_daily_anomalies(daily)
 
 
 def revenue_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
-    mon_dir = os.path.join(store_dir, "monitor")
-    if not os.path.exists(mon_dir):
-        return spark.createDataFrame(
-            [], "batch_id bigint, n_anomalies bigint, max_abs_z double, max_z_day bigint"
-        )
-    return (
-        spark.read.schema(
-            "batch_id bigint, n_anomalies bigint, max_abs_z double, max_z_day bigint"
-        )
-        .option("basePath", mon_dir)
-        .parquet(f"{mon_dir}/batch_id=*")
-        .orderBy("batch_id")
+    """The revenue monitor's append-only evaluation log, ordered by batch
+    (each row also carries its batch_id in the data; the partition value
+    is the one read)."""
+    return _monitor_log(
+        spark,
+        os.path.join(store_dir, "monitor"),
+        "n_anomalies bigint, max_abs_z double, max_z_day bigint",
     )
 
 
@@ -2877,9 +2775,7 @@ def run_stream_basket_counts(
     is a streaming frame with (l_orderkey, l_partkey)."""
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
-        for sub in ("pairs", "items", "baskets"):  # heal crashed compaction
-            _recover_compaction(os.path.join(store_dir, sub))
-        batch_id = _effective_batch_id(store_dir, batch_id)
+        batch_id = _effective_batch_id(store_dir, batch_id, _BASKET)
         li = batch.select("l_orderkey", "l_partkey")
         a = li.select("l_orderkey", F.col("l_partkey").alias("p1"))
         b = li.select("l_orderkey", F.col("l_partkey").alias("p2"))
@@ -2892,18 +2788,16 @@ def run_stream_basket_counts(
                 .groupBy("p1", "p2")
                 .agg(F.countDistinct("l_orderkey").alias("n_both"))
             )
-            pairs.write.mode("overwrite").parquet(
-                os.path.join(store_dir, "pairs", f"batch_id={batch_id}")
-            )
+            _stage(pairs, os.path.join(store_dir, "pairs"), batch_id)
             items = li.groupBy(F.col("l_partkey").alias("p")).agg(
                 F.countDistinct("l_orderkey").alias("n_p")
             )
-            items.write.mode("overwrite").parquet(
-                os.path.join(store_dir, "items", f"batch_id={batch_id}")
+            _stage(items, os.path.join(store_dir, "items"), batch_id)
+            _stage(
+                li.agg(F.countDistinct("l_orderkey").alias("n_orders")),
+                os.path.join(store_dir, "baskets"),
+                batch_id,
             )
-            li.agg(F.countDistinct("l_orderkey").alias("n_orders")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(store_dir, "baskets", f"batch_id={batch_id}"))
         finally:
             li.unpersist()
 
@@ -2917,26 +2811,7 @@ def basket_rules_from_store(
 ) -> DataFrame:
     """Fold the partials into q178's rule table (same thresholds, same
     deterministic (lift, antecedent, consequent) top-k)."""
-    pairs = (
-        spark.read.schema("p1 bigint, p2 bigint, n_both bigint, batch_id bigint")
-        .option("basePath", os.path.join(store_dir, "pairs"))
-        .parquet(os.path.join(store_dir, "pairs", "batch_id=*"))
-        .groupBy("p1", "p2")
-        .agg(F.sum("n_both").alias("n_both"))
-    )
-    items = (
-        spark.read.schema("p bigint, n_p bigint, batch_id bigint")
-        .option("basePath", os.path.join(store_dir, "items"))
-        .parquet(os.path.join(store_dir, "items", "batch_id=*"))
-        .groupBy("p")
-        .agg(F.sum("n_p").alias("n_p"))
-    )
-    baskets = (
-        spark.read.schema("n_orders bigint, batch_id bigint")
-        .option("basePath", os.path.join(store_dir, "baskets"))
-        .parquet(os.path.join(store_dir, "baskets", "batch_id=*"))
-        .agg(F.sum("n_orders").alias("n_orders"))
-    )
+    pairs, items, baskets = (p.fold(spark, store_dir) for p in _BASKET)
     i1 = items.select(F.col("p").alias("p1"), F.col("n_p").alias("n_ante_fwd"))
     i2 = items.select(F.col("p").alias("p2"), F.col("n_p").alias("n_cons_fwd"))
     enriched = (
@@ -2978,79 +2853,6 @@ def basket_rules_from_store(
     )
 
 
-def compact_basket_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the basket-count store: every partial is additive (⇒ the
-    section contract's one-batch double-count caveat applies to an
-    uncommitted delta compacted outside the maintenance window)."""
-    floors = [
-        _compact_partitioned(
-            spark,
-            os.path.join(store_dir, "pairs"),
-            "p1 bigint, p2 bigint, n_both bigint",
-            lambda df: df.groupBy("p1", "p2").agg(F.sum("n_both").alias("n_both")),
-        ),
-        _compact_partitioned(
-            spark,
-            os.path.join(store_dir, "items"),
-            "p bigint, n_p bigint",
-            lambda df: df.groupBy("p").agg(F.sum("n_p").alias("n_p")),
-        ),
-        _compact_partitioned(
-            spark,
-            os.path.join(store_dir, "baskets"),
-            "n_orders bigint",
-            lambda df: df.agg(F.sum("n_orders").alias("n_orders")),
-        ),
-    ]
-    floors = [f for f in floors if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
-
-
-def compact_revenue_monitor_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the revenue-monitor store's day partials (additive ⇒ the
-    section contract's one-batch double-count caveat applies). The
-    monitor/ directory is an immutable evaluation LOG, not mergeable state
-    — it stays as written (the shared floor remap keeps later log ids
-    clear of existing rows too, since the ingest stamps both dirs with
-    the same effective id)."""
-    floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "partials"),
-        "day_idx int, u_partial bigint",
-        lambda df: df.groupBy("day_idx").agg(F.sum("u_partial").alias("u_partial")),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
-
-
-def compact_attribution_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the attribution store. revenue/ deltas are additive (⇒ the
-    section contract's one-batch double-count caveat applies to them).
-    clicks/ compact to the per-user MAX key, which is sufficient under the
-    store's time-ordered contract: keys grow with ts, so a user's newest
-    click is the only one any FUTURE purchase's [lo, hi) range can pick —
-    if the newest is older than lo, every discarded older click was too."""
-    r_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "revenue"),
-        "campaign bigint, n_purchases bigint, rev_units bigint",
-        lambda df: df.groupBy("campaign").agg(
-            F.sum("n_purchases").alias("n_purchases"),
-            F.sum("rev_units").alias("rev_units"),
-        ),
-    )
-    c_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "clicks"),
-        "user_id bigint, click_key decimal(38,0)",
-        lambda df: df.groupBy("user_id").agg(F.max("click_key").alias("click_key")),
-    )
-    floors = [f for f in (r_floor, c_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
-
-
 # ---------------------------------------------------------------------------
 # Decode-health-at-ingest: the streaming twin of batch q220
 # (plans/multimodal_queries.py). A multimodal pipeline wants decode error
@@ -3061,26 +2863,24 @@ def compact_attribution_store(spark: SparkSession, store_dir: str) -> None:
 # idempotent via per-batch overwrite.
 # ---------------------------------------------------------------------------
 
-_HEALTH_COUNT_SCHEMA = "source string, fmt string, status string, n_docs bigint"
-
-
-def _decode_health_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None:
+def _decode_health_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> int:
     """One micro-batch of the decode-health store: classify every blob
     through the real header decoders (operators/multimodal.decode_health —
     per-blob rejection becomes a row, never a failed batch) and stage the
     additive (source, fmt, status) counts under batch_id=N (remapped above
     the compaction floor — see _effective_batch_id: a replay of a folded
-    raw id must never overwrite the compacted history)."""
+    raw id must never overwrite the compacted history); returns N."""
     from ..operators.multimodal import decode_health
 
-    eff_id = _effective_batch_id(store_dir, batch_id, flat=True)
-    (
+    eff_id = _effective_batch_id(store_dir, batch_id, _HEALTH)
+    _stage(
         decode_health(batch.select("doc_id", "source", "content"))
         .groupBy("source", "fmt", "status")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
-        .write.mode("overwrite")
-        .parquet(os.path.join(store_dir, f"batch_id={eff_id}"))
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs")),
+        store_dir,
+        eff_id,
     )
+    return eff_id
 
 
 def run_stream_decode_health(
@@ -3108,12 +2908,7 @@ def decode_health_report_from_store(spark: SparkSession, store_dir: str) -> Data
     the fold is a plain sum; the share window runs over the aggregated
     frame only. Arrival-order-independent (counts commute) — pinned for
     forward AND reversed drops in tests/test_streaming.py."""
-    from pyspark.sql import Window
-
-    deltas = _read_store_deltas(spark, store_dir, _HEALTH_COUNT_SCHEMA)
-    counts = deltas.groupBy("source", "fmt", "status").agg(
-        F.sum("n_docs").cast("bigint").alias("n_docs")
-    )
+    counts = _part(_HEALTH).fold(spark, store_dir)
     w = Window.partitionBy("source", "fmt")
     return counts.select(
         "source",
@@ -3126,25 +2921,6 @@ def decode_health_report_from_store(spark: SparkSession, store_dir: str) -> Data
     ).orderBy("source", "fmt", "status")
 
 
-def compact_decode_health_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the decode-health store: counts merge by summation;
-    decode_health_report_from_store reads identically before and after.
-    Records the folded high-water mark in the store's floor marker so
-    later ingests remap above the compacted delta (ADVICE r8). Additive ⇒
-    the section contract's one-batch double-count caveat applies to an
-    uncommitted delta compacted outside the maintenance window."""
-    floor = _compact_partitioned(
-        spark,
-        store_dir,
-        _HEALTH_COUNT_SCHEMA,
-        lambda df: df.groupBy("source", "fmt", "status").agg(
-            F.sum("n_docs").alias("n_docs")
-        ),
-    )
-    if floor is not None:
-        _write_compaction_floor(store_dir, floor)
-
-
 def run_stream_decode_health_monitor(
     media: DataFrame,
     store_dir: str,
@@ -3152,7 +2928,7 @@ def run_stream_decode_health_monitor(
     alert_share: float = 0.2,
     timeout_sec: int = 120,
 ) -> None:
-    """Operational decode-health ALERT monitor (VERDICT r8 item 3) — the
+    """Operational decode-health ALERT monitor — the
     drift-monitor twin of run_stream_decode_health: per micro-batch,
     ingest the batch's (source, fmt, status) counts into
     ``store_dir/counts`` (the same staged-delta contract as the plain
@@ -3174,11 +2950,11 @@ def run_stream_decode_health_monitor(
 
     def monitor(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        eff_id = _effective_batch_id(counts_dir, batch_id, flat=True)
-        _decode_health_ingest(batch, batch_id, counts_dir)
+        eff_id = _decode_health_ingest(batch, batch_id, counts_dir)
         bad = F.sum(F.when(F.col("status") != "ok", F.col("n_docs")).otherwise(F.lit(0)))
         per_source = (
-            _read_store_deltas(spark, counts_dir, _HEALTH_COUNT_SCHEMA)
+            _part(_HEALTH)
+            .read(spark, counts_dir)
             .groupBy("source")
             .agg(
                 F.sum("n_docs").cast("bigint").alias("n_docs"),
@@ -3197,9 +2973,7 @@ def run_stream_decode_health_monitor(
                 ).alias("alert"),
             )
         )
-        per_source.write.mode("overwrite").parquet(
-            os.path.join(log_dir, f"batch_id={eff_id}")
-        )
+        _stage(per_source, log_dir, eff_id)
 
     _run_foreach_batch(
         media, monitor, checkpoint_dir, timeout_sec, "run_stream_decode_health_monitor"
@@ -3218,8 +2992,7 @@ def decode_health_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental IVF index maintenance at ingest (VERDICT r10 item 4): the
-# serving-index lifecycle is auditable (q222) and evaluable (q229) but new
+# Incremental IVF index maintenance at ingest: the serving-index lifecycle is auditable (q222) and evaluable (q229) but new
 # vectors only entered the index by re-fitting. This store assigns each
 # arriving embedding to the FROZEN coarse-quantizer cells (the _ivf_fit
 # centers — the only state a 100-TB ingest tier ships) with the numpy-GEMM
@@ -3245,8 +3018,6 @@ def decode_health_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
 #                      empty_cell_rate, alert.
 # ---------------------------------------------------------------------------
 
-_IVF_ASSIGN_SCHEMA = "vec_id bigint, cell int"
-_IVF_COUNTS_SCHEMA = "cell int, n_vecs bigint"
 _IVF_MONITOR_LOG_SCHEMA = (
     "n_vecs bigint, imbalance_factor double, empty_cell_rate double, alert boolean"
 )
@@ -3266,9 +3037,7 @@ def run_stream_ivf_assign(
     from ..plans.similarity import as_double, cell_balance_from_counts, ivf_cell_udf
 
     nlist = len(centers)
-    assign_dir = os.path.join(store_dir, "assign")
-    counts_dir = os.path.join(store_dir, "counts")
-    log_dir = os.path.join(store_dir, "log")
+    assign, counts = _IVF
     centers_dir = os.path.join(store_dir, "centers")
     cell_of = ivf_cell_udf(centers)
 
@@ -3279,41 +3048,34 @@ def run_stream_ivf_assign(
                 [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
                 "cell int, centroid array<double>",
             ).coalesce(1).write.mode("overwrite").parquet(centers_dir)
-        _recover_compaction(assign_dir)
-        _recover_compaction(counts_dir)
-        eff_id = _effective_batch_id(store_dir, batch_id)
+        eff_id = _effective_batch_id(store_dir, batch_id, _IVF)
         prior = (
-            _read_store_deltas(spark, assign_dir, _IVF_ASSIGN_SCHEMA)
-            .where(F.col("batch_id") < eff_id)
-            .select("vec_id")
+            assign.read(spark, store_dir).where(F.col("batch_id") < eff_id).select("vec_id")
         )
         new_vecs = batch.join(prior, "vec_id", "left_anti").select(
             "vec_id", cell_of(as_double(F.col("embedding"))).alias("cell")
         )
-        new_vecs.write.mode("overwrite").parquet(
-            os.path.join(assign_dir, f"batch_id={eff_id}")
-        )
         # counts partial from the just-staged delta (materialized — the
         # Arrow assignment never recomputes)
-        own = spark.read.schema(_IVF_ASSIGN_SCHEMA).parquet(
-            os.path.join(assign_dir, f"batch_id={eff_id}")
+        own = spark.read.schema(assign.schema).parquet(
+            _stage(new_vecs, assign.path(store_dir), eff_id)
         )
-        own.groupBy("cell").agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_vecs")
-        ).write.mode("overwrite").parquet(
-            os.path.join(counts_dir, f"batch_id={eff_id}")
+        _stage(
+            own.groupBy("cell").agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs")),
+            counts.path(store_dir),
+            eff_id,
         )
         # live balance over the CUMULATIVE counts (<= this batch): one
         # fold of O(batches x nlist) additive rows, then q222's math on
         # exactly nlist rows
         cum = (
-            _read_store_deltas(spark, counts_dir, _IVF_COUNTS_SCHEMA)
+            counts.read(spark, store_dir)
             .where(F.col("batch_id") <= eff_id)
             .groupBy("cell")
             .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
         )
         balance = cell_balance_from_counts(cum, nlist)
-        (
+        _stage(
             balance.agg(
                 F.sum("n_vecs").cast("bigint").alias("n_vecs"),
                 F.max("imbalance_factor").alias("imbalance_factor"),
@@ -3321,9 +3083,9 @@ def run_stream_ivf_assign(
                 F.max((F.col("recommendation") == "rebalance").cast("boolean")).alias(
                     "alert"
                 ),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(log_dir, f"batch_id={eff_id}"))
+            ),
+            os.path.join(store_dir, "log"),
+            eff_id,
         )
 
     _run_foreach_batch(
@@ -3338,12 +3100,7 @@ def ivf_balance_from_store(spark: SparkSession, store_dir: str, nlist: int) -> D
     O(batches x nlist) additive rows, never the vectors."""
     from ..plans.similarity import cell_balance_from_counts
 
-    counts = (
-        _read_store_deltas(spark, os.path.join(store_dir, "counts"), _IVF_COUNTS_SCHEMA)
-        .groupBy("cell")
-        .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
-    )
-    return cell_balance_from_counts(counts, nlist)
+    return cell_balance_from_counts(_part(_IVF, "counts").fold(spark, store_dir), nlist)
 
 
 def ivf_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -3379,9 +3136,7 @@ def ivf_topk_from_store(
         .collect()
     )
     centers = [list(r.centroid) for r in centers_rows]
-    assign = _read_store_deltas(
-        spark, os.path.join(store_dir, "assign"), _IVF_ASSIGN_SCHEMA
-    ).select("vec_id", "cell")
+    assign = _part(_IVF, "assign").fold(spark, store_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("e")
     )
@@ -3414,29 +3169,8 @@ def ivf_retrieval_metrics_from_store(
     )
 
 
-def compact_ivf_assign_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the IVF ingest store: assignments are unique per vec_id
-    (the anti-join ingest contract — plain rewrite), counts sum per
-    cell. The log is an append-only evaluation record and is kept."""
-    a_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "assign"),
-        _IVF_ASSIGN_SCHEMA,
-        lambda df: df.select("vec_id", "cell"),
-    )
-    c_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "counts"),
-        _IVF_COUNTS_SCHEMA,
-        lambda df: df.groupBy("cell").agg(F.sum("n_vecs").cast("bigint").alias("n_vecs")),
-    )
-    floors = [f for f in (a_floor, c_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))
-
-
 # ---------------------------------------------------------------------------
-# Incremental PQ index maintenance at ingest (round 11): the PQ serving
+# Incremental PQ index maintenance at ingest: the PQ serving
 # store (q200's codes + norms) gains the same lifecycle the IVF index got
 # — new vectors are ENCODED at ingest against the FROZEN per-subspace
 # codebooks (the only state a 100-TB ingest tier ships; encoding is
@@ -3458,8 +3192,6 @@ def compact_ivf_assign_store(spark: SparkSession, store_dir: str) -> None:
 #                      imbalance factor, alert.
 # ---------------------------------------------------------------------------
 
-_PQ_CODES_SCHEMA = "vec_id bigint, codes array<int>, nc double"
-_PQ_COUNTS_SCHEMA = "m int, code int, n_vecs bigint"
 _PQ_MONITOR_LOG_SCHEMA = "n_vecs bigint, imbalance_factor double, alert boolean"
 
 
@@ -3481,9 +3213,7 @@ def run_stream_pq_encode(
     )
 
     books_dir = os.path.join(store_dir, "books")
-    codes_dir = os.path.join(store_dir, "codes")
-    counts_dir = os.path.join(store_dir, "counts")
-    log_dir = os.path.join(store_dir, "log")
+    codes, counts = _PQ
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
@@ -3496,39 +3226,30 @@ def run_stream_pq_encode(
                 ],
                 "m int, k int, centroid array<double>",
             ).coalesce(1).write.mode("overwrite").parquet(books_dir)
-        _recover_compaction(codes_dir)
-        _recover_compaction(counts_dir)
-        eff_id = _effective_batch_id(store_dir, batch_id)
-        prior = (
-            _read_store_deltas(spark, codes_dir, _PQ_CODES_SCHEMA)
-            .where(F.col("batch_id") < eff_id)
-            .select("vec_id")
-        )
+        eff_id = _effective_batch_id(store_dir, batch_id, _PQ)
+        prior = codes.read(spark, store_dir).where(F.col("batch_id") < eff_id).select("vec_id")
         new_codes = _pq_encode_frame(
             batch.join(prior, "vec_id", "left_anti").select(
                 "vec_id", as_double(F.col("embedding")).alias("e")
             ),
             books,
         )
-        new_codes.write.mode("overwrite").parquet(
-            os.path.join(codes_dir, f"batch_id={eff_id}")
-        )
         # code-usage partial from the just-staged delta (materialized —
         # the encode expression never recomputes)
-        own = spark.read.schema(_PQ_CODES_SCHEMA).parquet(
-            os.path.join(codes_dir, f"batch_id={eff_id}")
+        own = spark.read.schema(codes.schema).parquet(
+            _stage(new_codes, codes.path(store_dir), eff_id)
         )
-        (
+        _stage(
             own.select(F.posexplode("codes").alias("m", "code"))
             .groupBy("m", "code")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs"))
-            .write.mode("overwrite")
-            .parquet(os.path.join(counts_dir, f"batch_id={eff_id}"))
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs")),
+            counts.path(store_dir),
+            eff_id,
         )
         # codebook health over the CUMULATIVE counts: q222's balance math
         # per subspace (K cells each), alert on the worst subspace
         cum = (
-            _read_store_deltas(spark, counts_dir, _PQ_COUNTS_SCHEMA)
+            counts.read(spark, store_dir)
             .where(F.col("batch_id") <= eff_id)
             .groupBy("m", "code")
             .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
@@ -3551,14 +3272,14 @@ def run_stream_pq_encode(
         worst = per_sub[0]
         for frame in per_sub[1:]:
             worst = worst.unionByName(frame)
-        (
+        _stage(
             worst.agg(
                 F.max("n_vecs").cast("bigint").alias("n_vecs"),
                 F.max("imbalance_factor").alias("imbalance_factor"),
                 F.max("alert").alias("alert"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(log_dir, f"batch_id={eff_id}"))
+            ),
+            os.path.join(store_dir, "log"),
+            eff_id,
         )
 
     _run_foreach_batch(
@@ -3584,11 +3305,7 @@ def pq_code_balance_from_store(
         .orderBy("m")
         .collect()
     )
-    cum = (
-        _read_store_deltas(spark, os.path.join(store_dir, "counts"), _PQ_COUNTS_SCHEMA)
-        .groupBy("m", "code")
-        .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
-    )
+    cum = _part(_PQ, "counts").fold(spark, store_dir)
     out = None
     for r in books_rows:
         part = cell_balance_from_counts(
@@ -3627,33 +3344,9 @@ def pq_topk_from_store(
     for r in rows:
         by_m.setdefault(r["m"], {})[r["k"]] = [float(x) for x in r["centroid"]]
     books = [[by_m[m][k] for k in sorted(by_m[m])] for m in sorted(by_m)]
-    store = _read_store_deltas(
-        spark, os.path.join(store_dir, "codes"), _PQ_CODES_SCHEMA
-    ).select("vec_id", "codes", "nc")
+    store = _part(_PQ, "codes").fold(spark, store_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", as_double(F.col("embedding")).alias("e")
     )
     return _pq_adc_rank(spark, emb, books, store)
 
-
-def compact_pq_code_store(spark: SparkSession, store_dir: str) -> None:
-    """Compact the PQ ingest store: codes are unique per vec_id (anti-join
-    ingest contract — plain rewrite), counts sum per (m, code). The log
-    is an append-only evaluation record and is kept."""
-    c_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "codes"),
-        _PQ_CODES_SCHEMA,
-        lambda df: df.select("vec_id", "codes", "nc"),
-    )
-    u_floor = _compact_partitioned(
-        spark,
-        os.path.join(store_dir, "counts"),
-        _PQ_COUNTS_SCHEMA,
-        lambda df: df.groupBy("m", "code").agg(
-            F.sum("n_vecs").cast("bigint").alias("n_vecs")
-        ),
-    )
-    floors = [f for f in (c_floor, u_floor) if f is not None]
-    if floors:
-        _write_compaction_floor(store_dir, max(floors))

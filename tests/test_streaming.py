@@ -1543,10 +1543,11 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
     compact_cdc_store(spark, c_store)
     # replay batch 1 with its raw id through the remapping ingest path
     from big_data_computing_final_project_spark.streaming.events import (
+        _CDC,
         _effective_batch_id,
     )
 
-    eff = _effective_batch_id(c_store, 1, flat=True)
+    eff = _effective_batch_id(c_store, 1, _CDC)
     assert eff > 1, "floor marker missing after compact_cdc_store"
     latest_cdc_ops(b1).write.mode("overwrite").parquet(
         _os.path.join(c_store, f"batch_id={eff}")
@@ -1560,7 +1561,7 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
     # remaps above the compacted delta
     moved = str(tmp_path / "cdc_flat_moved")
     _os.rename(c_store, moved)
-    assert _effective_batch_id(moved, 1, flat=True) > 1, (
+    assert _effective_batch_id(moved, 1, _CDC) > 1, (
         "floor marker detached from the store by a directory-level move"
     )
 
