@@ -16,6 +16,9 @@ from pyspark.ml.classification import (
     RandomForestClassifier,
 )
 
+from ..operators.sizing import one_partition_if_small
+from ..sources.io import local_frame
+
 SEED = 42
 
 
@@ -100,9 +103,14 @@ def logistic_l1(
 
     max_iter=30/tol=1e-4 (not Spark's 100/1e-6): on standardized features
     OWL-QN's objective is flat well before 30 rounds — on the q49 workload
-    accuracy/macro-F1 agree to 4 decimals with a 100-iteration run — and in
-    local mode every extra iteration is a full ~0.2 s job-scheduling
-    round-trip, so the default cap was 3x wall-clock for zero metric gain."""
+    accuracy/macro-F1 agree to 4 decimals with a 100-iteration run — and
+    every iteration costs at least one loss evaluation, each a Spark job
+    of its own (q49's fit runs about 70 over a 12k-row train set). Warm,
+    on a 4-core box, one evaluation costs 0.14-0.19 CPU-s over a
+    two-partition input (a two-stage treeAggregate with a shuffle) and
+    0.06-0.09 CPU-s over ``operators.sizing.one_partition_if_small`` of
+    it (one single-task stage), so the default cap would cost about
+    three times the CPU for no metric gain."""
     return LogisticRegression(
         elasticNetParam=1.0,
         regParam=reg_param,
@@ -156,14 +164,14 @@ def l1_feature_selection(
     lr = logistic_l1(
         reg_param=reg_param, features_col="__l1_features", label_col=label_col
     )
-    model = lr.fit(asm.transform(df))
+    model = lr.fit(one_partition_if_small(asm.transform(df)))
     if model.numClasses <= 2:
         coefs = np.abs(model.coefficients.toArray())
     else:
         coefs = np.abs(model.coefficientMatrix.toArray()).max(axis=0)
     selected = [c for c, w in zip(feature_cols, coefs) if float(w) > threshold]
-    spark = df.sparkSession
-    importance = spark.createDataFrame(
+    importance = local_frame(
+        df.sparkSession,
         [(c, float(w), float(w) > threshold) for c, w in zip(feature_cols, coefs)],
         "feature string, abs_coef double, selected boolean",
     )

@@ -25,6 +25,7 @@ from ..functions.stats import (
     power_sums,
     skewness_g1,
 )
+from ..sources.io import local_frame
 
 
 def numeric_columns(df: DataFrame) -> list[str]:
@@ -239,9 +240,7 @@ def exact_quantiles_hist(
     # an all-null column has no histogram rows at all — re-emit it with
     # null quantiles (matching percentile()'s null result row) instead of
     # silently dropping it from the output
-    spine = df.sparkSession.createDataFrame(
-        [(c,) for c in columns], "column_name string"
-    )
+    spine = local_frame(df.sparkSession, [(c,) for c in columns], "column_name string")
     return (
         spine.join(out, "column_name", "left")
         .withColumn("n_distinct", F.coalesce("n_distinct", F.lit(0)))

@@ -94,3 +94,23 @@ def broadcast_if_small(
         return df
     est = plan_size_estimate(estimate_from if estimate_from is not None else df)
     return F.broadcast(df) if est * expansion <= threshold else df
+
+
+def one_partition_if_small(df: DataFrame) -> DataFrame:
+    """``df.coalesce(1)`` while the estimated size of ``df`` fits one
+    AQE partition (the session's advisoryPartitionSizeInBytes, 64 MB by
+    default); otherwise ``df`` unchanged, so large inputs keep their
+    layout.
+
+    For iterative MLlib fits over small inputs. Spark's
+    ``RDDLossFunction`` aggregates each loss evaluation with
+    ``treeAggregate(..., finalAggregateOnExecutor = true)``: over more
+    than one input partition every OWL-QN/L-BFGS evaluation is a
+    two-stage job with a shuffle, and on a few-MB train set that fixed
+    per-job cost is the fit. Over one partition each evaluation is one
+    stage of one task. Only for fits whose model does not depend on the
+    partitioning beyond float summation order (not RF bootstrap, GBT
+    subsampling, CV folds, KMeans init or approxQuantile).
+    """
+    raw = df.sparkSession.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
+    return df.coalesce(1) if plan_size_estimate(df) <= _parse_bytes(raw) else df

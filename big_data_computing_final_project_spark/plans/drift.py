@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..catalog import load_table
 from ..functions import text as X
 from ..operators.prefix import prefix_agg, prefix_agg_multi
+from ..sources.io import local_frame
 from .registry import register
 
 _N_BINS = 10
@@ -503,7 +504,8 @@ def q156_ks_drift_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # an empty split (every key hashed one way, or an empty table) reads
     # NaN — no distribution to compare, same grace as ks_from_digests
     ks = ks_from_digests(*merged["ref"], *merged["cur"])
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(counts["ref"], counts["cur"], float(ks))],
         "n_ref bigint, n_cur bigint, ks_stat_approx double",
     )

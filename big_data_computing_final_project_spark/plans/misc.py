@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..operators.profiling import bootstrap_sample, describe
+from ..sources.io import local_frame
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -127,7 +128,7 @@ def q62_tree_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = [
         (i, line.strip()) for i, line in enumerate(model.toDebugString.splitlines()) if line.strip()
     ]
-    return spark.createDataFrame(lines, "line_no int, rule string").orderBy("line_no")
+    return local_frame(spark, lines, "line_no int, rule string").orderBy("line_no")
 
 
 # ---------------------------------------------------------------------------

@@ -20,7 +20,8 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..ml.evaluation import classification_report, confusion_counts, summary_metrics
-from ..operators.sizing import broadcast_if_small
+from ..operators.sizing import broadcast_if_small, one_partition_if_small
+from ..sources.io import local_frame
 from .registry import register
 
 # embeddings.label ∈ 0..9; the deterministic predictor emits 0..2, so the
@@ -202,7 +203,7 @@ def _fit_eval(spark: SparkSession, sf_dir: str, estimator, binarize: bool = Fals
         ("macro_recall", float(m.macro_recall)),
         ("macro_f1", float(m.macro_f1)),
     ]
-    return spark.createDataFrame(rows, "metric string, value double")
+    return local_frame(spark, rows, "metric string, value double")
 
 
 @register("q44_decision_tree")
@@ -257,7 +258,7 @@ def q48_grid_search_dt(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = max(model.avgMetrics)
     rows.append(("best_cv_f1", float(best)))
     df.unpersist()
-    return spark.createDataFrame(rows, "metric string, value double")
+    return local_frame(spark, rows, "metric string, value double")
 
 
 @register("q192_random_search")
@@ -292,7 +293,7 @@ def q192_random_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     df.unpersist()
     best_i = max(range(len(rows)), key=lambda i: rows[i][2])
     rows.append((len(rows), f"BEST:{rows[best_i][1]}", rows[best_i][2]))
-    return spark.createDataFrame(rows, "candidate int, params string, cv_macro_f1 double")
+    return local_frame(spark, rows, "candidate int, params string, cv_macro_f1 double")
 
 
 @register("q193_grid_search_rf")
@@ -314,21 +315,25 @@ def q193_grid_search_rf(spark: SparkSession, sf_dir: str) -> DataFrame:
         rows.append((f"cv_f1[trees={pm[rf.numTrees]},depth={pm[rf.maxDepth]}]", float(metric)))
     rows.append(("best_cv_f1", float(max(model.avgMetrics))))
     df.unpersist()
-    return spark.createDataFrame(rows, "metric string, value double")
+    return local_frame(spark, rows, "metric string, value double")
 
 
 @register("q49_house_pipeline")
 def q49_house_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EP1/EP2 analogue (SURVEY §3): derived features → StringIndexer →
     equal-width + quantile binning → StandardScaler → assembler → L1 LR,
-    one pyspark.ml Pipeline, stratified split, macro-F1 report.
+    stratified split, macro-F1 report. The feature Pipeline is fitted on
+    the train split as it is laid out; the LR is fitted on its output
+    through ``one_partition_if_small`` (one single-task job per OWL-QN
+    loss evaluation instead of a two-stage one), and the two stages are
+    served as one PipelineModel.
 
     Label: order value above the global median (computed from the data,
     like the reference's statistics-driven preprocessing, EP3)."""
     from ..functions.expressions import safe_ratio
     from ..ml.models import logistic_l1
     from ..ml.pipeline import build_feature_pipeline, equal_width_bucketizer, stratified_split
-    from pyspark.ml import Pipeline
+    from pyspark.ml import PipelineModel
 
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
@@ -355,10 +360,11 @@ def q49_house_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantile=["affordability"],
         passthrough=["order_year"],
     )
-    pipe = Pipeline(stages=[features, logistic_l1(reg_param=0.001)])
     train, test = stratified_split(base, "label", 0.2, seed=42)
     train = train.cache()
-    model = pipe.fit(train)
+    fm = features.fit(train)
+    lrm = logistic_l1(reg_param=0.001).fit(one_partition_if_small(fm.transform(train)))
+    model = PipelineModel(stages=[fm, lrm])
     pred = model.transform(test)
     m = summary_metrics(pred).first()
     rows = [
@@ -369,7 +375,7 @@ def q49_house_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     train.unpersist()
     base.unpersist()
-    return spark.createDataFrame(rows, "metric string, value double")
+    return local_frame(spark, rows, "metric string, value double")
 
 
 @register("q50_feature_importance")
@@ -383,7 +389,7 @@ def q50_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     model = random_forest(num_trees=20, max_depth=5).fit(df)
     imp = model.featureImportances
     rows = [(int(i), float(imp[int(i)])) for i in imp.indices]
-    out = spark.createDataFrame(rows, "feature_idx int, importance double")
+    out = local_frame(spark, rows, "feature_idx int, importance double")
     return out.orderBy(F.col("importance").desc(), "feature_idx").limit(15)
 
 

@@ -17,6 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..sources.io import local_frame
 from .registry import register
 
 _K = 5
@@ -666,7 +667,7 @@ def embedding_near_dup_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
     if blocked is not None:
         blocked.unpersist()
     if not per_block:
-        candidates = spark.createDataFrame([], "vec_a long, vec_b long")
+        candidates = local_frame(spark, [], "vec_a long, vec_b long")
     else:
         candidates = reduce(lambda x, y: x.unionByName(y), per_block)
     # exact rescore: broadcast the TINY candidate set (and the
@@ -785,7 +786,8 @@ def ivf_probe_scored(
     q64/q205) and the store-built index (streaming ivf_topk_from_store),
     so the serving and the incrementally-maintained index probe through
     the SAME code."""
-    centroids = spark.createDataFrame(
+    centroids = local_frame(
+        spark,
         [(i, c) for i, c in enumerate(centers)],
         "cell int, centroid array<double>",
     )

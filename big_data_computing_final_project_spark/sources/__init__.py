@@ -1,6 +1,7 @@
 """Sources & sinks (SURVEY.md §2.1 S1-S4)."""
 
 from .io import (  # noqa: F401
+    local_frame,
     read_csv,
     read_jsonl,
     read_orc,

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.session_cache import table_snapshot
+from .io import local_frame
 
 _META = "_index_meta.json"
 
@@ -81,8 +82,8 @@ def save_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     from ..plans.similarity import _IVF_NLIST, _ivf_fit
 
     centers, assigned = _ivf_fit(spark, sf_dir)
-    spark.createDataFrame(
-        [(i, c) for i, c in enumerate(centers)], "cell int, centroid array<double>"
+    local_frame(
+        spark, [(i, c) for i, c in enumerate(centers)], "cell int, centroid array<double>"
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "centers"))
     # the inverted-list layout: one parquet partition per cell
     assigned.write.mode("overwrite").partitionBy("cell").parquet(
@@ -168,7 +169,8 @@ def save_ivf_index_from_store(
     lists = emb.join(assign, "vec_id").select(
         "vec_id", "e", norm(F.col("e")).alias("nc"), "cell"
     )
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(r["cell"], [float(x) for x in r["centroid"]]) for r in center_rows],
         "cell int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "centers"))
@@ -204,7 +206,8 @@ def save_pq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
     )
     dim = len(emb.select("e").first()["e"])
     books = _pq_books(spark, sf_dir, emb, dim)
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(m, k, c) for m, book in enumerate(books) for k, c in enumerate(book)],
         "m int, k int, centroid array<double>",
     ).coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "books"))

@@ -37,6 +37,24 @@ def read_csv(
     return reader.csv(path)
 
 
+def local_frame(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A small result held in Python (a list of row tuples) as a DataFrame
+    that plans as ``LocalTableScan``.
+
+    ``spark.createDataFrame(<list>, schema)`` ships the rows as a pickled
+    Python RDD (``applySchemaToPythonRDD``), so every job that reads the
+    frame starts Python worker tasks, even for one row. Built from an
+    Arrow table instead, the rows land in the JVM once and reading them
+    costs no Python task. ``schema`` is a DDL string; the result has
+    exactly that schema, empty ``rows`` included."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.StructType.fromDDL(schema)
+    arrow = pa.struct(list(to_arrow_schema(struct)))
+    return spark.createDataFrame(pa.Table.from_struct_array(pa.array(rows, type=arrow)), struct)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """S4 — Parquet scan (pushdown + pruning come free)."""
     return spark.read.parquet(path)

@@ -26,6 +26,7 @@ from pyspark.sql import types as T
 from ..catalog import _stored_as_nanos, epoch_us, normalize_events_ts
 from ..functions.stats import dec_sum
 from ..plans.cdc import CDC_OPS_SCHEMA, latest_cdc_ops
+from ..sources.io import local_frame
 
 
 def stream_events(spark: SparkSession, sf_dir: str, watermark: str = "1 hour") -> DataFrame:
@@ -333,7 +334,7 @@ def _read_store_deltas(spark: SparkSession, store_dir: str, schema: str) -> Data
     _recover_compaction(store_dir)
     full = schema + ", batch_id bigint"
     if not os.path.exists(store_dir):
-        return spark.createDataFrame([], full)
+        return local_frame(spark, [], full)
     return (
         spark.read.schema(full)
         .option("basePath", store_dir)
@@ -1172,7 +1173,7 @@ def _monitor_ingest(
         n_cur = int(sum(r["n_cur"] for r in rows))
         out = [(psi_total, n_cur, psi_total >= psi_alert)]
         schema = "psi_total double, n_cur bigint, alert boolean"
-    _stage(spark.createDataFrame(out, schema), log_dir, batch_id)
+    _stage(local_frame(spark, out, schema), log_dir, batch_id)
 
 
 def _keyed_binner(ref_edges: DataFrame, n_bins: int):
@@ -1465,7 +1466,7 @@ def run_stream_volume_monitor(
             .groupBy("source")
             .agg(F.sum("n_docs").cast("bigint").alias("n_docs"))
         )
-        known = spark.createDataFrame([(s,) for s in known_sources], "source string")
+        known = local_frame(spark, [(s,) for s in known_sources], "source string")
         total = own.agg(F.sum("n_docs").alias("__total"))
         # latest streak per source from strictly earlier log rows
         prev = (
@@ -2403,7 +2404,8 @@ def run_stream_ks_monitor(
         )
         alert = bool(ks >= ks_alert) or n_cur == 0
         _stage(
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(float(ks), int(n_cur), alert)],
                 "ks_stat double, n_cur bigint, alert boolean",
             ),
@@ -2699,7 +2701,8 @@ def run_stream_revenue_monitor(
             row = top.collect()
             n = flagged.count()
             _stage(
-                spark.createDataFrame(
+                local_frame(
+                    spark,
                     [
                         (
                             batch_id,
@@ -2728,7 +2731,8 @@ def revenue_anomalies_from_store(spark: SparkSession, store_dir: str) -> DataFra
 
     daily = _fold_daily_series(spark, store_dir)  # heals a crashed compaction
     if not os.path.exists(os.path.join(store_dir, "partials")):
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "day_idx bigint, revenue double, n_prior bigint, "
             "mean_28 double, sd_28 double, zscore double",
@@ -3044,7 +3048,8 @@ def run_stream_ivf_assign(
     def ingest(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         if not os.path.exists(centers_dir):
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
                 "cell int, centroid array<double>",
             ).coalesce(1).write.mode("overwrite").parquet(centers_dir)
@@ -3218,7 +3223,8 @@ def run_stream_pq_encode(
     def ingest(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         if not os.path.exists(books_dir):
-            spark.createDataFrame(
+            local_frame(
+                spark,
                 [
                     (m, k, [float(x) for x in c])
                     for m, book in enumerate(books)

@@ -413,3 +413,88 @@ def test_render_dot_hermetic(spark, sf_dir, tmp_path, monkeypatch):
     # nonzero exit surfaces as RuntimeError with stderr attached
     with _pytest.raises(RuntimeError, match="bad fmt"):
         render_dot(dot, str(tmp_path / "tree.svg"))
+
+
+def test_house_pipeline_loss_jobs_run_one_stage(spark, sf_dir):
+    """Each OWL-QN loss evaluation of q49's LR fit (treeAggregate at
+    RDDLossFunction) must run as a single stage. Spark aggregates it with
+    finalAggregateOnExecutor, so over a multi-partition train set every
+    evaluation is a two-stage job with a shuffle; the fit input goes
+    through one_partition_if_small to avoid that. Run at sf0.01, where
+    the 12k-row train set spans more than one partition."""
+    import os
+    import time
+
+    sc = spark.sparkContext
+    group = "q49-loss-stages"
+    sc.setJobGroup(group, "q49 loss-job stages")
+    try:
+        _Q["q49_house_pipeline"](spark, os.path.join(os.path.dirname(sf_dir), "sf0.01")).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    deadline = time.time() + 30
+    while time.time() < deadline and any(
+        st.getJobInfo(j) is None or st.getJobInfo(j).status == "RUNNING" for j in jobs
+    ):
+        time.sleep(0.2)
+    loss_stage_counts = []
+    for j in jobs:
+        stage_ids = st.getJobInfo(j).stageIds
+        names = [st.getStageInfo(s).name for s in stage_ids if st.getStageInfo(s)]
+        if any("RDDLossFunction" in n for n in names):
+            loss_stage_counts.append(len(stage_ids))
+    assert len(loss_stage_counts) >= 10  # OWL-QN ran (q49 runs ~70)
+    assert set(loss_stage_counts) == {1}, loss_stage_counts
+
+
+def test_single_partition_lr_fit_matches_partitioned_fit(spark):
+    """An L1 LR fit on one_partition_if_small(df) must be the fit on the
+    multi-partition df up to float summation order: coefficients equal to
+    1e-9 relative, and identical predictions."""
+    import numpy as np
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.ml.models import logistic_l1
+    from big_data_computing_final_project_spark.operators.sizing import one_partition_if_small
+
+    xs = [F.sin(F.col("id") * (k + 1) * 0.37) for k in range(4)]
+    noise = (F.xxhash64("id") % 1000) / 1000.0 - 0.5
+    df = spark.range(0, 3000, numPartitions=4).select(
+        "id",
+        *[x.alias(f"x{k}") for k, x in enumerate(xs)],
+        ((xs[0] + 0.5 * xs[1] + noise) > 0).cast("double").alias("label"),
+    )
+    data = VectorAssembler(inputCols=[f"x{k}" for k in range(4)], outputCol="features").transform(df)
+    one = one_partition_if_small(data)
+    assert data.rdd.getNumPartitions() == 4
+    assert one.rdd.getNumPartitions() == 1
+
+    lr = logistic_l1(reg_param=0.001)
+    multi, single = lr.fit(data), lr.fit(one)
+    np.testing.assert_allclose(
+        single.coefficients.toArray(), multi.coefficients.toArray(), rtol=1e-9, atol=0
+    )
+    np.testing.assert_allclose(single.intercept, multi.intercept, rtol=1e-9, atol=0)
+
+    def predictions(model):
+        return model.transform(data).select("id", "prediction").orderBy("id").collect()
+
+    assert predictions(single) == predictions(multi)
+
+
+def test_one_partition_if_small_keeps_large_layout(spark):
+    """Above the advisory partition size the frame is returned unchanged."""
+    from big_data_computing_final_project_spark.operators.sizing import one_partition_if_small
+
+    df = spark.range(0, 1000, numPartitions=3)
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    spark.conf.set(key, "1b")
+    try:
+        assert one_partition_if_small(df) is df
+    finally:
+        spark.conf.unset(key)
+    assert one_partition_if_small(df).rdd.getNumPartitions() == 1

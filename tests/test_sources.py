@@ -576,3 +576,81 @@ def test_q227_decode_quality_matrix_planted(spark, tmp_path):
     assert (bp.n_docs, bp.n_malformed, bp.malformed_share) == (1, 0, 0.0)
     assert abs(bg.band_share - 2 / 3) < 1e-12 and abs(bp.band_share - 1 / 3) < 1e-12
     assert bg.source_malformed == bp.source_malformed == 1
+
+
+def _lineage(df) -> str:
+    return df._jdf.queryExecution().toRdd().toDebugString()
+
+
+def _local_frame_cases():
+    """(schema, rows) of every local_frame site: the ML result frames, the
+    monitor and index frames, and the empty frame of every staged-store
+    read (each declared part, each log and sketch schema, plus
+    ``batch_id``)."""
+    from decimal import Decimal
+
+    from big_data_computing_final_project_spark.operators import sketches as S
+    from big_data_computing_final_project_spark.streaming import events as E
+
+    cases = [
+        ("metric string, value double", [("n_train", 12.0), ("accuracy", None)]),
+        ("candidate int, params string, cv_macro_f1 double", [(0, "depth=2", 0.5)]),
+        ("feature_idx int, importance double", [(3, 0.25), (7, 0.0)]),
+        ("line_no int, rule string", [(0, "If (feature 1 <= 0.5)")]),
+        ("feature string, abs_coef double, selected boolean", [("x0", 0.3, True)]),
+        ("n_ref bigint, n_cur bigint, ks_stat_approx double", [(10, 0, float("nan"))]),
+        ("column_name string", [("c_acctbal",), ("o_totalprice",)]),
+        ("vec_a long, vec_b long", []),
+        ("cell int, centroid array<double>", [(0, [0.5, -1.0]), (1, [])]),
+        ("m int, k int, centroid array<double>", [(0, 1, [2.0, 3.0])]),
+        ("source string", [("src0",)]),
+        ("psi_total double, n_cur bigint, alert boolean", [(0.1, 5, False)]),
+        ("key string, psi_total double, n_cur bigint, alert boolean", [("a", 0.3, 2, True)]),
+        ("ks_stat double, n_cur bigint, alert boolean", [(0.0, 0, True)]),
+        (
+            "batch_id bigint, n_anomalies bigint, max_abs_z double, max_z_day bigint",
+            [(3, 0, None, None)],
+        ),
+        (
+            "day_idx bigint, revenue double, n_prior bigint, "
+            "mean_28 double, sd_28 double, zscore double",
+            [],
+        ),
+        (
+            "doc_id bigint, sh array<string>, bands array<struct<band:int,key:bigint>>",
+            [(1, ["a b c"], [(0, 7), (1, -2)]), (2, [], [])],
+        ),
+        ("user_id bigint, click_key decimal(38,0)", [(1, Decimal("12345678901234567890123"))]),
+    ]
+    stores = [E._psi_counts(["key"])] + [
+        v
+        for v in vars(E).values()
+        if isinstance(v, tuple) and v and all(isinstance(p, E._Part) for p in v)
+    ]
+    schemas = {p.schema for parts in stores for p in parts}
+    schemas |= {v for k, v in vars(E).items() if k.endswith("_SCHEMA") and isinstance(v, str)}
+    schemas |= {S._SKETCH_SCHEMA, S._HH_PARTIAL_SCHEMA}
+    cases += [(s + ", batch_id bigint", []) for s in sorted(schemas)]
+    return cases
+
+
+def test_local_frame_round_trip_plans_as_local_table(spark):
+    """local_frame must give exactly what createDataFrame(list) gives —
+    schema and rows, empty frames of nested and decimal stores included —
+    while planning as a LocalTableScan with no pickled Python RDD."""
+    from big_data_computing_final_project_spark.sources import local_frame
+
+    cases = _local_frame_cases()
+    schemas = " ".join(s for s, _ in cases)
+    assert "array<struct<" in schemas and "decimal(38,0)" in schemas
+    assert "array<double>" in schemas
+    for schema, rows in cases:
+        want = spark.createDataFrame(rows, schema)
+        got = local_frame(spark, rows, schema)
+        assert got.schema == want.schema, schema
+        assert repr(got.collect()) == repr(want.collect()), schema
+        assert "LocalTableScan" in got._jdf.queryExecution().executedPlan().toString()
+        assert "applySchemaToPythonRDD" not in _lineage(got), schema
+        if rows:
+            # the check can tell the two paths apart
+            assert "applySchemaToPythonRDD" in _lineage(want), schema
