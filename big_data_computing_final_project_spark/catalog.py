@@ -266,13 +266,3 @@ def normalize_ts_columns(df: DataFrame) -> DataFrame:
 # Back-compat alias: streaming/events.py normalizes its file-source stream
 # through the same path as the batch catalog.
 normalize_events_ts = normalize_ts_columns
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register every table as a temp view; returns {name: DataFrame}."""
-    out = {}
-    for name in TABLES:
-        df = load_table(spark, sf_dir, name)
-        df.createOrReplaceTempView(name)
-        out[name] = df
-    return out

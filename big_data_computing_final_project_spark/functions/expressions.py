@@ -28,16 +28,6 @@ def affordability_ratio(salary: Column, price: Column) -> Column:
     return safe_ratio(salary, price)
 
 
-def loan_to_value(loan: Column, price: Column) -> Column:
-    """E3 — `loan_amount / (price + 1)` (`house_predict.py:154-155`)."""
-    return safe_ratio(loan, price)
-
-
-def age_from_year(year_col: Column, now_year: int = 2025) -> Column:
-    """E4 — `2025 - constructed_year` (`house_predict.py:158-160`)."""
-    return F.lit(now_year) - year_col
-
-
 def payment_capacity(income: Column, expenses: Column) -> Column:
     """E5 — `customer_salary - monthly_expenses` (`house_predict.py:163-164`)."""
     return income - expenses
@@ -72,8 +62,3 @@ def interval_bucket(c: Column, edges: list[float], labels: list[str]) -> Column:
 def clip(c: Column, lo: float, hi: float) -> Column:
     """E12 — `np.clip(z, lo, hi)` numeric guard (checkpoint `_sigmoid`)."""
     return F.greatest(F.least(c, F.lit(hi)), F.lit(lo))
-
-
-def log_guarded(c: Column, eps: float = 1e-15) -> Column:
-    """E12 — `log(h + 1e-15)` cross-entropy guard."""
-    return F.log(c + F.lit(eps))

@@ -114,25 +114,6 @@ def kurtosis_g2(n: Column, s1: Column, s2: Column, s3: Column, s4: Column) -> Co
     return ((n + F.lit(1.0)) * g2 + F.lit(6.0)) * (n - F.lit(1.0)) / ((n - F.lit(2.0)) * (n - F.lit(3.0)))
 
 
-def pearson_corr_sums(x: Column, y: Column, scale: int = 4) -> dict[str, Column]:
-    """Power/cross sums needed for an order-independent Pearson r."""
-    return {
-        "n": F.count(x).cast("double"),
-        "sx": dec_sum(x, scale),
-        "sy": dec_sum(y, scale),
-        "sxx": dec_sum(x * x, 2 * scale, wide=True),
-        "syy": dec_sum(y * y, 2 * scale, wide=True),
-        "sxy": dec_sum(x * y, 2 * scale, wide=True),
-    }
-
-
-def pearson_corr_from_sums(n: Column, sx: Column, sy: Column, sxx: Column, syy: Column, sxy: Column) -> Column:
-    """r = (nΣxy − ΣxΣy) / sqrt((nΣx²−(Σx)²)(nΣy²−(Σy)²))."""
-    num = n * sxy - sx * sy
-    den = F.sqrt((n * sxx - sx * sx) * (n * syy - sy * sy))
-    return num / den
-
-
 # ---------------------------------------------------------------------------
 # Oracle-side (DuckDB) SQL snippet builders. Keeping the snippet text next to
 # the Column builders guarantees both sides do the *same* double arithmetic
@@ -149,7 +130,3 @@ def sql_dec_sum(expr: str, scale: int = 4) -> str:
     # digits and VARCHAR->double is correctly-rounded strtod, so this form
     # matches Spark bit-for-bit at every magnitude.
     return f"CAST(CAST(SUM(CAST({expr} AS DECIMAL(38,{scale}))) AS VARCHAR) AS DOUBLE)"
-
-
-def sql_dec_avg(expr: str, scale: int = 4) -> str:
-    return f"{sql_dec_sum(expr, scale)} / COUNT({expr})"

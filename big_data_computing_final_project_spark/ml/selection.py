@@ -9,7 +9,6 @@ import random
 from typing import Any
 
 from pyspark.ml import Estimator
-from pyspark.ml.evaluation import MulticlassClassificationEvaluator
 from pyspark.ml.param import Param
 from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
 
@@ -27,11 +26,6 @@ def f1_evaluator(label_col: str = "label"):
     from .evaluation import MacroF1Evaluator
 
     return MacroF1Evaluator(labelCol=label_col)
-
-
-def weighted_f1_evaluator(label_col: str = "label") -> MulticlassClassificationEvaluator:
-    """Spark's built-in weighted-by-support F1, kept for comparison."""
-    return MulticlassClassificationEvaluator(metricName="f1", labelCol=label_col)
 
 
 def grid_search(

@@ -323,35 +323,6 @@ def decode_audio(media: DataFrame) -> DataFrame:
     return media.mapInPandas(_batches, AUDIO_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def resize_media(decoded: DataFrame, max_side: int = 256) -> DataFrame:
-    """Vectorized 'resize': scale dims so max(side) == max_side, preserving
-    aspect ratio — pandas-side arithmetic standing in for a pixel resample
-    (same batch shape a real resampler would use)."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            scale = max_side / pdf[["width", "height"]].max(axis=1)
-            scale = scale.clip(upper=1.0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "width": (pdf["width"] * scale).round().astype("int32"),
-                    "height": (pdf["height"] * scale).round().astype("int32"),
-                }
-            )
-
-    return decoded.select("doc_id", "width", "height").mapInPandas(_batches, RESIZED_SCHEMA)
-
-
 def frame_sample(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 8) -> DataFrame:
     """'Video frame sampling' over the synthetic payload: take a byte every
     `every_n_bytes` as a stand-in frame grab — exercises the

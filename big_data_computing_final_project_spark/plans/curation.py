@@ -66,14 +66,13 @@ def _sql_u60(expr: str) -> str:
 # broadcast back onto the fact scan, one final groupBy. The per-doc filter
 # is a codegen'd hash + compare — no rand(), no sort, no sampling skew.
 #
-# r11 optimization (guide §1.2/§5): the two consumers of the tokenized
-# per-doc frame (the source-stats aggregate and the kept filter) used to
-# each re-execute the scan+tokenize lineage — two full corpus traversals
-# with the regexp tokenizer as the dominant per-row cost. The narrow
-# (doc_id, source, n_toks) frame is now cached: tokenize runs once, the
-# rate table and the acceptance pass both read the materialized 24-byte
-# rows. Plan diff: 2 documents scans -> 1; warm min-of-2 at sf0.1 on this
-# round's box: 4.18 s -> ~1.3 s.
+# The narrow (doc_id, source, n_toks) frame is cached: its two consumers
+# (the source-stats aggregate and the kept filter) would otherwise each
+# re-execute the scan+tokenize lineage, two full corpus traversals with
+# the regexp tokenizer as the dominant per-row cost. Tokenize runs once;
+# the rate table and the acceptance pass both read the materialized
+# 24-byte rows (1 documents scan instead of 2; measured warm at sf0.1:
+# 4.18 s uncached vs ~1.3 s).
 # ---------------------------------------------------------------------------
 
 _Q127_ORACLE = f"""
@@ -421,7 +420,7 @@ def q132_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         X.token_count(F.col("text")).cast("bigint").alias("n_toks"),
         X.quality_score(F.col("text")).alias("quality"),
         X.fingerprint(F.col("text")).alias("fp"),
-    ).cache()  # r11: three consumers (flag window, train shingles, bench
+    ).cache()  # three consumers (flag window, train shingles, bench
     # shingles) — tokenize/quality/fingerprint run once, not per branch
     # Stage FLAGS on one frame instead of one filtered frame per stage:
     # per-stage aggregates as separate frames would each re-execute the
@@ -459,7 +458,7 @@ def q132_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size("sh").alias("bn"),
         F.explode_outer("sh").alias("s"),
     ).filter(F.col("s").isNotNull())
-    # size-guarded broadcast (VERDICT r3 item 3): estimate from the
+    # size-guarded broadcast: estimate from the
     # pre-explode bench frame with an 8x postings expansion — MB-scale
     # eval suites broadcast, a corpus-proportional bench side falls back
     # to a shuffle join instead of OOMing executors at 100x
@@ -473,7 +472,7 @@ def q132_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("train_doc")
         .distinct()
     )
-    # UNHINTED join (VERDICT r7 item 3): `contaminated` is bounded only by
+    # UNHINTED join: `contaminated` is bounded only by
     # contamination_rate x corpus size, so a forced broadcast is a 100x OOM
     # cliff; static Catalyst stats post-(explode+join+groupBy) are useless
     # for a size guard, but the frame sits behind a shuffle-aggregate, so
@@ -486,12 +485,10 @@ def q132_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             "left",
         )
         .withColumn("clean", F.col("keeper") & F.col("is_cont").isNull())
-        # r11: narrow (toks/fp dropped) and cached — the docstring's "a
-        # long-lived pipeline would persist `enriched` and get to 1" is
-        # now what the query does: the flag window + contamination join
-        # execute once; the stage aggregate and the sampling pass read the
-        # materialized rows instead of re-running the whole funnel lineage
-        # (plan diff: 12 documents scans -> 1)
+        # narrow (toks/fp dropped) and cached: the flag window +
+        # contamination join execute once; the stage aggregate and the
+        # sampling pass read the materialized rows instead of re-running
+        # the whole funnel lineage (1 documents scan instead of 12)
         .select("source", "n_toks", "u", "pass_q", "keeper", "clean")
         .cache()
     )
@@ -854,7 +851,7 @@ def q190_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q226 — dedup-adjusted token-budget plan (VERDICT r9 item 6): q147's
+# q226 — dedup-adjusted token-budget plan: q147's
 # sqrt-temperature split re-planned over q194's keeper semantics — the
 # budget a corpus team actually allocates, because a source whose token
 # mass is mostly near-duplicate copies of other documents contributes far
@@ -875,7 +872,7 @@ def q190_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # specific division artifact.
 # ---------------------------------------------------------------------------
 
-from .dedup import _JACCARD_T, _SQL_SHINGLES, lsh_jaccard_pairs  # noqa: E402
+from .dedup import _SQL_CLUSTER_LABELS, _SQL_SHINGLES  # noqa: E402
 
 _Q226_ORACLE = f"""
 WITH RECURSIVE t AS (
@@ -883,30 +880,7 @@ WITH RECURSIVE t AS (
 ), docs AS (
   SELECT doc_id, {_SQL_SHINGLES} AS sh
   FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
-), ex AS (SELECT doc_id, unnest(sh) AS s FROM docs),
-co AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY doc_a, doc_b
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM co
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) la ON la.doc_id = doc_a
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) lb ON lb.doc_id = doc_b
-  WHERE CAST(common AS DOUBLE) / (la.n + lb.n - common) >= {_JACCARD_T}
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT doc_id, doc_id AS x FROM documents
-  UNION
-  SELECT r.doc_id, e.b AS x FROM reach r JOIN edges e ON e.a = r.x
-),
-labels AS (SELECT doc_id, MIN(x) AS cluster_id FROM reach GROUP BY doc_id),
+), {_SQL_CLUSTER_LABELS},
 keep AS (
   SELECT l.cluster_id,
          min_by(t.source, t.doc_id) AS ksource,
@@ -995,7 +969,7 @@ def q226_dedup_adjusted_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", X.token_count(F.col("text")).cast("bigint").alias("nt")
     ).localCheckpoint(eager=True)
-    # session-cached CC labels (VERDICT r10 item 1): the propagation
+    # session-cached CC labels: the propagation
     # rounds run once per (session, sf_dir), shared with q68/q194
     labels = dedup_cluster_labels(spark, sf_dir)
     # each cluster counted once, at its keeper's source and token count
@@ -1016,7 +990,7 @@ def q226_dedup_adjusted_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q232 — per-source curation scorecard (round 11): the ONE table a data
+# q232 — per-source curation scorecard: the ONE table a data
 # lead reads before a crawl renewal, joining the four per-source health
 # signals the registry already measures separately — exact-dup exposure
 # (q157's fingerprint window), tokenizer fertility (q210), media decode
@@ -1108,10 +1082,10 @@ def q232_curation_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import attach_media_mix, decode_health
     from .dedup import q225_ngram_novelty
 
-    # r12 (VERDICT r11 item 8): the dup-exposure signal (q157's
-    # fingerprint window) and the fertility signal (q210's normalize +
-    # tokenize sums) used to be two separate corpus scans, each running
-    # the tokenizer; they now share ONE cached per-doc frame (narrow,
+    # the dup-exposure signal (q157's fingerprint window) and the
+    # fertility signal (q210's normalize + tokenize sums) share ONE cached
+    # per-doc frame instead of two corpus scans that each run the
+    # tokenizer (narrow,
     # corpus-linear — SCALING.md persist-vs-recompute policy, the
     # q127/q132 precedent). The aggregate expressions are q157's/q210's
     # verbatim, so the scorecard columns are value-identical
@@ -1196,7 +1170,7 @@ def scorecard_columns(j: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q233 — contamination-aware clean-token budget (round 11): "how many
+# q233 — contamination-aware clean-token budget: "how many
 # CLEAN NOVEL tokens does each source really contribute?" — q226 nets out
 # near-dup mass; q233 additionally nets out benchmark contamination
 # (q102: a train-split doc containing >= 50% of a held-out doc's
@@ -1214,40 +1188,13 @@ def scorecard_columns(j: DataFrame) -> DataFrame:
 # over one shared shingle table.
 # ---------------------------------------------------------------------------
 
-from .dedup import (  # noqa: E402
-    _CONTAIN_T,
-    _JACCARD_T,
-    _SQL_SHINGLES,
-)
+from .dedup import _CONTAIN_T  # noqa: E402
 
 _Q233_ORACLE = f"""
 WITH RECURSIVE docs AS (
   SELECT doc_id, {_SQL_BUCKET} AS b, {_SQL_SHINGLES} AS sh
   FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
-), ex AS (SELECT doc_id, unnest(sh) AS s FROM docs),
-co AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY doc_a, doc_b
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM co
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) la ON la.doc_id = doc_a
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) lb ON lb.doc_id = doc_b
-  WHERE CAST(common AS DOUBLE) / (la.n + lb.n - common) >= {_JACCARD_T}
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT doc_id, doc_id AS x FROM documents
-  UNION
-  SELECT r.doc_id, e.b AS x FROM reach r JOIN edges e ON e.a = r.x
-),
-labels AS (SELECT doc_id, MIN(x) AS cluster_id FROM reach GROUP BY doc_id),
+), {_SQL_CLUSTER_LABELS},
 ext AS (SELECT doc_id, unnest(sh) AS s FROM docs WHERE b < 80),
 exq AS (SELECT doc_id, unnest(sh) AS s FROM docs WHERE b >= 90),
 cp AS (

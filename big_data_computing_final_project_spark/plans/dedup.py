@@ -70,6 +70,35 @@ _SQL_SHINGLES = (
     "i -> array_to_string(toks[i+1:i+3], ' ')))"
 )
 
+# The oracle-side near-dup cluster labels: exact shingle-Jaccard pairs at
+# _JACCARD_T as an undirected edge list, then min-label transitive closure
+# by recursive CTE. Needs a `docs (doc_id, sh)` CTE before it and a
+# `WITH RECURSIVE` head; yields `labels (doc_id, cluster_id)`.
+_SQL_CLUSTER_LABELS = f"""ex AS (SELECT doc_id, unnest(sh) AS s FROM docs),
+co AS (
+  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
+  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY doc_a, doc_b
+),
+pairs AS (
+  SELECT doc_a, doc_b
+  FROM co
+  JOIN (SELECT doc_id, len(sh) AS n FROM docs) la ON la.doc_id = doc_a
+  JOIN (SELECT doc_id, len(sh) AS n FROM docs) lb ON lb.doc_id = doc_b
+  WHERE CAST(common AS DOUBLE) / (la.n + lb.n - common) >= {_JACCARD_T}
+),
+edges AS (
+  SELECT doc_a AS a, doc_b AS b FROM pairs
+  UNION ALL
+  SELECT doc_b AS a, doc_a AS b FROM pairs
+),
+reach AS (
+  SELECT doc_id, doc_id AS x FROM documents
+  UNION
+  SELECT r.doc_id, e.b AS x FROM reach r JOIN edges e ON e.a = r.x
+),
+labels AS (SELECT doc_id, MIN(x) AS cluster_id FROM reach GROUP BY doc_id)"""
+
 _Q35_ORACLE = f"""
 WITH docs AS (
   SELECT doc_id, {_SQL_SHINGLES} AS sh
@@ -152,85 +181,6 @@ def _verify_candidate_pairs(
         .filter(F.col("jac") >= threshold)
         .orderBy("doc_a", "doc_b")
     )
-
-
-_SKETCH_K = 64
-
-
-def _sketch_screened_verify(
-    sh: DataFrame, candidates: DataFrame, threshold: float = _JACCARD_T
-) -> DataFrame:
-    """Two-level exact verification (VERDICT r8 item 5): a DETERMINISTIC,
-    LOSSLESS bottom-k sketch screen discards clearly-below-threshold
-    candidate pairs before the full-array join, then the standard exact
-    verify rescores survivors. Output is IDENTICAL to
-    _verify_candidate_pairs(sh, candidates) — pytest pins equality.
-
-    STATUS (round-9): MEASURED NEGATIVE RESULT — kept unregistered, as the
-    documented twin (the blocked-GEMM precedent). On the bounded tiers the
-    screen made q122 ~40-60% SLOWER at every tier (t100 ~123 s-equivalent
-    -> 176 s, same-session q36 as the box-speed control): the extra
-    screen pass re-shuffles every candidate with two 64-BIGINT sketches
-    and evaluates ~200 interpreted higher-order-lambda elements per pair,
-    which costs more than the full-array verify bytes it saves. The
-    zero-byte PPJoin positional filter inside _prefix_candidates is the
-    shipped pruning instead; SCALING.md has the numbers.
-
-    The screen's upper bound: with S_X = the k smallest hash values of
-    doc X and v = min(max S_A, max S_B), every element of X that is <= v
-    is IN S_X (bottom-k captures its whole prefix of the hash order), so
-
-        |A ∩ B|  <=  |S_A^v ∩ S_B^v| + min(|A| - |S_A^v|, |B| - |S_B^v|)
-
-    where S^v = {s in S : s <= v} (the <= v part of the intersection is
-    known EXACTLY; above v, the intersection can't exceed the smaller
-    remainder). J = I/(|A|+|B|-I) is increasing in I, so
-    J <= I_ub/(na+nb-I_ub): keep the pair iff I_ub*(num+den) >= num*(na+nb)
-    (threshold as the exact fraction num/den — integer math, no FP ties).
-
-    Why it pays: a typical negative candidate (J ~ 0) with n ~ 400
-    shingles screens at J_ub ~ (n-k)/(n+k) ~ 0.72 < 0.8 and never ships
-    its full array; the screen join moves 2*(k+2) BIGINTs per pair
-    (~1 KB) instead of the two full shingle arrays (~6.6 KB) — and at the
-    bounded 100x tier ~94% of candidates are negatives (43.4M candidates
-    -> 2.49M pairs), so the dominant verify shuffle shrinks ~4x. Docs
-    with n > ~9k shingles weaken the bound toward 1 (they pass to full
-    verify) — bounded-tier docs sit far below that."""
-    from fractions import Fraction
-
-    fr = Fraction(threshold).limit_denominator(10**6)
-    num, den = fr.numerator, fr.denominator
-    base = sh.select(
-        "doc_id",
-        F.size("sh").alias("n"),
-        F.slice(F.array_sort("sh"), 1, _SKETCH_K).alias("sk"),
-    )
-    a = base.select(
-        F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), F.col("sk").alias("sk_a")
-    )
-    b = base.select(
-        F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), F.col("sk").alias("sk_b")
-    )
-    j = candidates.join(a, "doc_a").join(b, "doc_b")
-    v = F.least(F.element_at("sk_a", -1), F.element_at("sk_b", -1))
-    fa = F.filter("sk_a", lambda x: x <= v)
-    fb = F.filter("sk_b", lambda x: x <= v)
-    j = j.select(
-        "doc_a",
-        "doc_b",
-        "na",
-        "nb",
-        F.size(F.array_intersect(fa, fb)).alias("o"),
-        F.size(fa).alias("ka"),
-        F.size(fb).alias("kb"),
-    )
-    i_ub = F.col("o") + F.least(
-        F.col("na") - F.col("ka"), F.col("nb") - F.col("kb")
-    )
-    survivors = j.filter(
-        i_ub * F.lit(num + den) >= F.lit(num) * (F.col("na") + F.col("nb"))
-    ).select("doc_a", "doc_b")
-    return _verify_candidate_pairs(sh, survivors, threshold)
 
 
 @register("q35_ngram_jaccard_dedup", oracle=_Q35_ORACLE)
@@ -559,30 +509,7 @@ _Q68_ORACLE = f"""
 WITH RECURSIVE docs AS (
   SELECT doc_id, {_SQL_SHINGLES} AS sh
   FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
-), ex AS (SELECT doc_id, unnest(sh) AS s FROM docs),
-co AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY doc_a, doc_b
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM co
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) la ON la.doc_id = doc_a
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) lb ON lb.doc_id = doc_b
-  WHERE CAST(common AS DOUBLE) / (la.n + lb.n - common) >= {_JACCARD_T}
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT doc_id, doc_id AS x FROM documents
-  UNION
-  SELECT r.doc_id, e.b AS x FROM reach r JOIN edges e ON e.a = r.x
-),
-labels AS (SELECT doc_id, MIN(x) AS cluster_id FROM reach GROUP BY doc_id)
+), {_SQL_CLUSTER_LABELS}
 SELECT doc_id, cluster_id,
        COUNT(*) OVER (PARTITION BY cluster_id) AS cluster_size
 FROM labels
@@ -597,8 +524,8 @@ def dedup_cluster_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     three ask "which cluster does each doc belong to" under the SAME edge
     config, so the connected-components label-propagation rounds (Spark
     jobs at plan time — one shuffle join + min-aggregate per round) run
-    ONCE per (session, sf_dir) instead of per call (VERDICT r10 item 1,
-    the same rework shape the quantizer cache closed for IVF). The labels
+    ONCE per (session, sf_dir) instead of per call (the same reuse the
+    quantizer cache gives the IVF fit). The labels
     frame is connected_components output — already materialized via
     localCheckpoint, so serving it from cache is plan-only. Cache
     mechanics (applicationId keying, input-snapshot validation over
@@ -713,47 +640,6 @@ sel AS (
 )
 SELECT DISTINCT doc_id, pos, fp FROM sel ORDER BY doc_id, pos
 """
-
-
-def winnow_fingerprints(docs: DataFrame) -> DataFrame:
-    """(doc_id, pos, fp): the winnowing fingerprint set per document.
-
-    Takes any frame with (doc_id, text); pure per-row array expressions.
-    """
-    md5_60 = X.md5_60
-    # stage the token array first: referencing the tokenizer EXPRESSION
-    # inside the transform lambda would re-run the regex split once per
-    # gram (HOF lambdas get no loop-invariant hoisting); as a staged
-    # attribute the array is computed once per row and only sliced here
-    t = docs.select("doc_id", X.tokens(F.col("text")).alias("toks"))
-    toks = F.col("toks")
-    grams = F.transform(
-        F.sequence(F.lit(1), F.size(toks) - F.lit(_WINNOW_K - 1)),
-        lambda i: md5_60(F.array_join(F.slice(toks, i, _WINNOW_K), " ")),
-    )
-    d = t.filter(F.size(toks) >= _WINNOW_K).select("doc_id", grams.alias("h"))
-    h = F.col("h")
-    wlen = F.least(F.lit(_WINNOW_W), F.size(h))
-
-    def rightmost_min(i):
-        minh = F.array_min(F.slice(h, i, wlen))
-        pos = F.array_max(
-            F.transform(
-                F.sequence(F.lit(0), wlen - F.lit(1)),
-                lambda j: F.when(F.element_at(h, i + j) == minh, i + j),
-            )
-        )
-        return F.struct(pos.alias("pos"), minh.alias("fp"))
-
-    starts = F.sequence(F.lit(1), F.size(h) - wlen + F.lit(1))
-    fps = F.array_distinct(F.transform(starts, rightmost_min))
-    return (
-        # outer-explode: plain explode would re-inline the whole winnowing
-        # pipeline (rightmost_min lambda per window) into an inferred
-        # size()>0 pre-filter; fps is never empty (sequence yields >= 1)
-        d.select("doc_id", F.explode_outer(fps).alias("s"))
-        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
-    )
 
 
 def winnow_fingerprints_arrow(docs: DataFrame) -> DataFrame:
@@ -1093,7 +979,7 @@ def q102_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     ex_t = train.select(F.col("doc_id").alias("train_doc"), F.explode_outer("sh").alias("s"))
     ex_b = bench.select(F.col("doc_id").alias("bench_doc"), F.col("sh").alias("sh_b"))
     ex_b = ex_b.select("bench_doc", F.size("sh_b").alias("n_b"), F.explode_outer("sh_b").alias("s_b"))
-    # size-guarded broadcast (VERDICT r3 item 3): an MB-scale eval suite
+    # size-guarded broadcast: an MB-scale eval suite
     # broadcasts; a corpus-proportional bench side degrades to a shuffle
     # join instead of OOMing executors. Estimate from the pre-explode
     # frame (Generate's stats under-count fan-out), 8x for the postings.
@@ -1133,7 +1019,7 @@ def _hashed_shingles(sh: DataFrame) -> DataFrame:
     q122_prefix_jaccard for the correctness argument). The SINGLE hashing
     select shared by the query and prefix_candidate_count, so the pruning
     certificate measures the candidate set q122 actually generates —
-    same frame, same canonical (df, hash) order (ADVICE r8)."""
+    same frame, same canonical (df, hash) order."""
     return sh.select(
         "doc_id", F.transform("sh", lambda s: F.xxhash64(s)).alias("sh")
     )
@@ -1144,11 +1030,11 @@ def _prefix_candidates(sh: DataFrame) -> DataFrame:
     filter (rarest-first canonical order) plus the length-ratio filter —
     the SINGLE definition consumed by both q122 and the pruning-ratio
     test counter, so the certificate can't drift from the query."""
-    # the doc's shingle count RIDES each posting through the explode —
-    # (round 8) the former separate `sizes` join broadcast below ~10 MB
-    # and flipped to a full sort-merge join of the posting table right at
-    # the 100x bounded tier (sizes ~ 500k rows), a measured plan-regime
-    # cliff; carrying n inline removes the join at every tier
+    # the doc's shingle count RIDES each posting through the explode: a
+    # separate `sizes` join broadcasts below ~10 MB and flips to a full
+    # sort-merge join of the posting table at the 100x bounded tier (sizes
+    # ~ 500k rows), a measured plan-regime cliff; carrying n inline
+    # removes the join at every tier
     ex = sh.select(
         "doc_id", F.size("sh").alias("n"), F.explode_outer("sh").alias("s")
     )
@@ -1172,7 +1058,7 @@ def _prefix_candidates(sh: DataFrame) -> DataFrame:
         F.col("n").alias("nb"),
         F.col("rn").alias("rn_b"),
     )
-    # PPJoin positional filter (Xiao et al. §3.2, round-9): a match at
+    # PPJoin positional filter (Xiao et al. §3.2): a match at
     # canonical positions (i, j) bounds the pair's overlap by
     # 1 + min(na - i, nb - j) (everything before the match on either side
     # is disjoint at the FIRST common element, and after it at most the
@@ -1183,9 +1069,9 @@ def _prefix_candidates(sh: DataFrame) -> DataFrame:
     # threshold as the exact fraction num/den (4/5 for 0.8):
     # overlap*(num+den) >= num*(na+nb) — integer math, no FP ties. Zero
     # extra bytes or joins; it only shrinks the candidate set the verify
-    # join ships (the round-9 sketch-screen experiment showed any
-    # EXTRA-pass screen costs more than the verify bytes it saves —
-    # SCALING.md records the negative result).
+    # join ships (a measured bottom-k sketch screen showed any EXTRA-pass
+    # screen costs more than the verify bytes it saves; SCALING.md records
+    # the negative result).
     from fractions import Fraction
 
     fr = Fraction(_JACCARD_T).limit_denominator(10**6)
@@ -1214,8 +1100,8 @@ def q122_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # regex-normalize + shingle transform runs once (3.2s vs 4.3s steady
     # state at sf0.1, 3x better cold).
     #
-    # Shingles ride as xxhash64 BIGINTs end-to-end (round-8 bounded-tier
-    # finding: the verify stage ships both shingle sets per candidate
+    # Shingles ride as xxhash64 BIGINTs end-to-end (measured at the
+    # bounded tiers: the verify stage ships both shingle sets per candidate
     # pair, ~80 GB at the 100x tier with ~35-byte strings — 8-byte hashes
     # cut every posting/verify shuffle ~4x). Correctness: the prefix
     # filter only needs A consistent global canonical order — (df asc,
@@ -1231,7 +1117,7 @@ def q122_prefix_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def prefix_candidate_count(spark: SparkSession, sf_dir: str) -> tuple[int, int]:
     """(prefix-join candidates, full-postings-join candidates) — the
     pruning ratio the prefix filter buys; pytest asserts it shrinks.
-    Runs over the same hashed-shingle frame q122 ships (ADVICE r8)."""
+    Runs over the same hashed-shingle frame q122 ships."""
     sh = _hashed_shingles(_shingled(spark, sf_dir))
     ex = sh.select("doc_id", F.explode_outer("sh").alias("s"))
     full = (
@@ -1459,30 +1345,7 @@ _Q194_ORACLE = f"""
 WITH RECURSIVE docs AS (
   SELECT doc_id, {_SQL_SHINGLES} AS sh
   FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
-), ex AS (SELECT doc_id, unnest(sh) AS s FROM docs),
-co AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY doc_a, doc_b
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM co
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) la ON la.doc_id = doc_a
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) lb ON lb.doc_id = doc_b
-  WHERE CAST(common AS DOUBLE) / (la.n + lb.n - common) >= {_JACCARD_T}
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT doc_id, doc_id AS x FROM documents
-  UNION
-  SELECT r.doc_id, e.b AS x FROM reach r JOIN edges e ON e.a = r.x
-),
-labels AS (SELECT doc_id, MIN(x) AS cluster_id FROM reach GROUP BY doc_id)
+), {_SQL_CLUSTER_LABELS}
 SELECT cluster_id AS keeper_doc_id, COUNT(*) AS weight,
        CAST(COUNT(*) AS DOUBLE) / (SELECT COUNT(*) FROM documents) AS weight_share
 FROM labels
@@ -1653,7 +1516,7 @@ def q208_near_dup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q225 — n-gram novelty by source (round-9): what fraction of each
+# q225 — n-gram novelty by source: what fraction of each
 # source's 3-shingle occurrences is UNIQUE to one document corpus-wide
 # (document frequency = 1). Low novelty = boilerplate/mirrored content
 # (the shingles recur across docs); high novelty = original text. The
@@ -1754,7 +1617,7 @@ def q225_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q234 — near-dup cluster-size distribution (round 11): the shape of the
+# q234 — near-dup cluster-size distribution: the shape of the
 # duplication, not just its mass. q68 lists the clusters and q226 nets
 # out their token mass; this answers the question a data lead asks next:
 # is the duplication DIFFUSE (many pairs/triples — organic near-copies,
@@ -1775,30 +1638,7 @@ _Q234_ORACLE = f"""
 WITH RECURSIVE docs AS (
   SELECT doc_id, {_SQL_SHINGLES} AS sh
   FROM (SELECT doc_id, {_SQL_TOKS} AS toks FROM documents)
-), ex AS (SELECT doc_id, unnest(sh) AS s FROM docs),
-co AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS common
-  FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY doc_a, doc_b
-),
-pairs AS (
-  SELECT doc_a, doc_b
-  FROM co
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) la ON la.doc_id = doc_a
-  JOIN (SELECT doc_id, len(sh) AS n FROM docs) lb ON lb.doc_id = doc_b
-  WHERE CAST(common AS DOUBLE) / (la.n + lb.n - common) >= {_JACCARD_T}
-),
-edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM pairs
-  UNION ALL
-  SELECT doc_b AS a, doc_a AS b FROM pairs
-),
-reach AS (
-  SELECT doc_id, doc_id AS x FROM documents
-  UNION
-  SELECT r.doc_id, e.b AS x FROM reach r JOIN edges e ON e.a = r.x
-),
-labels AS (SELECT doc_id, MIN(x) AS cluster_id FROM reach GROUP BY doc_id),
+), {_SQL_CLUSTER_LABELS},
 sizes AS (
   SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
   FROM labels GROUP BY cluster_id
@@ -1864,7 +1704,7 @@ def cluster_size_distribution(
 
 
 # ---------------------------------------------------------------------------
-# q235 — benchmark-leak attribution by source (round 11): q102 lists the
+# q235 — benchmark-leak attribution by source: q102 lists the
 # leaking (train_doc, bench_doc) pairs; this rolls them up to the table a
 # data lead acts on — WHICH SOURCE is feeding eval answers into the
 # training split, how much of its train mass leaks, and how many bench

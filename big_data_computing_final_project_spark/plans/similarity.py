@@ -17,7 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
-from ..sources.io import local_frame
+from ..sources.ann_index import CODES_SCHEMA, centers_frame
 from .registry import register
 
 _K = 5
@@ -40,6 +40,13 @@ def norm(a: F.Column) -> F.Column:
 
 def cosine(a: F.Column, b: F.Column) -> F.Column:
     return dot(a, b) / (norm(a) * norm(b))
+
+
+def embedding_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e): the embeddings table with float vectors cast to double."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", as_double(F.col("embedding")).alias("e")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -73,9 +80,7 @@ def q38_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # norms staged per SIDE (aliased columns referenced again post-join):
     # computing norm(e) inside the pair projection would re-fold each
     # candidate's self-dot once per query (n_queries x redundant work)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir)
     emb = emb.select("vec_id", "e", norm(F.col("e")).alias("nc"))
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nc").alias("nq")
@@ -91,7 +96,7 @@ def q38_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             (dot(F.col("qe"), F.col("e")) / (F.col("nq") * F.col("nc"))).alias("cos_sim"),
         )
     )
-    # two-phase top-k (VERDICT r6 item 6): a per-(query, salt) partial
+    # two-phase top-k: a per-(query, salt) partial
     # top-k first, so the per-query window never sees the full corpus —
     # the q_id-partitioned shuffle carries <= _TOPK_SALT*k rows per query
     # instead of n_corpus, and the first-phase sort parallelizes across
@@ -487,13 +492,11 @@ def embedding_near_dup_pairs(
     Intra-group pairs emit dot(e,e)/norm(e)^2 of their own (shared)
     vector and cross-group members inherit their reps' cos — both
     bit-identical to what the oracle computes on the same arrays."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir)
     # the array-keyed dup-collapse aggregate is the expensive shared input
     # of ALL four consumers (membership, rep vectors, candidate generator's
     # two legs) — build it ONCE and cache lazily (no plan-build job, so the
-    # pure-plan pin holds; review finding: it used to be derived 3x)
+    # pure-plan pin holds)
     reps_full = emb.groupBy("e").agg(F.min("vec_id").alias("gid")).cache()
     mem = emb.join(reps_full.select("gid", "e"), "e").select("vec_id", "gid")
     erep = reps_full.select("gid", "e", norm(F.col("e")).alias("n"))
@@ -551,138 +554,11 @@ def embedding_near_dup_pairs(
     return intra.unionByName(expanded).orderBy("vec_a", "vec_b")
 
 
-# ---------------------------------------------------------------------------
-
 @register("q40_embedding_near_dup", oracle=_Q40_ORACLE)
 def q40_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embedding_near_dup_pairs at the registered 0.4 gate (dense regime
     at this corpus/delta; see the helper's docstring)."""
     return embedding_near_dup_pairs(spark, sf_dir, _DUP_T)
-
-
-# Retired oracle twin: the r2–r5 blocked-GEMM filter-verify path. Exact and
-# memory-bounded (driver holds one _GEMM_BLOCK_ROWS block at a time), but
-# n-squared total work with a driver-side block loop — kept UNREGISTERED as
-# the independent cross-check the LSH primary is pinned against
-# (test_q40_lsh_equals_gemm_twin), exactly like q35 anchors q36.
-# ---------------------------------------------------------------------------
-
-# Filter-verify margin: the numpy GEMM and the sequential fold agree to
-# ~1e-13 on 64-dim unit vectors; 1e-6 is a >million-x safety factor, so the
-# prune can never drop a pair the exact fold would keep.
-_GEMM_MARGIN = 1e-6
-
-
-_GEMM_BLOCK_ROWS = 4096  # candidate-block height: ~2 MB at 64-dim float64
-
-
-def embedding_near_dup_gemm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RETIRED TWIN (unregistered; see lsh_candidate_pairs for the primary).
-    Filter-verify: a blocked matrix product (numpy GEMM over Arrow
-    batches, candidate blocks broadcast like dim tables) prunes the
-    O(n²) pair space at BLAS speed with threshold T - margin; only the
-    tiny surviving set is re-scored with the sequential JVM fold, so
-    emitted cos_sim values are bit-identical to the oracle's. ~60x over
-    the interpreted all-pairs fold at sf0.1.
-
-    Scale shape: the candidate side is processed in blocks of
-    ``_GEMM_BLOCK_ROWS`` (vec_id mod nblocks), so the driver and each
-    broadcast hold ONE block — never the whole table. The blocked frame
-    is repartitioned by block id ONCE and cached, so each block collect
-    reads the in-memory columnar cache instead of re-scanning parquet
-    nblocks times. Each block's candidate pairs are materialized
-    (localCheckpoint) before its broadcast is destroyed, so peak memory
-    is one block regardless of corpus size; the per-pair margin argument
-    is unchanged. Total GEMM work is the same n×n product, just
-    column-partitioned. The exact rescore broadcasts the tiny CANDIDATE
-    set against the embeddings table (twice, to attach each side's
-    vector) — the embeddings never move through a broadcast or shuffle,
-    so the rescore survives a 100× scale-up where broadcasting the
-    table itself would OOM executors. (q39/q64 are the sub-quadratic ANN
-    paths; this operator is the exact-near-dup scan.)"""
-    import math
-    from functools import reduce
-
-    import numpy as np
-    import pandas as pd
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
-    threshold = _DUP_T - _GEMM_MARGIN
-    n = emb.count()
-    nblocks = max(1, math.ceil(n / _GEMM_BLOCK_ROWS))
-    sc = emb.sparkSession.sparkContext
-
-    if nblocks > 1:
-        # one-shot partition by block id + cache: every per-block collect
-        # below is an in-memory columnar scan, not a fresh parquet read
-        blocked = (
-            emb.withColumn("blk", (F.col("vec_id") % nblocks).cast("int"))
-            .repartition(nblocks, "blk")
-            .persist()
-        )
-        src = blocked.drop("blk")
-    else:
-        blocked, src = None, emb
-
-    per_block = []
-    for b in range(nblocks):
-        rows = (
-            blocked.filter(F.col("blk") == b).drop("blk").collect()
-            if nblocks > 1
-            else emb.collect()
-        )
-        if not rows:
-            continue
-        ids = np.array([r.vec_id for r in rows], dtype=np.int64)
-        mat = np.array([r.e for r in rows], dtype=np.float64)
-        matn = mat / np.linalg.norm(mat, axis=1, keepdims=True)
-        order = np.argsort(ids)
-        bc = sc.broadcast((ids[order], matn[order]))
-
-        def prune(it, _bc=bc):
-            s_ids, s_mat = _bc.value
-            for pdf in it:
-                a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
-                a_mat = np.array(list(pdf["e"]), dtype=np.float64)
-                a_mat = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
-                sims = a_mat @ s_mat.T
-                out_a, out_b = [], []
-                for i, va in enumerate(a_ids):
-                    # only b > a: each unordered pair emitted exactly once
-                    j0 = np.searchsorted(s_ids, va, side="right")
-                    hits = np.nonzero(sims[i, j0:] >= threshold)[0]
-                    out_a.extend([va] * len(hits))
-                    out_b.extend(s_ids[j0 + hits].tolist())
-                yield pd.DataFrame({"vec_a": out_a, "vec_b": out_b})
-
-        cand_b = src.mapInPandas(prune, "vec_a long, vec_b long")
-        if nblocks > 1:
-            # materialize this block's candidates, then free its broadcast
-            cand_b = cand_b.localCheckpoint(eager=True)
-            bc.destroy()
-        per_block.append(cand_b)
-
-    if blocked is not None:
-        blocked.unpersist()
-    if not per_block:
-        candidates = local_frame(spark, [], "vec_a long, vec_b long")
-    else:
-        candidates = reduce(lambda x, y: x.unionByName(y), per_block)
-    # exact rescore: broadcast the TINY candidate set (and the
-    # candidate+vector intermediate, still candidate-sized) against the
-    # embeddings — the full table is never broadcast or shuffled here
-    ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"))
-    eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"))
-    cos = dot(F.col("ea"), F.col("eb")) / (norm(F.col("ea")) * norm(F.col("eb")))
-    with_a = ea.join(F.broadcast(candidates), "vec_a")
-    return (
-        eb.join(F.broadcast(with_a), "vec_b")
-        .select("vec_a", "vec_b", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= _DUP_T)
-        .orderBy("vec_a", "vec_b")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -698,14 +574,13 @@ _IVF_NLIST = 16
 _IVF_NPROBE = 4
 
 
-# session-scoped quantizer-state cache (VERDICT r9 item 1): a fitted
-# quantizer is a pure function of (application, sf_dir, config, input
-# bytes) — the same seeded KMeans over the same parquet — so one fit per
-# session serves every consumer instead of each paying it again. Holds
-# the IVF coarse fit (centroids + cached assignment frame) and q200's PQ
-# codebooks. The cache mechanics (applicationId keying, input-snapshot
-# validation, unpersist-on-evict) live in operators/session_cache.py,
-# shared with the dedup CC label cache since round 11.
+# Session-scoped quantizer-state cache: a fitted quantizer is a pure
+# function of (application, sf_dir, config, input bytes), the same seeded
+# KMeans over the same rows, so one fit per session serves every consumer.
+# It holds the IVF coarse fit (centroids + cached assignment frame) and
+# q200's PQ codebooks. The cache mechanics (applicationId keying,
+# input-snapshot validation, unpersist-on-evict) live in
+# operators/session_cache.py, shared with the dedup CC label cache.
 from ..operators import session_cache as _state_cache
 
 _table_snapshot = _state_cache.table_snapshot
@@ -713,27 +588,24 @@ _quantizer_cache_get = _state_cache.get
 _quantizer_cache_put = _state_cache.put
 
 
-def _ivf_fit(spark: SparkSession, sf_dir: str):
-    """KMeans coarse-quantizer fit + per-vector cell assignment — shared
-    by the IVF probe path (_ivf_scored / q64 / q205) and the cell-balance
-    audit (q222), so the audit measures the EXACT index state the probes
-    run against. Returns (centroids as [nlist][dim] floats, assigned
-    frame); fits ONCE per (session, sf_dir, nlist) — q222's audit on top
-    of a probe-serving session costs one aggregate, not a re-fit."""
-    key = (spark.sparkContext.applicationId, sf_dir, _IVF_NLIST)
-    snapshot = _table_snapshot(sf_dir, "embeddings")
-    hit = _quantizer_cache_get(key, snapshot)
-    if hit is not None:
-        return hit
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
+def _fit_rows(df: DataFrame) -> DataFrame:
+    """The input of every quantizer fit: ``df`` on ONE partition ordered by
+    vec_id. MLlib KMeans' k-means|| initialisation samples per input
+    partition, and a table's partition count follows the core count; on
+    one ordered partition the fitted centers depend on the rows alone, so
+    the session cache's pure-function premise holds on any box."""
+    return df.repartition(1).sortWithinPartitions("vec_id")
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        as_double(F.col("embedding")).alias("e"),
-        array_to_vector(F.col("embedding").cast("array<double>")).alias("vec"),
+
+def _ivf_quantize(emb: DataFrame):
+    """Seeded KMeans coarse quantizer over ``emb`` (vec_id, e, vec): fit on
+    _fit_rows(emb), assign every row of ``emb``. Returns (centroids as
+    [nlist][dim] floats, cached (vec_id, e, nc, cell) assignment frame)."""
+    from pyspark.ml.clustering import KMeans
+
+    km = KMeans(featuresCol="vec", k=_IVF_NLIST, seed=42, predictionCol="cell").fit(
+        _fit_rows(emb)
     )
-    km = KMeans(featuresCol="vec", k=_IVF_NLIST, seed=42, predictionCol="cell").fit(emb)
     # stage per-row norm with the cell assignment (see q38: a norm inside
     # the pair projection re-folds per probe hit)
     assigned = (
@@ -741,9 +613,30 @@ def _ivf_fit(spark: SparkSession, sf_dir: str):
         .select("vec_id", "e", norm(F.col("e")).alias("nc"), "cell")
         .cache()
     )
-    centers = [[float(x) for x in c] for c in km.clusterCenters()]
-    _quantizer_cache_put(key, snapshot, (centers, assigned))
-    return centers, assigned
+    return [[float(x) for x in c] for c in km.clusterCenters()], assigned
+
+
+def _ivf_fit(spark: SparkSession, sf_dir: str):
+    """The session's IVF quantizer (_ivf_quantize over the embeddings),
+    shared by the IVF probe path (_ivf_scored / q64 / q205) and the
+    cell-balance audit (q222), so the audit measures the EXACT index state
+    the probes run against. Fits ONCE per (session, sf_dir, nlist): q222's
+    audit on top of a probe-serving session costs one aggregate."""
+    key = (spark.sparkContext.applicationId, sf_dir, _IVF_NLIST)
+    snapshot = _table_snapshot(sf_dir, "embeddings")
+    hit = _quantizer_cache_get(key, snapshot)
+    if hit is not None:
+        return hit
+    from pyspark.ml.functions import array_to_vector
+
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        as_double(F.col("embedding")).alias("e"),
+        array_to_vector(F.col("embedding").cast("array<double>")).alias("vec"),
+    )
+    fit = _ivf_quantize(emb)
+    _quantizer_cache_put(key, snapshot, fit)
+    return fit
 
 
 def ivf_cell_udf(centers: list):
@@ -786,11 +679,7 @@ def ivf_probe_scored(
     q64/q205) and the store-built index (streaming ivf_topk_from_store),
     so the serving and the incrementally-maintained index probe through
     the SAME code."""
-    centroids = local_frame(
-        spark,
-        [(i, c) for i, c in enumerate(centers)],
-        "cell int, centroid array<double>",
-    )
+    centroids = centers_frame(spark, centers)
     q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nc").alias("nq")
     )
@@ -852,7 +741,7 @@ def q64_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q222 — IVF cell-balance audit (VERDICT r8 item 2): the vector-index
+# q222 — IVF cell-balance audit: the vector-index
 # health twin of q172's partition-skew audit. A skewed coarse quantizer
 # silently destroys an IVF index twice over — hot cells make every probe
 # that touches them scan far more than nprobe/nlist of the corpus, and
@@ -1633,9 +1522,7 @@ def mmr_rerank(
 
 
 def _scored_pool(spark: SparkSession, sf_dir: str, pool: int = _MMR_POOL) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir)
     emb = emb.select("vec_id", "e", norm(F.col("e")).alias("nc"))
     q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nc").alias("nq")
@@ -1665,7 +1552,7 @@ def q199_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q205_mmr_ivf_rerank")
 def q205_mmr_ivf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MMR over an ANN pool (VERDICT r6 item 7): the candidate pool comes
+    """MMR over an ANN pool: the candidate pool comes
     from the IVF probe path (q64's coarse-quantizer cells) instead of the
     brute-force score of the whole corpus — the composition a 100-TB
     retrieval stack actually runs (ANN recall -> diversity rerank). Pool
@@ -1715,21 +1602,24 @@ def _pq_codebooks(spark: SparkSession, emb: DataFrame, dim: int) -> list[list[li
     driver-side loops submitting jobs, and overlapping them fills the
     scheduler instead of serializing 8 × per-fit job latency (measured:
     the sequential form dominated q200's cold-session cost). One cached
-    materialization of all slices feeds every fit; each fit alone would
-    re-scan the parquet and re-run the float cast per KMeans iteration.
-    Seeds are fixed per subspace, so the result is identical to the
-    sequential fit."""
+    materialization of all slices, on _fit_rows' single ordered
+    partition, feeds every fit; each fit alone would re-scan the parquet
+    and re-run the float cast per KMeans iteration. Seeds are fixed per
+    subspace, so the result is identical to the sequential fit."""
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
     d = dim // _PQ_M
-    staged = emb.select(
-        *[
-            array_to_vector(F.slice(F.col("e"), m * d + 1, d)).alias(f"sub{m}")
-            for m in range(_PQ_M)
-        ]
+    staged = _fit_rows(
+        emb.select(
+            "vec_id",
+            *[
+                array_to_vector(F.slice(F.col("e"), m * d + 1, d)).alias(f"sub{m}")
+                for m in range(_PQ_M)
+            ],
+        )
     ).cache()
     staged.count()
     try:
@@ -1749,11 +1639,9 @@ def _pq_codebooks(spark: SparkSession, emb: DataFrame, dim: int) -> list[list[li
 
 
 def _assert_finite_books(books: list[list[list[float]]]) -> None:
-    """Fail fast on a degenerate KMeans fit (ADVICE r11): a non-finite
-    centroid would previously surface only as an unparseable `infD` SQL
-    literal deep in the encode expression; the numpy kernels would
-    silently propagate it into every distance. M*K*d ≈ 1k checks —
-    negligible next to the fit."""
+    """Fail fast on a degenerate KMeans fit: the numpy kernels would
+    silently propagate a non-finite centroid into every distance. M*K*d ≈
+    1k checks, negligible next to the fit."""
     for m, book in enumerate(books):
         for k, c in enumerate(book):
             for x in c:
@@ -1762,51 +1650,6 @@ def _assert_finite_books(books: list[list[list[float]]]) -> None:
                         f"PQ codebook m={m} k={k} contains non-finite value "
                         f"{x!r} — degenerate KMeans fit on that subspace"
                     )
-
-
-def _pq_encode(books: list[list[list[float]]]) -> F.Column:
-    """codes array<int>: per subspace, the index of the nearest codebook
-    centroid (first-min tie-break via array_position — deterministic).
-
-    r12: this SQL-expression form is the REFERENCE implementation — the
-    serving paths encode through the `_pq_encode_frame` numpy kernel
-    (guide §4.2), and the kernel is pinned bit-identical to this tree by
-    tests/test_dedup_similarity.py::test_pq_kernel_matches_expression.
-
-    r11 (guide §7.3 driver-side work): the expression is assembled as ONE
-    SQL string handed to a single F.expr() parse. The Column-by-Column
-    form built ~4k py4j-proxied operator nodes (M*K centroids x sub_dim
-    terms x several calls each) — measured 18 s of pure driver time PER
-    PLAN BUILD at M=8, K=16, d=8, paid again on every bench/sweep rebuild.
-    The SQL text parses in the JVM in milliseconds and yields the
-    identical expression tree: `xD` double literals reproduce F.lit(c)
-    bit-exactly (repr round-trips, Double.parseDouble is correctly
-    rounded), the leading `0 +` matches Python sum()'s int seed, and
-    left-associative `+`/`*` keep the same IEEE fold order."""
-    _assert_finite_books(books)
-    d = len(books[0][0])
-
-    def _sum_sql(terms: list[str]) -> str:
-        # Python sum() seeds with int 0 and pyspark's __radd__ emits it as
-        # `t0 + 0`; reproduce that exact tree so the plan text (and the
-        # archived snapshots) do not move
-        return " + ".join([terms[0], "0", *terms[1:]])
-
-    codes = []
-    for m, book in enumerate(books):
-        dists = ", ".join(
-            _sum_sql(
-                [
-                    f"(e[{m * d + i}] - {c[i]!r}D) * (e[{m * d + i}] - {c[i]!r}D)"
-                    for i in range(d)
-                ]
-            )
-            for c in book
-        )
-        codes.append(
-            f"cast(array_position(array({dists}), array_min(array({dists}))) - 1 as int)"
-        )
-    return F.expr("array(" + ", ".join(codes) + ")")
 
 
 def _list_col_matrix(arr, n: int, width: int, what: str):
@@ -1829,16 +1672,17 @@ def _list_col_matrix(arr, n: int, width: int, what: str):
 
 def _pq_encode_frame(df: DataFrame, books: list[list[list[float]]]) -> DataFrame:
     """(vec_id, e) -> (vec_id, codes array<int>, nc double): the PQ store
-    build as ONE mapInArrow numpy kernel (guide §4.2) instead of the r11
-    giant inline expression (M*K*d ≈ 1k multiply-adds per row, which
-    janino either compiles slowly or drops to interpreted mode — the same
-    cliff the streaming IVF assigner hit). Shared by q200's session store,
+    build as ONE mapInArrow numpy kernel (an inline expression would be
+    M*K*d ≈ 1k multiply-adds per row, which janino either compiles slowly
+    or drops to interpreted mode — the same cliff the streaming IVF
+    assigner avoids). Shared by q200's session store,
     the persisted-index saver (sources/ann_index.save_pq_index) and the
     streaming ingest encoder (streaming/events.run_stream_pq_encode), so
     every store stays bit-identical across paths.
 
-    Bit-exactness vs the reference expressions `_pq_encode(books)` +
-    `norm(e)` (pinned by test_pq_kernel_matches_expression): numpy float64
+    Bit-exactness vs the reference expressions (`_pq_encode(books)` +
+    `norm(e)` in tests/test_dedup_similarity.py, checked by
+    test_pq_kernel_matches_expression): numpy float64
     ops are the same IEEE-754 doubles the JVM evaluates, every sum is
     accumulated in the reference's left-associative order term by term
     (including the `t0 + 0` seed Python sum() leaves in the tree), and
@@ -1854,7 +1698,6 @@ def _pq_encode_frame(df: DataFrame, books: list[list[list[float]]]) -> DataFrame
     d = len(books[0][0])
     m_books = [np.asarray(book, dtype=np.float64) for book in books]
     dim = len(books) * d
-    out_schema = "vec_id bigint, codes array<int>, nc double"
     pa_schema = pa.schema(
         [
             ("vec_id", pa.int64()),
@@ -1907,7 +1750,7 @@ def _pq_encode_frame(df: DataFrame, books: list[list[list[float]]]) -> DataFrame
                 schema=pa_schema,
             )
 
-    return df.select("vec_id", "e").mapInArrow(encode, out_schema)
+    return df.select("vec_id", "e").mapInArrow(encode, CODES_SCHEMA)
 
 
 _PQ_SHORTLIST = 100  # ADC shortlist width fed to the exact rerank
@@ -1923,13 +1766,11 @@ def q200_pq_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the scorer, with float I/O proportional to queries, not
     corpus. Emitted cos_sim is the exact fold, so the rerank output is
     comparable row-for-row with q38."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
+    emb = embedding_vectors(spark, sf_dir)
     dim = len(emb.select("e").first()["e"])
     books = _pq_books(spark, sf_dir, emb, dim)
     # the serving store: codes + exact norm only (no float vectors) —
-    # encoded through the numpy kernel (r12, guide §4.2)
+    # encoded through the numpy kernel
     store = _pq_encode_frame(emb, books)
     return _pq_adc_rank(spark, emb, books, store)
 
@@ -1960,7 +1801,8 @@ def _pq_query_luts(
     _PQ_K centers, so indexing uses cumulative offsets, not a fixed
     m*_PQ_K stride). Computed in plain Python floats, which ARE IEEE
     doubles, in the reference expression's exact fold order
-    (`t0 + 0 + t1 + ...` — see _pq_adc_scored_expr)."""
+    (`t0 + 0 + t1 + ...` — see _pq_adc_scored_expr in
+    tests/test_dedup_similarity.py)."""
     d = len(books[0][0])
     luts = []
     for _qid, qe in q_rows:
@@ -1985,9 +1827,8 @@ def _pq_adc_scored(
 ) -> DataFrame:
     """(q_id, cand_id, adc_score) for every (query, store row) pair with
     vec_id != q_id — the ADC LUT gather + sum as a mapInArrow numpy kernel
-    over the code store (guide §4.2; r12, VERDICT r11 item 1), replacing
-    the broadcast-nested-loop join against a 1k-term codegen'd gather
-    expression. The queries (≤ _N_QUERIES rows) ride the task closure —
+    over the code store, instead of a broadcast-nested-loop join against
+    a 1k-term codegen'd gather expression. The queries (≤ _N_QUERIES rows) ride the task closure —
     the same frozen-state shape as the streaming IVF assigner kernel.
 
     ``local_top``: when set, each task pre-selects its per-query exact
@@ -2075,46 +1916,6 @@ def _pq_adc_scored(
     )
 
 
-def _pq_adc_scored_expr(
-    books: list[list[list[float]]], q: DataFrame, store: DataFrame
-) -> DataFrame:
-    """REFERENCE implementation of the ADC scored frame (r11 shape, kept
-    verbatim for the kernel equivalence pin): per-query LUT as one parsed
-    SQL expression, broadcast-joined against the store, gather + sum as
-    JVM element_at expressions. `t0 + 0 + t1...` matches Python sum()'s
-    fold; the kernel must reproduce every score bit-for-bit."""
-    d = len(books[0][0])
-    offsets = [0]
-    for book in books:
-        offsets.append(offsets[-1] + len(book))
-    lut = F.expr(
-        "array("
-        + ", ".join(
-            " + ".join(
-                [f"qe[{m * d}] * {c[0]!r}D", "0"]
-                + [f"qe[{m * d + i}] * {c[i]!r}D" for i in range(1, d)]
-            )
-            for m, book in enumerate(books)
-            for c in book
-        )
-        + ")"
-    )
-    ql = q.select("q_id", lut.alias("lut"))
-    adc = sum(
-        F.element_at(F.col("lut"), F.col("codes")[m].cast("int") + offsets[m] + 1)
-        for m in range(len(books))
-    )
-    return (
-        F.broadcast(ql)
-        .join(store, F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (adc / F.col("nc")).alias("adc_score"),  # |q| constant per query
-        )
-    )
-
-
 def _pq_adc_rank(
     spark: SparkSession,
     emb: DataFrame,
@@ -2125,7 +1926,7 @@ def _pq_adc_rank(
     the session-built store (q200), the persisted index
     (sources/ann_index.pq_topk_from_index) and the streaming store
     (streaming/events.pq_topk_from_store) rank through this one body, so a
-    loaded index is pinned row-for-row to the session fit. ``emb``
+    loaded index ranks row-for-row like the session fit. ``emb``
     supplies the query vectors and the rerank floats only.
 
     The query slice (vec_id < _N_QUERIES, a pushed-down scan filter) is
@@ -2169,7 +1970,7 @@ def _pq_adc_rank(
 
 
 # ---------------------------------------------------------------------------
-# q228 — retrieval-quality metrics (round-10): nDCG@k and recall@k of the
+# q228 — retrieval-quality metrics: nDCG@k and recall@k of the
 # exact cosine top-k ranking (q38) against a deterministic relevance set
 # (candidate shares the query's embedding label — the standard
 # labels-as-relevance eval a retrieval stack runs before shipping an
@@ -2319,14 +2120,20 @@ def retrieval_metrics(
     ).orderBy("q_id")
 
 
-@register("q228_retrieval_ndcg", oracle=_Q228_ORACLE)
-def q228_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
+def label_metrics(spark: SparkSession, sf_dir: str, topk: DataFrame) -> DataFrame:
+    """retrieval_metrics of a (q_id, cand_id, rk) ranking over the query
+    vectors against the embeddings table's labels."""
     lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
     return retrieval_metrics(
-        q38_cosine_topk(spark, sf_dir).select("q_id", "cand_id", "rk"),
+        topk.select("q_id", "cand_id", "rk"),
         lab,
         query_lab=lab.filter(F.col("vec_id") < _N_QUERIES),
     )
+
+
+@register("q228_retrieval_ndcg", oracle=_Q228_ORACLE)
+def q228_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return label_metrics(spark, sf_dir, q38_cosine_topk(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -2342,16 +2149,11 @@ def q228_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q229_ann_retrieval_ndcg")
 def q229_ann_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    return retrieval_metrics(
-        q64_ann_ivf_topk(spark, sf_dir).select("q_id", "cand_id", "rk"),
-        lab,
-        query_lab=lab.filter(F.col("vec_id") < _N_QUERIES),
-    )
+    return label_metrics(spark, sf_dir, q64_ann_ivf_topk(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
-# q230/q231 — the rest of the index-eval matrix (round 11): q229 scores
+# q230/q231 — the rest of the index-eval matrix: q229 scores
 # the IVF ranking; q230 scores the int8 multi-probe ANN (q133, the
 # fully-quantized serving store) and q231 the PQ-ADC index (q200), each
 # through the SAME retrieval_metrics core as the exact baseline q228 —
@@ -2368,19 +2170,9 @@ def q229_ann_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q230_int8_retrieval_ndcg")
 def q230_int8_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    return retrieval_metrics(
-        q133_int8_ann_topk(spark, sf_dir).select("q_id", "cand_id", "rk"),
-        lab,
-        query_lab=lab.filter(F.col("vec_id") < _N_QUERIES),
-    )
+    return label_metrics(spark, sf_dir, q133_int8_ann_topk(spark, sf_dir))
 
 
 @register("q231_pq_retrieval_ndcg")
 def q231_pq_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    return retrieval_metrics(
-        q200_pq_ann_topk(spark, sf_dir).select("q_id", "cand_id", "rk"),
-        lab,
-        query_lab=lab.filter(F.col("vec_id") < _N_QUERIES),
-    )
+    return label_metrics(spark, sf_dir, q200_pq_ann_topk(spark, sf_dir))

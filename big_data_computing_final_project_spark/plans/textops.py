@@ -367,11 +367,6 @@ def q80_denylist_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def redact(text: F.Column, pattern: str = _DENYLIST_RE, mask: str = "[MASK]") -> F.Column:
-    """The rewrite itself (q80 reports on it): denylist matches -> mask."""
-    return F.regexp_replace(text, pattern, mask)
-
-
 # ---------------------------------------------------------------------------
 # q81 — fixed-size document chunking (tokenize -> split every doc into
 # 32-token chunks), the 1-row -> N-rows shaping step before embedding or

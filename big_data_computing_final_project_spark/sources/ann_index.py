@@ -1,33 +1,39 @@
-"""Persisted ANN index artifacts (SURVEY.md §2.1 S3 family, round 11).
+"""The vector-index format: quantizer files, index meta and persisted ANN
+indexes (SURVEY.md §2.1 S3 family).
 
-The serving lifecycle so far keeps its fitted state session-resident (the
-operators/session_cache.py contract): the IVF coarse quantizer, the PQ
-codebooks, and the per-vector assignments/codes die with the driver and
-are re-fit by the next session. That is the right cache, but not a
-deployment story — at 100 TB a quantizer is fit ONCE on a build cluster
-and served by many short-lived query drivers, none of which should ever
-pay (or even be able to run) the KMeans job. These functions make the
-fitted index a durable artifact, the `joblib.dump(model_package, ...)`
-analogue (reference `Sol_2.ipynb:915`) for the vector-serving family:
+This module is the one place that knows how a vector index is laid out on
+disk. Three sources produce an index, and each yields the same pair:
 
-- ``save_ivf_index`` writes the coarse centroids plus the assignment
-  frame laid out as the physical inverted lists: parquet PARTITIONED BY
-  cell. That layout is the point — a probe joins the (tiny, broadcast)
-  query->cell frame against the lists on the PARTITION column, so Spark's
-  dynamic partition pruning skips every unprobed cell's files at scan
-  time. The session-cached frame can never do that; the persisted index
-  reads nprobe/nlist of the corpus from disk, which at 100 TB is the
-  difference between a 100-TB scan and a ~6-TB one per query batch.
-- ``save_pq_index`` writes the per-subspace codebooks and the encoded
-  code store (vec_id, 4-bit codes, exact norm) — the 64x-compressed
-  serving table q200 builds per session. A query driver reads codes +
-  codebooks only; the float store is touched for rerank survivors alone.
+- the session fit (plans/similarity._ivf_fit / _pq_books);
+- a persisted index (``load_ivf_index`` / ``load_pq_index`` below);
+- a live ingest store (streaming/events.load_ivf_store / load_pq_store).
+
+For IVF the pair is ``(centers, lists)``: the [nlist][dim] coarse
+centroids and the (vec_id, e, nc, cell) inverted lists. For PQ it is
+``(books, codes)``: the [m][k][sub_dim] codebooks and the (vec_id, codes,
+nc) code store. One writer and one reader per file kind serve every
+source:
+
+- ``centers``: ``cell int, centroid array<double>``, one row per cell;
+- ``books``: ``m int, k int, centroid array<double>``, one row per
+  centroid (a degenerate subspace fit may hold fewer than K);
+- ``_index_meta.json``: kind, shape and the source table snapshot.
+
+A persisted index is the fitted model bundle, the analogue of
+``joblib.dump(model_package, ...)`` (reference ``Sol_2.ipynb:915``): a
+build cluster fits once and serving sessions load it without running
+KMeans.
+
+- An IVF index holds ``centers`` plus the lists as parquet PARTITIONED BY
+  cell. A probe joins the small query->cell frame against the lists on
+  the partition column, so dynamic partition pruning reads only the
+  probed cells' files: nprobe/nlist of the corpus.
+- A PQ index holds ``books`` plus the code store, the 64x-compressed
+  table ADC scans; the float vectors are read for rerank survivors only.
 
 Every save records the source table snapshot (operators/session_cache.
-table_snapshot) in a meta file; load refuses an index whose source bytes
-changed, the same staleness contract the session cache enforces
-(ADVICE r10). Loads rebuild NOTHING: pytest pins the loaded-index
-rankings row-for-row against the session-fit q64/q200.
+table_snapshot); a load given the source ``sf_dir`` refuses an index
+whose source bytes changed, the staleness contract of the session cache.
 """
 
 from __future__ import annotations
@@ -36,34 +42,72 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..operators.session_cache import table_snapshot
 from .io import local_frame
 
+_CENTERS = "cell int, centroid array<double>"
+_BOOKS = "m int, k int, centroid array<double>"
+_LISTS = "vec_id bigint, e array<double>, nc double, cell int"
+CODES_SCHEMA = "vec_id bigint, codes array<int>, nc double"
 _META = "_index_meta.json"
 
 
-def _write_meta(index_dir: str, meta: dict) -> None:
-    os.makedirs(index_dir, exist_ok=True)
+def centers_frame(spark: SparkSession, centers: list) -> DataFrame:
+    """The [nlist][dim] centroids as a (cell, centroid) frame."""
+    return local_frame(
+        spark, [(i, [float(x) for x in c]) for i, c in enumerate(centers)], _CENTERS
+    )
+
+
+def write_centers(spark: SparkSession, centers: list, path: str) -> None:
+    centers_frame(spark, centers).coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def read_centers(spark: SparkSession, path: str) -> list:
+    """The centroids as [nlist][dim] floats, in cell order."""
+    rows = spark.read.schema(_CENTERS).parquet(path).orderBy("cell").collect()
+    return [[float(x) for x in r["centroid"]] for r in rows]
+
+
+def write_books(spark: SparkSession, books: list, path: str) -> None:
+    rows = [
+        (m, k, [float(x) for x in c]) for m, book in enumerate(books) for k, c in enumerate(book)
+    ]
+    local_frame(spark, rows, _BOOKS).coalesce(1).write.mode("overwrite").parquet(path)
+
+
+def read_books(spark: SparkSession, path: str) -> list:
+    """The codebooks as [m][k][sub_dim] floats; each book keeps its own
+    length."""
+    by_m: dict = {}
+    for r in spark.read.schema(_BOOKS).parquet(path).collect():
+        by_m.setdefault(r["m"], {})[r["k"]] = [float(x) for x in r["centroid"]]
+    return [[by_m[m][k] for k in sorted(by_m[m])] for m in sorted(by_m)]
+
+
+def _write_meta(index_dir: str, sf_dir: str, kind: str, **shape: int) -> None:
+    meta = {
+        "kind": kind,
+        **shape,
+        "snapshot": [list(t) for t in table_snapshot(sf_dir, "embeddings")],
+    }
     tmp = os.path.join(index_dir, _META + ".tmp")
     with open(tmp, "w") as fh:
         json.dump(meta, fh)
     os.replace(tmp, os.path.join(index_dir, _META))
 
 
-def _read_meta(index_dir: str) -> dict:
+def _check_meta(index_dir: str, kind: str, sf_dir: str | None) -> None:
+    """Refuse an index of another kind, and, if the caller names the
+    source sf_dir, one whose recorded table snapshot is not the live one."""
     with open(os.path.join(index_dir, _META)) as fh:
-        return json.load(fh)
-
-
-def _check_snapshot(index_dir: str, meta: dict, sf_dir: str | None) -> None:
-    """Refuse a stale index: if the caller names the source sf_dir, the
-    live table snapshot must equal the one recorded at save time."""
-    if sf_dir is None:
-        return
-    live = [list(t) for t in table_snapshot(sf_dir, "embeddings")]
-    if live != meta["snapshot"]:
+        meta = json.load(fh)
+    if meta.get("kind") != kind:
+        raise ValueError(f"{index_dir} holds a {meta.get('kind')} index, not {kind}")
+    if sf_dir is not None and meta["snapshot"] != [
+        list(t) for t in table_snapshot(sf_dir, "embeddings")
+    ]:
         raise ValueError(
             f"index at {index_dir} was built from different embedding bytes "
             "than the given sf_dir holds now; rebuild the index"
@@ -75,117 +119,53 @@ def _check_snapshot(index_dir: str, meta: dict, sf_dir: str | None) -> None:
 # ---------------------------------------------------------------------------
 
 
+def _save_ivf(
+    spark: SparkSession, sf_dir: str, index_dir: str, centers: list, lists: DataFrame
+) -> None:
+    write_centers(spark, centers, os.path.join(index_dir, "centers"))
+    lists.write.mode("overwrite").partitionBy("cell").parquet(os.path.join(index_dir, "lists"))
+    _write_meta(index_dir, sf_dir, "ivf", nlist=len(centers), dim=len(centers[0]))
+
+
 def save_ivf_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
-    """Persist the session's IVF index (fitting it first if this session
-    never has — the fit rides the session cache, so saving from a serving
-    session costs two writes, not a re-fit)."""
-    from ..plans.similarity import _IVF_NLIST, _ivf_fit
+    """Persist the session's IVF index. The fit rides the session cache,
+    so saving from a serving session costs two writes, not a re-fit."""
+    from ..plans.similarity import _ivf_fit
 
-    centers, assigned = _ivf_fit(spark, sf_dir)
-    local_frame(
-        spark, [(i, c) for i, c in enumerate(centers)], "cell int, centroid array<double>"
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "centers"))
-    # the inverted-list layout: one parquet partition per cell
-    assigned.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, "lists")
-    )
-    _write_meta(
-        index_dir,
-        {
-            "kind": "ivf",
-            "nlist": _IVF_NLIST,
-            "dim": len(centers[0]),
-            "snapshot": [list(t) for t in table_snapshot(sf_dir, "embeddings")],
-        },
-    )
-
-
-def load_ivf_index(
-    spark: SparkSession, index_dir: str, sf_dir: str | None = None
-) -> tuple[list, DataFrame]:
-    """(centers, lists) in exactly the shape plans/similarity expects:
-    centers as [nlist][dim] floats, lists as (vec_id, e, nc, cell). The
-    lists frame is a lazy scan of the partitioned parquet — probing it
-    joins on the partition column, so only probed cells' files are read."""
-    meta = _read_meta(index_dir)
-    if meta.get("kind") != "ivf":
-        raise ValueError(f"{index_dir} holds a {meta.get('kind')} index, not ivf")
-    _check_snapshot(index_dir, meta, sf_dir)
-    rows = (
-        spark.read.parquet(os.path.join(index_dir, "centers"))
-        .orderBy("cell")
-        .collect()
-    )
-    centers = [[float(x) for x in r["centroid"]] for r in rows]
-    lists_dir = os.path.join(index_dir, "lists")
-    lists = (
-        spark.read.schema("vec_id bigint, e array<double>, nc double, cell int")
-        .option("basePath", lists_dir)
-        .parquet(lists_dir)
-    )
-    return centers, lists
-
-
-def ivf_topk_from_index(
-    spark: SparkSession, index_dir: str, sf_dir: str | None = None
-) -> DataFrame:
-    """q64's ranking served from the persisted index — probe and rerank
-    through the SAME core as the session-fit path (ivf_probe_scored /
-    ivf_topk), with zero fitting: a fresh driver can serve immediately.
-    Pinned row-for-row equal to q64 in tests/test_index_persistence.py."""
-    from ..plans.similarity import ivf_probe_scored, ivf_topk
-
-    centers, lists = load_ivf_index(spark, index_dir, sf_dir)
-    return ivf_topk(ivf_probe_scored(spark, centers, lists))
+    _save_ivf(spark, sf_dir, index_dir, *_ivf_fit(spark, sf_dir))
 
 
 def save_ivf_index_from_store(
     spark: SparkSession, sf_dir: str, store_dir: str, index_dir: str
 ) -> None:
     """Promote a live IVF ingest store (streaming/events.
-    run_stream_ivf_assign) to the servable partitioned artifact — the
-    compaction-to-serving handoff of the index lifecycle: the ingest tier
-    maintains (vec_id, cell) deltas and the balance monitor; when the
-    index is due to ship, this folds the store, joins the float vectors
-    back from the embeddings table ONCE, and writes the cell-partitioned
-    inverted lists + centers that ivf_topk_from_index serves with dynamic
-    partition pruning. No quantizer runs; the store's frozen centers ARE
-    the index's."""
-    from ..catalog import load_table
-    from ..plans.similarity import as_double, norm
+    run_stream_ivf_assign) to the servable partitioned index. No quantizer
+    runs: the store's frozen centers are the index's."""
+    from ..streaming.events import load_ivf_store
 
-    from ..streaming.events import _IVF, _part
+    _save_ivf(spark, sf_dir, index_dir, *load_ivf_store(spark, sf_dir, store_dir))
 
-    center_rows = (
-        spark.read.schema("cell int, centroid array<double>")
-        .parquet(os.path.join(store_dir, "centers"))
-        .orderBy("cell")
-        .collect()
-    )
-    assign = _part(_IVF, "assign").fold(spark, store_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
-    lists = emb.join(assign, "vec_id").select(
-        "vec_id", "e", norm(F.col("e")).alias("nc"), "cell"
-    )
-    local_frame(
-        spark,
-        [(r["cell"], [float(x) for x in r["centroid"]]) for r in center_rows],
-        "cell int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "centers"))
-    lists.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(index_dir, "lists")
-    )
-    _write_meta(
-        index_dir,
-        {
-            "kind": "ivf",
-            "nlist": len(center_rows),
-            "dim": len(center_rows[0]["centroid"]),
-            "snapshot": [list(t) for t in table_snapshot(sf_dir, "embeddings")],
-        },
-    )
+
+def load_ivf_index(
+    spark: SparkSession, index_dir: str, sf_dir: str | None = None
+) -> tuple[list, DataFrame]:
+    """(centers, lists). The lists frame is a lazy scan of the partitioned
+    parquet: probing it joins on the partition column, so only probed
+    cells' files are read."""
+    _check_meta(index_dir, "ivf", sf_dir)
+    lists_dir = os.path.join(index_dir, "lists")
+    lists = spark.read.schema(_LISTS).option("basePath", lists_dir).parquet(lists_dir)
+    return read_centers(spark, os.path.join(index_dir, "centers")), lists
+
+
+def ivf_topk_from_index(
+    spark: SparkSession, index_dir: str, sf_dir: str | None = None
+) -> DataFrame:
+    """q64's ranking served from the persisted index through the session
+    fit's probe-and-rerank core, with no fitting."""
+    from ..plans.similarity import ivf_probe_scored, ivf_topk
+
+    return ivf_topk(ivf_probe_scored(spark, *load_ivf_index(spark, index_dir, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -193,104 +173,48 @@ def save_ivf_index_from_store(
 # ---------------------------------------------------------------------------
 
 
-def save_pq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
-    """Persist the PQ serving state q200 builds per session: the
-    [m][k][sub_dim] codebooks (kilobytes) and the encoded store
-    (vec_id, codes, nc) — the 64x-compressed table ADC scans instead of
-    the float corpus."""
-    from ..catalog import load_table
-    from ..plans.similarity import _pq_books, _pq_encode_frame, as_double
+def _save_pq(
+    spark: SparkSession, sf_dir: str, index_dir: str, books: list, codes: DataFrame
+) -> None:
+    write_books(spark, books, os.path.join(index_dir, "books"))
+    codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
+    _write_meta(index_dir, sf_dir, "pq", m=len(books), dim=len(books) * len(books[0][0]))
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
-    dim = len(emb.select("e").first()["e"])
-    books = _pq_books(spark, sf_dir, emb, dim)
-    local_frame(
-        spark,
-        [(m, k, c) for m, book in enumerate(books) for k, c in enumerate(book)],
-        "m int, k int, centroid array<double>",
-    ).coalesce(1).write.mode("overwrite").parquet(os.path.join(index_dir, "books"))
-    _pq_encode_frame(emb, books).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "codes")
-    )
-    _write_meta(
-        index_dir,
-        {
-            "kind": "pq",
-            "m": len(books),
-            "dim": dim,
-            "snapshot": [list(t) for t in table_snapshot(sf_dir, "embeddings")],
-        },
-    )
+
+def save_pq_index(spark: SparkSession, sf_dir: str, index_dir: str) -> None:
+    """Persist the PQ serving state q200 builds per session: the codebooks
+    and the encoded store."""
+    from ..plans.similarity import _pq_books, _pq_encode_frame, embedding_vectors
+
+    emb = embedding_vectors(spark, sf_dir)
+    books = _pq_books(spark, sf_dir, emb, len(emb.select("e").first()["e"]))
+    _save_pq(spark, sf_dir, index_dir, books, _pq_encode_frame(emb, books))
 
 
 def save_pq_index_from_store(
     spark: SparkSession, sf_dir: str, store_dir: str, index_dir: str
 ) -> None:
     """Promote a live PQ ingest store (streaming/events.
-    run_stream_pq_encode) to the persisted serving artifact: fold the
-    code deltas, copy the frozen codebooks, record the source snapshot.
-    No encode runs — the store's codes are already bit-identical to a
-    batch rebuild (the shared _pq_encode_frame kernel), so the promoted
-    index serves q200's exact ranking."""
-    from ..streaming.events import _PQ, _part
+    run_stream_pq_encode) to the persisted index. No encode runs: the
+    store's codes come from the same kernel as a batch rebuild."""
+    from ..streaming.events import load_pq_store
 
-    books = spark.read.schema("m int, k int, centroid array<double>").parquet(
-        os.path.join(store_dir, "books")
-    )
-    codes = _part(_PQ, "codes").fold(spark, store_dir)
-    n_m = books.agg(F.countDistinct("m").alias("n")).collect()[0]["n"]
-    dim_row = books.orderBy("m", "k").first()
-    books.coalesce(1).write.mode("overwrite").parquet(
-        os.path.join(index_dir, "books")
-    )
-    codes.write.mode("overwrite").parquet(os.path.join(index_dir, "codes"))
-    _write_meta(
-        index_dir,
-        {
-            "kind": "pq",
-            "m": int(n_m),
-            "dim": int(n_m) * len(dim_row["centroid"]),
-            "snapshot": [list(t) for t in table_snapshot(sf_dir, "embeddings")],
-        },
-    )
+    _save_pq(spark, sf_dir, index_dir, *load_pq_store(spark, store_dir))
 
 
 def load_pq_index(
     spark: SparkSession, index_dir: str, sf_dir: str | None = None
 ) -> tuple[list, DataFrame]:
-    """(books, code store) — books as [m][k][sub_dim] floats, store as
-    (vec_id, codes, nc)."""
-    meta = _read_meta(index_dir)
-    if meta.get("kind") != "pq":
-        raise ValueError(f"{index_dir} holds a {meta.get('kind')} index, not pq")
-    _check_snapshot(index_dir, meta, sf_dir)
-    rows = spark.read.parquet(os.path.join(index_dir, "books")).collect()
-    by_m: dict = {}
-    for r in rows:
-        by_m.setdefault(r["m"], {})[r["k"]] = [float(x) for x in r["centroid"]]
-    books = [
-        [by_m[m][k] for k in sorted(by_m[m])] for m in sorted(by_m)
-    ]
-    store = spark.read.schema("vec_id bigint, codes array<int>, nc double").parquet(
-        os.path.join(index_dir, "codes")
-    )
-    return books, store
+    """(books, codes)."""
+    _check_meta(index_dir, "pq", sf_dir)
+    codes = spark.read.schema(CODES_SCHEMA).parquet(os.path.join(index_dir, "codes"))
+    return read_books(spark, os.path.join(index_dir, "books")), codes
 
 
-def pq_topk_from_index(
-    spark: SparkSession, index_dir: str, sf_dir: str
-) -> DataFrame:
-    """q200's ranking served from the persisted index: ADC over the
-    loaded code store, exact rerank over the float table (rerank I/O is
-    O(queries x shortlist), the only float touch). Shares q200's scoring
-    core (_pq_adc_rank); pinned row-for-row equal to q200."""
-    from ..catalog import load_table
-    from ..plans.similarity import _pq_adc_rank, as_double
+def pq_topk_from_index(spark: SparkSession, index_dir: str, sf_dir: str) -> DataFrame:
+    """q200's ranking served from the persisted index through q200's
+    ADC-shortlist and exact-rerank core."""
+    from ..plans.similarity import _pq_adc_rank, embedding_vectors
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
-    books, store = load_pq_index(spark, index_dir, sf_dir)
-    return _pq_adc_rank(spark, emb, books, store)
+    books, codes = load_pq_index(spark, index_dir, sf_dir)
+    return _pq_adc_rank(spark, embedding_vectors(spark, sf_dir), books, codes)

@@ -26,6 +26,13 @@ from pyspark.sql import types as T
 from ..catalog import _stored_as_nanos, epoch_us, normalize_events_ts
 from ..functions.stats import dec_sum
 from ..plans.cdc import CDC_OPS_SCHEMA, latest_cdc_ops
+from ..sources.ann_index import (
+    CODES_SCHEMA,
+    read_books,
+    read_centers,
+    write_books,
+    write_centers,
+)
 from ..sources.io import local_frame
 
 
@@ -564,7 +571,7 @@ _IVF = (
     _summed("counts", "cell int, n_vecs bigint", "cell"),
 )
 _PQ = (
-    _rewritten("codes", "vec_id bigint, codes array<int>, nc double"),
+    _rewritten("codes", CODES_SCHEMA),
     _summed("counts", "m int, code int, n_vecs bigint", "m", "code"),
 )
 
@@ -2996,35 +3003,118 @@ def decode_health_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Incremental IVF index maintenance at ingest: the serving-index lifecycle is auditable (q222) and evaluable (q229) but new
-# vectors only entered the index by re-fitting. This store assigns each
-# arriving embedding to the FROZEN coarse-quantizer cells (the _ivf_fit
-# centers — the only state a 100-TB ingest tier ships) with the numpy-GEMM
-# Arrow kernel (ivf_cell_udf: the inline nlist×dim column expression
-# overflows janino codegen and drops to interpreted; the GEMM stays
-# vectorized), stages per-batch assignments + cell-count partials, and
-# appends a live cell-balance log row per batch — alerting the moment the
-# LIVE imbalance factor crosses q222's rebalance threshold, instead of at
-# the next audit. The monitor math is IMPORTED from
-# plans/similarity.cell_balance_from_counts, so the live monitor and the
-# batch audit cannot drift on thresholds.
+# Vector-index maintenance at ingest: new vectors enter an IVF or a PQ index
+# without a re-fit. Each arriving embedding is encoded against the FROZEN
+# quantizer (the only state an ingest tier ships), staged as a delta, and
+# served through the same cores as the session fit. Both stores run one
+# new-vector step (_run_vector_ingest); they differ in the encode, the count
+# keys and the log row. The monitors use q222's cell_balance_from_counts,
+# so a live monitor and the batch audit cannot drift on thresholds.
 #
-# Store layout (marker + _effective_batch_id contract like dup-flow):
-#   centers/           (cell, centroid) — the frozen quantizer, written
-#                      once by the runner; probing reads it back so the
-#                      store IS a self-contained servable index.
-#   assign/batch_id=N/ (vec_id, cell) — batch N's NEW vectors (an
-#                      anti-join drops ids already indexed, so a folded-id
-#                      replay is a no-op like the LSH state store).
-#   counts/batch_id=N/ (cell, n_vecs) — additive per-cell partials of
-#                      batch N's new vectors.
-#   log/batch_id=N/    one row: cumulative n_vecs, imbalance_factor,
-#                      empty_cell_rate, alert.
+# Store layout (marker + _effective_batch_id contract like dup-flow; the
+# quantizer files are written by the first batch in sources/ann_index's
+# format, which makes a store a self-contained servable index):
+#   IVF  centers/           the frozen coarse centroids.
+#        assign/batch_id=N/ (vec_id, cell): batch N's NEW vectors (an
+#                           anti-join drops ids already indexed, so a
+#                           folded-id replay is a no-op), assigned by the
+#                           numpy-GEMM Arrow kernel ivf_cell_udf.
+#        counts/batch_id=N/ (cell, n_vecs): additive per-cell partials.
+#        log/batch_id=N/    one row: cumulative n_vecs, imbalance_factor,
+#                           empty_cell_rate, alert.
+#   PQ   books/             the frozen per-subspace codebooks.
+#        codes/batch_id=N/  (vec_id, codes, nc): batch N's new vectors,
+#                           encoded by q200's _pq_encode_frame kernel, so
+#                           codes are bit-identical to a batch rebuild.
+#        counts/batch_id=N/ (m, code, n_vecs): additive code-usage partials.
+#        log/batch_id=N/    one row: cumulative n_vecs, worst per-subspace
+#                           imbalance factor, alert. A hot code means a
+#                           degenerate subspace codebook, the PQ analogue
+#                           of a hot IVF cell.
 # ---------------------------------------------------------------------------
 
 _IVF_MONITOR_LOG_SCHEMA = (
     "n_vecs bigint, imbalance_factor double, empty_cell_rate double, alert boolean"
 )
+_PQ_MONITOR_LOG_SCHEMA = "n_vecs bigint, imbalance_factor double, alert boolean"
+
+
+def _run_vector_ingest(
+    vectors: DataFrame,
+    store_dir: str,
+    checkpoint_dir: str,
+    timeout_sec: int,
+    label: str,
+    parts: tuple[_Part, _Part],
+    quantizer: tuple[str, Callable[[SparkSession, str], None]],
+    encode: Callable[[DataFrame], DataFrame],
+    keys: list,
+    log_row: Callable[[DataFrame], DataFrame],
+) -> None:
+    """The new-vector step of a vector-index store: write the frozen
+    quantizer once (``quantizer`` is its sub-dir and writer), remap the
+    batch id, anti-join ids already indexed, ``encode`` the (vec_id, e)
+    rest, stage it, stage the counts of the staged delta per ``keys``
+    (column expressions over the delta naming the counts part's keys), and
+    stage ``log_row`` of the cumulative counts."""
+    from ..plans.similarity import as_double
+
+    vecs, counts = parts
+    quantizer_dir = os.path.join(store_dir, quantizer[0])
+
+    def ingest(batch: DataFrame, batch_id: int) -> None:
+        spark = batch.sparkSession
+        if not os.path.exists(quantizer_dir):
+            quantizer[1](spark, quantizer_dir)
+        eff_id = _effective_batch_id(store_dir, batch_id, parts)
+        prior = vecs.read(spark, store_dir).where(F.col("batch_id") < eff_id).select("vec_id")
+        new = encode(
+            batch.join(prior, "vec_id", "left_anti").select(
+                "vec_id", as_double(F.col("embedding")).alias("e")
+            )
+        )
+        # counts from the just-staged delta: the encode never recomputes
+        own = spark.read.schema(vecs.schema).parquet(_stage(new, vecs.path(store_dir), eff_id))
+        _stage(
+            own.select(*keys)
+            .groupBy(*_columns(counts.schema)[:-1])
+            .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs")),
+            counts.path(store_dir),
+            eff_id,
+        )
+        cum = counts.merge(counts.read(spark, store_dir).where(F.col("batch_id") <= eff_id))
+        _stage(log_row(cum), os.path.join(store_dir, "log"), eff_id)
+
+    _run_foreach_batch(vectors, ingest, checkpoint_dir, timeout_sec, label)
+
+
+def _balance_summary(balance, *cols: str) -> DataFrame:
+    """One row per group of q222 balance rows (``balance`` is a frame or a
+    grouped frame): total n_vecs, the max of each of ``cols``, and whether
+    any row recommends a rebalance."""
+    return balance.agg(
+        F.sum("n_vecs").cast("bigint").alias("n_vecs"),
+        *[F.max(c).alias(c) for c in cols],
+        F.max((F.col("recommendation") == "rebalance").cast("boolean")).alias("alert"),
+    )
+
+
+def _pq_code_balance(counts: DataFrame, sizes: list[int]) -> DataFrame:
+    """q222's balance rows per PQ subspace over (m, code, n_vecs) counts:
+    subspace m is audited over its ``sizes[m]`` codes, as (m, cell, ...)."""
+    from functools import reduce
+
+    from ..plans.similarity import cell_balance_from_counts
+
+    return reduce(
+        DataFrame.unionByName,
+        [
+            cell_balance_from_counts(
+                counts.where(F.col("m") == m).select(F.col("code").alias("cell"), "n_vecs"), k
+            ).select(F.lit(m).alias("m"), "*")
+            for m, k in enumerate(sizes)
+        ],
+    )
 
 
 def run_stream_ivf_assign(
@@ -3038,166 +3128,23 @@ def run_stream_ivf_assign(
     streaming frame of (vec_id, embedding); ``centers`` the [nlist][dim]
     frozen coarse centroids (from plans/similarity._ivf_fit, or any
     quantizer with the same shape)."""
-    from ..plans.similarity import as_double, cell_balance_from_counts, ivf_cell_udf
+    from ..plans.similarity import cell_balance_from_counts, ivf_cell_udf
 
-    nlist = len(centers)
-    assign, counts = _IVF
-    centers_dir = os.path.join(store_dir, "centers")
     cell_of = ivf_cell_udf(centers)
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if not os.path.exists(centers_dir):
-            local_frame(
-                spark,
-                [(i, [float(x) for x in c]) for i, c in enumerate(centers)],
-                "cell int, centroid array<double>",
-            ).coalesce(1).write.mode("overwrite").parquet(centers_dir)
-        eff_id = _effective_batch_id(store_dir, batch_id, _IVF)
-        prior = (
-            assign.read(spark, store_dir).where(F.col("batch_id") < eff_id).select("vec_id")
-        )
-        new_vecs = batch.join(prior, "vec_id", "left_anti").select(
-            "vec_id", cell_of(as_double(F.col("embedding"))).alias("cell")
-        )
-        # counts partial from the just-staged delta (materialized — the
-        # Arrow assignment never recomputes)
-        own = spark.read.schema(assign.schema).parquet(
-            _stage(new_vecs, assign.path(store_dir), eff_id)
-        )
-        _stage(
-            own.groupBy("cell").agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs")),
-            counts.path(store_dir),
-            eff_id,
-        )
-        # live balance over the CUMULATIVE counts (<= this batch): one
-        # fold of O(batches x nlist) additive rows, then q222's math on
-        # exactly nlist rows
-        cum = (
-            counts.read(spark, store_dir)
-            .where(F.col("batch_id") <= eff_id)
-            .groupBy("cell")
-            .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
-        )
-        balance = cell_balance_from_counts(cum, nlist)
-        _stage(
-            balance.agg(
-                F.sum("n_vecs").cast("bigint").alias("n_vecs"),
-                F.max("imbalance_factor").alias("imbalance_factor"),
-                F.max("empty_cell_rate").alias("empty_cell_rate"),
-                F.max((F.col("recommendation") == "rebalance").cast("boolean")).alias(
-                    "alert"
-                ),
-            ),
-            os.path.join(store_dir, "log"),
-            eff_id,
-        )
-
-    _run_foreach_batch(
-        vectors, ingest, checkpoint_dir, timeout_sec, "run_stream_ivf_assign"
+    _run_vector_ingest(
+        vectors,
+        store_dir,
+        checkpoint_dir,
+        timeout_sec,
+        "run_stream_ivf_assign",
+        _IVF,
+        ("centers", lambda spark, path: write_centers(spark, centers, path)),
+        lambda new: new.select("vec_id", cell_of(F.col("e")).alias("cell")),
+        [F.col("cell")],
+        lambda cum: _balance_summary(
+            cell_balance_from_counts(cum, len(centers)), "imbalance_factor", "empty_cell_rate"
+        ),
     )
-
-
-def ivf_balance_from_store(spark: SparkSession, store_dir: str, nlist: int) -> DataFrame:
-    """Batch q222's audit frame folded from the IVF ingest store's count
-    partials — equals q222 on the same corpus + quantizer exactly (the
-    assignment kernel ties to KMeans.transform, pinned), reading
-    O(batches x nlist) additive rows, never the vectors."""
-    from ..plans.similarity import cell_balance_from_counts
-
-    return cell_balance_from_counts(_part(_IVF, "counts").fold(spark, store_dir), nlist)
-
-
-def ivf_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The live cell-balance evaluation log, one row per drained batch."""
-    return _monitor_log(
-        spark, os.path.join(store_dir, "log"), _IVF_MONITOR_LOG_SCHEMA
-    )
-
-
-def ivf_topk_from_store(
-    spark: SparkSession, sf_dir: str, store_dir: str, nprobe: int | None = None
-) -> DataFrame:
-    """q64's probe-and-rerank over the STORE-built index: centers from
-    the store's frozen quantizer, cell assignments from the store fold,
-    float vectors + norms joined back from the embeddings table (the
-    store ships codes-and-cells, not floats — the IVF serving layout).
-    Probes and reranks through plans/similarity.ivf_probe_scored/
-    ivf_topk — the same code as the session-fit index, so recall can
-    only differ through the assignment itself (pinned equal)."""
-    from ..catalog import load_table
-    from ..plans.similarity import (
-        _IVF_NPROBE,
-        as_double,
-        ivf_probe_scored,
-        ivf_topk,
-        norm,
-    )
-
-    centers_rows = (
-        spark.read.schema("cell int, centroid array<double>")
-        .parquet(os.path.join(store_dir, "centers"))
-        .orderBy("cell")
-        .collect()
-    )
-    centers = [list(r.centroid) for r in centers_rows]
-    assign = _part(_IVF, "assign").fold(spark, store_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
-    assigned = emb.join(assign, "vec_id").select(
-        "vec_id", "e", norm(F.col("e")).alias("nc"), "cell"
-    )
-    return ivf_topk(
-        ivf_probe_scored(
-            spark, centers, assigned, nprobe if nprobe is not None else _IVF_NPROBE
-        )
-    )
-
-
-def ivf_retrieval_metrics_from_store(
-    spark: SparkSession, sf_dir: str, store_dir: str
-) -> DataFrame:
-    """q229's ranking-quality eval over the STORE-built index: nDCG@k /
-    capped recall@k of ivf_topk_from_store's ranking through the shared
-    retrieval-metric core — the full serving lifecycle without a re-fit:
-    maintain the index at ingest, probe it, and score the live ranking
-    with the same yardstick as the exact baseline."""
-    from ..catalog import load_table
-    from ..plans.similarity import _N_QUERIES, retrieval_metrics
-
-    lab = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    return retrieval_metrics(
-        ivf_topk_from_store(spark, sf_dir, store_dir).select("q_id", "cand_id", "rk"),
-        lab,
-        query_lab=lab.filter(F.col("vec_id") < _N_QUERIES),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Incremental PQ index maintenance at ingest: the PQ serving
-# store (q200's codes + norms) gains the same lifecycle the IVF index got
-# — new vectors are ENCODED at ingest against the FROZEN per-subspace
-# codebooks (the only state a 100-TB ingest tier ships; encoding is
-# plans/similarity._pq_encode_frame, the SAME numpy Arrow kernel the batch
-# store uses, so stored codes are bit-identical to a batch rebuild), staged as
-# additive deltas, and served through the shared ADC+rerank core. A
-# per-(subspace, code) count partial feeds a codebook-health monitor:
-# a hot code means a degenerate subspace codebook (vectors crowding one
-# centroid — the PQ analogue of a hot IVF cell), measured with the SAME
-# cell_balance_from_counts math as q222, per subspace.
-#
-# Store layout (marker + _effective_batch_id contract like the IVF store):
-#   books/             (m, k, centroid) — frozen codebooks, written once;
-#                      reading them back makes the store self-contained.
-#   codes/batch_id=N/  (vec_id, codes, nc) — batch N's NEW vectors
-#                      (anti-join; folded-id replay is a no-op).
-#   counts/batch_id=N/ (m, code, n_vecs) — additive code-usage partials.
-#   log/batch_id=N/    one row: cumulative n_vecs, worst per-subspace
-#                      imbalance factor, alert.
-# ---------------------------------------------------------------------------
-
-_PQ_MONITOR_LOG_SCHEMA = "n_vecs bigint, imbalance_factor double, alert boolean"
 
 
 def run_stream_pq_encode(
@@ -3209,150 +3156,111 @@ def run_stream_pq_encode(
 ) -> None:
     """foreachBatch incremental PQ maintenance: ``vectors`` is a streaming
     frame of (vec_id, embedding); ``books`` the [m][k][sub_dim] frozen
-    codebooks (from plans/similarity._pq_books, or sources/ann_index's
-    loaded index)."""
-    from ..plans.similarity import (
-        _pq_encode_frame,
-        as_double,
-        cell_balance_from_counts,
-    )
+    codebooks (from plans/similarity._pq_books, or a loaded index)."""
+    from ..plans.similarity import _pq_encode_frame
 
-    books_dir = os.path.join(store_dir, "books")
-    codes, counts = _PQ
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        if not os.path.exists(books_dir):
-            local_frame(
-                spark,
-                [
-                    (m, k, [float(x) for x in c])
-                    for m, book in enumerate(books)
-                    for k, c in enumerate(book)
-                ],
-                "m int, k int, centroid array<double>",
-            ).coalesce(1).write.mode("overwrite").parquet(books_dir)
-        eff_id = _effective_batch_id(store_dir, batch_id, _PQ)
-        prior = codes.read(spark, store_dir).where(F.col("batch_id") < eff_id).select("vec_id")
-        new_codes = _pq_encode_frame(
-            batch.join(prior, "vec_id", "left_anti").select(
-                "vec_id", as_double(F.col("embedding")).alias("e")
-            ),
-            books,
-        )
-        # code-usage partial from the just-staged delta (materialized —
-        # the encode expression never recomputes)
-        own = spark.read.schema(codes.schema).parquet(
-            _stage(new_codes, codes.path(store_dir), eff_id)
-        )
-        _stage(
-            own.select(F.posexplode("codes").alias("m", "code"))
-            .groupBy("m", "code")
-            .agg(F.count(F.lit(1)).cast("bigint").alias("n_vecs")),
-            counts.path(store_dir),
-            eff_id,
-        )
-        # codebook health over the CUMULATIVE counts: q222's balance math
-        # per subspace (K cells each), alert on the worst subspace
-        cum = (
-            counts.read(spark, store_dir)
-            .where(F.col("batch_id") <= eff_id)
-            .groupBy("m", "code")
-            .agg(F.sum("n_vecs").cast("bigint").alias("n_vecs"))
-        )
-        per_sub = [
-            cell_balance_from_counts(
-                cum.where(F.col("m") == m).select(
-                    F.col("code").alias("cell"), "n_vecs"
-                ),
-                len(books[m]),
-            ).agg(
-                F.sum("n_vecs").cast("bigint").alias("n_vecs"),
-                F.max("imbalance_factor").alias("imbalance_factor"),
-                F.max(
-                    (F.col("recommendation") == "rebalance").cast("boolean")
-                ).alias("alert"),
-            )
-            for m in range(len(books))
-        ]
-        worst = per_sub[0]
-        for frame in per_sub[1:]:
-            worst = worst.unionByName(frame)
-        _stage(
-            worst.agg(
-                F.max("n_vecs").cast("bigint").alias("n_vecs"),
-                F.max("imbalance_factor").alias("imbalance_factor"),
-                F.max("alert").alias("alert"),
-            ),
-            os.path.join(store_dir, "log"),
-            eff_id,
-        )
-
-    _run_foreach_batch(
-        vectors, ingest, checkpoint_dir, timeout_sec, "run_stream_pq_encode"
+    sizes = [len(book) for book in books]
+    _run_vector_ingest(
+        vectors,
+        store_dir,
+        checkpoint_dir,
+        timeout_sec,
+        "run_stream_pq_encode",
+        _PQ,
+        ("books", lambda spark, path: write_books(spark, books, path)),
+        lambda new: _pq_encode_frame(new, books),
+        [F.posexplode("codes").alias("m", "code")],
+        # the worst subspace's balance
+        lambda cum: _balance_summary(
+            _pq_code_balance(cum, sizes).groupBy("m"), "imbalance_factor"
+        ).agg(*[F.max(c).alias(c) for c in ("n_vecs", "imbalance_factor", "alert")]),
     )
 
 
-def pq_code_balance_from_store(
-    spark: SparkSession, store_dir: str
+def load_ivf_store(
+    spark: SparkSession, sf_dir: str, store_dir: str
+) -> tuple[list, DataFrame]:
+    """(centers, lists) of a live IVF store, the pair a session fit and a
+    persisted index yield: the frozen centers, and the folded assignments
+    with the float vectors and norms joined back from the embeddings table
+    (the store keeps cells, not floats)."""
+    from ..plans.similarity import embedding_vectors, norm
+
+    lists = (
+        embedding_vectors(spark, sf_dir)
+        .join(_part(_IVF, "assign").fold(spark, store_dir), "vec_id")
+        .select("vec_id", "e", norm(F.col("e")).alias("nc"), "cell")
+    )
+    return read_centers(spark, os.path.join(store_dir, "centers")), lists
+
+
+def load_pq_store(spark: SparkSession, store_dir: str) -> tuple[list, DataFrame]:
+    """(books, codes) of a live PQ store: the frozen codebooks and the
+    folded code deltas."""
+    books = read_books(spark, os.path.join(store_dir, "books"))
+    return books, _part(_PQ, "codes").fold(spark, store_dir)
+
+
+def ivf_balance_from_store(spark: SparkSession, store_dir: str, nlist: int) -> DataFrame:
+    """Batch q222's audit frame folded from the IVF store's count
+    partials: equals q222 on the same corpus and quantizer exactly (the
+    assignment kernel ties to KMeans.transform), reading O(batches x
+    nlist) additive rows, never the vectors."""
+    from ..plans.similarity import cell_balance_from_counts
+
+    return cell_balance_from_counts(_part(_IVF, "counts").fold(spark, store_dir), nlist)
+
+
+def ivf_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
+    """The live cell-balance evaluation log, one row per drained batch."""
+    return _monitor_log(spark, os.path.join(store_dir, "log"), _IVF_MONITOR_LOG_SCHEMA)
+
+
+def ivf_topk_from_store(
+    spark: SparkSession, sf_dir: str, store_dir: str, nprobe: int | None = None
 ) -> DataFrame:
+    """q64's probe-and-rerank over the store-built index, through the
+    session fit's core (plans/similarity.ivf_probe_scored / ivf_topk), so
+    recall can only differ through the assignment itself."""
+    from ..plans.similarity import _IVF_NPROBE, ivf_probe_scored, ivf_topk
+
+    centers, lists = load_ivf_store(spark, sf_dir, store_dir)
+    return ivf_topk(
+        ivf_probe_scored(spark, centers, lists, _IVF_NPROBE if nprobe is None else nprobe)
+    )
+
+
+def ivf_retrieval_metrics_from_store(
+    spark: SparkSession, sf_dir: str, store_dir: str
+) -> DataFrame:
+    """q229's ranking-quality eval over the store-built index: nDCG@k and
+    capped recall@k of ivf_topk_from_store's ranking, scored by the same
+    core as the exact baseline."""
+    from ..plans.similarity import label_metrics
+
+    return label_metrics(spark, sf_dir, ivf_topk_from_store(spark, sf_dir, store_dir))
+
+
+def pq_code_balance_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Per-(subspace, code) usage audit folded from the count partials:
     q222's balance columns per subspace, reading O(batches x M x K)
     additive rows, never the vectors. A 'rebalance' row means that
-    subspace's codebook no longer matches the data distribution — the
-    refit signal for the PQ half of the index lifecycle."""
-    from ..plans.similarity import cell_balance_from_counts
-
-    books_rows = (
-        spark.read.schema("m int, k int, centroid array<double>")
-        .parquet(os.path.join(store_dir, "books"))
-        .groupBy("m")
-        .agg(F.count(F.lit(1)).alias("kk"))
-        .orderBy("m")
-        .collect()
-    )
-    cum = _part(_PQ, "counts").fold(spark, store_dir)
-    out = None
-    for r in books_rows:
-        part = cell_balance_from_counts(
-            cum.where(F.col("m") == r["m"]).select(
-                F.col("code").alias("cell"), "n_vecs"
-            ),
-            int(r["kk"]),
-        ).select(F.lit(r["m"]).alias("m"), "*")
-        out = part if out is None else out.unionByName(part)
-    return out.orderBy("m", "cell")
+    subspace's codebook no longer fits the data: the refit signal."""
+    sizes = [len(book) for book in read_books(spark, os.path.join(store_dir, "books"))]
+    counts = _part(_PQ, "counts").fold(spark, store_dir)
+    return _pq_code_balance(counts, sizes).orderBy("m", "cell")
 
 
 def pq_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
     """The codebook-health evaluation log, one row per drained batch."""
-    return _monitor_log(
-        spark, os.path.join(store_dir, "log"), _PQ_MONITOR_LOG_SCHEMA
-    )
+    return _monitor_log(spark, os.path.join(store_dir, "log"), _PQ_MONITOR_LOG_SCHEMA)
 
 
-def pq_topk_from_store(
-    spark: SparkSession, sf_dir: str, store_dir: str
-) -> DataFrame:
-    """q200's ADC-shortlist + exact-rerank ranking over the STORE-built
-    code table: books from the store's frozen codebooks, codes from the
-    store fold, float vectors joined back from the embeddings table for
-    queries and rerank survivors only. Ranks through the SAME
-    _pq_adc_rank body as q200, so the incrementally-maintained index is
-    pinned row-for-row to the session-built one."""
-    from ..catalog import load_table
-    from ..plans.similarity import _pq_adc_rank, as_double
+def pq_topk_from_store(spark: SparkSession, sf_dir: str, store_dir: str) -> DataFrame:
+    """q200's ADC-shortlist and exact-rerank ranking over the store-built
+    code table, through q200's core (_pq_adc_rank), so the incrementally
+    maintained index ranks row-for-row like the session-built one."""
+    from ..plans.similarity import _pq_adc_rank, embedding_vectors
 
-    rows = spark.read.schema("m int, k int, centroid array<double>").parquet(
-        os.path.join(store_dir, "books")
-    ).collect()
-    by_m: dict = {}
-    for r in rows:
-        by_m.setdefault(r["m"], {})[r["k"]] = [float(x) for x in r["centroid"]]
-    books = [[by_m[m][k] for k in sorted(by_m[m])] for m in sorted(by_m)]
-    store = _part(_PQ, "codes").fold(spark, store_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", as_double(F.col("embedding")).alias("e")
-    )
-    return _pq_adc_rank(spark, emb, books, store)
-
+    books, codes = load_pq_store(spark, store_dir)
+    return _pq_adc_rank(spark, embedding_vectors(spark, sf_dir), books, codes)

@@ -4,6 +4,8 @@ queries (driver records rows-only for these; pytest carries the real check).
 
 from __future__ import annotations
 
+import sys
+
 import pyarrow.parquet as pq
 import pytest
 
@@ -130,15 +132,57 @@ def test_connected_components_transitive_chain(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5}
 
 
+def winnow_fingerprints(docs):
+    """(doc_id, pos, fp): the winnowing fingerprint set per document as pure
+    per-row Column expressions over any (doc_id, text) frame — the
+    reference the Arrow winnower (dedup.winnow_fingerprints_arrow) is
+    checked against."""
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.functions import text as X
+    from big_data_computing_final_project_spark.plans.dedup import _WINNOW_K, _WINNOW_W
+
+    md5_60 = X.md5_60
+    # stage the token array first: referencing the tokenizer EXPRESSION
+    # inside the transform lambda would re-run the regex split once per
+    # gram (HOF lambdas get no loop-invariant hoisting); as a staged
+    # attribute the array is computed once per row and only sliced here
+    t = docs.select("doc_id", X.tokens(F.col("text")).alias("toks"))
+    toks = F.col("toks")
+    grams = F.transform(
+        F.sequence(F.lit(1), F.size(toks) - F.lit(_WINNOW_K - 1)),
+        lambda i: md5_60(F.array_join(F.slice(toks, i, _WINNOW_K), " ")),
+    )
+    d = t.filter(F.size(toks) >= _WINNOW_K).select("doc_id", grams.alias("h"))
+    h = F.col("h")
+    wlen = F.least(F.lit(_WINNOW_W), F.size(h))
+
+    def rightmost_min(i):
+        minh = F.array_min(F.slice(h, i, wlen))
+        pos = F.array_max(
+            F.transform(
+                F.sequence(F.lit(0), wlen - F.lit(1)),
+                lambda j: F.when(F.element_at(h, i + j) == minh, i + j),
+            )
+        )
+        return F.struct(pos.alias("pos"), minh.alias("fp"))
+
+    starts = F.sequence(F.lit(1), F.size(h) - wlen + F.lit(1))
+    fps = F.array_distinct(F.transform(starts, rightmost_min))
+    return (
+        # outer-explode: plain explode would re-inline the whole winnowing
+        # pipeline (rightmost_min lambda per window) into an inferred
+        # size()>0 pre-filter; fps is never empty (sequence yields >= 1)
+        d.select("doc_id", F.explode_outer(fps).alias("s"))
+        .select("doc_id", F.col("s.pos").alias("pos"), F.col("s.fp").alias("fp"))
+    )
+
+
 def test_winnowing_moss_guarantee(spark):
     """MOSS guarantee: any shared token run of length >= w+k-1 (= 6 here)
     yields a shared fingerprint; and every doc with >= k tokens gets at
     least one fingerprint."""
-    from big_data_computing_final_project_spark.plans.dedup import (
-        _WINNOW_K,
-        _WINNOW_W,
-        winnow_fingerprints,
-    )
+    from big_data_computing_final_project_spark.plans.dedup import _WINNOW_K, _WINNOW_W
 
     shared_run = "alpha beta gamma delta epsilon zeta"  # 6 = W + K - 1 tokens
     docs = spark.createDataFrame(
@@ -165,11 +209,7 @@ def test_winnowing_matches_python_reference(spark):
     same md5-60bit gram hashes must give the identical (pos, fp) set."""
     import hashlib
 
-    from big_data_computing_final_project_spark.plans.dedup import (
-        _WINNOW_K,
-        _WINNOW_W,
-        winnow_fingerprints,
-    )
+    from big_data_computing_final_project_spark.plans.dedup import _WINNOW_K, _WINNOW_W
 
     text = "the quick brown fox jumps over the lazy dog the quick brown fox again"
     toks = text.split()
@@ -194,7 +234,6 @@ def test_winnowing_arrow_equals_expression_path(spark, sf_dir):
     """The vectorized mapInPandas winnower and the Column-expression
     reference must produce identical (doc_id, pos, fp) rows."""
     from big_data_computing_final_project_spark.plans.dedup import (
-        winnow_fingerprints,
         winnow_fingerprints_arrow,
     )
 
@@ -215,15 +254,133 @@ def test_prefix_filter_prunes_candidates_losslessly(spark, sf_dir):
     assert pruned > 0
 
 
+# ---------------------------------------------------------------------------
+# Blocked-GEMM filter-verify: the independent exact reference the q40 LSH
+# primary is pinned against, as q35 anchors q36. Exact and memory-bounded
+# (the Python process holds one _GEMM_BLOCK_ROWS block at a time), but
+# n-squared total work with a block loop in that process.
+# ---------------------------------------------------------------------------
+
+# Filter-verify margin: the numpy GEMM and the sequential fold agree to
+# ~1e-13 on 64-dim unit vectors; 1e-6 is a >million-x safety factor, so the
+# prune can never drop a pair the exact fold would keep.
+_GEMM_MARGIN = 1e-6
+_GEMM_BLOCK_ROWS = 4096  # candidate-block height: ~2 MB at 64-dim float64
+
+
+def embedding_near_dup_gemm(spark, sf_dir):
+    """(vec_a, vec_b, cos_sim) for every pair with cosine >= _DUP_T.
+    Filter-verify: a blocked matrix product (numpy GEMM over Arrow
+    batches, candidate blocks broadcast) prunes the O(n²) pair space with
+    threshold T - margin; only the surviving pairs are re-scored with the
+    sequential JVM fold, so emitted cos_sim values are bit-identical to
+    the oracle's.
+
+    The candidate side is processed in blocks of ``_GEMM_BLOCK_ROWS``
+    (vec_id mod nblocks), repartitioned by block id once and cached; each
+    block's candidate pairs are materialized (localCheckpoint) before its
+    broadcast is destroyed. The exact rescore broadcasts the candidate set
+    against the embeddings table, twice, to attach each side's vector."""
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.plans.similarity import (
+        _DUP_T,
+        dot,
+        embedding_vectors,
+        norm,
+    )
+    from big_data_computing_final_project_spark.sources.io import local_frame
+
+    import math
+    from functools import reduce
+
+    import numpy as np
+    import pandas as pd
+
+    emb = embedding_vectors(spark, sf_dir)
+    threshold = _DUP_T - _GEMM_MARGIN
+    n = emb.count()
+    nblocks = max(1, math.ceil(n / _GEMM_BLOCK_ROWS))
+    sc = emb.sparkSession.sparkContext
+
+    if nblocks > 1:
+        # one-shot partition by block id + cache: every per-block collect
+        # below is an in-memory columnar scan, not a fresh parquet read
+        blocked = (
+            emb.withColumn("blk", (F.col("vec_id") % nblocks).cast("int"))
+            .repartition(nblocks, "blk")
+            .persist()
+        )
+        src = blocked.drop("blk")
+    else:
+        blocked, src = None, emb
+
+    per_block = []
+    for b in range(nblocks):
+        rows = (
+            blocked.filter(F.col("blk") == b).drop("blk").collect()
+            if nblocks > 1
+            else emb.collect()
+        )
+        if not rows:
+            continue
+        ids = np.array([r.vec_id for r in rows], dtype=np.int64)
+        mat = np.array([r.e for r in rows], dtype=np.float64)
+        matn = mat / np.linalg.norm(mat, axis=1, keepdims=True)
+        order = np.argsort(ids)
+        bc = sc.broadcast((ids[order], matn[order]))
+
+        def prune(it, _bc=bc):
+            s_ids, s_mat = _bc.value
+            for pdf in it:
+                a_ids = pdf["vec_id"].to_numpy(dtype=np.int64)
+                a_mat = np.array(list(pdf["e"]), dtype=np.float64)
+                a_mat = a_mat / np.linalg.norm(a_mat, axis=1, keepdims=True)
+                sims = a_mat @ s_mat.T
+                out_a, out_b = [], []
+                for i, va in enumerate(a_ids):
+                    # only b > a: each unordered pair emitted exactly once
+                    j0 = np.searchsorted(s_ids, va, side="right")
+                    hits = np.nonzero(sims[i, j0:] >= threshold)[0]
+                    out_a.extend([va] * len(hits))
+                    out_b.extend(s_ids[j0 + hits].tolist())
+                yield pd.DataFrame({"vec_a": out_a, "vec_b": out_b})
+
+        cand_b = src.mapInPandas(prune, "vec_a long, vec_b long")
+        if nblocks > 1:
+            # materialize this block's candidates, then free its broadcast
+            cand_b = cand_b.localCheckpoint(eager=True)
+            bc.destroy()
+        per_block.append(cand_b)
+
+    if blocked is not None:
+        blocked.unpersist()
+    if not per_block:
+        candidates = local_frame(spark, [], "vec_a long, vec_b long")
+    else:
+        candidates = reduce(lambda x, y: x.unionByName(y), per_block)
+    # exact rescore: broadcast the TINY candidate set (and the
+    # candidate+vector intermediate, still candidate-sized) against the
+    # embeddings — the full table is never broadcast or shuffled here
+    ea = emb.select(F.col("vec_id").alias("vec_a"), F.col("e").alias("ea"))
+    eb = emb.select(F.col("vec_id").alias("vec_b"), F.col("e").alias("eb"))
+    cos = dot(F.col("ea"), F.col("eb")) / (norm(F.col("ea")) * norm(F.col("eb")))
+    with_a = ea.join(F.broadcast(candidates), "vec_a")
+    return (
+        eb.join(F.broadcast(with_a), "vec_b")
+        .select("vec_a", "vec_b", cos.alias("cos_sim"))
+        .filter(F.col("cos_sim") >= _DUP_T)
+        .orderBy("vec_a", "vec_b")
+    )
+
+
 def test_q40_lsh_equals_gemm_twin(spark, sf_dir):
     """VERDICT r5 item 1: the LSH-candidate primary must emit exactly the
     pairs of the retired exhaustive GEMM twin — same pairs, same bit-exact
     cos_sim values (recall 1.0 at the banding parameters on this data,
     independently of the shared DuckDB oracle)."""
-    from big_data_computing_final_project_spark.plans import similarity as S
-
-    lsh = S.q40_embedding_near_dup(spark, sf_dir).collect()
-    gemm = S.embedding_near_dup_gemm(spark, sf_dir).collect()
+    lsh = _Q["q40_embedding_near_dup"](spark, sf_dir).collect()
+    gemm = embedding_near_dup_gemm(spark, sf_dir).collect()
     assert [tuple(r) for r in lsh] == [tuple(r) for r in gemm]
     assert len(lsh) > 0  # the fixture corpus contains qualifying pairs
 
@@ -231,11 +388,9 @@ def test_q40_lsh_equals_gemm_twin(spark, sf_dir):
 def test_gemm_twin_blocked_equals_single_block(spark, sf_dir, monkeypatch):
     """The GEMM twin's blocked candidate loop (driver holds one block at a
     time) must emit exactly the pairs of the single-broadcast run."""
-    from big_data_computing_final_project_spark.plans import similarity as S
-
-    single = S.embedding_near_dup_gemm(spark, sf_dir).collect()
-    monkeypatch.setattr(S, "_GEMM_BLOCK_ROWS", 64)
-    blocked = S.embedding_near_dup_gemm(spark, sf_dir).collect()
+    single = embedding_near_dup_gemm(spark, sf_dir).collect()
+    monkeypatch.setattr(sys.modules[__name__], "_GEMM_BLOCK_ROWS", 64)
+    blocked = embedding_near_dup_gemm(spark, sf_dir).collect()
     assert [tuple(r) for r in single] == [tuple(r) for r in blocked]
 
 
@@ -974,15 +1129,95 @@ def test_pq_ann_recall_and_determinism(spark, sf_dir):
         assert truth[k] == approx[k]  # exact rerank: bit-identical fold
 
 
+# ---------------------------------------------------------------------------
+# PQ reference expressions: the JVM expression trees the mapInArrow numpy
+# kernels (_pq_encode_frame, _pq_adc_scored) are checked against bit for
+# bit. Each expression is assembled as ONE SQL string handed to a single
+# F.expr() parse: `xD` double literals reproduce F.lit(c) bit-exactly (repr
+# round-trips, Double.parseDouble is correctly rounded), the `t0 + 0 + t1`
+# chain matches Python sum()'s int seed, and left-associative `+`/`*` keep
+# the IEEE fold order.
+# ---------------------------------------------------------------------------
+
+
+def _pq_encode(books):
+    """codes array<int>: per subspace, the index of the nearest codebook
+    centroid (first-min tie-break via array_position)."""
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.plans.similarity import (
+        _assert_finite_books,
+    )
+
+    _assert_finite_books(books)
+    d = len(books[0][0])
+
+    def _sum_sql(terms):
+        return " + ".join([terms[0], "0", *terms[1:]])
+
+    codes = []
+    for m, book in enumerate(books):
+        dists = ", ".join(
+            _sum_sql(
+                [
+                    f"(e[{m * d + i}] - {c[i]!r}D) * (e[{m * d + i}] - {c[i]!r}D)"
+                    for i in range(d)
+                ]
+            )
+            for c in book
+        )
+        codes.append(
+            f"cast(array_position(array({dists}), array_min(array({dists}))) - 1 as int)"
+        )
+    return F.expr("array(" + ", ".join(codes) + ")")
+
+
+def _pq_adc_scored_expr(books, q, store):
+    """(q_id, cand_id, adc_score): per-query LUT as one parsed SQL
+    expression, broadcast-joined against the store, gather + sum as JVM
+    element_at expressions."""
+    from pyspark.sql import functions as F
+
+    d = len(books[0][0])
+    offsets = [0]
+    for book in books:
+        offsets.append(offsets[-1] + len(book))
+    lut = F.expr(
+        "array("
+        + ", ".join(
+            " + ".join(
+                [f"qe[{m * d}] * {c[0]!r}D", "0"]
+                + [f"qe[{m * d + i}] * {c[i]!r}D" for i in range(1, d)]
+            )
+            for m, book in enumerate(books)
+            for c in book
+        )
+        + ")"
+    )
+    ql = q.select("q_id", lut.alias("lut"))
+    adc = sum(
+        F.element_at(F.col("lut"), F.col("codes")[m].cast("int") + offsets[m] + 1)
+        for m in range(len(books))
+    )
+    return (
+        F.broadcast(ql)
+        .join(store, F.col("vec_id") != F.col("q_id"))
+        .select(
+            "q_id",
+            F.col("vec_id").alias("cand_id"),
+            (adc / F.col("nc")).alias("adc_score"),  # |q| constant per query
+        )
+    )
+
+
 def test_pq_kernel_matches_expression(spark, sf_dir):
-    """r12 equivalence pin (VERDICT r11 item 1): the mapInArrow numpy
-    kernels serving q200/q231/the index paths must be BIT-identical to
-    the r11 JVM expression trees they replaced — encode codes + stored
-    norms, every (query, candidate) ADC score, and the shortlist that the
-    per-task exact pre-selection feeds the row_number window (exercised
-    across multiple partitions so the distributive top-k cut is what is
-    being pinned, not a single-task pass-through). Doubles compare by bit
-    pattern (float.hex), not tolerance."""
+    """The mapInArrow numpy kernels serving q200/q231/the index paths must
+    be BIT-identical to the reference expression trees above — encode
+    codes + stored norms, every (query, candidate) ADC score, and the
+    shortlist that the per-task exact pre-selection feeds the row_number
+    window (exercised across multiple partitions so the distributive
+    top-k cut is what is being pinned, not a single-task pass-through).
+    Doubles compare by bit pattern (float.hex), not tolerance."""
     from pyspark.sql import Window
     from pyspark.sql import functions as F
 
@@ -991,9 +1226,7 @@ def test_pq_kernel_matches_expression(spark, sf_dir):
         _N_QUERIES,
         _PQ_SHORTLIST,
         _pq_adc_scored,
-        _pq_adc_scored_expr,
         _pq_books,
-        _pq_encode,
         _pq_encode_frame,
         as_double,
         norm,
@@ -1226,8 +1459,91 @@ def test_ivf_cell_balance_audits_live_quantizer(spark, sf_dir):
         assert r.recommendation == want_rec
 
 
+_SKETCH_K = 64
+
+
+def _sketch_screened_verify(sh, candidates):
+    """Two-level exact verification at _JACCARD_T: a DETERMINISTIC,
+    LOSSLESS bottom-k sketch screen discards clearly-below-threshold
+    candidate pairs before the full-array join, then the standard exact
+    verify rescores survivors. Output must be IDENTICAL to
+    _verify_candidate_pairs(sh, candidates).
+
+    It is not q122's verify: measured on the bounded tiers, the screen
+    made q122 ~40-60% SLOWER at every tier (t100 ~123 s-equivalent
+    -> 176 s, same-session q36 as the box-speed control): the extra
+    screen pass re-shuffles every candidate with two 64-BIGINT sketches
+    and evaluates ~200 interpreted higher-order-lambda elements per pair,
+    which costs more than the full-array verify bytes it saves. The
+    zero-byte PPJoin positional filter inside _prefix_candidates is the
+    shipped pruning instead; SCALING.md has the numbers.
+
+    The screen's upper bound: with S_X = the k smallest hash values of
+    doc X and v = min(max S_A, max S_B), every element of X that is <= v
+    is IN S_X (bottom-k captures its whole prefix of the hash order), so
+
+        |A ∩ B|  <=  |S_A^v ∩ S_B^v| + min(|A| - |S_A^v|, |B| - |S_B^v|)
+
+    where S^v = {s in S : s <= v} (the <= v part of the intersection is
+    known EXACTLY; above v, the intersection can't exceed the smaller
+    remainder). J = I/(|A|+|B|-I) is increasing in I, so
+    J <= I_ub/(na+nb-I_ub): keep the pair iff I_ub*(num+den) >= num*(na+nb)
+    (threshold as the exact fraction num/den — integer math, no FP ties).
+
+    Why it pays: a typical negative candidate (J ~ 0) with n ~ 400
+    shingles screens at J_ub ~ (n-k)/(n+k) ~ 0.72 < 0.8 and never ships
+    its full array; the screen join moves 2*(k+2) BIGINTs per pair
+    (~1 KB) instead of the two full shingle arrays (~6.6 KB) — and at the
+    bounded 100x tier ~94% of candidates are negatives (43.4M candidates
+    -> 2.49M pairs), so the dominant verify shuffle shrinks ~4x. Docs
+    with n > ~9k shingles weaken the bound toward 1 (they pass to full
+    verify) — bounded-tier docs sit far below that."""
+    from fractions import Fraction
+
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.plans.dedup import (
+        _JACCARD_T,
+        _verify_candidate_pairs,
+    )
+
+    fr = Fraction(_JACCARD_T).limit_denominator(10**6)
+    num, den = fr.numerator, fr.denominator
+    base = sh.select(
+        "doc_id",
+        F.size("sh").alias("n"),
+        F.slice(F.array_sort("sh"), 1, _SKETCH_K).alias("sk"),
+    )
+    a = base.select(
+        F.col("doc_id").alias("doc_a"), F.col("n").alias("na"), F.col("sk").alias("sk_a")
+    )
+    b = base.select(
+        F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"), F.col("sk").alias("sk_b")
+    )
+    j = candidates.join(a, "doc_a").join(b, "doc_b")
+    v = F.least(F.element_at("sk_a", -1), F.element_at("sk_b", -1))
+    fa = F.filter("sk_a", lambda x: x <= v)
+    fb = F.filter("sk_b", lambda x: x <= v)
+    j = j.select(
+        "doc_a",
+        "doc_b",
+        "na",
+        "nb",
+        F.size(F.array_intersect(fa, fb)).alias("o"),
+        F.size(fa).alias("ka"),
+        F.size(fb).alias("kb"),
+    )
+    i_ub = F.col("o") + F.least(
+        F.col("na") - F.col("ka"), F.col("nb") - F.col("kb")
+    )
+    survivors = j.filter(
+        i_ub * F.lit(num + den) >= F.lit(num) * (F.col("na") + F.col("nb"))
+    ).select("doc_a", "doc_b")
+    return _verify_candidate_pairs(sh, survivors)
+
+
 def test_sketch_screen_verify_is_lossless(spark, sf_dir):
-    """q122's two-level verify (round-9): the bottom-k sketch screen must
+    """q122's two-level verify: the bottom-k sketch screen must
     be output-IDENTICAL to the plain full-array verify — on the real
     corpus and on planted borderline sets (J exactly at the threshold,
     just below, just above, and in the weak-bound region where the screen
@@ -1238,7 +1554,6 @@ def test_sketch_screen_verify_is_lossless(spark, sf_dir):
         _hashed_shingles,
         _prefix_candidates,
         _shingled,
-        _sketch_screened_verify,
         _verify_candidate_pairs,
     )
 

@@ -164,3 +164,134 @@ def test_pq_store_promotion_serves_identically(spark, sf_dir, tmp_path):
     got = [tuple(r) for r in pq_topk_from_index(spark, idx, sf_dir).collect()]
     want = [tuple(r) for r in all_queries()["q200_pq_ann_topk"](spark, sf_dir).collect()]
     assert got == want and len(got) > 0
+
+
+# ---------------------------------------------------------------------------
+# fast tier: the index format and the fit determinism
+# ---------------------------------------------------------------------------
+
+
+def test_quantizer_fits_independent_of_input_partitioning(spark, sf_dir):
+    """The IVF and PQ quantizers fit on one partition ordered by vec_id, so
+    the same rows in 2 and in 7 input partitions fit identical centers and
+    codebooks (the session cache treats a fit as a function of the rows)."""
+    from pyspark.ml.functions import array_to_vector
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.plans.similarity import (
+        _ivf_quantize,
+        _pq_codebooks,
+        embedding_vectors,
+    )
+
+    emb = embedding_vectors(spark, sf_dir).withColumn("vec", array_to_vector(F.col("e")))
+    dim = len(emb.select("e").first()["e"])
+    fits = []
+    for n in (2, 7):
+        rows = emb.repartition(n)
+        assert rows.rdd.getNumPartitions() == n
+        centers, assigned = _ivf_quantize(rows)
+        assigned.unpersist()
+        fits.append((centers, _pq_codebooks(spark, rows, dim)))
+    assert fits[0] == fits[1]
+
+
+def test_quantizer_files_round_trip(spark, tmp_path):
+    """centers and books read back exactly as written, including a book
+    with fewer than _PQ_K centroids and doubles that need all 17 digits."""
+    import random
+
+    from big_data_computing_final_project_spark.plans.similarity import _PQ_K
+    from big_data_computing_final_project_spark.sources.ann_index import (
+        read_books,
+        read_centers,
+        write_books,
+        write_centers,
+    )
+
+    rnd = random.Random(5)
+    centers = [[rnd.uniform(-1, 1) for _ in range(4)] for _ in range(12)]
+    centers[3][1] = 5e-324
+    write_centers(spark, centers, str(tmp_path / "centers"))
+    assert read_centers(spark, str(tmp_path / "centers")) == centers
+
+    books = [
+        [[rnd.gauss(0, 1) for _ in range(2)] for _ in range(_PQ_K)],
+        [[rnd.gauss(0, 1) for _ in range(2)] for _ in range(3)],
+        [[1.0 / 3.0, -0.0]],
+    ]
+    write_books(spark, books, str(tmp_path / "books"))
+    assert read_books(spark, str(tmp_path / "books")) == books
+
+
+def _drop_stream(spark, sf_dir, src, n):
+    """A file stream of the first ``n`` corpus embeddings, in one drop."""
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(os.path.join(sf_dir, "embeddings.parquet")).select(
+        ["vec_id", "embedding"]
+    )
+    src.mkdir()
+    pq.write_table(tbl.slice(0, n), str(src / "drop_0.parquet"))
+    return spark.readStream.schema("vec_id bigint, embedding array<float>").parquet(str(src))
+
+
+def _rows(df):
+    return sorted(tuple(tuple(v) if isinstance(v, list) else v for v in r) for r in df.collect())
+
+
+def test_live_store_loads_like_its_promoted_index(spark, sf_dir, tmp_path):
+    """A live IVF or PQ store loaded directly yields the same (quantizer,
+    vectors) pair as the same store promoted to an index and loaded back.
+    The frozen quantizers are built from corpus vectors (no fit), with one
+    PQ book shorter than the others."""
+    from big_data_computing_final_project_spark.plans.similarity import (
+        embedding_vectors,
+    )
+    from big_data_computing_final_project_spark.sources.ann_index import (
+        load_ivf_index,
+        load_pq_index,
+        save_ivf_index_from_store,
+        save_pq_index_from_store,
+    )
+    from big_data_computing_final_project_spark.streaming.events import (
+        load_ivf_store,
+        load_pq_store,
+        run_stream_ivf_assign,
+        run_stream_pq_encode,
+    )
+
+    seeds = [r["e"] for r in embedding_vectors(spark, sf_dir).orderBy("vec_id").limit(16).collect()]
+    centers = seeds[:8]
+    books = [[v[m * 8 : m * 8 + 8] for v in seeds] for m in range(len(seeds[0]) // 8)]
+    books[2] = books[2][:5]
+
+    ivf_store, pq_store = str(tmp_path / "ivf_store"), str(tmp_path / "pq_store")
+    run_stream_ivf_assign(
+        _drop_stream(spark, sf_dir, tmp_path / "ivf_src", 120),
+        centers,
+        ivf_store,
+        str(tmp_path / "ivf_ckpt"),
+    )
+    run_stream_pq_encode(
+        _drop_stream(spark, sf_dir, tmp_path / "pq_src", 120),
+        books,
+        pq_store,
+        str(tmp_path / "pq_ckpt"),
+    )
+
+    live_centers, live_lists = load_ivf_store(spark, sf_dir, ivf_store)
+    save_ivf_index_from_store(spark, sf_dir, ivf_store, str(tmp_path / "ivf_idx"))
+    idx_centers, idx_lists = load_ivf_index(spark, str(tmp_path / "ivf_idx"), sf_dir)
+    assert live_centers == idx_centers == centers
+    cols = ["vec_id", "e", "nc", "cell"]
+    assert _rows(live_lists.select(cols)) == _rows(idx_lists.select(cols))
+    assert live_lists.count() == 120
+
+    live_books, live_codes = load_pq_store(spark, pq_store)
+    save_pq_index_from_store(spark, sf_dir, pq_store, str(tmp_path / "pq_idx"))
+    idx_books, idx_codes = load_pq_index(spark, str(tmp_path / "pq_idx"), sf_dir)
+    assert live_books == idx_books == books
+    cols = ["vec_id", "codes", "nc"]
+    assert _rows(live_codes.select(cols)) == _rows(idx_codes.select(cols))
+    assert live_codes.count() == 120
