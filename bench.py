@@ -172,10 +172,10 @@ def _bench_dt_fit(spark, sf_dir: str, t0: float) -> float:
         )
         .cache()
     )
-    base.count()
+    lo, hi = base.agg(F.min("c_acctbal"), F.max("c_acctbal")).first()
     features = build_feature_pipeline(
         categorical=["o_orderpriority", "c_mktsegment"],
-        equal_width=[equal_width_bucketizer(base, "c_acctbal", 8)],
+        equal_width=[equal_width_bucketizer("c_acctbal", lo, hi, 8)],
         quantile=["affordability"],
         passthrough=["order_year"],
         standardize=False,

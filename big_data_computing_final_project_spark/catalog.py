@@ -10,6 +10,8 @@ on drift and keeps column pruning predictable.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -137,17 +139,38 @@ def load_table(
     without ``spark.sql.legacy.parquet.nanosAsLong``; the conf is set only
     after a footer check proves the file is nanos-typed (never for the
     micros files the driver generates today).
+
+    Schema memo: ``spark.read.parquet`` infers the file's schema with a
+    one-task Spark job on every call. The inferred schema is memoized per
+    (application, path, the path's ``st_mtime_ns``), and a later load of
+    the same path reads with that schema and runs no job; rewriting the
+    table changes its mtime, so the next load infers again.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     path = f"{sf_dir}/{name}.parquet"
     if name == "events" and _stored_as_nanos(path):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = _read_parquet_memoized(spark, path)
     df = normalize_ts_columns(df)
     key = _FAN_OUT_KEYS.get(name)
     if key is not None and fan_out_ok:
         df = fan_out(df, spark, key, path)
+    return df
+
+
+def _read_parquet_memoized(spark: SparkSession, path: str, _memo: dict = {}) -> DataFrame:
+    """``spark.read.parquet(path)``, with the inferred schema memoized per
+    (applicationId, path, st_mtime_ns); see ``load_table``."""
+    try:
+        key = (spark.sparkContext.applicationId, path, os.stat(path).st_mtime_ns)
+    except OSError:
+        return spark.read.parquet(path)
+    schema = _memo.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _memo[key] = df.schema
     return df
 
 

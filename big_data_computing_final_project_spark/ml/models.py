@@ -152,7 +152,8 @@ def l1_feature_selection(
     (sklearn reduces with the L1 norm across classes; max preserves the
     same nonzero support, which is what selection consumes). Returns
     ``(selected_cols, importance_df, assembler)`` where importance_df is
-    a small DataFrame (feature, abs_coef, selected) for reporting, and
+    a small local frame (feature, abs_coef, selected) for reporting, one
+    row per feature in feature-name order, and
     assembler is a VectorAssembler over the selected columns ready to
     feed a downstream estimator.
     """
@@ -172,7 +173,7 @@ def l1_feature_selection(
     selected = [c for c, w in zip(feature_cols, coefs) if float(w) > threshold]
     importance = local_frame(
         df.sparkSession,
-        [(c, float(w), float(w) > threshold) for c, w in zip(feature_cols, coefs)],
+        sorted((c, float(w), float(w) > threshold) for c, w in zip(feature_cols, coefs)),
         "feature string, abs_coef double, selected boolean",
     )
     return selected, importance, VectorAssembler(inputCols=selected, outputCol="features")

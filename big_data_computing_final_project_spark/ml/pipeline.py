@@ -64,12 +64,13 @@ def choose_binning(df: DataFrame, columns: list[str], skew_threshold: float = 2.
     return out
 
 
-def equal_width_bucketizer(df: DataFrame, column: str, n_bins: int) -> Bucketizer:
-    """B2 — np.linspace-style edges from one min/max aggregate
-    (`house_predict.py:81-83`). The edge list is tiny driver state, exactly
-    like the reference's fitted `bin_edges` dict."""
-    mn, mx = df.agg(F.min(column), F.max(column)).first()
-    mn, mx = float(mn), float(mx)
+def equal_width_bucketizer(column: str, lo: float, hi: float, n_bins: int) -> Bucketizer:
+    """B2 — np.linspace-style edges over the column's [lo, hi] range
+    (`house_predict.py:81-83`), which the caller takes from a min/max
+    aggregate it can share with its other statistics. The edge list is
+    tiny driver state, exactly like the reference's fitted `bin_edges`
+    dict."""
+    mn, mx = float(lo), float(hi)
     width = (mx - mn) / n_bins
     splits = [-float("inf")] + [mn + i * width for i in range(1, n_bins)] + [float("inf")]
     return Bucketizer(splits=splits, inputCol=column, outputCol=f"{column}_bin", handleInvalid="keep")
@@ -85,12 +86,14 @@ def build_feature_pipeline(
 ) -> Pipeline:
     """Compose B1 (StringIndexer, handleInvalid='keep' = the reference's
     -1-for-unseen guard), B2/B3 binning, B4 StandardScaler, and the
-    VectorAssembler into one Pipeline."""
+    VectorAssembler into one Pipeline. One multi-column StringIndexer
+    indexes every categorical column in a single fit."""
     stages: list = []
     feature_cols: list[str] = list(passthrough)
-    for c in categorical:
-        stages.append(StringIndexer(inputCol=c, outputCol=f"{c}_idx", handleInvalid="keep"))
-        feature_cols.append(f"{c}_idx")
+    if categorical:
+        idx_cols = [f"{c}_idx" for c in categorical]
+        stages.append(StringIndexer(inputCols=categorical, outputCols=idx_cols, handleInvalid="keep"))
+        feature_cols += idx_cols
     for b in equal_width:
         stages.append(b)
         feature_cols.append(b.getOutputCol())
@@ -112,14 +115,24 @@ def build_feature_pipeline(
 
 
 def stratified_split(
-    df: DataFrame, label_col: str = "label", test_fraction: float = 0.2, seed: int = 42
+    df: DataFrame,
+    label_col: str = "label",
+    test_fraction: float = 0.2,
+    seed: int = 42,
+    *,
+    labels=None,
 ) -> tuple[DataFrame, DataFrame]:
     """J3 — per-class randomSplit + union: distributionally equivalent to
     sklearn's exact stratified `train_test_split(stratify=y)`
-    (`house_predict.py:589-591`); documented as such in SURVEY §4."""
-    labels = [r[0] for r in df.select(label_col).distinct().collect()]
+    (`house_predict.py:589-591`); documented as such in SURVEY §4.
+
+    ``labels`` is the set of non-null label values when the caller already
+    has it (from an aggregate it runs anyway); otherwise one distinct
+    collect finds it. Rows with a null label go to neither split."""
+    if labels is None:
+        labels = [r[0] for r in df.select(label_col).distinct().collect()]
     trains, tests = [], []
-    for lv in sorted(labels):
+    for lv in sorted(v for v in labels if v is not None):
         part = df.filter(F.col(label_col) == lv)
         tr, te = part.randomSplit([1 - test_fraction, test_fraction], seed=seed)
         trains.append(tr)

@@ -1,6 +1,7 @@
 """Shared planted-corpus builders for the documents-table tests: ONE
 definition of the (doc_id, text, lang, source, n_chars=len(text)) pyarrow
-shape so the per-suite fixtures cannot drift apart schema-wise.
+shape so the per-suite fixtures cannot drift apart schema-wise. Also a
+job-group runner for tests that count the Spark jobs a call runs.
 
 Not collected by pytest (leading underscore); test modules import it via
 pytest's rootdir sys.path insertion.
@@ -53,3 +54,30 @@ def planted_media_table(rows):
             "content": pa.array([_mix_blob(i) for i, _ in rows], pa.binary()),
         }
     )
+
+
+def run_in_job_group(spark, group, fn):
+    """Run ``fn()`` under Spark job group ``group``; return its result and
+    the stage names of every job it ran, one list per job, after all of
+    them have finished."""
+    import time
+
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    st = sc.statusTracker()
+    jobs = st.getJobIdsForGroup(group)
+    deadline = time.time() + 30
+    while time.time() < deadline and any(
+        st.getJobInfo(j) is None or st.getJobInfo(j).status == "RUNNING" for j in jobs
+    ):
+        time.sleep(0.2)
+    stages = [
+        [st.getStageInfo(s).name for s in st.getJobInfo(j).stageIds if st.getStageInfo(s)]
+        for j in jobs
+    ]
+    return out, stages

@@ -498,3 +498,107 @@ def test_one_partition_if_small_keeps_large_layout(spark):
     finally:
         spark.conf.unset(key)
     assert one_partition_if_small(df).rdd.getNumPartitions() == 1
+
+
+def test_house_pipeline_driver_jobs_within_budget(spark, sf_dir):
+    """Apart from its OWL-QN loss evaluations, a warm q49 runs one job tree
+    per driver statistic: the median, one aggregate over the cached base
+    (bucketizer range, label set, labelled-row count), one StringIndexer
+    fit, the discretizer, scaler and LR summarizer, and one confusion-count
+    collect for both the metrics and n_test. Before these were folded it
+    ran 36 non-loss jobs at sf0.01."""
+    import os
+
+    from _fixtures import run_in_job_group
+
+    sf01 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    q49 = _Q["q49_house_pipeline"]
+    q49(spark, sf01).collect()  # the warm run below reuses the memoized schemas
+    _, jobs = run_in_job_group(spark, "q49-driver-jobs", lambda: q49(spark, sf01).collect())
+    loss = [names for names in jobs if any("RDDLossFunction" in n for n in names)]
+    assert len(loss) >= 10  # OWL-QN ran
+    assert len(jobs) - len(loss) <= 20, len(jobs) - len(loss)
+
+
+def _old_summary_aggregate(pred):
+    """accuracy and macro P/R/F1 as Spark aggregates over the per-class
+    report, the way summary_metrics computed them before it collected."""
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.ml.evaluation import classification_report
+
+    return classification_report(pred).agg(
+        (F.sum("tp") / F.sum("support")).alias("accuracy"),
+        F.avg("precision").alias("macro_precision"),
+        F.avg("recall").alias("macro_recall"),
+        F.avg("f1").alias("macro_f1"),
+    ).first()
+
+
+_METRICS = ("accuracy", "macro_precision", "macro_recall", "macro_f1")
+
+
+def test_summary_metrics_binary_equals_report_aggregate_bitwise(spark):
+    """For two classes the Python class sum is Spark's avg over the
+    report, so every metric is the same double. A null label and a null
+    prediction each count as one more class that is never right, as in
+    the report's joins."""
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.ml.evaluation import summary_metrics
+
+    pred = spark.range(0, 997, numPartitions=5).select(
+        F.when(F.col("id") % 50 == 0, None)
+        .otherwise((F.col("id") % 3 == 0).cast("bigint"))
+        .alias("label"),
+        F.when(F.col("id") % 70 == 1, None)
+        .otherwise((F.xxhash64("id") % 7 < 2).cast("bigint"))
+        .alias("prediction"),
+    )
+    want = _old_summary_aggregate(pred)
+    got = summary_metrics(pred).first()
+    for m in _METRICS:
+        assert float.hex(got[m]) == float.hex(want[m]), m
+
+
+def test_summary_metrics_partition_independent_one_execution(spark):
+    """Ten classes: the same rows in 1 and in 7 partitions give the same
+    doubles, and each call runs one SQL execution (the count collect)."""
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.ml.evaluation import summary_metrics
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    base = spark.range(0, 3001, numPartitions=1).select(
+        (F.col("id") % 10).cast("bigint").alias("label"),
+        (F.xxhash64("id") % 11).cast("bigint").alias("prediction"),
+    )
+    results = []
+    for df in (base, base.repartition(7)):
+        before = store.executionsCount()
+        frame = summary_metrics(df)
+        assert store.executionsCount() - before == 1
+        results.append([float.hex(frame.first()[m]) for m in _METRICS])
+    assert results[0] == results[1]
+    want = _old_summary_aggregate(base)
+    for m, got in zip(_METRICS, results[0]):
+        assert float.fromhex(got) == pytest.approx(want[m], rel=1e-15, abs=0), m
+
+
+def test_stratified_split_excludes_null_labels(spark):
+    """Rows with a null label go to neither split; the other rows are split
+    disjointly and completely, whether or not the label set is passed."""
+    from pyspark.sql import functions as F
+
+    from big_data_computing_final_project_spark.ml.pipeline import stratified_split
+
+    df = spark.range(0, 300, numPartitions=3).select(
+        "id",
+        F.when(F.col("id") % 5 == 0, None).otherwise((F.col("id") % 2).cast("double")).alias("label"),
+    )
+    for labels in (None, [0.0, 1.0]):
+        train, test = stratified_split(df, "label", 0.2, seed=42, labels=labels)
+        tr = {r.id for r in train.collect()}
+        te = {r.id for r in test.collect()}
+        assert not tr & te
+        assert tr | te == {i for i in range(300) if i % 5}

@@ -654,3 +654,30 @@ def test_local_frame_round_trip_plans_as_local_table(spark):
         if rows:
             # the check can tell the two paths apart
             assert "applySchemaToPythonRDD" in _lineage(want), schema
+
+
+def test_load_table_memoizes_schema_until_rewrite(spark, tmp_path):
+    """A second load_table of a path reads with the memoized schema and
+    runs no job; rewriting the table re-infers its schema."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from _fixtures import run_in_job_group
+
+    from big_data_computing_final_project_spark.catalog import load_table
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": pa.array([1, 2], pa.int32())}), path)
+    first, jobs = run_in_job_group(spark, "load-1", lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs  # schema inference
+    again, jobs = run_in_job_group(spark, "load-2", lambda: load_table(spark, str(tmp_path), "region"))
+    assert jobs == []
+    assert again.schema == first.schema
+    assert again.collect() == first.collect()
+
+    path.unlink()
+    pq.write_table(
+        pa.table({"r_regionkey": pa.array([3], pa.int32()), "r_name": pa.array(["x"])}), path
+    )
+    rewritten = load_table(spark, str(tmp_path), "region")
+    assert rewritten.columns == ["r_regionkey", "r_name"]
+    assert [tuple(r) for r in rewritten.collect()] == [(3, "x")]
