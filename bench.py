@@ -321,16 +321,9 @@ def main() -> None:
     # in the full record above for manual diffing.
     import hashlib
 
-    from big_data_computing_final_project_spark.plan_text import (
-        PLAN_ONLY,
-        UNSTABLE,
-    )
+    from big_data_computing_final_project_spark.plan_text import pinned
 
-    stable = {
-        n: s
-        for n, s in plan_shas.items()
-        if n.split("_")[0] in PLAN_ONLY and n.split("_")[0] not in UNSTABLE
-    }
+    stable = {n: s for n, s in plan_shas.items() if pinned(n)}
     plans_sha = hashlib.sha256(
         "\n".join(f"{n}:{s}" for n, s in sorted(stable.items())).encode()
     ).hexdigest()[:16]

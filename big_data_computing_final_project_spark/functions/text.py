@@ -131,8 +131,8 @@ def punct_ratio(text: Column) -> Column:
     # explicit whitespace set (never \s): Java's \s includes \x0B where
     # RE2's does not — same divergence normalize() avoids. \p{L}\p{N}
     # alongside ASCII \w so non-ASCII letters/digits (é, 漢, ٣) are NOT
-    # punctuation (ADVICE r4: \w alone skewed quality_score against
-    # exactly the multilingual corpora normalize() supports); both
+    # punctuation (\w alone would skew quality_score against exactly
+    # the multilingual corpora normalize() supports); both
     # Java regex and RE2 support \p{L}/\p{N} in classes, so the q33
     # oracle mirrors the class verbatim.
     n_punct = n - F.length(
@@ -168,12 +168,12 @@ PII_PATTERNS = {
     "email": r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}",
     # Three phone shapes, ORDERED longest-coverage-first (alternation is
     # leftmost-branch-first, so the NANP branch last keeps it from eating
-    # only the first 10 digits of a longer run — code-review finding), and
-    # chosen so generic numeric text survives (ADVICE r3):
+    # only the first 10 digits of a longer run), and chosen so generic
+    # numeric text survives:
     #  - +CC international: '+' REQUIRED, >= 10 digits, any single [-. ]
     #    separators including spaces ("+44 20 7946 0958");
     #  - bare long run: >= 11 CONTIGUOUS digits, no separators at all
-    #    (ADVICE r4: the old [-.]-tolerant form masked dotted version
+    #    (a [-.]-tolerant form would mask dotted version
     #    strings "1.2.3.4.5.6.7.8.9.10.1" and dash-joined date ranges
     #    "2023-01-01-2024-12-31" as phones; separator-joined phone
     #    recall is the NANP/+CC branches' job);
@@ -213,7 +213,7 @@ def pii_hits(text: Column) -> Column:
     for pat in PII_PATTERNS.values():
         # coalesce: regexp_extract_all(NULL) is NULL and size(NULL) is NULL
         # under default sizeOfNull, which would turn a null-text row's
-        # count into NULL and silently drop it from audit sums (ADVICE r3)
+        # count into NULL and silently drop it from audit sums
         n = n + F.coalesce(
             F.size(F.regexp_extract_all(cur, F.lit(pat), F.lit(0))), F.lit(0)
         )

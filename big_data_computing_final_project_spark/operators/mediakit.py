@@ -1,9 +1,8 @@
 """Minimal real-format media blob builders — the SINGLE definition of the
 PNG/JPEG/GIF/WAV/MP4 byte layouts used by the q220 planting substrate
-(:func:`multimodal._mix_blob`) and by the decoder test fixtures (VERDICT
-r8 item 7: three near-copies of these builders had grown across
-tests/test_sources.py, tests/test_streaming.py and _mix_blob; a decoder
-contract change now edits one module).
+(:func:`multimodal._mix_blob`) and by the decoder test fixtures in
+tests/test_sources.py and tests/test_streaming.py, so a decoder contract
+change edits one module.
 
 Builders emit STRUCTURALLY FAITHFUL headers (correct magics, chunk
 lengths, CRCs, box sizes) with deliberately minimal payloads — enough for

@@ -350,7 +350,7 @@ def frame_sample(media: DataFrame, every_n_bytes: int = 64, max_frames: int = 8)
 
 
 # ---------------------------------------------------------------------------
-# Decode-health audit (VERDICT r7 item 5): the decoders above REJECT
+# Decode-health audit: the decoders above REJECT
 # malformed blobs, but a multimodal pipeline's first operational question
 # is "what fraction of each source's media fails decode, and how?". The
 # two pieces below plant a deterministic real-format mix (good + malformed
@@ -373,11 +373,10 @@ def _mix_blob(doc_id: int) -> bytes:
     ``doc_id`` must be non-negative: the planting rule is restated in
     q220's oracle SQL, and Python's ``%`` and SQL's ``%`` disagree on
     negatives (-3 % 5 = 2 vs -3), while ``struct.pack('>Q', doc_id)``
-    would raise outright — guard the load-bearing assumption explicitly
-    (ADVICE r8).
+    would raise outright — guard the load-bearing assumption explicitly.
 
     Byte layouts come from :mod:`mediakit` — the single builder module
-    shared with the decoder test fixtures (VERDICT r8 item 7), pinned
+    shared with the decoder test fixtures, pinned
     byte-identical to the pre-consolidation blobs in test_sources.py."""
     import struct
 

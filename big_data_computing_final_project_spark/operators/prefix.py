@@ -89,7 +89,7 @@ def prefix_agg(
         # key equal the next bucket's min key — catchable here over the
         # distinct-bucket frame, completing the within-bucket lag check so
         # callers whose bucket is NOT a pure function of the order keys
-        # can't pass the ENFORCED check silently (ADVICE r7).
+        # can't pass the ENFORCED check silently.
         boundary_dup = F.lag(F.col("__kmax")).over(cum_base).eqNullSafe(F.col("__kmin"))
         excl = F.when(
             boundary_dup,
@@ -163,7 +163,7 @@ def prefix_agg_multi(
     partition_cols: list[str] | None = None,
 ) -> DataFrame:
     """Running aggregates for SEVERAL value columns over ONE scan order in
-    one pass (r12, VERDICT r11 item 6): ``specs`` is a list of
+    one pass: ``specs`` is a list of
     (value_col, out_col, agg) tuples sharing the ordering, bucket and
     partitioning. Chaining single-value ``prefix_agg`` calls re-executes
     the input lineage per call (each call consumes ``df`` twice: bucket

@@ -73,7 +73,7 @@ def exact_quantiles(
     if mode not in ("linear", "lower"):
         raise ValueError(f"mode must be 'linear' or 'lower', got {mode!r}")
     # duplicate / float-colliding entries in qs would multiply rows through
-    # the lo/hi equi-join below (ADVICE r7) — the distinct sorted set is
+    # the lo/hi equi-join below — the distinct sorted set is
     # the only sensible contract
     qs = sorted({float(q) for q in qs})
     groups = list(group_cols or [])
@@ -87,10 +87,11 @@ def exact_quantiles(
     n_agg = (
         F.count(F.lit(1)) if weight is None else F.sum("__w")
     ).alias("n")
-    # r11 (guide §1.2/§5): the collapsed (group, val, n) frame is consumed
+    # the collapsed (group, val, n) frame is consumed
     # by the prefix scan TWICE (bucket partials + tagged rows), the total
     # count, and — in linear mode — two rank lookups; uncached, each
-    # consumer re-executed the full fact scan + collapse (3-5 traversals).
+    # consumer would re-execute the full fact scan + collapse (3-5
+    # traversals).
     # The frame is bounded by distinct-value cardinality, far below the
     # fact: cache it, scan the fact once.
     c = vals.groupBy(*groups, "val").agg(n_agg).cache()

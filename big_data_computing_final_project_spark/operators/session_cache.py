@@ -1,13 +1,11 @@
-"""Session-scoped fitted-state cache (VERDICT r9 item 1, generalized in
-round 11).
+"""Session-scoped fitted-state cache.
 
 Some operators build EXPENSIVE state at plan time — a seeded KMeans
 quantizer fit, connected-components label propagation, PQ codebooks. Each
 is a pure function of (application, input files, config): the same seeded
 algorithm over the same parquet yields the same artifact, so one build per
 session can serve every consumer instead of each call paying it again
-(the rework wart VERDICT r9/r10 flagged for the IVF fit and the CC
-rounds).
+(the IVF fit and the CC rounds, for example).
 
 Contract:
 - keys MUST start with ``spark.sparkContext.applicationId`` — a
@@ -18,8 +16,7 @@ Contract:
   size), taken with :func:`table_snapshot` before the build; a ``get``
   with a non-matching snapshot evicts and misses, so an in-session
   rewrite of the data under an sf_dir (e.g. a tool regenerating a
-  warehouse dir) invalidates the fit instead of serving stale state
-  (ADVICE r10).
+  warehouse dir) invalidates the fit instead of serving stale state.
 - eviction unpersists any Spark-cached frames the payload pinned
   (payloads are scanned one level deep: a DataFrame, or a tuple/list
   containing DataFrames).

@@ -33,8 +33,8 @@ def _parse_bytes(v: str) -> int:
 # Estimates are memoized per (application, canonicalized plan): computing
 # one runs the FULL Catalyst optimizer on the driver at plan-BUILD time, so
 # without the cache every guarded join re-optimizes its build side (q139
-# paid two extra full-table-scan optimizations per registration — ADVICE
-# r4). semanticHash() only analyzes (no optimizer run), so a cache hit is
+# would pay two extra full-table-scan optimizations per registration).
+# semanticHash() only analyzes (no optimizer run), so a cache hit is
 # cheap; semantically-equal frames (same tables, same filters) share one
 # entry, which is exactly right for the bench/gate pattern of re-building
 # identical plans every round. The cache assumes source relations are
@@ -47,7 +47,7 @@ def _parse_bytes(v: str) -> int:
 # schema string: a collision then needs BOTH the same hash and the same
 # column names/types, and two such frames flipping each other's broadcast
 # decision is vanishingly unlikely (a bare-hash collision at the cache cap
-# is ~0.2% birthday probability — code-review r5).
+# is ~0.2% birthday probability).
 _EST_CACHE: dict[tuple[str, int, str], int] = {}
 _EST_CACHE_MAX = 4096
 

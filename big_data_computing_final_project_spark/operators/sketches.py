@@ -410,8 +410,8 @@ def certified_hh_candidates(
 
     Ranking candidates by count_lo alone can silently miss a true top-k
     item on flat/adversarial (non-Zipfian) distributions: count_lo
-    undercounts by up to the summed per-partition truncation mass (ADVICE
-    r4). The certificate instead reasons from the bounds. Let
+    undercounts by up to the summed per-partition truncation mass. The
+    certificate instead reasons from the bounds. Let
     thr = k-th largest count_lo — a lower bound on the true k-th count
     (each count_lo lower-bounds its item's true count, so the k items
     ranked by count_lo witness k true counts >= thr). Then:

@@ -54,7 +54,7 @@ def salted_join(
         # the build side is replicated once per salt, so every UNMATCHED
         # build row would surface n_salts times under right/full outer —
         # silently breaking the salted == plain invariant. "cross" is
-        # rejected too (ADVICE r4): salting is meaningless without an
+        # rejected too: salting is meaningless without an
         # equi-key to spread, and this function always joins on
         # on + [salt], which would silently turn the cross into an inner.
         raise ValueError(

@@ -3,9 +3,9 @@
 One normalizer shared by the snapshot archive (tools/snapshot_plans.py,
 tests/test_plan_snapshots.py) and bench.py's per-query ``plan_sha`` field,
 so "same plan, slower clock" is machine-distinguishable from a real plan
-regression (VERDICT r4 item 1: an ambient ~20% slowdown must never read
-as a 2x gate failure — the fingerprint proves the physical plan did not
-move while the wall clock did).
+regression: an ambient ~20% slowdown must never read as a 2x gate failure
+— the fingerprint proves the physical plan did not move while the wall
+clock did.
 
 Normalization strips everything that legitimately differs run-to-run or
 machine-to-machine: expression/plan/RDD ids, JIT call sites, the SF
@@ -105,7 +105,7 @@ def plan_fingerprint(df: DataFrame) -> str:
 
 
 # --- pure-plan query registry (shared by tests/test_plan_snapshots.py and
-# bench.py, VERDICT r9 item 2) ---------------------------------------------
+# bench.py) -----------------------------------------------------------------
 #
 # PLAN_ONLY: queries whose builder runs NO Spark job — their fresh-build
 # physical plan is a pure function of code + static stats, so exact plan
@@ -141,18 +141,26 @@ PLAN_ONLY = {
     "q204", "q206", "q207", "q208", "q209", "q210", "q211", "q212", "q213", "q214", "q215", "q216", "q217", "q218",
     "q219", "q220", "q221", "q223", "q224", "q227", "q228", "q230",
 }
-# q225 left out since round 10: its posting frame localCheckpoints at build
+# q225 left out: its posting frame localCheckpoints at build
 # time (two-consumer materialization), so the snapshot tool owns its pin.
 
 # q173: five COUNT(DISTINCT)s; q235: two — the same Expand rewrite
 UNSTABLE = {"q60", "q173", "q235"}
+
+
+def pinned(name: str) -> bool:
+    """Whether a query's plan text is archived and compared: PLAN_ONLY and
+    not UNSTABLE (tests/test_plan_snapshots.py, bench.py's plans_sha and
+    tools/snapshot_plans.py's default set)."""
+    prefix = name.split("_")[0]
+    return prefix in PLAN_ONLY and prefix not in UNSTABLE
 
 # STATE_DEPENDENT: headline queries whose fresh-build plan depends on
 # SESSION state, not just code + SF — q64/q222 read the session quantizer
 # cache (the plan contains an InMemoryRelation only if another call fit
 # and materialized the assignment frame earlier in the session), q225
 # localCheckpoints its posting frame at build time. Pinning their exact
-# plan text in a shared pytest session is order-dependent (ADVICE r10),
+# plan text in a shared pytest session is order-dependent,
 # so the sf0.1 headline pin skips them; tools/snapshot_plans.py (fresh
-# session, deterministic order) owns their archived snapshots.
+# session, deterministic order) writes their sf0.1 archive.
 STATE_DEPENDENT = {"q64", "q222", "q225", "q232"}  # q232 rides q225's checkpoint

@@ -1,4 +1,4 @@
-"""Analytics extension queries (round 2): reshaping (unpivot/pivot),
+"""Analytics extension queries: reshaping (unpivot/pivot),
 time-series gap filling, multi-way fact joins, share-of-total windows,
 robust statistics (MAD), per-group mode, and event-sequence transitions.
 
@@ -226,7 +226,7 @@ def q92_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = (
         li.join(orders.select("o_orderkey", "o_custkey", "o_orderdate"),
                 li.l_orderkey == F.col("o_orderkey"))
-        # size-guarded (VERDICT r7 item 1): cust_in_region is ~1/5 of the
+        # size-guarded: cust_in_region is ~1/5 of the
         # customer table and supp_nation is ALL suppliers — both grow
         # linearly with SF, so a forced broadcast OOMs executors at 100x.
         # broadcast_if_small estimates from the pre-join base tables (the
@@ -763,7 +763,7 @@ def q197_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast_if_small(part), "l_partkey")
         .groupBy("brand", "val")
         .agg(F.sum(F.col("l_quantity").cast("decimal(38,4)")).alias("w"))
-        .cache()  # r11: three consumers (prefix-scan partials + tagged
+        .cache()  # three consumers (prefix-scan partials + tagged
         # rows + brand totals) — the lineitem join/collapse runs once
     )
     cum = prefix_agg(
@@ -845,14 +845,14 @@ def q198_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__nbr", -F.col("breadth"))
         .cache()
     )
-    r1 = global_rank(
+    by_rev = global_rank(
         s,
         ["__nrev", "l_suppkey"],
         bucket=(-F.floor(F.log2(F.col("rev").cast("double")))).cast("bigint"),
         rank_col="rank_rev",
     )
-    r2 = global_rank(
-        r1, ["__nbr", "l_suppkey"], bucket=F.col("__nbr"), rank_col="rank_breadth"
+    ranked = global_rank(
+        by_rev, ["__nbr", "l_suppkey"], bucket=F.col("__nbr"), rank_col="rank_breadth"
     )
     supplier = _t(spark, sf_dir, "supplier").select(
         F.col("s_suppkey"), F.col("s_name")
@@ -861,7 +861,7 @@ def q198_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_RRF_K) + F.col("rank_breadth")
     )
     return (
-        r2.join(
+        ranked.join(
             broadcast_if_small(supplier),
             F.col("s_suppkey") == F.col("l_suppkey"),
         )

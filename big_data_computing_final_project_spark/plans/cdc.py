@@ -506,7 +506,7 @@ def q184_deletion_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
     subjects = cust.filter(F.col("c_custkey") % _Q184_MOD == 0).select("c_custkey")
-    # size-guarded (VERDICT r7 item 2): a real GDPR batch is usually small,
+    # size-guarded: a real GDPR batch is usually small,
     # but subjects is ~1% of the customer table and del_orders is ALL their
     # orders — both scale linearly with SF, so the broadcasts are guarded;
     # past the threshold the semi-joins fall back to shuffle cleanly.

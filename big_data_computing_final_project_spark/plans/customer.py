@@ -174,7 +174,7 @@ LIMIT {_Q178_TOPK}
 
 @register("q178_basket_rules", oracle=_Q178_ORACLE)
 def q178_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r11 (guide §2.3/§2.4): dedup (orderkey, partkey) ONCE and share the
+    # Dedup (orderkey, partkey) ONCE and share the
     # cached frame across all three aggregates. Every COUNT(DISTINCT
     # l_orderkey) then degenerates to a plain COUNT — (orderkey, partkey)
     # is unique by construction, and so is (orderkey, p1, p2) out of the

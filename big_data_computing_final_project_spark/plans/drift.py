@@ -186,10 +186,10 @@ def q151_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # q152 — exact two-sample KS. Cumulative counts per distinct value, max
 # absolute ECDF gap. The cumulative scan rides the bucketed prefix
-# operator (operators/prefix.py, VERDICT r7 item 2) — the distinct-value
-# frame grows with the value domain, and the former Window.orderBy("v")
-# serialized it into one task; bucket = floor(v/1000), the q203
-# discipline on the same o_totalprice domain. Every arithmetic step is
+# operator (operators/prefix.py) — the distinct-value frame grows with
+# the value domain, and a Window.orderBy("v") would serialize it into one
+# task; bucket = floor(v/1000), the q203 discipline on the same
+# o_totalprice domain. Every arithmetic step is
 # exact (bigint cumsums, correctly-rounded divisions) and the scan
 # produces the SAME cumulative counts as the naive window, so the
 # statistic hash-matches the oracle unchanged.
@@ -223,12 +223,10 @@ def q152_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = orders.select(
         F.col("o_totalprice").alias("v"), (_obucket() < 80).alias("is_ref")
     )
-    # r12 (VERDICT r11 item 6): the two chained prefix scans collapse into
-    # ONE bucketed pass (prefix_agg_multi — both cumsums share the partial
-    # groupBy, offset window, within-bucket sort and join), and the
-    # distinct-value frame is cached for its three consumers (partials +
-    # row join + totals) — it previously re-ran the orders scan + collapse
-    # per consumer. The cache is bounded by the value domain, the same
+    # Both cumsums ride ONE bucketed pass (prefix_agg_multi — they share
+    # the partial groupBy, offset window, within-bucket sort and join), and
+    # the distinct-value frame is cached for its three consumers (partials
+    # + row join + totals), so the orders scan + collapse runs once. The cache is bounded by the value domain, the same
     # cardinality argument as exact_quantiles' collapsed frame (SCALING.md
     # persist-vs-recompute policy).
     per = (

@@ -112,10 +112,10 @@ def q174_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("o_custkey") * 2 + 1).alias("c"),
         )
         .distinct()
-        # r11 note: caching this frame (4 lineage consumers inside the
-        # edges_deg build) was tried and REVERTED — the nested cache made
-        # the warm path SLOWER (6.8 s vs 4.3 s per warm run at sf0.1,
-        # measured in one session), outweighing the one-time build saving;
+        # not cached, though 4 lineage consumers inside the edges_deg
+        # build read it: a nested cache makes the warm path SLOWER (6.8 s
+        # vs 4.3 s per warm run at sf0.1, measured in one session),
+        # outweighing the one-time build saving;
         # the 4x build cost is paid once per session when edges_deg
         # materializes and never again.
     )
@@ -129,10 +129,10 @@ def q174_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         edges.join(deg, edges["src"] == deg["node"])
         .select("src", "dst", "outdeg")
         .cache()  # reused by all 5 supersteps
-        # r11 note: pre-hashing/sorting this cache by src (to make every
-        # superstep's join exchange-free on the big side) was also tried
-        # and REVERTED — the sorted layout makes Catalyst pick a static
-        # sort-merge join, which loses to AQE's runtime broadcast of the
+        # not pre-hashed/sorted by src (which would make every superstep's
+        # join exchange-free on the big side): the sorted layout makes
+        # Catalyst pick a static sort-merge join, which loses to AQE's
+        # runtime broadcast of the
         # tiny rank frame (12-16 s vs 4.3 s warm at sf0.1). AQE's
         # per-superstep choice (broadcast when ranks are small, SMJ at
         # scale) is the right adaptive shape (guide §3.1).

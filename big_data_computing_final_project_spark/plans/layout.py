@@ -313,13 +313,11 @@ _Q172_ORACLE = (
 @register("q172_partition_skew_audit", oracle=_Q172_ORACLE)
 def q172_partition_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    # r12 (guide §1.2/§6, VERDICT r11 item 4): ONE fact scan for all four
-    # candidates instead of one scan per candidate. Each row explodes into
+    # ONE fact scan for all four candidates, not one scan per candidate. Each row explodes into
     # its four (candidate, key) pairs; the partial aggregate on
     # (candidate, k) combines map-side, so the bytes crossing the exchange
     # are exactly the union of the four per-candidate key-count partials
-    # the old plan shuffled — the explode multiplies in-task rows only,
-    # never the shuffle.
+    # — the explode multiplies in-task rows only, never the shuffle.
     counts = (
         li.select(
             F.explode(

@@ -70,7 +70,7 @@ def q52_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return frame_sample(attach_synthetic_media(docs)).orderBy("doc_id", "frame_idx")
 
 # ---------------------------------------------------------------------------
-# q220 — decode-health audit (VERDICT r7 item 5): per-source media decode
+# q220 — decode-health audit: per-source media decode
 # error rates over a planted real-format mix. attach_media_mix builds one
 # REAL png/jpeg/gif/wav/mp4 blob per doc (format = doc_id % 5) with every
 # 7th doc malformed in a format-specific way and every 11th (precedence)
@@ -83,7 +83,7 @@ def q52_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # bigint/bigint division per aggregated row (q103 rule: no cross-row
 # irrational sums). doc_id >= 0 is load-bearing on BOTH sides: Python %
 # and SQL % disagree on negatives, so _mix_blob guards it with an
-# explicit ValueError (ADVICE r8); the testdata contract keeps doc_id
+# explicit ValueError; the testdata contract keeps doc_id
 # non-negative.
 # ---------------------------------------------------------------------------
 
@@ -142,7 +142,7 @@ def q220_decode_health(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q227 — decode-health × text-quality matrix (VERDICT r9 item 6): "is bad
+# q227 — decode-health × text-quality matrix: "is bad
 # media concentrated in low-quality sources?" — the q220 × q33 join a
 # curation pipeline runs before deciding whether to drop a source or just
 # its malformed blobs. Per (source, quality band of the SAME document's

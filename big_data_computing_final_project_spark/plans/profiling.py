@@ -759,7 +759,7 @@ def q218_weighted_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q219 — weighted INTERPOLATED percentiles (VERDICT r7 item 6): q218's
+# q219 — weighted INTERPOLATED percentiles: q218's
 # family completed with mode="linear". The weighted linear quantile is
 # defined on the EXPANDED multiset — each price repeated l_quantity times
 # — which is the one unambiguous extension of quantile_cont to integer

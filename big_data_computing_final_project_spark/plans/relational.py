@@ -572,9 +572,8 @@ SELECT '{child}.{fk}' AS edge,
 
 @register("q206_referential_integrity", oracle=_q206_oracle())
 def q206_referential_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r11 (guide §1.2): each edge used to run TWO child traversals (a
-    # totals scan + an anti-join scan) — 14 fact passes for 7 edges, six
-    # of them over lineitem. Now one pass per edge: LEFT join against the
+    # One pass per edge (not a totals scan plus an anti-join scan, which
+    # would be 14 fact passes for 7 edges): LEFT join against the
     # parent's DISTINCT keys (distinct makes the outer join multiplicity-
     # safe even on a dirty parent, and anti-join/NOT EXISTS semantics
     # never counted parent duplicates anyway) and fold totals + null-fk +

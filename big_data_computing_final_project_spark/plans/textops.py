@@ -455,7 +455,7 @@ def q82_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The running token sum uses the bucketed prefix scan, NOT
     ``Window.partitionBy("source")``: documents.source has ~20 values, so
     the window form serializes the whole corpus into 20 single-task scans
-    at 100 TB (VERDICT r6 item 3). ``prefix_agg`` splits each source's scan
+    at 100 TB. ``prefix_agg`` splits each source's scan
     by doc_id blocks — within-block cumsums parallelize across all cores,
     and only the per-(source, block) partials (n_docs/4096 rows) see a
     sequential combine."""
@@ -570,7 +570,7 @@ def q75_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 # only tokens matching the certified candidate set (data-dependent size,
 # capped at cand_max=4096 — broadcast hash semi; almost all tokens
 # short-circuit at the probe, nothing wide shuffles).
-# Candidate selection is CERTIFIED, not heuristic (ADVICE r4): phase 1's
+# Candidate selection is CERTIFIED, not heuristic: phase 1's
 # [lo, hi] bound rows feed operators/sketches.certified_hh_candidates,
 # which proves {item : count_hi >= k-th largest count_lo} contains the
 # true top-20 and that no truncated-away term can rank (drop_total <
@@ -602,7 +602,7 @@ LIMIT 20
 # ANSWER's correctness, so it must not trust path identity alone: the key
 # includes the documents table's file stats (name, size, mtime_ns), so a
 # rewritten-in-place corpus recomputes instead of silently rescoring the
-# old head terms (code-review r5).
+# old head terms.
 _Q100_CAND_MEMO: dict[tuple, list[str] | None] = {}
 
 
@@ -1157,13 +1157,12 @@ def q221_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.lit(1) - F.length(F.conv(F.col("freq").cast("string"), 10, 2))
         ).cast("bigint").alias("neg_octave"),
-    ).cache()  # r11: the two prefix scans and the totals agg each
-    # re-executed the corpus explode + token count (5 documents scans in
-    # the plan); the vocab-sized frame is the natural cache point
-    # r12 (VERDICT r11 item 6): rank + cumulative mass share ONE bucketed
-    # prefix pass (prefix_agg_multi) instead of two chained scans — one
-    # partial groupBy, one offset window, one within-bucket sort, one
-    # join; the intermediate ranked cache disappears with the second pass
+    ).cache()  # the prefix pass and the totals agg would each re-execute
+    # the corpus explode + token count; the vocab-sized frame is the
+    # natural cache point.
+    # Rank + cumulative mass share ONE bucketed prefix pass
+    # (prefix_agg_multi): one partial groupBy, one offset window, one
+    # within-bucket sort, one join
     ranked = prefix_agg_multi(
         tf,
         ["neg_freq", "token"],
@@ -1182,7 +1181,7 @@ def q221_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         # only ranks <= the largest candidate size can satisfy ANY
         # rk <= vocab_size predicate — pre-filtering bounds the 4-way
         # crossJoin fan-out at |max size| rows however large the
-        # vocabulary grows (r12; the rank filter rides the prefix pass)
+        # vocabulary grows (the rank filter rides the prefix pass)
         ranked.filter(F.col("rk") <= F.lit(max(_Q221_VOCAB_SIZES)))
         .crossJoin(F.broadcast(sizes))
         .filter(F.col("rk") <= F.col("vocab_size"))
@@ -1204,9 +1203,9 @@ def q221_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# q223 — fertility x quality drill-down matrix (round-9, VERDICT r8 item
-# 8): per (source, quality band), document count, the band's share of its
-# source, and the tokenizer-fertility ratio (chars per whitespace word).
+# q223 — fertility x quality drill-down matrix: per (source, quality
+# band), document count, the band's share of its source, and the
+# tokenizer-fertility ratio (chars per whitespace word).
 # The analytical question q210 and q33 can't answer separately: when a
 # source's fertility creeps (q210's signal), is the creep concentrated in
 # its LOW-quality band — meaning a quality filter fixes the corpus — or

@@ -17,14 +17,15 @@ from __future__ import annotations
 
 import os
 from collections.abc import Callable
+from functools import partial
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..catalog import _stored_as_nanos, epoch_us, normalize_events_ts
 from ..functions.stats import dec_sum
+from ..operators.sketches import _HH_PARTIAL_SCHEMA, _SKETCH_SCHEMA
 from ..plans.cdc import CDC_OPS_SCHEMA, latest_cdc_ops
 from ..sources.ann_index import (
     CODES_SCHEMA,
@@ -210,16 +211,17 @@ def run_stream_upsert(
     swap becomes a Delta/Iceberg MERGE INTO with the identical foreachBatch
     body; plain parquet keeps this container-runnable. foreachBatch may
     re-run a batch on recovery: the merge is idempotent on keys, so
-    replays converge (at-least-once in, exactly-once effect).
+    replays converge (at-least-once in, exactly-once effect). The swap is
+    _swap's rename-rename through ``data.old``, healed at the start of the
+    next batch, so a crash mid-swap never leaves a replay without its
+    current table.
     """
-    import os
-    import shutil
-
     spark = result.sparkSession
 
     def upsert(batch: DataFrame, batch_id: int) -> None:
         data_dir = os.path.join(out_dir, "data")
         tmp_dir = os.path.join(out_dir, f"_stage_{batch_id}")
+        _recover_compaction(data_dir)
         if os.path.exists(data_dir):
             current = spark.read.parquet(data_dir)
             merged = current.join(
@@ -228,9 +230,7 @@ def run_stream_upsert(
         else:
             merged = batch
         merged.write.mode("overwrite").parquet(tmp_dir)
-        if os.path.exists(data_dir):
-            shutil.rmtree(data_dir)
-        os.replace(tmp_dir, data_dir)
+        _swap(data_dir, tmp_dir)
 
     _run_foreach_batch(
         result, upsert, checkpoint_dir, timeout_sec, "run_stream_upsert", output_mode="update"
@@ -240,16 +240,32 @@ def run_stream_upsert(
 # ---------------------------------------------------------------------------
 # Staged stores. Every foreachBatch store below stages one ``batch_id=N``
 # delta per micro-batch (per part, for a store with sub-dirs), and its folds
-# read the deltas back. Each compactable store is declared ONCE as a tuple
-# of _Part (the declarations follow the helpers): a part names its sub-dir
-# (None for a flat store, whose store dir IS the partitioned dir), its read
-# schema and its merge. Compaction, crash healing, the floor remap and the
-# fold reads all derive from that declaration.
+# read the deltas back. Each store is declared ONCE as a _Store: a tuple of
+# _Part (a part names its sub-dir — None for a flat store, whose store dir
+# IS the partitioned dir — its read schema and its merge) plus the store's
+# per-batch step. Compaction, crash healing, the floor remap, the fold reads
+# and the ingest all derive from that declaration; each family declares its
+# store after its step.
+#
+# THE RUNNER CONTRACT (_run_stores, _ingest):
+# - Per micro-batch the runner projects the batch once (``enrich``), caches
+#   it only when more than one step reads it, runs every step and then
+#   unpersists.
+# - A step stages under ``batch_id=N`` with an overwrite, so a replayed
+#   batch overwrites its own delta: at-least-once in, exactly-once effect.
+# - N is the raw micro-batch id remapped above the store's compaction
+#   floor (see _effective_batch_id); a store never compacted has no floor,
+#   so its N is the raw id.
+# - A monitor's evaluation log is staged after the steps, under the N of
+#   the monitor's one ingest store; the scorecard monitor feeds several
+#   stores and logs under the raw id.
+# - A step may hand a frame to a second store (dup-flow keepers to the
+#   kept store, LSH pairs to the label store); the hand-off goes through
+#   _ingest, so the receiver remaps the raw id above its own floor.
 #
 # Compaction merges each part's deltas into ONE delta living at the part's
 # MAX existing batch_id (see _compact_partitioned) and records the highest
-# folded id in the store's floor marker; every later ingest remaps its raw
-# id above that floor (see _effective_batch_id).
+# folded id in the store's floor marker.
 #
 # CONTRACT: compact only while no stream is writing the store AND the last
 # drain completed (all batches committed). A replayed batch overwrites its
@@ -265,19 +281,21 @@ def run_stream_upsert(
 # above: crash between the delta write and the checkpoint commit,
 # compaction run before the stream resumes). The replayed raw id then lands
 # ABOVE the floor instead of overwriting its own (now folded) delta, so
-# ADDITIVE stores (counts/volume/basket/attribution-revenue/revenue-partials/
-# decode-health/dup-flow edges) count that one batch twice; latest-wins
-# folds (CDC) and unique-row folds (LSH state) are unchanged. This schedule
-# cannot manufacture a dup-flow SELF-edge (the replayed keeper counted as a
-# dup of itself): the keeper store records keeper_doc_id and the ingest
-# drops any dup row whose doc IS the stored keeper — only the bounded edge
-# double-count remains. The alternative — skipping raw ids at-or-below a
-# folded high-water mark — cannot distinguish this replay from a
-# fresh-checkpoint restart (both re-present low raw ids) without
-# introspecting the engine's checkpoint, and would silently DROP data on
-# the restart path; a bounded duplicate of one batch is the better failure.
-# Honoring the maintenance-window contract makes the schedule impossible in
-# the first place.
+# ADDITIVE stores (counts/volume/fert/shingles/basket/attribution-revenue/
+# revenue-partials/decode-health/dup-flow edges) count that one batch
+# twice; latest-wins folds (CDC), max folds (attribution clicks), min-label
+# folds (near-dup labels) and the stores whose step anti-joins what is
+# already stored (LSH, IVF, PQ; the dup-flow keepers and the kept mass they
+# feed) are unchanged. This schedule cannot manufacture a dup-flow
+# SELF-edge (the replayed keeper counted as a dup of itself): the keeper
+# store records keeper_doc_id and the ingest drops any dup row whose doc IS
+# the stored keeper — only the bounded edge double-count remains. The
+# alternative — skipping raw ids at-or-below a folded high-water mark —
+# cannot distinguish this replay from a fresh-checkpoint restart (both
+# re-present low raw ids) without introspecting the engine's checkpoint,
+# and would silently DROP data on the restart path; a bounded duplicate of
+# one batch is the better failure. Honoring the maintenance-window
+# contract makes the schedule impossible in the first place.
 # ---------------------------------------------------------------------------
 
 
@@ -299,6 +317,23 @@ class _Part(NamedTuple):
         return self.merge(self.read(spark, store_dir))
 
 
+# A store's per-batch step: (batch, eff_id, store_dir, raw_id) stages the
+# batch's deltas under eff_id; raw_id only feeds a hand-off to _ingest.
+_Step = Callable[[DataFrame, int, str, int], None]
+
+
+class _Store(NamedTuple):
+    """A staged store's declaration: its parts and its step. A store whose
+    step takes run parameters declares None and gets its step at run time
+    (``_replace(step=...)``)."""
+
+    parts: tuple[_Part, ...]
+    step: _Step | None = None
+
+    def part(self, sub: str | None = None) -> _Part:
+        return next(p for p in self.parts if p.sub == sub)
+
+
 def _columns(schema: str) -> list[str]:
     return [c.split()[0] for c in schema.split(", ")]
 
@@ -316,14 +351,22 @@ def _rewritten(sub: str | None, schema: str) -> _Part:
     return _Part(sub, schema, lambda df: df.select(*_columns(schema)))
 
 
-def _part(parts: tuple[_Part, ...], sub: str | None = None) -> _Part:
-    return next(p for p in parts if p.sub == sub)
+def _log(sub: str, schema: str) -> _Part:
+    """A monitor's append-only evaluation log, never compacted: its fold is
+    the rows ordered by batch, then by any key column."""
+    cols = _columns(schema)
+    return _Part(
+        sub,
+        schema,
+        lambda df: df.select("batch_id", *cols).orderBy(
+            "batch_id", *[c for c in cols if c in ("key", "source")]
+        ),
+    )
 
 
 def _stage(df: DataFrame, delta_root: str, batch_id: int) -> str:
     """Write one micro-batch's delta to ``delta_root/batch_id=N`` and return
-    its path. The write overwrites, so a replayed batch replaces its own
-    delta: at-least-once in, exactly-once effect on the store."""
+    its path."""
     path = os.path.join(delta_root, f"batch_id={batch_id}")
     df.write.mode("overwrite").parquet(path)
     return path
@@ -349,13 +392,46 @@ def _read_store_deltas(spark: SparkSession, store_dir: str, schema: str) -> Data
     )
 
 
-def _monitor_log(spark: SparkSession, log_dir: str, schema: str) -> DataFrame:
-    """Shared append-only evaluation-log reader (see _read_store_deltas),
-    ordered by batch then any key columns."""
-    cols = _columns(schema)
-    return _read_store_deltas(spark, log_dir, schema).select(
-        "batch_id", *cols
-    ).orderBy("batch_id", *[c for c in cols if c in ("key", "source")])
+def _ingest(store: _Store, batch: DataFrame, batch_id: int, store_dir: str) -> int:
+    """Run one micro-batch through a declared store: heal its parts, remap
+    the raw ``batch_id`` above its floor, run its step and return the
+    effective id."""
+    eff_id = _effective_batch_id(store_dir, batch_id, store)
+    store.step(batch, eff_id, store_dir, batch_id)
+    return eff_id
+
+
+def _run_stores(
+    src: DataFrame,
+    checkpoint_dir: str,
+    timeout_sec: int,
+    label: str,
+    steps: list[tuple[_Store, str]],
+    enrich: Callable[[DataFrame], DataFrame] | None = None,
+    log: tuple[_Part, str, Callable[[SparkSession, int], DataFrame]] | None = None,
+) -> None:
+    """The one store runner (see the section contract): every micro-batch of
+    ``src``, projected by ``enrich``, goes through each (store, store_dir)
+    step; ``log`` = (log part, monitor dir, evaluate) then stages
+    ``evaluate(spark, N)`` under the monitor's N."""
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        if enrich is not None:
+            batch = enrich(batch)
+        shared = len(steps) > 1
+        if shared:
+            batch = batch.cache()
+        try:
+            ids = [_ingest(store, batch, batch_id, store_dir) for store, store_dir in steps]
+        finally:
+            if shared:
+                batch.unpersist()
+        if log is not None:
+            part, monitor_dir, evaluate = log
+            eff_id = ids[0] if len(ids) == 1 else batch_id
+            _stage(evaluate(batch.sparkSession, eff_id), part.path(monitor_dir), eff_id)
+
+    _run_foreach_batch(src, run, checkpoint_dir, timeout_sec, label)
 
 
 _FLOOR_MARKER = "_compaction_floor"
@@ -399,7 +475,7 @@ def _write_compaction_floor(store_dir: str, floor: int) -> None:
     os.replace(tmp, path)
 
 
-def _effective_batch_id(store_dir: str, batch_id: int, parts: tuple[_Part, ...]) -> int:
+def _effective_batch_id(store_dir: str, batch_id: int, store: _Store) -> int:
     """Heal every part of a declared store, then remap a raw micro-batch id
     above the store's compaction floor.
 
@@ -417,19 +493,20 @@ def _effective_batch_id(store_dir: str, batch_id: int, parts: tuple[_Part, ...])
     leaves a part's live dir missing with `.old` holding all history; an
     ingest that recreated the live dir would make the next
     _recover_compaction delete the backup — silent history loss."""
-    for part in parts:
+    for part in store.parts:
         _recover_compaction(part.path(store_dir))
-    floor = _read_compaction_floor(store_dir, flat=parts[0].sub is None)
+    floor = _read_compaction_floor(store_dir, flat=store.parts[0].sub is None)
     return batch_id if floor is None else floor + 1 + batch_id
 
 
 def _recover_compaction(store_dir: str) -> None:
-    """Heal a compaction interrupted between its two renames: if the live
-    name is missing but the `.old` backup exists, restore the backup (and
-    drop the half-promoted build). Called by _compact_partitioned, by
-    _effective_batch_id and by _read_store_deltas (so by every store fold),
-    so a crashed compaction can never read as an empty store — at worst the
-    next compaction redoes the merge."""
+    """Heal a swap interrupted between its two renames (see _swap): if the
+    live name is missing but the `.old` backup exists, restore the backup
+    (and drop a half-promoted compaction build). Called by
+    _compact_partitioned, by _effective_batch_id, by _read_store_deltas (so
+    by every store fold) and by the upsert sink, so a crashed swap can never
+    read as an empty store — at worst the next compaction redoes the
+    merge."""
     import shutil
 
     old = store_dir + ".old"
@@ -441,14 +518,28 @@ def _recover_compaction(store_dir: str) -> None:
         shutil.rmtree(store_dir + ".compacting", ignore_errors=True)
 
 
+def _swap(live: str, built: str) -> None:
+    """Install the directory ``built`` as ``live``: rename ``live`` to
+    ``live.old``, rename ``built`` to ``live``, drop the backup. A crash
+    between the renames leaves every byte of the old ``live`` in `.old`,
+    which _recover_compaction restores."""
+    import shutil
+
+    old = live + ".old"
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.exists(live):
+        os.rename(live, old)
+    os.rename(built, live)
+    shutil.rmtree(old, ignore_errors=True)
+
+
 def _compact_partitioned(spark: SparkSession, store_dir: str, part: _Part) -> int | None:
     """Fold every batch_id delta of one part and swap the part's dir for a
     single-delta copy living at the MAX existing batch_id — not 0, so a
     stream mistakenly restarted on a FRESH checkpoint (ids restart at 0)
     overwrites at most an empty low-id delta instead of the whole
-    compacted history. The swap is rename-rename with a `.old` backup; a
-    crash between the renames is healed by _recover_compaction (run this
-    in the maintenance window — no concurrent readers/writers)."""
+    compacted history (run this in the maintenance window — no concurrent
+    readers/writers)."""
     import re
     import shutil
 
@@ -468,118 +559,24 @@ def _compact_partitioned(spark: SparkSession, store_dir: str, part: _Part) -> in
     marker = _floor_marker_path(live)
     if os.path.exists(marker):
         shutil.copyfile(marker, _floor_marker_path(tmp))
-    old = live + ".old"
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(live, old)
-    os.rename(tmp, live)
-    shutil.rmtree(old, ignore_errors=True)
+    _swap(live, tmp)
     return target
 
 
-def _compact(spark: SparkSession, store_dir: str, parts: tuple[_Part, ...]) -> None:
+def _compact(spark: SparkSession, store_dir: str, store: _Store) -> None:
     """Compact every part of a declared store (maintenance window only, see
     the section contract), then record the highest folded id as its floor."""
     floors = [
-        floor for p in parts if (floor := _compact_partitioned(spark, store_dir, p)) is not None
+        floor
+        for p in store.parts
+        if (floor := _compact_partitioned(spark, store_dir, p)) is not None
     ]
     if floors:
         _write_compaction_floor(store_dir, max(floors))
 
 
-# -- the compactable stores ---------------------------------------------------
-# Unless a part says otherwise, deltas are additive (summed per key — the
-# section's double-count caveat applies) or unique rows (rewritten as is).
-
-_KEPT = (_summed(None, "source string, kept_docs bigint, kept_tokens bigint", "source"),)
-_VOLUME = (
-    _summed(
-        None,
-        "source string, lang string, n_docs bigint, n_tokens bigint, n_chars bigint",
-        "source",
-        "lang",
-    ),
-)
-_FERT = (
-    _summed(None, "source string, n_docs bigint, norm_chars bigint, n_words bigint", "source"),
-)
-_SHINGLES = (_summed(None, "sh bigint, source string, cnt bigint", "sh", "source"),)
-_HEALTH = (
-    _summed(
-        None,
-        "source string, fmt string, status string, n_docs bigint",
-        "source",
-        "fmt",
-        "status",
-    ),
-)
-# latest op per key: associative under the unique-seq contract
-_CDC = (_Part(None, CDC_OPS_SCHEMA, latest_cdc_ops),)
-# one row per doc at its current (min) label: an idempotent min/max fold,
-# exact under any schedule (no double-count caveat)
-_ND_LABELS = (
-    _Part(
-        None,
-        "doc_id bigint, source string, nt bigint, label bigint",
-        lambda df: df.groupBy("doc_id")
-        .agg(F.max("source").alias("source"), F.max("nt").alias("nt"), F.min("label").alias("label"))
-        .select("doc_id", "source", "nt", "label"),
-    ),
-)
-# keepers: fp is unique across deltas by construction
-_DUP_FLOW = (
-    _rewritten("keepers", "fp string, keeper_source string, keeper_doc_id long"),
-    _summed(
-        "edges",
-        "fp string, keeper_source string, dup_source string, n_docs bigint",
-        "fp",
-        "keeper_source",
-        "dup_source",
-    ),
-)
-# state: one row per ingested doc; pairs: each unordered pair lives in the
-# one delta of the batch that completed it
-_LSH = (
-    _rewritten(
-        "state", "doc_id bigint, sh array<string>, bands array<struct<band:int,key:bigint>>"
-    ),
-    _rewritten("pairs", "doc_a bigint, doc_b bigint, jac double"),
-)
-_BASKET = (
-    _summed("pairs", "p1 bigint, p2 bigint, n_both bigint", "p1", "p2"),
-    _summed("items", "p bigint, n_p bigint", "p"),
-    _summed("baskets", "n_orders bigint"),
-)
-# the monitor/ evaluation log is not a part: it is never compacted, and the
-# shared floor keeps later log ids clear of existing rows
-_REVENUE = (_summed("partials", "day_idx int, u_partial bigint", "day_idx"),)
-# clicks keep the per-user MAX key, which suffices under the time-ordered
-# contract: keys grow with ts, so a user's newest click is the only one any
-# FUTURE purchase's [lo, hi) range can pick — if the newest is older than
-# lo, every discarded older click was too
-_ATTRIBUTION = (
-    _summed("revenue", "campaign bigint, n_purchases bigint, rev_units bigint", "campaign"),
-    _Part(
-        "clicks",
-        "user_id bigint, click_key decimal(38,0)",
-        lambda df: df.groupBy("user_id").agg(F.max("click_key").alias("click_key")),
-    ),
-)
-# assign/codes: one row per vec_id (the anti-join ingest contract); the
-# log/ evaluation record is kept as written
-_IVF = (
-    _rewritten("assign", "vec_id bigint, cell int"),
-    _summed("counts", "cell int, n_vecs bigint", "cell"),
-)
-_PQ = (
-    _rewritten("codes", CODES_SCHEMA),
-    _summed("counts", "m int, code int, n_vecs bigint", "m", "code"),
-)
-
-
-def _psi_counts(key_cols: list[str]) -> tuple[_Part, ...]:
-    """The (keyed or unkeyed) PSI bin-counts store: additive per bin."""
-    schema = ", ".join([f"{k} string" for k in key_cols] + ["bin int", "n bigint"])
-    return (_summed(None, schema, *key_cols, "bin"),)
+# -- the compactions ----------------------------------------------------------
+# Each store's declaration sits after its step, in the store's family below.
 
 
 def compact_kept_store(spark: SparkSession, store_dir: str) -> None:
@@ -661,6 +658,36 @@ def compact_pq_code_store(spark: SparkSession, store_dir: str) -> None:
     _compact(spark, store_dir, _PQ)
 
 
+# -- sketch and audit stores (never compacted, so never floored) --------------
+
+_DIGESTS = _Store((_rewritten(None, _SKETCH_SCHEMA),))
+_HEAVY_HITTERS = _Store((_rewritten(None, _HH_PARTIAL_SCHEMA),))
+_DQ = _Store(
+    (
+        _summed(
+            None, "constraint string, n_violations bigint, n_checked bigint", "constraint"
+        ),
+    )
+)
+_INTEGRITY = _Store(
+    (
+        _rewritten("counts", "n_rows bigint, n_null_fk bigint"),
+        _rewritten("orphans", "fk bigint, n bigint"),
+    )
+)
+
+
+def _digests(key_col: str, value_col: str, delta: float) -> _Store:
+    """The t-digest partials store with its step: per-key partials of the batch."""
+    from ..operators.sketches import tdigest_partials
+
+    return _DIGESTS._replace(
+        step=lambda batch, eff_id, store_dir, _: _stage(
+            tdigest_partials(batch, key_col, value_col, delta), store_dir, eff_id
+        )
+    )
+
+
 def run_stream_tdigest(
     events: DataFrame,
     key_col: str,
@@ -679,19 +706,11 @@ def run_stream_tdigest(
     (operators/sketches): partial states are associative, so
     batch-at-a-time appends commute with one big batch build. The store
     grows O(batches × keys × δ) rows; a periodic compaction (read store →
-    merge per key → overwrite) bounds it, same shape as the upsert sink
-    above. foreachBatch may replay a batch on recovery; appends are staged
-    per-batch-id so a replay overwrites its own directory instead of
-    double-counting (exactly-once effect on the store).
+    merge per key → overwrite) would bound it, same shape as the upsert
+    sink above.
     """
-    from ..operators.sketches import tdigest_partials
-
-    def append_partials(batch: DataFrame, batch_id: int) -> None:
-        _stage(tdigest_partials(batch, key_col, value_col, delta), store_dir, batch_id)
-
-    _run_foreach_batch(
-        events, append_partials, checkpoint_dir, timeout_sec, "run_stream_tdigest"
-    )
+    steps = [(_digests(key_col, value_col, delta), store_dir)]
+    _run_stores(events, checkpoint_dir, timeout_sec, "run_stream_tdigest", steps)
 
 
 def sketch_store_quantiles(
@@ -699,11 +718,9 @@ def sketch_store_quantiles(
 ) -> DataFrame:
     """Answer per-key quantiles from an incremental sketch store (KBs),
     merging all appended partials — the 100 TB corpus itself is not read."""
-    from ..operators.sketches import _SKETCH_SCHEMA, tdigest_finalize
+    from ..operators.sketches import tdigest_finalize
 
-    partials = _read_store_deltas(spark, store_dir, _SKETCH_SCHEMA).select(
-        "key", "means", "weights"
-    )
+    partials = _DIGESTS.part().read(spark, store_dir).select("key", "means", "weights")
     return tdigest_finalize(partials, probs, delta)
 
 
@@ -719,25 +736,23 @@ def run_stream_heavy_hitters(
     SpaceSaving partials (pid, item, cnt, dmax) to a parquet store under
     ``batch_id=N``; ``hh_store_topk`` answers certified top-k from the
     store alone. Partial ids become (batch_id, pid) so every partial's
-    truncation mass counts exactly once in the merged bounds; per-batch-id
-    staged writes make replays idempotent, same as run_stream_tdigest."""
+    truncation mass counts exactly once in the merged bounds."""
     from ..operators.sketches import heavy_hitters_partials
 
-    def append_partials(batch: DataFrame, batch_id: int) -> None:
-        _stage(heavy_hitters_partials(batch, items_col, capacity), store_dir, batch_id)
+    def step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
+        _stage(heavy_hitters_partials(batch, items_col, capacity), store_dir, eff_id)
 
-    _run_foreach_batch(
-        stream, append_partials, checkpoint_dir, timeout_sec, "run_stream_heavy_hitters"
-    )
+    steps = [(_HEAVY_HITTERS._replace(step=step), store_dir)]
+    _run_stores(stream, checkpoint_dir, timeout_sec, "run_stream_heavy_hitters", steps)
 
 
 def hh_store_topk(spark: SparkSession, store_dir: str, k: int = 20) -> DataFrame:
     """Certified top-k from an incremental heavy-hitters store: merges all
     appended truncated-counter partials; batch_id comes back as a partition
     column from the ``batch_id=N`` directory layout."""
-    from ..operators.sketches import _HH_PARTIAL_SCHEMA, heavy_hitters_finalize
+    from ..operators.sketches import heavy_hitters_finalize
 
-    partials = _read_store_deltas(spark, store_dir, _HH_PARTIAL_SCHEMA)
+    partials = _HEAVY_HITTERS.part().read(spark, store_dir)
     return heavy_hitters_finalize(partials, k, partial_id_cols=("batch_id", "pid"))
 
 
@@ -776,19 +791,14 @@ def run_stream_dq_audit(
     additive, so the store's per-constraint sum equals the batch audit of
     everything ingested — the ingest-gate invariant, maintained
     incrementally with no raw-row retention.
-
-    Idempotent under foreachBatch replays: a re-run batch OVERWRITES its
-    own batch_id directory, so at-least-once delivery still sums to
-    exactly-once counts.
     """
     from ..operators.quality import check_predicates
 
-    def audit(batch: DataFrame, batch_id: int) -> None:
-        _stage(check_predicates(batch, checks), store_dir, batch_id)
+    def step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
+        _stage(check_predicates(batch, checks), store_dir, eff_id)
 
-    _run_foreach_batch(
-        events, audit, checkpoint_dir, timeout_sec, "run_stream_dq_audit"
-    )
+    steps = [(_DQ._replace(step=step), store_dir)]
+    _run_stores(events, checkpoint_dir, timeout_sec, "run_stream_dq_audit", steps)
 
 
 def run_stream_integrity_audit(
@@ -803,8 +813,8 @@ def run_stream_integrity_audit(
     """foreachBatch referential-integrity monitor — q206's FK audit AT
     INGEST: every micro-batch of ``facts`` is anti-joined against the
     (static/broadcastable) ``dim`` key; per-batch row/null-FK totals and
-    per-key orphan counts are staged under batch_id=N (overwrite =
-    idempotent on replay). Counts are additive across batches and orphan
+    per-key orphan counts are staged under batch_id=N. Counts are additive
+    across batches and orphan
     keys fold by distinct at read, so the store report equals the batch
     audit of everything ingested — no raw-row retention, state linear in
     ORPHANS (rare by construction), not rows.
@@ -815,12 +825,12 @@ def run_stream_integrity_audit(
     """
     from ..operators.sizing import broadcast_if_small
 
-    def audit(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
         counts = batch.agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.count(F.when(F.col(fk_col).isNull(), 1)).alias("n_null_fk"),
         )
-        _stage(counts, os.path.join(store_dir, "counts"), batch_id)
+        _stage(counts, _INTEGRITY.part("counts").path(store_dir), eff_id)
         orphans = (
             batch.filter(F.col(fk_col).isNotNull())
             .join(
@@ -831,11 +841,10 @@ def run_stream_integrity_audit(
             .groupBy(F.col(fk_col).alias("fk"))
             .agg(F.count(F.lit(1)).alias("n"))
         )
-        _stage(orphans, os.path.join(store_dir, "orphans"), batch_id)
+        _stage(orphans, _INTEGRITY.part("orphans").path(store_dir), eff_id)
 
-    _run_foreach_batch(
-        facts, audit, checkpoint_dir, timeout_sec, "run_stream_integrity_audit"
-    )
+    steps = [(_INTEGRITY._replace(step=step), store_dir)]
+    _run_stores(facts, checkpoint_dir, timeout_sec, "run_stream_integrity_audit", steps)
 
 
 def integrity_report_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -844,18 +853,11 @@ def integrity_report_from_store(spark: SparkSession, store_dir: str) -> DataFram
     are 1 row/batch; orphans are linear in actual violations). Orphan keys
     are read as bigint: every q206 star-schema FK is an integer key, and
     int keys widen on read."""
-    counts = (
-        _read_store_deltas(
-            spark, os.path.join(store_dir, "counts"), "n_rows bigint, n_null_fk bigint"
-        )
-        .agg(
-            F.sum("n_rows").cast("bigint").alias("n_rows"),
-            F.sum("n_null_fk").cast("bigint").alias("n_null_fk"),
-        )
+    counts = _INTEGRITY.part("counts").read(spark, store_dir).agg(
+        F.sum("n_rows").cast("bigint").alias("n_rows"),
+        F.sum("n_null_fk").cast("bigint").alias("n_null_fk"),
     )
-    orph = _read_store_deltas(
-        spark, os.path.join(store_dir, "orphans"), "fk bigint, n bigint"
-    ).agg(
+    orph = _INTEGRITY.part("orphans").read(spark, store_dir).agg(
         F.coalesce(F.sum("n"), F.lit(0)).cast("bigint").alias("n_orphans"),
         F.countDistinct("fk").cast("bigint").alias("n_orphan_keys"),
     )
@@ -865,17 +867,7 @@ def integrity_report_from_store(spark: SparkSession, store_dir: str) -> DataFram
 def dq_store_report(spark: SparkSession, store_dir: str) -> DataFrame:
     """Fold the per-batch audit store into one report (sum of additive
     violation counts per constraint)."""
-    return (
-        _read_store_deltas(
-            spark, store_dir, "constraint string, n_violations bigint, n_checked bigint"
-        )
-        .groupBy("constraint")
-        .agg(
-            F.sum("n_violations").alias("n_violations"),
-            F.sum("n_checked").alias("n_checked"),
-        )
-        .orderBy("constraint")
-    )
+    return _DQ.part().fold(spark, store_dir).orderBy("constraint")
 
 
 def mixture_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -885,7 +877,9 @@ def mixture_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     is updated per micro-batch, and once the backlog drains this report
     equals the batch q134 exactly (pytest-pinned). The share division runs
     over the kilobyte-sized store, never the event stream."""
-    c = spark.read.parquet(f"{store_dir}/data").select(
+    data_dir = os.path.join(store_dir, "data")
+    _recover_compaction(data_dir)
+    c = spark.read.parquet(data_dir).select(
         "window_start", "event_type", F.col("n_events").cast("bigint").alias("n_events")
     )
     ww = Window.partitionBy("window_start")
@@ -898,24 +892,38 @@ def mixture_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     )
 
 
-def _dup_flow_ingest(
-    batch: DataFrame, batch_id: int, store_dir: str, kept_dir: str | None = None
+def _kept_step(keepers: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
+    """One batch's per-source (kept_docs, kept_tokens) partial over the new
+    keepers the dup-flow step hands over (with their ``n_toks``). Kept mass
+    is additive across batches (each fp group's keeper is new exactly
+    once), which is what lets dedup_adjusted_budget_from_store re-plan the
+    token budget incrementally without ever re-reading the corpus."""
+    _stage(
+        keepers.groupBy("source").agg(
+            F.count(F.lit(1)).cast("bigint").alias("kept_docs"),
+            F.sum("n_toks").cast("bigint").alias("kept_tokens"),
+        ),
+        store_dir,
+        eff_id,
+    )
+
+
+_KEPT = _Store(
+    (_summed(None, "source string, kept_docs bigint, kept_tokens bigint", "source"),),
+    _kept_step,
+)
+
+
+def _dup_flow_step(
+    batch: DataFrame, eff_id: int, store_dir: str, raw_id: int, kept_dir: str | None = None
 ) -> None:
     """One micro-batch of the dup-flow store (see run_stream_dup_flow):
     rank the batch within fp, look up the keeper store for batches < this
-    one, stage this batch's new keepers and duplicate-flow edges under
-    their batch_id directories (idempotent on replay; ids remap above the
-    compaction floor — see _effective_batch_id — so a replay of a folded
-    raw id can never overwrite the compacted keeper/edge history).
+    one, stage this batch's new keepers and duplicate-flow edges.
 
-    ``kept_dir`` (the ingest-suite path): additionally stage a
-    per-source (kept_docs, kept_tokens) partial over THIS batch's new
-    keepers — the batch must then carry ``n_toks``. Kept mass is additive
-    across batches (each fp group's keeper is new exactly once), which is
-    what lets dedup_adjusted_budget_from_store re-plan the token budget
-    incrementally without ever re-reading the corpus."""
+    ``kept_dir`` (the ingest-suite path): additionally hand the new keepers
+    to the kept store there — the batch must then carry ``n_toks``."""
     spark = batch.sparkSession
-    eff_id = _effective_batch_id(store_dir, batch_id, _DUP_FLOW)
     w = Window.partitionBy("fp").orderBy("doc_id")
     cols = ["doc_id", "source", "fp"] + (["n_toks"] if kept_dir is not None else [])
     ranked = batch.select(*cols).withColumn(
@@ -926,7 +934,7 @@ def _dup_flow_ingest(
     # parquet missing the column), which simply disables the self-edge
     # guard for that row
     prior = (
-        _part(_DUP_FLOW, "keepers")
+        _DUP_FLOW.part("keepers")
         .read(spark, store_dir)
         .where(F.col("batch_id") < eff_id)
         .select(
@@ -950,18 +958,11 @@ def _dup_flow_ingest(
                 F.col("source").alias("keeper_source"),
                 F.col("doc_id").alias("keeper_doc_id"),
             ),
-            os.path.join(store_dir, "keepers"),
+            _DUP_FLOW.part("keepers").path(store_dir),
             eff_id,
         )
         if kept_dir is not None:
-            _stage(
-                new_keeper_rows.groupBy("source").agg(
-                    F.count(F.lit(1)).cast("bigint").alias("kept_docs"),
-                    F.sum("n_toks").cast("bigint").alias("kept_tokens"),
-                ),
-                kept_dir,
-                _effective_batch_id(kept_dir, batch_id, _KEPT),
-            )
+            _ingest(_KEPT, new_keeper_rows, raw_id, kept_dir)
         # within-batch keeper source per fp (the rn==1 row's source)
         batch_first = hit.where(F.col("rn") == 1).select(
             "fp", F.col("source").alias("batch_keeper")
@@ -990,9 +991,25 @@ def _dup_flow_ingest(
         edges = dup_rows.groupBy("fp", "keeper_source", "dup_source").agg(
             F.count(F.lit(1)).alias("n_docs")
         )
-        _stage(edges, os.path.join(store_dir, "edges"), eff_id)
+        _stage(edges, _DUP_FLOW.part("edges").path(store_dir), eff_id)
     finally:
         hit.unpersist()
+
+
+# keepers: fp is unique across deltas by construction
+_DUP_FLOW = _Store(
+    (
+        _rewritten("keepers", "fp string, keeper_source string, keeper_doc_id long"),
+        _summed(
+            "edges",
+            "fp string, keeper_source string, dup_source string, n_docs bigint",
+            "fp",
+            "keeper_source",
+            "dup_source",
+        ),
+    ),
+    _dup_flow_step,
+)
 
 
 def run_stream_dup_flow(
@@ -1006,9 +1023,7 @@ def run_stream_dup_flow(
     (q87) — dedup AT INGEST, per crawl drop, instead of batch-only.
 
     ``docs`` is a streaming frame of (doc_id, source, fp). Two append-only
-    parquet tables, both staged per batch_id so a replayed batch overwrites
-    its own directories (at-least-once in, exactly-once effect — the
-    run_stream_heavy_hitters idiom):
+    parquet tables, both staged per batch_id:
 
       keepers/batch_id=N/  (fp, keeper_source, keeper_doc_id) — fps FIRST
                            kept by batch N (within-batch min doc_id, not
@@ -1035,16 +1050,10 @@ def run_stream_dup_flow(
     the keeper-store lookup is an fp-equi join whose store side holds one
     row per distinct kept fingerprint — at 100 TB that store lives
     bucketed on fp so the per-batch join co-locates without a full-store
-    shuffle, and the per-batch_id deltas get periodically compacted (read
-    -> merge -> overwrite, the run_stream_tdigest compaction note).
+    shuffle, and the per-batch_id deltas get periodically compacted
+    (compact_dup_flow_store).
     """
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        _dup_flow_ingest(batch, batch_id, store_dir)
-
-    _run_foreach_batch(
-        docs, ingest, checkpoint_dir, timeout_sec, "run_stream_dup_flow"
-    )
+    _run_stores(docs, checkpoint_dir, timeout_sec, "run_stream_dup_flow", [(_DUP_FLOW, store_dir)])
 
 
 def dup_flow_matrix_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1052,7 +1061,7 @@ def dup_flow_matrix_from_store(spark: SparkSession, store_dir: str) -> DataFrame
     incremental dup-flow store — read only the edge deltas (linear in
     duplicates), never the corpus."""
     return (
-        _part(_DUP_FLOW, "edges")
+        _DUP_FLOW.part("edges")
         .read(spark, store_dir)
         .groupBy("keeper_source", "dup_source")
         .agg(
@@ -1070,14 +1079,22 @@ def dup_flow_matrix_from_store(spark: SparkSession, store_dir: str) -> DataFrame
 # ---------------------------------------------------------------------------
 
 
-def _stage_bin_counts(
-    binned: DataFrame, batch_id: int, store_dir: str, key_cols: list[str]
-) -> int:
-    """Stage one batch's bin counts under its effective batch id (remapped
-    above the store's compaction floor), which it returns."""
-    eff_id = _effective_batch_id(store_dir, batch_id, _psi_counts(key_cols))
-    _stage(binned.groupBy(*key_cols, "bin").agg(F.count(F.lit(1)).alias("n")), store_dir, eff_id)
-    return eff_id
+def _psi_counts(key_cols: list[str]) -> _Store:
+    """The (keyed or unkeyed) PSI bin-counts store: additive per bin; its
+    step counts a binned batch (the runner's ``enrich`` bins it)."""
+    schema = ", ".join([f"{k} string" for k in key_cols] + ["bin int", "n bigint"])
+
+    def step(binned: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
+        counts = binned.groupBy(*key_cols, "bin").agg(F.count(F.lit(1)).alias("n"))
+        _stage(counts, store_dir, eff_id)
+
+    return _Store((_summed(None, schema, *key_cols, "bin"),), step)
+
+
+def _psi_log(key_cols: list[str]) -> _Part:
+    """The drift monitors' log: one row per key, one total row unkeyed."""
+    keys = [f"{k} string" for k in key_cols]
+    return _log("log", ", ".join(keys + ["psi_total double, n_cur bigint, alert boolean"]))
 
 
 def _psi_fold(
@@ -1105,7 +1122,8 @@ def _psi_fold(
     # zero micro-batches processed: empty fold -> ref-only bins, n_cur = 0
     # via the full_outer + fill below (uniform empty-store contract)
     cur = (
-        _part(_psi_counts(key_cols))
+        _psi_counts(key_cols)
+        .part()
         .read(spark, store_dir)
         .groupBy(*key_cols, "bin")
         .agg(F.sum("n").alias("n_cur"))
@@ -1142,28 +1160,15 @@ def _psi_fold(
     )
 
 
-def _monitor_ingest(
-    batch: DataFrame,
-    batch_id: int,
-    binner,
-    counts_dir: str,
-    log_dir: str,
-    ref_counts: DataFrame,
-    key_cols: list[str],
-    psi_alert: float,
-) -> None:
-    """One monitor micro-batch: stage this batch's bin counts, evaluate
-    the cumulative store, stage one log row per key (or one total row
-    when unkeyed). Both writes land under batch_id=N — replay idempotent.
-    N is the raw id remapped above the counts store's compaction floor
-    (the log dir follows the same effective id so a fresh-checkpoint
-    restart can't overwrite a genuine old log row either)."""
-    spark = batch.sparkSession
-    batch_id = _stage_bin_counts(binner(batch), batch_id, counts_dir, key_cols)
-    rows = _psi_fold(spark, counts_dir, ref_counts, key_cols, 1e-9).collect()
-    if key_cols:
-        per: dict[tuple, list[float]] = {}
-        for r in rows:
+def _psi_evaluate(
+    counts_dir: str, ref_counts: DataFrame, key_cols: list[str], psi_alert: float
+) -> Callable[[SparkSession, int], DataFrame]:
+    """The drift monitors' log rows: one per key (one total row when
+    unkeyed) from the cumulative counts store vs ``ref_counts``."""
+
+    def evaluate(spark: SparkSession, eff_id: int) -> DataFrame:
+        per: dict[tuple, list[float]] = {} if key_cols else {(): [0.0, 0]}
+        for r in _psi_fold(spark, counts_dir, ref_counts, key_cols, 1e-9).collect():
             acc = per.setdefault(tuple(r[k] for k in key_cols), [0.0, 0])
             acc[0] += r["psi_term"]
             acc[1] += r["n_cur"]
@@ -1171,16 +1176,18 @@ def _monitor_ingest(
             (*k, float(psi), int(n), float(psi) >= psi_alert)
             for k, (psi, n) in sorted(per.items())
         ]
-        schema = (
-            ", ".join(f"{k} string" for k in key_cols)
-            + ", psi_total double, n_cur bigint, alert boolean"
-        )
-    else:
-        psi_total = float(sum(r["psi_term"] for r in rows))
-        n_cur = int(sum(r["n_cur"] for r in rows))
-        out = [(psi_total, n_cur, psi_total >= psi_alert)]
-        schema = "psi_total double, n_cur bigint, alert boolean"
-    _stage(local_frame(spark, out, schema), log_dir, batch_id)
+        return local_frame(spark, out, _psi_log(key_cols).schema)
+
+    return evaluate
+
+
+def _binner(lo: float, width: float, n_bins: int) -> Callable[[DataFrame], DataFrame]:
+    """v batch -> bin rows against frozen edges (lo, width, n_bins)."""
+    from ..plans.drift import bin_expr
+
+    return lambda batch: batch.select(
+        bin_expr(F.col("v"), F.lit(lo), F.lit(width), n_bins).alias("bin")
+    )
 
 
 def _keyed_binner(ref_edges: DataFrame, n_bins: int):
@@ -1215,26 +1222,11 @@ def run_stream_psi_counts(
     ``v``) with FROZEN reference bin edges — the deployed-model monitor
     contract of batch q151 (plans/drift.py): edges are fixed when the
     reference window is frozen, never re-derived from live data — and
-    append per-batch bin counts under ``batch_id=N`` (staged overwrite:
-    replays are idempotent, the run_stream_heavy_hitters idiom). The
-    store is O(batches x bins) rows of pure additive state;
-    ``psi_from_store`` answers the drift question from kilobytes."""
-
-    from ..plans.drift import bin_expr
-
-    def bin_counts(batch: DataFrame, batch_id: int) -> None:
-        _stage_bin_counts(
-            batch.select(
-                bin_expr(F.col("v"), F.lit(lo), F.lit(width), n_bins).alias("bin")
-            ),
-            batch_id,
-            store_dir,
-            [],
-        )
-
-    _run_foreach_batch(
-        values, bin_counts, checkpoint_dir, timeout_sec, "run_stream_psi_counts"
-    )
+    append per-batch bin counts under ``batch_id=N``. The store is
+    O(batches x bins) rows of pure additive state; ``psi_from_store``
+    answers the drift question from kilobytes."""
+    steps, binner = [(_psi_counts([]), store_dir)], _binner(lo, width, n_bins)
+    _run_stores(values, checkpoint_dir, timeout_sec, "run_stream_psi_counts", steps, binner)
 
 
 def psi_from_store(
@@ -1278,13 +1270,9 @@ def ks_from_digest_store(
     micro-batches) -> (nan, 0)."""
     import numpy as np
 
-    from ..operators.sketches import (
-        _SKETCH_SCHEMA,
-        ks_from_digests,
-        merge_partial_rows,
-    )
+    from ..operators.sketches import ks_from_digests, merge_partial_rows
 
-    store = _read_store_deltas(spark, store_dir, _SKETCH_SCHEMA)
+    store = _DIGESTS.part().read(spark, store_dir)
     if not os.path.exists(store_dir):
         return float("nan"), 0
     if key is not None:
@@ -1329,44 +1317,22 @@ def run_stream_drift_monitor(
     The psi_total here is a driver-side float sum over n_bins rounded
     terms — an operational signal, deliberately NOT an oracle-checked
     quantity (the per-bin terms, which ARE oracle-paired via q151, stay
-    in the store for exact auditing). Both the counts and the log are
-    staged per batch_id, so replays overwrite their own rows and the log
-    is an append-only audit trail of what the monitor saw after each
-    drop."""
-    from ..plans.drift import bin_expr
-
+    in the store for exact auditing). The log is an append-only audit
+    trail of what the monitor saw after each drop."""
     counts_dir = os.path.join(store_dir, "counts")
-    log_dir = os.path.join(store_dir, "log")
-
-    def binner(batch: DataFrame) -> DataFrame:
-        return batch.select(
-            bin_expr(F.col("v"), F.lit(lo), F.lit(width), n_bins).alias("bin")
-        )
-
-    def monitor(batch: DataFrame, batch_id: int) -> None:
-        _monitor_ingest(
-            batch, batch_id, binner, counts_dir, log_dir, ref_counts, [], psi_alert
-        )
-
-    _run_foreach_batch(
-        values, monitor, checkpoint_dir, timeout_sec, "run_stream_drift_monitor"
-    )
+    steps, binner = [(_psi_counts([]), counts_dir)], _binner(lo, width, n_bins)
+    log = (_psi_log([]), store_dir, _psi_evaluate(counts_dir, ref_counts, [], psi_alert))
+    _run_stores(values, checkpoint_dir, timeout_sec, "run_stream_drift_monitor", steps, binner, log)
 
 
 def drift_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
     """The monitor's append-only evaluation log, ordered by batch."""
-    return _monitor_log(
-        spark,
-        os.path.join(store_dir, "log"),
-        "psi_total double, n_cur bigint, alert boolean",
-    )
+    return _psi_log([]).fold(spark, store_dir)
 
 
-def _volume_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> int:
+def _volume_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
     """One micro-batch of the volume store (see run_stream_volume_counts):
-    stage per-(source, lang) additive partials under batch_id=N (remapped
-    above the compaction floor — see _effective_batch_id); returns N."""
-    eff_id = _effective_batch_id(store_dir, batch_id, _VOLUME)
+    per-(source, lang) additive partials."""
     _stage(
         batch.groupBy("source", "lang").agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -1376,7 +1342,19 @@ def _volume_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> int:
         store_dir,
         eff_id,
     )
-    return eff_id
+
+
+_VOLUME = _Store(
+    (
+        _summed(
+            None,
+            "source string, lang string, n_docs bigint, n_tokens bigint, n_chars bigint",
+            "source",
+            "lang",
+        ),
+    ),
+    _volume_step,
+)
 
 
 def run_stream_volume_counts(
@@ -1389,8 +1367,7 @@ def run_stream_volume_counts(
     report card (plans/curation.py) that the dup-flow store doesn't carry.
     ``docs`` is a streaming frame of (source, lang, n_chars, n_toks); each
     micro-batch appends one (source, lang, n_docs, n_tokens, n_chars) row
-    group under ``batch_id=N`` (staged overwrite — replays idempotent, the
-    run_stream_heavy_hitters idiom). All five measures are additive, so
+    group under ``batch_id=N``. All five measures are additive, so
     the fold is a plain sum; lang is kept as a key (NOT count-distincted
     here) because distinct-language counts are the one non-additive
     report-card column — the store holds (source, lang) cells and
@@ -1398,18 +1375,13 @@ def run_stream_volume_counts(
 
     Scale: per batch one narrow map + one tiny groupBy; store growth is
     O(batches x sources x langs) rows of pure additive state."""
-
-    def partials(batch: DataFrame, batch_id: int) -> None:
-        _volume_ingest(batch, batch_id, store_dir)
-
-    _run_foreach_batch(
-        docs, partials, checkpoint_dir, timeout_sec, "run_stream_volume_counts"
-    )
+    steps = [(_VOLUME, store_dir)]
+    _run_stores(docs, checkpoint_dir, timeout_sec, "run_stream_volume_counts", steps)
 
 
-_VOLUME_MONITOR_LOG_SCHEMA = (
-    "source string, n_docs bigint, share double, quiet boolean, "
-    "quiet_streak int, alert boolean"
+_VOLUME_LOG = _log(
+    "log",
+    "source string, n_docs bigint, share double, quiet boolean, quiet_streak int, alert boolean",
 )
 
 
@@ -1441,33 +1413,16 @@ def run_stream_volume_monitor(
     the batch's own just-staged partial rows (O(sources x langs), never
     the corpus), one read of the log's latest row per source (O(batches x
     sources) additive-log rows until compaction of counts; the log itself
-    is the monitor's state, the q165 EWMA-carry idiom). Both writes stage
-    under the same effective batch id (compaction-floor remapped, see
-    _effective_batch_id) — replay idempotent: a replayed batch overwrites
-    its own counts delta AND its own log rows, and its streak was derived
-    from strictly earlier log rows only."""
+    is the monitor's state, the q165 EWMA-carry idiom). A replayed batch's
+    streak is derived from strictly earlier log rows only."""
+    from ..functions import text as X
+
     counts_dir = os.path.join(store_dir, "counts")
-    log_dir = os.path.join(store_dir, "log")
 
-    def monitor(batch: DataFrame, batch_id: int) -> None:
-        from ..functions import text as X
-
-        spark = batch.sparkSession
-        # raw documents schema in (the run_stream_ingest_suite contract);
-        # token counts derived once per batch, same as the suite
-        eff_id = _volume_ingest(
-            batch.select(
-                "source",
-                "lang",
-                "n_chars",
-                X.token_count(F.col("text")).cast("bigint").alias("n_toks"),
-            ),
-            batch_id,
-            counts_dir,
-        )
+    def evaluate(spark: SparkSession, eff_id: int) -> DataFrame:
         # this batch's per-source totals from its own just-staged partials
         own = (
-            _part(_VOLUME)
+            _VOLUME.part()
             .read(spark, counts_dir)
             .where(F.col("batch_id") == eff_id)
             .groupBy("source")
@@ -1477,7 +1432,7 @@ def run_stream_volume_monitor(
         total = own.agg(F.sum("n_docs").alias("__total"))
         # latest streak per source from strictly earlier log rows
         prev = (
-            _read_store_deltas(spark, log_dir, _VOLUME_MONITOR_LOG_SCHEMA)
+            _VOLUME_LOG.read(spark, store_dir)
             .where(F.col("batch_id") < eff_id)
             .groupBy("source")
             .agg(F.max_by("quiet_streak", "batch_id").alias("prev_streak"))
@@ -1490,7 +1445,7 @@ def run_stream_volume_monitor(
         streak = F.when(
             F.col("quiet"), F.coalesce(F.col("prev_streak"), F.lit(0)) + F.lit(1)
         ).otherwise(F.lit(0))
-        out = (
+        return (
             known.join(own, "source", "left")
             .crossJoin(F.broadcast(total))
             .join(prev, "source", "left")
@@ -1503,23 +1458,23 @@ def run_stream_volume_monitor(
             .withColumn("quiet", quiet)
             .withColumn("quiet_streak", streak.cast("int"))
             .withColumn("alert", F.col("quiet_streak") >= F.lit(k))
-            .select(
-                "source", "n_docs", "share", "quiet", "quiet_streak", "alert"
-            )
+            .select("source", "n_docs", "share", "quiet", "quiet_streak", "alert")
         )
-        _stage(out, log_dir, eff_id)
 
-    _run_foreach_batch(
-        docs, monitor, checkpoint_dir, timeout_sec, "run_stream_volume_monitor"
-    )
+    def enrich(batch: DataFrame) -> DataFrame:
+        # raw documents schema in (the run_stream_ingest_suite contract);
+        # token counts derived once per batch, same as the suite
+        n_toks = X.token_count(F.col("text")).cast("bigint").alias("n_toks")
+        return batch.select("source", "lang", "n_chars", n_toks)
+
+    steps, log = [(_VOLUME, counts_dir)], (_VOLUME_LOG, store_dir, evaluate)
+    _run_stores(docs, checkpoint_dir, timeout_sec, "run_stream_volume_monitor", steps, enrich, log)
 
 
 def volume_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
     """The volume-quiet monitor's append-only evaluation log, ordered by
     (batch, source)."""
-    return _monitor_log(
-        spark, os.path.join(store_dir, "log"), _VOLUME_MONITOR_LOG_SCHEMA
-    )
+    return _VOLUME_LOG.fold(spark, store_dir)
 
 
 def report_card_from_store(
@@ -1538,13 +1493,13 @@ def report_card_from_store(
     whoever arrives first, each member of a multi-copy group is counted
     exactly once for its own source — so the fold equals batch q157 under
     any arrival order, not just id-ordered drops (pytest pins both)."""
-    agg = _part(_VOLUME).read(spark, vol_store_dir).groupBy("source").agg(
+    agg = _VOLUME.part().read(spark, vol_store_dir).groupBy("source").agg(
         F.sum("n_docs").cast("bigint").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("n_tokens"),
         F.sum("n_chars").cast("bigint").alias("sum_chars"),
         F.countDistinct("lang").alias("n_langs"),
     )
-    edges = _part(_DUP_FLOW, "edges").read(spark, flow_store_dir)
+    edges = _DUP_FLOW.part("edges").read(spark, flow_store_dir)
     dup_side = edges.groupBy(F.col("dup_source").alias("source")).agg(
         F.sum("n_docs").cast("bigint").alias("n_dup")
     )
@@ -1595,7 +1550,7 @@ def dedup_adjusted_budget_from_store(
     if budget_tokens is None:
         from ..plans.curation import _BUDGET_TOKENS as budget_tokens
     raw = (
-        _part(_VOLUME)
+        _VOLUME.part()
         .read(spark, vol_store_dir)
         .groupBy("source")
         .agg(
@@ -1604,7 +1559,7 @@ def dedup_adjusted_budget_from_store(
         )
     )
     eff = (
-        _part(_KEPT)
+        _KEPT.part()
         .read(spark, kept_store_dir)
         .groupBy("source")
         .agg(F.sum("kept_tokens").cast("bigint").alias("eff_tokens"))
@@ -1638,10 +1593,6 @@ def run_stream_ingest_suite(
     dedup_adjusted_budget_from_store read. Returns (flow_dir, volume_dir,
     kept_dir).
 
-    All ingests stage by batch_id, so the suite inherits their replay
-    idempotence; a crash between the writes is healed by the replay
-    overwriting every directory for that batch_id.
-
     ``near_dup=True`` widens the same single pass to the
     near-dup stores: the cached batch additionally drives the LSH ingest
     (``root_dir/lsh``) and the cluster-label store (``root_dir/labels``)
@@ -1657,87 +1608,72 @@ def run_stream_ingest_suite(
     (``root_dir/shingles``) — so curation_scorecard_from_stores can
     re-derive batch q232's exact table after every drop without ever
     re-reading the corpus. Returns those dirs appended."""
-
-    flow_dir = os.path.join(root_dir, "flow")
-    vol_dir = os.path.join(root_dir, "volume")
-    kept_dir = os.path.join(root_dir, "kept")
-    lsh_dir = os.path.join(root_dir, "lsh")
-    labels_dir = os.path.join(root_dir, "labels")
-    fert_dir = os.path.join(root_dir, "fert")
-    health_dir = os.path.join(root_dir, "health")
-    sh_dir = os.path.join(root_dir, "shingles")
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        # LSH shingles / scorecard tokenizer need the text
-        enriched = _enriched_docs_batch(
-            batch, with_text=near_dup or scorecard
-        ).cache()
-        try:
-            _dup_flow_ingest(enriched, batch_id, flow_dir, kept_dir=kept_dir)
-            _volume_ingest(enriched, batch_id, vol_dir)
-            if near_dup:
-                _lsh_dedup_ingest(enriched, batch_id, lsh_dir, labels_dir=labels_dir)
-            if scorecard:
-                _scorecard_ingest(enriched, batch_id, fert_dir, health_dir, sh_dir)
-        finally:
-            enriched.unpersist()
-
-    _run_foreach_batch(
-        docs, ingest, checkpoint_dir, timeout_sec, "run_stream_ingest_suite"
+    _run_suite(
+        docs, root_dir, checkpoint_dir, timeout_sec, "run_stream_ingest_suite", near_dup, scorecard
     )
-    out = [flow_dir, vol_dir, kept_dir]
-    if near_dup:
-        out += [lsh_dir, labels_dir]
-    if scorecard:
-        out += [fert_dir, health_dir, sh_dir]
-    return tuple(out)
+    names = ["flow", "volume", "kept"]
+    names += ["lsh", "labels"] if near_dup else []
+    names += ["fert", "health", "shingles"] if scorecard else []
+    return tuple(os.path.join(root_dir, name) for name in names)
 
 
-def _enriched_docs_batch(batch: DataFrame, with_text: bool) -> DataFrame:
-    """The one-pass ingest projection shared by run_stream_ingest_suite
-    and run_stream_scorecard_monitor: fingerprint + token count computed
-    once per micro-batch for every downstream store."""
-    from ..functions import text as X
-
-    return batch.select(
-        "doc_id",
-        *(["text"] if with_text else []),
-        "source",
-        "lang",
-        "n_chars",
-        X.fingerprint(F.col("text")).alias("fp"),
-        X.token_count(F.col("text")).cast("bigint").alias("n_toks"),
-    )
-
-
-def _scorecard_ingest(
-    batch: DataFrame, batch_id: int, fert_dir: str, health_dir: str, sh_dir: str
+def _run_suite(
+    docs: DataFrame,
+    root_dir: str,
+    checkpoint_dir: str,
+    timeout_sec: int,
+    label: str,
+    near_dup: bool,
+    scorecard: bool,
+    log: tuple[_Part, str, Callable[[SparkSession, int], DataFrame]] | None = None,
 ) -> None:
-    """One micro-batch of the scorecard stores (the q232 signals flow +
-    volume don't already carry):
-
-    - fert: per-source additive (n_docs, normalized chars, whitespace
-      words) over non-null text — q210's fertility numerator/denominator.
-    - health: decode-health counts via the SHARED _decode_health_ingest
-      (the real header decoders, q220's contract) over the batch's media.
-    - shingles: per (shingle-hash, source) occurrence counts — q225's
-      posting-list masses, additive across batches. The key is xxhash64
-      of the 3-shingle, not the string: 8 bytes/row instead of the
-      shingle text. A 64-bit collision merges two shingles' df (novelty
-      reads marginally LOW, never high); at test corpus sizes collision
-      probability is ~1e-8, and at 10^12 corpus shingles the expected
-      handful of collisions moves a share ratio in the 12th decimal —
-      the honest trade for a 3-5x smaller store.
-
-    All three stage additive rows under batch_id=N (remapped above each
-    store's own compaction floor), so replays overwrite their own deltas
-    and the folds commute with arrival order."""
+    """The document suite's stores under ``root_dir``, fed by one cached
+    projection of each batch."""
     from ..functions import text as X
-    from ..operators.multimodal import attach_media_mix
 
-    nn = batch.filter(F.col("text").isNotNull())
+    path = lambda name: os.path.join(root_dir, name)  # noqa: E731
+    flow = _DUP_FLOW._replace(step=partial(_dup_flow_step, kept_dir=path("kept")))
+    steps = [(flow, path("flow")), (_VOLUME, path("volume"))]
+    if near_dup:
+        lsh = _LSH._replace(step=partial(_lsh_step, labels_dir=path("labels")))
+        steps.append((lsh, path("lsh")))
+    if scorecard:
+        steps += [
+            (_FERT, path("fert")),
+            (_MEDIA_HEALTH, path("health")),
+            (_SHINGLES, path("shingles")),
+        ]
+
+    def enrich(batch: DataFrame) -> DataFrame:
+        # fingerprint + token count computed once per micro-batch for every
+        # store; LSH shingles / the scorecard tokenizer need the text
+        return batch.select(
+            "doc_id",
+            *(["text"] if near_dup or scorecard else []),
+            "source",
+            "lang",
+            "n_chars",
+            X.fingerprint(F.col("text")).alias("fp"),
+            X.token_count(F.col("text")).cast("bigint").alias("n_toks"),
+        )
+
+    _run_stores(docs, checkpoint_dir, timeout_sec, label, steps, enrich, log)
+
+
+# The scorecard stores (the q232 signals flow + volume don't already
+# carry). All three stage additive rows, so the folds commute with arrival
+# order.
+
+
+def _fert_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
+    """Per-source additive (n_docs, normalized chars, whitespace words) over
+    non-null text — q210's fertility numerator/denominator."""
+    from ..functions import text as X
+
     _stage(
-        nn.groupBy("source").agg(
+        batch.filter(F.col("text").isNotNull())
+        .groupBy("source")
+        .agg(
             F.count(F.lit(1)).cast("bigint").alias("n_docs"),
             F.sum(F.length(X.normalize(F.col("text"))).cast("bigint"))
             .cast("bigint")
@@ -1747,22 +1683,42 @@ def _scorecard_ingest(
             # instead of a second tokenize pass
             F.sum("n_toks").cast("bigint").alias("n_words"),
         ),
-        fert_dir,
-        _effective_batch_id(fert_dir, batch_id, _FERT),
+        store_dir,
+        eff_id,
     )
-    _decode_health_ingest(
-        attach_media_mix(batch.select("doc_id", "source")), batch_id, health_dir
-    )
+
+
+def _shingles_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
+    """Per (shingle-hash, source) occurrence counts over non-null text —
+    q225's posting-list masses, additive across batches. The key is
+    xxhash64 of the 3-shingle, not the string: 8 bytes/row instead of the
+    shingle text. A 64-bit collision merges two shingles' df (novelty reads
+    marginally LOW, never high); at test corpus sizes collision probability
+    is ~1e-8, and at 10^12 corpus shingles the expected handful of
+    collisions moves a share ratio in the 12th decimal — the honest trade
+    for a 3-5x smaller store."""
+    from ..functions import text as X
+
     _stage(
-        nn.select(
+        batch.filter(F.col("text").isNotNull())
+        .select(
             "source",
             F.explode_outer(X.shingles_of_tokens(X.tokens(F.col("text")), 3)).alias("s"),
         )
         .groupBy(F.xxhash64("s").alias("sh"), "source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
-        sh_dir,
-        _effective_batch_id(sh_dir, batch_id, _SHINGLES),
+        store_dir,
+        eff_id,
     )
+
+
+_FERT = _Store(
+    (_summed(None, "source string, n_docs bigint, norm_chars bigint, n_words bigint", "source"),),
+    _fert_step,
+)
+_SHINGLES = _Store(
+    (_summed(None, "sh bigint, source string, cnt bigint", "sh", "source"),), _shingles_step
+)
 
 
 def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFrame:
@@ -1780,14 +1736,14 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
     Tuple-exact equal to batch q232 after full ingest (pinned fwd +
     reversed arrival + mid-stream compaction in tests/test_streaming.py);
     novelty's only divergence channel is a 64-bit shingle-hash collision
-    (see _scorecard_ingest)."""
+    (see _shingles_step)."""
     from ..plans.curation import scorecard_columns
 
     rep = report_card_from_store(
         spark, os.path.join(root_dir, "volume"), os.path.join(root_dir, "flow")
     ).select("source", "n_docs", "n_tokens", "dup_rate")
     fert = (
-        _part(_FERT)
+        _FERT.part()
         .read(spark, os.path.join(root_dir, "fert"))
         .groupBy("source")
         .agg(
@@ -1796,7 +1752,7 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
             ).alias("chars_per_word")
         )
     )
-    health = _part(_HEALTH).read(spark, os.path.join(root_dir, "health"))
+    health = _HEALTH.part().read(spark, os.path.join(root_dir, "health"))
     med = health.groupBy("source").agg(
         (
             F.sum(F.when(F.col("status") != "ok", F.col("n_docs")).otherwise(0))
@@ -1804,7 +1760,7 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
             / F.sum("n_docs")
         ).alias("malformed_share")
     )
-    sh = _part(_SHINGLES).fold(spark, os.path.join(root_dir, "shingles"))
+    sh = _SHINGLES.part().fold(spark, os.path.join(root_dir, "shingles"))
     df_tab = sh.groupBy("sh").agg(F.sum("cnt").alias("df"))
     nov = (
         sh.join(df_tab, "sh")
@@ -1825,9 +1781,10 @@ def curation_scorecard_from_stores(spark: SparkSession, root_dir: str) -> DataFr
     return scorecard_columns(j)
 
 
-_SCORECARD_LOG_SCHEMA = (
-    "source string, n_flags int, recommendation string, degraded boolean"
+_SCORECARD_LOG = _log(
+    "log", "source string, n_flags int, recommendation string, degraded boolean"
 )
+
 
 def _rec_rank() -> F.Column:
     """renew < review < reduce as an ordinal (built lazily — Column
@@ -1859,62 +1816,44 @@ def run_stream_scorecard_monitor(
     aggregate dominating — O(distinct shingles), so a paging cadence at
     large corpus scale wants compact_shingle_store run on a maintenance
     schedule to keep the fold at one row per shingle) + an O(sources)
-    log row set. The log (never compacted) stages by raw batch id —
-    replay idempotent, the degraded flag computed against
-    strictly-earlier rows only."""
+    log row set. The log (never compacted) stages by raw batch id, the
+    degraded flag computed against strictly-earlier rows only."""
 
-    flow_dir = os.path.join(root_dir, "flow")
-    vol_dir = os.path.join(root_dir, "volume")
-    kept_dir = os.path.join(root_dir, "kept")
-    fert_dir = os.path.join(root_dir, "fert")
-    health_dir = os.path.join(root_dir, "health")
-    sh_dir = os.path.join(root_dir, "shingles")
-    log_dir = os.path.join(root_dir, "log")
-
-    def monitor(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        enriched = _enriched_docs_batch(batch, with_text=True).cache()
-        try:
-            _dup_flow_ingest(enriched, batch_id, flow_dir, kept_dir=kept_dir)
-            _volume_ingest(enriched, batch_id, vol_dir)
-            _scorecard_ingest(enriched, batch_id, fert_dir, health_dir, sh_dir)
-        finally:
-            enriched.unpersist()
+    def evaluate(spark: SparkSession, batch_id: int) -> DataFrame:
         sc = curation_scorecard_from_stores(spark, root_dir).select(
             "source", "n_flags", "recommendation", _rec_rank().alias("rk")
         )
         prev = (
-            _read_store_deltas(spark, log_dir, _SCORECARD_LOG_SCHEMA)
+            _SCORECARD_LOG.read(spark, root_dir)
             .where(F.col("batch_id") < batch_id)
             .groupBy("source")
             .agg(F.max_by("recommendation", "batch_id").alias("recommendation"))
             .select("source", _rec_rank().alias("prev_rk"))
         )
-        _stage(
-            sc.join(prev, "source", "left").select(
-                "source",
-                "n_flags",
-                "recommendation",
-                # first sighting of a source is a baseline, not a downgrade
-                (F.col("rk") > F.coalesce(F.col("prev_rk"), F.col("rk"))).alias(
-                    "degraded"
-                ),
-            ),
-            log_dir,
-            batch_id,
+        return sc.join(prev, "source", "left").select(
+            "source",
+            "n_flags",
+            "recommendation",
+            # first sighting of a source is a baseline, not a downgrade
+            (F.col("rk") > F.coalesce(F.col("prev_rk"), F.col("rk"))).alias("degraded"),
         )
 
-    _run_foreach_batch(
-        docs, monitor, checkpoint_dir, timeout_sec, "run_stream_scorecard_monitor"
+    _run_suite(
+        docs,
+        root_dir,
+        checkpoint_dir,
+        timeout_sec,
+        "run_stream_scorecard_monitor",
+        near_dup=False,
+        scorecard=True,
+        log=(_SCORECARD_LOG, root_dir, evaluate),
     )
 
 
 def scorecard_monitor_log(spark: SparkSession, root_dir: str) -> DataFrame:
     """The scorecard monitor's append-only evaluation log, ordered by
     (batch, source)."""
-    return _monitor_log(
-        spark, os.path.join(root_dir, "log"), _SCORECARD_LOG_SCHEMA
-    )
+    return _SCORECARD_LOG.fold(spark, root_dir)
 
 
 def run_stream_psi_counts_by_key(
@@ -1929,21 +1868,15 @@ def run_stream_psi_counts_by_key(
     (plans/drift.py): bin a (key, v) stream against PER-KEY frozen
     reference edges (``ref_edges``: key, lo, width — computed once when
     the per-segment reference windows froze) and append per-batch
-    (key, bin) counts under batch_id=N (staged overwrite, replay
-    idempotent). Rows whose key has no reference edges are dropped — the
+    (key, bin) counts under batch_id=N. Rows whose key has no reference
+    edges are dropped — the
     same contract as q160's inner edges join (a segment never seen at
     training time has no frozen bins to count into).
 
     Scale: the edges side is O(segments) rows (broadcast per batch); the
     store grows O(batches x segments x bins) of additive state."""
-    binner = _keyed_binner(ref_edges, n_bins)
-
-    def bin_counts(batch: DataFrame, batch_id: int) -> None:
-        _stage_bin_counts(binner(batch), batch_id, store_dir, ["key"])
-
-    _run_foreach_batch(
-        values, bin_counts, checkpoint_dir, timeout_sec, "run_stream_psi_counts_by_key"
-    )
+    steps, binner = [(_psi_counts(["key"]), store_dir)], _keyed_binner(ref_edges, n_bins)
+    _run_stores(values, checkpoint_dir, timeout_sec, "run_stream_psi_counts_by_key", steps, binner)
 
 
 def psi_by_key_from_store(
@@ -1982,64 +1915,52 @@ def run_stream_drift_monitor_by_key(
 
     Like the unkeyed monitor, psi_total is a driver-side float sum of the
     per-(key, bin) rounded terms — an operational signal; the per-bin
-    terms (oracle-paired via q160) stay in the store for exact auditing.
-    Counts and log are both staged per batch_id (replay idempotent)."""
+    terms (oracle-paired via q160) stay in the store for exact auditing."""
     counts_dir = os.path.join(store_dir, "counts")
-    log_dir = os.path.join(store_dir, "log")
-    binner = _keyed_binner(ref_edges, n_bins)
-
-    def monitor(batch: DataFrame, batch_id: int) -> None:
-        _monitor_ingest(
-            batch, batch_id, binner, counts_dir, log_dir, ref_counts, ["key"], psi_alert
-        )
-
-    _run_foreach_batch(
-        values, monitor, checkpoint_dir, timeout_sec, "run_stream_drift_monitor_by_key"
-    )
+    steps, binner = [(_psi_counts(["key"]), counts_dir)], _keyed_binner(ref_edges, n_bins)
+    log = (_psi_log(["key"]), store_dir, _psi_evaluate(counts_dir, ref_counts, ["key"], psi_alert))
+    label = "run_stream_drift_monitor_by_key"
+    _run_stores(values, checkpoint_dir, timeout_sec, label, steps, binner, log)
 
 
 def drift_monitor_log_by_key(spark: SparkSession, store_dir: str) -> DataFrame:
     """The keyed monitor's append-only evaluation log, ordered by
     (batch, key)."""
-    return _monitor_log(
-        spark,
-        os.path.join(store_dir, "log"),
-        "key string, psi_total double, n_cur bigint, alert boolean",
-    )
+    return _psi_log(["key"]).fold(spark, store_dir)
 
 
 # ---------------------------------------------------------------------------
-# Incremental MinHash-LSH near-dup detection at ingest: the streaming twin of batch q36 (plans/dedup.py lsh_jaccard_pairs). The
-# q87/q146 fingerprint stores catch EXACT duplicates at ingest; a 100-TB
+# Incremental MinHash-LSH near-dup detection at ingest: the streaming twin
+# of batch q36 (plans/dedup.py lsh_jaccard_pairs). The q87/q146
+# fingerprint stores catch EXACT duplicates at ingest; a 100-TB
 # pipeline also near-dups at ingest — each arriving crawl drop's docs must
 # be checked against every previously ingested doc without rescanning the
 # corpus. Band buckets make that an equi-join against stored band keys.
 # ---------------------------------------------------------------------------
 
-def _lsh_dedup_ingest(
-    batch: DataFrame, batch_id: int, store_dir: str, labels_dir: str | None = None
+def _lsh_step(
+    batch: DataFrame, eff_id: int, store_dir: str, raw_id: int, labels_dir: str | None = None
 ) -> None:
     """One micro-batch of the LSH near-dup store: shingle + band the batch,
     find candidates within the batch AND against the stored band keys of
     batches < this one, exact-Jaccard-verify candidates only, stage the
-    batch's new pairs and its state rows under batch_id=N (idempotent on
-    replay — both writes are per-batch overwrites, and the state lookup
-    filters batch_id < N so a replay never joins its own earlier write).
+    batch's new pairs and its state rows (the state lookup filters
+    batch_id < N so a replay never joins its own earlier write).
 
-    Compaction safety: after a compaction every batch id is remapped
-    above the floor (see _effective_batch_id), so a replay of a folded id
-    (crash between write and checkpoint commit, or a fresh-checkpoint
-    restart at 0) lands above the compacted delta, its state filter still
-    sees the compacted history, and already-ingested doc_ids are dropped
-    by the anti-join — a no-op instead of a double-ingest. Across
-    compactions the floor only grows and the maintenance-window contract
-    folds every existing delta first, so no live partition ever sits
-    above a newer floor's remap range."""
+    A replay of a folded id lands above the compacted delta, its state
+    filter still sees the compacted history, and already-ingested doc_ids
+    are dropped by the anti-join — a no-op instead of a double-ingest.
+    Across compactions the floor only grows and the maintenance-window
+    contract folds every existing delta first, so no live partition ever
+    sits above a newer floor's remap range.
+
+    ``labels_dir`` (the ingest-suite path): hand the completed pairs to the
+    near-dup label store there — the batch must then carry (source,
+    n_toks)."""
     from ..functions import text as X
     from ..plans.dedup import _JACCARD_T, band_key_structs
 
     spark = batch.sparkSession
-    eff_id = _effective_batch_id(store_dir, batch_id, _LSH)
     # null-shingle docs (null text) can never verify; drop like batch q36
     cur = (
         batch.select("doc_id", X.shingles(F.col("text"), 3).alias("sh"))
@@ -2047,7 +1968,7 @@ def _lsh_dedup_ingest(
         .withColumn("bands", F.array(*band_key_structs(F.col("sh"))))
     )
     state = (
-        _part(_LSH, "state")
+        _LSH.part("state")
         .read(spark, store_dir)
         .where(F.col("batch_id") < eff_id)
         .drop("batch_id")
@@ -2101,20 +2022,30 @@ def _lsh_dedup_ingest(
         .select("doc_a", "doc_b", (common.cast("double") / union).alias("jac"))
         .filter(F.col("jac") >= _JACCARD_T)
     )
-    pairs_delta = _stage(pairs, os.path.join(store_dir, "pairs"), eff_id)
-    _stage(cur.select("doc_id", "sh", "bands"), os.path.join(store_dir, "state"), eff_id)
+    pairs_part = _LSH.part("pairs")
+    pairs_delta = _stage(pairs, pairs_part.path(store_dir), eff_id)
+    _stage(cur.select("doc_id", "sh", "bands"), _LSH.part("state").path(store_dir), eff_id)
     if labels_dir is not None:
-        # near-dup cluster-label maintenance: the batch must
-        # carry (source, n_toks). Pairs are read BACK from the staged
-        # delta — already materialized, so the candidate join never
-        # recomputes, and a folded-id replay (empty cur ⇒ empty delta)
-        # makes the label update a no-op by construction.
-        _near_dup_label_ingest(
-            batch.select("doc_id", "source", "n_toks"),
-            batch_id,
-            labels_dir,
-            spark.read.schema(_part(_LSH, "pairs").schema).parquet(pairs_delta),
-        )
+        # pairs are read BACK from the staged delta — already
+        # materialized, so the candidate join never recomputes, and a
+        # folded-id replay (empty cur ⇒ empty delta) makes the label
+        # update a no-op by construction
+        pairs_back = spark.read.schema(pairs_part.schema).parquet(pairs_delta)
+        labels = _ND_LABELS._replace(step=partial(_near_dup_label_step, pairs=pairs_back))
+        _ingest(labels, batch.select("doc_id", "source", "n_toks"), raw_id, labels_dir)
+
+
+# state: one row per ingested doc; pairs: each unordered pair lives in the
+# one delta of the batch that completed it
+_LSH = _Store(
+    (
+        _rewritten(
+            "state", "doc_id bigint, sh array<string>, bands array<struct<band:int,key:bigint>>"
+        ),
+        _rewritten("pairs", "doc_a bigint, doc_b bigint, jac double"),
+    ),
+    _lsh_step,
+)
 
 
 def run_stream_lsh_dedup(
@@ -2150,20 +2081,14 @@ def run_stream_lsh_dedup(
     a batch is one crawl drop, and the irreducible output of a planted
     everyone-identical corpus (quadratic pairs) dominates the candidate
     work anyway."""
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        _lsh_dedup_ingest(batch, batch_id, store_dir)
-
-    _run_foreach_batch(
-        docs, ingest, checkpoint_dir, timeout_sec, "run_stream_lsh_dedup"
-    )
+    _run_stores(docs, checkpoint_dir, timeout_sec, "run_stream_lsh_dedup", [(_LSH, store_dir)])
 
 
 def near_dup_pairs_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Batch q36's (doc_a, doc_b, jac) folded from the LSH ingest store —
     reads only the pair deltas (linear in near-dups), never the corpus."""
     return (
-        _part(_LSH, "pairs")
+        _LSH.part("pairs")
         .read(spark, store_dir)
         .select("doc_a", "doc_b", "jac")
         .orderBy("doc_a", "doc_b")
@@ -2197,17 +2122,16 @@ def near_dup_pairs_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
 # corpus-wide fold per batch.
 # ---------------------------------------------------------------------------
 
-def _near_dup_label_ingest(
-    meta: DataFrame, batch_id: int, labels_dir: str, pairs: DataFrame
+def _near_dup_label_step(
+    meta: DataFrame, eff_id: int, labels_dir: str, _: int, pairs: DataFrame
 ) -> None:
     """One micro-batch of the near-dup label store. ``meta`` is the
     batch's (doc_id, source, n_toks); ``pairs`` the near-dup pairs this
-    batch COMPLETED (from the LSH ingest's staged delta — both docs in
-    this batch, or one here and one stored)."""
+    batch COMPLETED (the LSH step's staged delta — both docs in this
+    batch, or one here and one stored)."""
     spark = meta.sparkSession
-    eff_id = _effective_batch_id(labels_dir, batch_id, _ND_LABELS)
     prior_rows = (
-        _part(_ND_LABELS)
+        _ND_LABELS.part()
         .read(spark, labels_dir)
         .where(F.col("batch_id") < eff_id)
         .drop("batch_id")
@@ -2273,41 +2197,22 @@ def _near_dup_label_ingest(
     _stage(new_docs.unionByName(changed), labels_dir, eff_id)
 
 
-def run_stream_neardup_ingest_suite(
-    docs: DataFrame,
-    root_dir: str,
-    checkpoint_dir: str,
-    timeout_sec: int = 120,
-) -> tuple[str, str]:
-    """ONE pass over the raw document stream feeding near-dup detection
-    AND cluster-keeper accounting: each crawl drop is shingled once by
-    the LSH ingest (state + completed pairs under ``root_dir/lsh``), and
-    the same batch's pairs drive the cluster-label store under
-    ``root_dir/labels`` — so ``dedup_adjusted_budget_from_labels_store``
-    re-plans the q226 budget (NEAR-dup-netted, not just exact-fp) after
-    every drop without re-reading the corpus. ``docs`` is the raw
-    documents schema. Returns (lsh_dir, labels_dir)."""
-    from ..functions import text as X
-
-    lsh_dir = os.path.join(root_dir, "lsh")
-    labels_dir = os.path.join(root_dir, "labels")
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        enriched = batch.select(
-            "doc_id",
-            "text",
-            "source",
-            X.token_count(F.col("text")).cast("bigint").alias("n_toks"),
-        ).cache()
-        try:
-            _lsh_dedup_ingest(enriched, batch_id, lsh_dir, labels_dir=labels_dir)
-        finally:
-            enriched.unpersist()
-
-    _run_foreach_batch(
-        docs, ingest, checkpoint_dir, timeout_sec, "run_stream_neardup_ingest_suite"
+# one row per doc at its current (min) label: an idempotent min/max fold,
+# exact under any schedule (no double-count caveat); the step gets its
+# pairs from the LSH step's hand-off
+_ND_LABELS = _Store(
+    (
+        _Part(
+            None,
+            "doc_id bigint, source string, nt bigint, label bigint",
+            lambda df: df.groupBy("doc_id").agg(
+                F.max("source").alias("source"),
+                F.max("nt").alias("nt"),
+                F.min("label").alias("label"),
+            ),
+        ),
     )
-    return lsh_dir, labels_dir
+)
 
 
 def dedup_adjusted_budget_from_labels_store(
@@ -2325,16 +2230,7 @@ def dedup_adjusted_budget_from_labels_store(
         from ..plans.curation import _BUDGET_TOKENS as budget_tokens
     from ..plans.curation import budget_plan_columns
 
-    cur = (
-        _part(_ND_LABELS)
-        .read(spark, labels_dir)
-        .groupBy("doc_id")
-        .agg(
-            F.min("label").alias("label"),
-            F.max("source").alias("source"),
-            F.max("nt").alias("nt"),
-        )
-    )
+    cur = _ND_LABELS.part().fold(spark, labels_dir)
     raw = cur.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("nt").cast("bigint").alias("raw_tokens"),
@@ -2362,12 +2258,15 @@ def cluster_sizes_from_labels_store(
     from ..plans.dedup import cluster_size_distribution
 
     cur = (
-        _part(_ND_LABELS)
+        _ND_LABELS.part()
         .read(spark, labels_dir)
         .groupBy("doc_id")
         .agg(F.min("label").alias("label"))
     )
     return cluster_size_distribution(cur, label_col="label")
+
+
+_KS_LOG = _log("log", "ks_stat double, n_cur bigint, alert boolean")
 
 
 def run_stream_ks_monitor(
@@ -2396,42 +2295,24 @@ def run_stream_ks_monitor(
     AND when the monitored population has zero accumulated mass while a
     reference exists (n_cur = 0 -> ks is NaN, and ``NaN >= x`` is False —
     the same silent-never-alert trap the PSI store's zero-total guard
-    closes; total loss of an expected population is the loudest drift).
-    Both writes stage per batch_id — replay idempotent."""
-    from ..operators.sketches import tdigest_partials
-
+    closes; total loss of an expected population is the loudest drift)."""
     partials_dir = os.path.join(store_dir, "partials")
-    log_dir = os.path.join(store_dir, "log")
 
-    def monitor(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        _stage(tdigest_partials(batch, key_col, value_col, delta), partials_dir, batch_id)
+    def evaluate(spark: SparkSession, eff_id: int) -> DataFrame:
         ks, n_cur = ks_from_digest_store(
             spark, partials_dir, ref_means, ref_weights, key=key, delta=delta
         )
         alert = bool(ks >= ks_alert) or n_cur == 0
-        _stage(
-            local_frame(
-                spark,
-                [(float(ks), int(n_cur), alert)],
-                "ks_stat double, n_cur bigint, alert boolean",
-            ),
-            log_dir,
-            batch_id,
-        )
+        return local_frame(spark, [(float(ks), int(n_cur), alert)], _KS_LOG.schema)
 
-    _run_foreach_batch(
-        events, monitor, checkpoint_dir, timeout_sec, "run_stream_ks_monitor"
-    )
+    steps = [(_digests(key_col, value_col, delta), partials_dir)]
+    log = (_KS_LOG, store_dir, evaluate)
+    _run_stores(events, checkpoint_dir, timeout_sec, "run_stream_ks_monitor", steps, log=log)
 
 
 def ks_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
     """The KS monitor's append-only evaluation log, ordered by batch."""
-    return _monitor_log(
-        spark,
-        os.path.join(store_dir, "log"),
-        "ks_stat double, n_cur bigint, alert boolean",
-    )
+    return _KS_LOG.fold(spark, store_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -2451,9 +2332,8 @@ def run_stream_cdc_ops(
     """foreachBatch latest-wins op store: each micro-batch of CDC op rows
     (``plans.cdc.CDC_OPS_SCHEMA``: k, seq unique per key, op I/U/D,
     payload) is pre-collapsed to its own latest-op-per-key and staged
-    under ``batch_id=N`` — a replayed batch overwrites its own delta
-    (at-least-once in, exactly-once effect, the run_stream_heavy_hitters
-    idiom). The fold re-merges deltas by max seq, so out-of-order arrival
+    under ``batch_id=N``. The fold re-merges deltas by max seq, so
+    out-of-order arrival
     ACROSS batches is also correct (latest-wins is associative under the
     unique-seq contract) — strictly stronger than the arrival-order
     contract the dup-flow store needs.
@@ -2463,15 +2343,14 @@ def run_stream_cdc_ops(
     existing store — unlike a swap-per-batch upsert, ingest cost never
     grows with state size; the store is bounded by distinct touched keys
     after compact_cdc_store."""
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        _stage(latest_cdc_ops(batch), store_dir, _effective_batch_id(store_dir, batch_id, _CDC))
-
-    _run_foreach_batch(ops, ingest, checkpoint_dir, timeout_sec, "run_stream_cdc_ops")
+    _run_stores(ops, checkpoint_dir, timeout_sec, "run_stream_cdc_ops", [(_CDC, store_dir)])
 
 
-def _cdc_store_latest(spark: SparkSession, store_dir: str) -> DataFrame:
-    return _part(_CDC).fold(spark, store_dir)
+# latest op per key: associative under the unique-seq contract
+_CDC = _Store(
+    (_Part(None, CDC_OPS_SCHEMA, latest_cdc_ops),),
+    lambda batch, eff_id, store_dir, _: _stage(latest_cdc_ops(batch), store_dir, eff_id),
+)
 
 
 def cdc_snapshot_from_store(
@@ -2485,14 +2364,13 @@ def cdc_snapshot_from_store(
     from ..plans.cdc import apply_cdc_ops, cdc_status_fingerprint
 
     return cdc_status_fingerprint(
-        apply_cdc_ops(base, _cdc_store_latest(spark, store_dir))
+        apply_cdc_ops(base, _CDC.part().fold(spark, store_dir))
     )
 
 
 # ---------------------------------------------------------------------------
 # Last-touch attribution at ingest: the streaming twin of batch q179
-# (plans/customer.py). Two per-batch-staged stores (the dup-flow idiom —
-# batch_id directories make replays idempotent):
+# (plans/customer.py). Two staged parts:
 #
 #   clicks/batch_id=N/   (user_id, click_key) — batch N's per-user BEST
 #                        packed click key (attribution_click_key: ts, id,
@@ -2514,7 +2392,7 @@ def cdc_snapshot_from_store(
 # ---------------------------------------------------------------------------
 
 
-def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None:
+def _attribution_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
     from ..plans.customer import (
         ATTR_WINDOW_US,
         attribution_campaign_expr,
@@ -2522,9 +2400,6 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
     )
 
     spark = batch.sparkSession
-    # a replay of a folded raw id must never overwrite the compacted
-    # clicks/revenue (see _effective_batch_id)
-    eff_id = _effective_batch_id(store_dir, batch_id, _ATTRIBUTION)
     ts_us = epoch_us(F.col("ts"))
     ck = F.when(
         F.col("event_type") == "click",
@@ -2552,7 +2427,7 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
             wb.where(F.col("click_key").isNotNull())
             .groupBy("user_id")
             .agg(F.max("click_key").alias("click_key")),
-            os.path.join(store_dir, "clicks"),
+            _ATTRIBUTION.part("clicks").path(store_dir),
             eff_id,
         )
 
@@ -2562,7 +2437,7 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
         # prior clicks from batches before this one (an empty prior — the
         # first-ever batch — left-joins to null store_best)
         prior = (
-            _part(_ATTRIBUTION, "clicks")
+            _ATTRIBUTION.part("clicks")
             .read(spark, store_dir)
             .where(F.col("batch_id") < eff_id)
             .select("user_id", F.col("click_key").alias("store_key"))
@@ -2593,9 +2468,26 @@ def _attribution_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> None
                 ),
             )
         )
-        _stage(out, os.path.join(store_dir, "revenue"), eff_id)
+        _stage(out, _ATTRIBUTION.part("revenue").path(store_dir), eff_id)
     finally:
         wb.unpersist()
+
+
+# clicks keep the per-user MAX key, which suffices under the time-ordered
+# contract: keys grow with ts, so a user's newest click is the only one any
+# FUTURE purchase's [lo, hi) range can pick — if the newest is older than
+# lo, every discarded older click was too
+_ATTRIBUTION = _Store(
+    (
+        _summed("revenue", "campaign bigint, n_purchases bigint, rev_units bigint", "campaign"),
+        _Part(
+            "clicks",
+            "user_id bigint, click_key decimal(38,0)",
+            lambda df: df.groupBy("user_id").agg(F.max("click_key").alias("click_key")),
+        ),
+    ),
+    _attribution_step,
+)
 
 
 def run_stream_attribution(
@@ -2608,13 +2500,8 @@ def run_stream_attribution(
     comment above). ``events`` is a streaming frame with the events-table
     schema. Equals batch q179 exactly whenever drops arrive in event-time
     order per user."""
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        _attribution_ingest(batch, batch_id, store_dir)
-
-    _run_foreach_batch(
-        events, ingest, checkpoint_dir, timeout_sec, "run_stream_attribution"
-    )
+    steps = [(_ATTRIBUTION, store_dir)]
+    _run_stores(events, checkpoint_dir, timeout_sec, "run_stream_attribution", steps)
 
 
 def attribution_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -2625,7 +2512,7 @@ def attribution_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
     batch query bit-for-bit."""
     from decimal import Decimal
 
-    rows = _part(_ATTRIBUTION, "revenue").read(spark, store_dir)
+    rows = _ATTRIBUTION.part("revenue").read(spark, store_dir)
     return (
         rows.groupBy("campaign")
         .agg(
@@ -2647,7 +2534,7 @@ def attribution_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
 #
 #   partials/batch_id=N/  (day_idx, u_partial) — the batch's per-day
 #                         revenue in exact 1e-4 integer units (additive,
-#                         order-free, replay-idempotent per batch dir).
+#                         order-free).
 #   monitor/batch_id=N/   one evaluation row: the folded daily series
 #                         scored with q169's trailing-28d rule — how many
 #                         days currently flag, the loudest |z|, and its
@@ -2680,12 +2567,25 @@ def _daily_units(batch: DataFrame):
 def _fold_daily_series(spark: SparkSession, store_dir: str) -> DataFrame:
     from decimal import Decimal
 
-    return _part(_REVENUE, "partials").read(spark, store_dir).groupBy("day_idx").agg(
+    return _REVENUE.part("partials").read(spark, store_dir).groupBy("day_idx").agg(
         (F.sum("u_partial").cast("decimal(38,0)") * F.lit(Decimal(1).scaleb(-4)))
         .cast("double")
         .alias("revenue"),
         F.sum("u_partial").cast("long").alias("u"),
     )
+
+
+# the monitor/ evaluation log is never compacted; the partials' floor keeps
+# later log ids clear of existing rows
+_REVENUE = _Store(
+    (_summed("partials", "day_idx int, u_partial bigint", "day_idx"),),
+    lambda batch, eff_id, store_dir, _: _stage(
+        _daily_units(batch), _REVENUE.part("partials").path(store_dir), eff_id
+    ),
+)
+# each row also carries its batch_id in the data; the partition value is
+# the one read
+_REVENUE_LOG = _log("monitor", "n_anomalies bigint, max_abs_z double, max_z_day bigint")
 
 
 def run_stream_revenue_monitor(
@@ -2698,37 +2598,20 @@ def run_stream_revenue_monitor(
     is a streaming frame with at least (o_orderdate, o_totalprice)."""
     from ..plans.timeseries import score_daily_anomalies
 
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        batch_id = _effective_batch_id(store_dir, batch_id, _REVENUE)
-        _stage(_daily_units(batch), os.path.join(store_dir, "partials"), batch_id)
+    def evaluate(spark: SparkSession, eff_id: int) -> DataFrame:
         flagged = score_daily_anomalies(_fold_daily_series(spark, store_dir)).cache()
         try:
-            top = flagged.orderBy(F.abs(F.col("zscore")).desc(), "day_idx").limit(1)
-            row = top.collect()
+            row = flagged.orderBy(F.abs(F.col("zscore")).desc(), "day_idx").limit(1).collect()
             n = flagged.count()
-            _stage(
-                local_frame(
-                    spark,
-                    [
-                        (
-                            batch_id,
-                            n,
-                            float(row[0].zscore) if row else None,
-                            int(row[0].day_idx) if row else None,
-                        )
-                    ],
-                    "batch_id bigint, n_anomalies bigint, max_abs_z double, max_z_day bigint",
-                ),
-                os.path.join(store_dir, "monitor"),
-                batch_id,
-            )
         finally:
             flagged.unpersist()
+        z, day = (float(row[0].zscore), int(row[0].day_idx)) if row else (None, None)
+        return local_frame(
+            spark, [(eff_id, n, z, day)], "batch_id bigint, " + _REVENUE_LOG.schema
+        )
 
-    _run_foreach_batch(
-        orders, ingest, checkpoint_dir, timeout_sec, "run_stream_revenue_monitor"
-    )
+    steps, log = [(_REVENUE, store_dir)], (_REVENUE_LOG, store_dir, evaluate)
+    _run_stores(orders, checkpoint_dir, timeout_sec, "run_stream_revenue_monitor", steps, log=log)
 
 
 def revenue_anomalies_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -2748,14 +2631,8 @@ def revenue_anomalies_from_store(spark: SparkSession, store_dir: str) -> DataFra
 
 
 def revenue_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
-    """The revenue monitor's append-only evaluation log, ordered by batch
-    (each row also carries its batch_id in the data; the partition value
-    is the one read)."""
-    return _monitor_log(
-        spark,
-        os.path.join(store_dir, "monitor"),
-        "n_anomalies bigint, max_abs_z double, max_z_day bigint",
-    )
+    """The revenue monitor's append-only evaluation log, ordered by batch."""
+    return _REVENUE_LOG.fold(spark, store_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -2776,6 +2653,39 @@ def revenue_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _basket_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
+    li = batch.select("l_orderkey", "l_partkey")
+    a = li.select("l_orderkey", F.col("l_partkey").alias("p1"))
+    b = li.select("l_orderkey", F.col("l_partkey").alias("p2"))
+    # cached: three partial writes share the batch's projection
+    li = li.cache()
+    try:
+        pairs = (
+            a.join(b, "l_orderkey")
+            .filter(F.col("p1") < F.col("p2"))
+            .groupBy("p1", "p2")
+            .agg(F.countDistinct("l_orderkey").alias("n_both"))
+        )
+        items = li.groupBy(F.col("l_partkey").alias("p")).agg(
+            F.countDistinct("l_orderkey").alias("n_p")
+        )
+        baskets = li.agg(F.countDistinct("l_orderkey").alias("n_orders"))
+        for part, df in zip(_BASKET.parts, (pairs, items, baskets)):
+            _stage(df, part.path(store_dir), eff_id)
+    finally:
+        li.unpersist()
+
+
+_BASKET = _Store(
+    (
+        _summed("pairs", "p1 bigint, p2 bigint, n_both bigint", "p1", "p2"),
+        _summed("items", "p bigint, n_p bigint", "p"),
+        _summed("baskets", "n_orders bigint"),
+    ),
+    _basket_step,
+)
+
+
 def run_stream_basket_counts(
     lineitems: DataFrame,
     store_dir: str,
@@ -2784,37 +2694,8 @@ def run_stream_basket_counts(
 ) -> None:
     """foreachBatch basket-count partials (see block comment). ``lineitems``
     is a streaming frame with (l_orderkey, l_partkey)."""
-
-    def ingest(batch: DataFrame, batch_id: int) -> None:
-        batch_id = _effective_batch_id(store_dir, batch_id, _BASKET)
-        li = batch.select("l_orderkey", "l_partkey")
-        a = li.select("l_orderkey", F.col("l_partkey").alias("p1"))
-        b = li.select("l_orderkey", F.col("l_partkey").alias("p2"))
-        # cached: three partial writes share the batch's projection
-        li = li.cache()
-        try:
-            pairs = (
-                a.join(b, "l_orderkey")
-                .filter(F.col("p1") < F.col("p2"))
-                .groupBy("p1", "p2")
-                .agg(F.countDistinct("l_orderkey").alias("n_both"))
-            )
-            _stage(pairs, os.path.join(store_dir, "pairs"), batch_id)
-            items = li.groupBy(F.col("l_partkey").alias("p")).agg(
-                F.countDistinct("l_orderkey").alias("n_p")
-            )
-            _stage(items, os.path.join(store_dir, "items"), batch_id)
-            _stage(
-                li.agg(F.countDistinct("l_orderkey").alias("n_orders")),
-                os.path.join(store_dir, "baskets"),
-                batch_id,
-            )
-        finally:
-            li.unpersist()
-
-    _run_foreach_batch(
-        lineitems, ingest, checkpoint_dir, timeout_sec, "run_stream_basket_counts"
-    )
+    steps = [(_BASKET, store_dir)]
+    _run_stores(lineitems, checkpoint_dir, timeout_sec, "run_stream_basket_counts", steps)
 
 
 def basket_rules_from_store(
@@ -2822,7 +2703,7 @@ def basket_rules_from_store(
 ) -> DataFrame:
     """Fold the partials into q178's rule table (same thresholds, same
     deterministic (lift, antecedent, consequent) top-k)."""
-    pairs, items, baskets = (p.fold(spark, store_dir) for p in _BASKET)
+    pairs, items, baskets = (p.fold(spark, store_dir) for p in _BASKET.parts)
     i1 = items.select(F.col("p").alias("p1"), F.col("n_p").alias("n_ante_fwd"))
     i2 = items.select(F.col("p").alias("p2"), F.col("n_p").alias("n_cons_fwd"))
     enriched = (
@@ -2869,21 +2750,17 @@ def basket_rules_from_store(
 # (plans/multimodal_queries.py). A multimodal pipeline wants decode error
 # rates PER ARRIVING DROP, not just in a batch audit — a crawl source
 # whose malformed-blob rate spikes mid-ingest should alert before the
-# corpus lands. Same staged-delta contract as the volume store: additive
-# (source, fmt, status) counts per batch_id, plain-sum fold, replay
-# idempotent via per-batch overwrite.
+# corpus lands. Like the volume store: additive (source, fmt, status)
+# counts per batch_id, plain-sum fold.
 # ---------------------------------------------------------------------------
 
-def _decode_health_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> int:
+def _decode_health_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
     """One micro-batch of the decode-health store: classify every blob
     through the real header decoders (operators/multimodal.decode_health —
     per-blob rejection becomes a row, never a failed batch) and stage the
-    additive (source, fmt, status) counts under batch_id=N (remapped above
-    the compaction floor — see _effective_batch_id: a replay of a folded
-    raw id must never overwrite the compacted history); returns N."""
+    additive (source, fmt, status) counts."""
     from ..operators.multimodal import decode_health
 
-    eff_id = _effective_batch_id(store_dir, batch_id, _HEALTH)
     _stage(
         decode_health(batch.select("doc_id", "source", "content"))
         .groupBy("source", "fmt", "status")
@@ -2891,7 +2768,31 @@ def _decode_health_ingest(batch: DataFrame, batch_id: int, store_dir: str) -> in
         store_dir,
         eff_id,
     )
-    return eff_id
+
+
+def _media_health_step(batch: DataFrame, eff_id: int, store_dir: str, raw_id: int) -> None:
+    """Decode-health counts of the batch's media (q220's contract): the
+    decode-health step over the media mix attached per doc."""
+    from ..operators.multimodal import attach_media_mix
+
+    media = attach_media_mix(batch.select("doc_id", "source"))
+    _decode_health_step(media, eff_id, store_dir, raw_id)
+
+
+_HEALTH = _Store(
+    (
+        _summed(
+            None,
+            "source string, fmt string, status string, n_docs bigint",
+            "source",
+            "fmt",
+            "status",
+        ),
+    ),
+    _decode_health_step,
+)
+# the scorecard suite's health store: the same parts, fed the media mix
+_MEDIA_HEALTH = _HEALTH._replace(step=_media_health_step)
 
 
 def run_stream_decode_health(
@@ -2904,13 +2805,8 @@ def run_stream_decode_health(
     (doc_id, source, content). Scale: per batch one Arrow decode pass +
     one tiny groupBy; store growth is O(batches x sources x 6 formats x
     status classes) rows of additive counts."""
-
-    def partials(batch: DataFrame, batch_id: int) -> None:
-        _decode_health_ingest(batch, batch_id, store_dir)
-
-    _run_foreach_batch(
-        media, partials, checkpoint_dir, timeout_sec, "run_stream_decode_health"
-    )
+    steps = [(_HEALTH, store_dir)]
+    _run_stores(media, checkpoint_dir, timeout_sec, "run_stream_decode_health", steps)
 
 
 def decode_health_report_from_store(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -2919,7 +2815,7 @@ def decode_health_report_from_store(spark: SparkSession, store_dir: str) -> Data
     the fold is a plain sum; the share window runs over the aggregated
     frame only. Arrival-order-independent (counts commute) — pinned for
     forward AND reversed drops in tests/test_streaming.py."""
-    counts = _part(_HEALTH).fold(spark, store_dir)
+    counts = _HEALTH.part().fold(spark, store_dir)
     w = Window.partitionBy("source", "fmt")
     return counts.select(
         "source",
@@ -2930,6 +2826,11 @@ def decode_health_report_from_store(spark: SparkSession, store_dir: str) -> Data
             "share_of_fmt"
         ),
     ).orderBy("source", "fmt", "status")
+
+
+_HEALTH_LOG = _log(
+    "log", "source string, n_docs bigint, n_malformed bigint, malformed_share double, alert boolean"
+)
 
 
 def run_stream_decode_health_monitor(
@@ -2953,18 +2854,13 @@ def run_stream_decode_health_monitor(
 
     Scale shape: per batch one Arrow decode pass over the batch plus a
     fold of O(batches x sources x formats x statuses) additive count rows
-    — never the blobs again; the log row set is O(sources). Both writes
-    stage under the same effective batch id (compaction-floor remapped,
-    see _effective_batch_id) — replay idempotent."""
+    — never the blobs again; the log row set is O(sources)."""
     counts_dir = os.path.join(store_dir, "counts")
-    log_dir = os.path.join(store_dir, "log")
 
-    def monitor(batch: DataFrame, batch_id: int) -> None:
-        spark = batch.sparkSession
-        eff_id = _decode_health_ingest(batch, batch_id, counts_dir)
+    def evaluate(spark: SparkSession, eff_id: int) -> DataFrame:
         bad = F.sum(F.when(F.col("status") != "ok", F.col("n_docs")).otherwise(F.lit(0)))
-        per_source = (
-            _part(_HEALTH)
+        return (
+            _HEALTH.part()
             .read(spark, counts_dir)
             .groupBy("source")
             .agg(
@@ -2984,22 +2880,16 @@ def run_stream_decode_health_monitor(
                 ).alias("alert"),
             )
         )
-        _stage(per_source, log_dir, eff_id)
 
-    _run_foreach_batch(
-        media, monitor, checkpoint_dir, timeout_sec, "run_stream_decode_health_monitor"
-    )
+    steps, log = [(_HEALTH, counts_dir)], (_HEALTH_LOG, store_dir, evaluate)
+    label = "run_stream_decode_health_monitor"
+    _run_stores(media, checkpoint_dir, timeout_sec, label, steps, log=log)
 
 
 def decode_health_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
     """The decode-health monitor's append-only evaluation log, ordered by
     (batch, source)."""
-    return _monitor_log(
-        spark,
-        os.path.join(store_dir, "log"),
-        "source string, n_docs bigint, n_malformed bigint, "
-        "malformed_share double, alert boolean",
-    )
+    return _HEALTH_LOG.fold(spark, store_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -3007,13 +2897,13 @@ def decode_health_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
 # without a re-fit. Each arriving embedding is encoded against the FROZEN
 # quantizer (the only state an ingest tier ships), staged as a delta, and
 # served through the same cores as the session fit. Both stores run one
-# new-vector step (_run_vector_ingest); they differ in the encode, the count
+# new-vector step (_vector_ingest); they differ in the encode, the count
 # keys and the log row. The monitors use q222's cell_balance_from_counts,
 # so a live monitor and the batch audit cannot drift on thresholds.
 #
-# Store layout (marker + _effective_batch_id contract like dup-flow; the
-# quantizer files are written by the first batch in sources/ann_index's
-# format, which makes a store a self-contained servable index):
+# Store layout (the quantizer files are written by the first batch in
+# sources/ann_index's format, which makes a store a self-contained servable
+# index):
 #   IVF  centers/           the frozen coarse centroids.
 #        assign/batch_id=N/ (vec_id, cell): batch N's NEW vectors (an
 #                           anti-join drops ids already indexed, so a
@@ -3033,40 +2923,50 @@ def decode_health_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
 #                           of a hot IVF cell.
 # ---------------------------------------------------------------------------
 
-_IVF_MONITOR_LOG_SCHEMA = (
-    "n_vecs bigint, imbalance_factor double, empty_cell_rate double, alert boolean"
+# assign/codes: one row per vec_id (the anti-join ingest contract); the
+# log/ evaluation record is kept as written
+_IVF = _Store(
+    (
+        _rewritten("assign", "vec_id bigint, cell int"),
+        _summed("counts", "cell int, n_vecs bigint", "cell"),
+    )
 )
-_PQ_MONITOR_LOG_SCHEMA = "n_vecs bigint, imbalance_factor double, alert boolean"
+_PQ = _Store(
+    (
+        _rewritten("codes", CODES_SCHEMA),
+        _summed("counts", "m int, code int, n_vecs bigint", "m", "code"),
+    )
+)
+_IVF_LOG = _log(
+    "log", "n_vecs bigint, imbalance_factor double, empty_cell_rate double, alert boolean"
+)
+_PQ_LOG = _log("log", "n_vecs bigint, imbalance_factor double, alert boolean")
 
 
-def _run_vector_ingest(
-    vectors: DataFrame,
+def _vector_ingest(
+    store: _Store,
+    log: _Part,
     store_dir: str,
-    checkpoint_dir: str,
-    timeout_sec: int,
-    label: str,
-    parts: tuple[_Part, _Part],
     quantizer: tuple[str, Callable[[SparkSession, str], None]],
     encode: Callable[[DataFrame], DataFrame],
     keys: list,
     log_row: Callable[[DataFrame], DataFrame],
-) -> None:
-    """The new-vector step of a vector-index store: write the frozen
-    quantizer once (``quantizer`` is its sub-dir and writer), remap the
-    batch id, anti-join ids already indexed, ``encode`` the (vec_id, e)
-    rest, stage it, stage the counts of the staged delta per ``keys``
-    (column expressions over the delta naming the counts part's keys), and
-    stage ``log_row`` of the cumulative counts."""
+) -> dict:
+    """The runner's ``steps`` and ``log`` for a vector-index store. The
+    step writes the frozen quantizer once (``quantizer`` is its sub-dir and
+    writer), anti-joins ids already indexed, ``encode``s the (vec_id, e)
+    rest, stages it, and stages the counts of the staged delta per ``keys``
+    (column expressions over the delta naming the counts part's keys); the
+    log row is ``log_row`` of the cumulative counts."""
     from ..plans.similarity import as_double
 
-    vecs, counts = parts
-    quantizer_dir = os.path.join(store_dir, quantizer[0])
+    vecs, counts = store.parts
 
-    def ingest(batch: DataFrame, batch_id: int) -> None:
+    def step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
         spark = batch.sparkSession
+        quantizer_dir = os.path.join(store_dir, quantizer[0])
         if not os.path.exists(quantizer_dir):
             quantizer[1](spark, quantizer_dir)
-        eff_id = _effective_batch_id(store_dir, batch_id, parts)
         prior = vecs.read(spark, store_dir).where(F.col("batch_id") < eff_id).select("vec_id")
         new = encode(
             batch.join(prior, "vec_id", "left_anti").select(
@@ -3082,10 +2982,12 @@ def _run_vector_ingest(
             counts.path(store_dir),
             eff_id,
         )
-        cum = counts.merge(counts.read(spark, store_dir).where(F.col("batch_id") <= eff_id))
-        _stage(log_row(cum), os.path.join(store_dir, "log"), eff_id)
 
-    _run_foreach_batch(vectors, ingest, checkpoint_dir, timeout_sec, label)
+    def evaluate(spark: SparkSession, eff_id: int) -> DataFrame:
+        cum = counts.read(spark, store_dir).where(F.col("batch_id") <= eff_id)
+        return log_row(counts.merge(cum))
+
+    return {"steps": [(store._replace(step=step), store_dir)], "log": (log, store_dir, evaluate)}
 
 
 def _balance_summary(balance, *cols: str) -> DataFrame:
@@ -3131,18 +3033,21 @@ def run_stream_ivf_assign(
     from ..plans.similarity import cell_balance_from_counts, ivf_cell_udf
 
     cell_of = ivf_cell_udf(centers)
-    _run_vector_ingest(
+    _run_stores(
         vectors,
-        store_dir,
         checkpoint_dir,
         timeout_sec,
         "run_stream_ivf_assign",
-        _IVF,
-        ("centers", lambda spark, path: write_centers(spark, centers, path)),
-        lambda new: new.select("vec_id", cell_of(F.col("e")).alias("cell")),
-        [F.col("cell")],
-        lambda cum: _balance_summary(
-            cell_balance_from_counts(cum, len(centers)), "imbalance_factor", "empty_cell_rate"
+        **_vector_ingest(
+            _IVF,
+            _IVF_LOG,
+            store_dir,
+            ("centers", lambda spark, path: write_centers(spark, centers, path)),
+            lambda new: new.select("vec_id", cell_of(F.col("e")).alias("cell")),
+            [F.col("cell")],
+            lambda cum: _balance_summary(
+                cell_balance_from_counts(cum, len(centers)), "imbalance_factor", "empty_cell_rate"
+            ),
         ),
     )
 
@@ -3160,20 +3065,23 @@ def run_stream_pq_encode(
     from ..plans.similarity import _pq_encode_frame
 
     sizes = [len(book) for book in books]
-    _run_vector_ingest(
+    _run_stores(
         vectors,
-        store_dir,
         checkpoint_dir,
         timeout_sec,
         "run_stream_pq_encode",
-        _PQ,
-        ("books", lambda spark, path: write_books(spark, books, path)),
-        lambda new: _pq_encode_frame(new, books),
-        [F.posexplode("codes").alias("m", "code")],
-        # the worst subspace's balance
-        lambda cum: _balance_summary(
-            _pq_code_balance(cum, sizes).groupBy("m"), "imbalance_factor"
-        ).agg(*[F.max(c).alias(c) for c in ("n_vecs", "imbalance_factor", "alert")]),
+        **_vector_ingest(
+            _PQ,
+            _PQ_LOG,
+            store_dir,
+            ("books", lambda spark, path: write_books(spark, books, path)),
+            lambda new: _pq_encode_frame(new, books),
+            [F.posexplode("codes").alias("m", "code")],
+            # the worst subspace's balance
+            lambda cum: _balance_summary(
+                _pq_code_balance(cum, sizes).groupBy("m"), "imbalance_factor"
+            ).agg(*[F.max(c).alias(c) for c in ("n_vecs", "imbalance_factor", "alert")]),
+        ),
     )
 
 
@@ -3188,7 +3096,7 @@ def load_ivf_store(
 
     lists = (
         embedding_vectors(spark, sf_dir)
-        .join(_part(_IVF, "assign").fold(spark, store_dir), "vec_id")
+        .join(_IVF.part("assign").fold(spark, store_dir), "vec_id")
         .select("vec_id", "e", norm(F.col("e")).alias("nc"), "cell")
     )
     return read_centers(spark, os.path.join(store_dir, "centers")), lists
@@ -3198,7 +3106,7 @@ def load_pq_store(spark: SparkSession, store_dir: str) -> tuple[list, DataFrame]
     """(books, codes) of a live PQ store: the frozen codebooks and the
     folded code deltas."""
     books = read_books(spark, os.path.join(store_dir, "books"))
-    return books, _part(_PQ, "codes").fold(spark, store_dir)
+    return books, _PQ.part("codes").fold(spark, store_dir)
 
 
 def ivf_balance_from_store(spark: SparkSession, store_dir: str, nlist: int) -> DataFrame:
@@ -3208,12 +3116,12 @@ def ivf_balance_from_store(spark: SparkSession, store_dir: str, nlist: int) -> D
     nlist) additive rows, never the vectors."""
     from ..plans.similarity import cell_balance_from_counts
 
-    return cell_balance_from_counts(_part(_IVF, "counts").fold(spark, store_dir), nlist)
+    return cell_balance_from_counts(_IVF.part("counts").fold(spark, store_dir), nlist)
 
 
 def ivf_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
     """The live cell-balance evaluation log, one row per drained batch."""
-    return _monitor_log(spark, os.path.join(store_dir, "log"), _IVF_MONITOR_LOG_SCHEMA)
+    return _IVF_LOG.fold(spark, store_dir)
 
 
 def ivf_topk_from_store(
@@ -3247,13 +3155,13 @@ def pq_code_balance_from_store(spark: SparkSession, store_dir: str) -> DataFrame
     additive rows, never the vectors. A 'rebalance' row means that
     subspace's codebook no longer fits the data: the refit signal."""
     sizes = [len(book) for book in read_books(spark, os.path.join(store_dir, "books"))]
-    counts = _part(_PQ, "counts").fold(spark, store_dir)
+    counts = _PQ.part("counts").fold(spark, store_dir)
     return _pq_code_balance(counts, sizes).orderBy("m", "cell")
 
 
 def pq_monitor_log(spark: SparkSession, store_dir: str) -> DataFrame:
     """The codebook-health evaluation log, one row per drained batch."""
-    return _monitor_log(spark, os.path.join(store_dir, "log"), _PQ_MONITOR_LOG_SCHEMA)
+    return _PQ_LOG.fold(spark, store_dir)
 
 
 def pq_topk_from_store(spark: SparkSession, sf_dir: str, store_dir: str) -> DataFrame:

@@ -22,10 +22,9 @@ import os
 import pytest
 
 from big_data_computing_final_project_spark.plan_text import (
-    PLAN_ONLY,
     STATE_DEPENDENT,
-    UNSTABLE,
     normalize_plan,
+    pinned,
     plan_text,
 )
 from big_data_computing_final_project_spark.plans import all_queries
@@ -33,16 +32,12 @@ from big_data_computing_final_project_spark.plans import all_queries
 SNAP_DIR = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans_snapshot")
 SNAP_SF_DIR = "/root/testdata/sf0.01"
 
-# PLAN_ONLY / UNSTABLE live in plan_text.py (VERDICT r9 item 2) so
-# bench.py's cross-run plans_sha hashes exactly the subset this test pins.
+# plan_text.pinned is shared with bench.py, so its cross-run plans_sha
+# hashes exactly the subset this test pins.
 
 
 def _snapshot_cases() -> list[str]:
-    return sorted(
-        name
-        for name in all_queries()
-        if name.split("_")[0] in PLAN_ONLY and name.split("_")[0] not in UNSTABLE
-    )
+    return sorted(name for name in all_queries() if pinned(name))
 
 
 @pytest.mark.parametrize("name", _snapshot_cases())

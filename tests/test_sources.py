@@ -622,12 +622,11 @@ def _local_frame_cases():
         ),
         ("user_id bigint, click_key decimal(38,0)", [(1, Decimal("12345678901234567890123"))]),
     ]
-    stores = [E._psi_counts(["key"])] + [
-        v
-        for v in vars(E).values()
-        if isinstance(v, tuple) and v and all(isinstance(p, E._Part) for p in v)
-    ]
-    schemas = {p.schema for parts in stores for p in parts}
+    stores = [E._psi_counts(["key"])] + [v for v in vars(E).values() if isinstance(v, E._Store)]
+    schemas = {p.schema for store in stores for p in store.parts}
+    # the monitor logs
+    logs = [E._psi_log(["key"])] + [v for v in vars(E).values() if isinstance(v, E._Part)]
+    schemas |= {log.schema for log in logs}
     schemas |= {v for k, v in vars(E).items() if k.endswith("_SCHEMA") and isinstance(v, str)}
     schemas |= {S._SKETCH_SCHEMA, S._HH_PARTIAL_SCHEMA}
     cases += [(s + ", batch_id bigint", []) for s in sorted(schemas)]

@@ -1437,8 +1437,9 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
     preserved (additive stores at worst double-count the one replayed
     batch; the CDC latest-wins fold is exactly unchanged)."""
     from big_data_computing_final_project_spark.streaming.events import (
-        _decode_health_ingest,
-        _volume_ingest,
+        _HEALTH,
+        _VOLUME,
+        _ingest,
         compact_cdc_store,
         compact_decode_health_store,
         compact_volume_store,
@@ -1456,8 +1457,8 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
         )
 
     dh_store = str(tmp_path / "dh_flat")
-    _decode_health_ingest(media_df(rows[:10]), 0, dh_store)
-    _decode_health_ingest(media_df(rows[10:]), 1, dh_store)
+    _ingest(_HEALTH, media_df(rows[:10]), 0, dh_store)
+    _ingest(_HEALTH, media_df(rows[10:]), 1, dh_store)
     full = {
         (r.source, r.fmt, r.status): r.n_docs
         for r in decode_health_report_from_store(spark, dh_store).collect()
@@ -1476,7 +1477,7 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
     }
     compact_decode_health_store(spark, dh_store)
     # replay batch 1 with its RAW id — the folded partition's id range
-    _decode_health_ingest(media_df(rows[10:]), 1, dh_store)
+    _ingest(_HEALTH, media_df(rows[10:]), 1, dh_store)
     after = {
         (r.source, r.fmt, r.status): r.n_docs
         for r in decode_health_report_from_store(spark, dh_store).collect()
@@ -1510,11 +1511,11 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
             .collect()
         }
 
-    _volume_ingest(vol_df(0, 6), 0, v_store)
-    _volume_ingest(vol_df(6, 10), 1, v_store)
+    _ingest(_VOLUME, vol_df(0, 6), 0, v_store)
+    _ingest(_VOLUME, vol_df(6, 10), 1, v_store)
     v_full = v_fold()
     compact_volume_store(spark, v_store)
-    _volume_ingest(vol_df(6, 10), 1, v_store)  # folded-id replay
+    _ingest(_VOLUME, vol_df(6, 10), 1, v_store)  # folded-id replay
     v_after = v_fold()
     assert all(v_after[k] >= v_full[k] > 0 for k in v_full), (
         "volume history lost on folded-id replay"
@@ -1522,9 +1523,7 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
 
     # --- CDC store: latest-wins fold is exactly idempotent under replay
     from big_data_computing_final_project_spark.plans.cdc import latest_cdc_ops
-    from big_data_computing_final_project_spark.streaming.events import (
-        _cdc_store_latest,
-    )
+    from big_data_computing_final_project_spark.streaming.events import _CDC
     import os as _os
 
     def ops_df(rows_):
@@ -1539,11 +1538,10 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
         latest_cdc_ops(b).write.mode("overwrite").parquet(
             _os.path.join(c_store, f"batch_id={i}")
         )
-    want_cdc = sorted(tuple(r) for r in _cdc_store_latest(spark, c_store).collect())
+    want_cdc = sorted(tuple(r) for r in _CDC.part().fold(spark, c_store).collect())
     compact_cdc_store(spark, c_store)
     # replay batch 1 with its raw id through the remapping ingest path
     from big_data_computing_final_project_spark.streaming.events import (
-        _CDC,
         _effective_batch_id,
     )
 
@@ -1552,7 +1550,7 @@ def test_flat_store_compaction_floor_survives_folded_id_replay(spark, tmp_path):
     latest_cdc_ops(b1).write.mode("overwrite").parquet(
         _os.path.join(c_store, f"batch_id={eff}")
     )
-    got_cdc = sorted(tuple(r) for r in _cdc_store_latest(spark, c_store).collect())
+    got_cdc = sorted(tuple(r) for r in _CDC.part().fold(spark, c_store).collect())
     assert got_cdc == want_cdc, "CDC latest-wins fold changed under replay"
 
     # --- the floor marker TRAVELS with the store (ADVICE r9): it lives
@@ -1721,8 +1719,9 @@ def test_ingest_heals_crashed_compaction_before_writing(spark, tmp_path):
     import os as _os
 
     from big_data_computing_final_project_spark.streaming.events import (
-        _decode_health_ingest,
-        _dup_flow_ingest,
+        _DUP_FLOW,
+        _HEALTH,
+        _ingest,
         compact_decode_health_store,
         compact_dup_flow_store,
         decode_health_report_from_store,
@@ -1743,15 +1742,15 @@ def test_ingest_heals_crashed_compaction_before_writing(spark, tmp_path):
         )
 
     store = str(tmp_path / "dh_heal")
-    _decode_health_ingest(media_df(rows[:8]), 0, store)
-    _decode_health_ingest(media_df(rows[8:16]), 1, store)
+    _ingest(_HEALTH, media_df(rows[:8]), 0, store)
+    _ingest(_HEALTH, media_df(rows[8:16]), 1, store)
     before = {
         (r.source, r.fmt, r.status): r.n_docs
         for r in decode_health_report_from_store(spark, store).collect()
     }
     compact_decode_health_store(spark, store)
     _os.rename(store, store + ".old")  # the mid-compaction crash window
-    _decode_health_ingest(media_df(rows[16:]), 2, store)
+    _ingest(_HEALTH, media_df(rows[16:]), 2, store)
     after = {
         (r.source, r.fmt, r.status): r.n_docs
         for r in decode_health_report_from_store(spark, store).collect()
@@ -1767,14 +1766,14 @@ def test_ingest_heals_crashed_compaction_before_writing(spark, tmp_path):
         return spark.createDataFrame(sub, "doc_id long, source string, fp string")
 
     dstore = str(tmp_path / "df_heal")
-    _dup_flow_ingest(docs_df([(1, "a", "f1"), (2, "b", "f1")]), 0, dstore)
-    _dup_flow_ingest(docs_df([(3, "c", "f1")]), 1, dstore)
+    _ingest(_DUP_FLOW, docs_df([(1, "a", "f1"), (2, "b", "f1")]), 0, dstore)
+    _ingest(_DUP_FLOW, docs_df([(3, "c", "f1")]), 1, dstore)
     want = [tuple(r) for r in dup_flow_matrix_from_store(spark, dstore).collect()]
     assert want  # a -> b and a -> c edges exist
     compact_dup_flow_store(spark, dstore)
     keepers = _os.path.join(dstore, "keepers")
     _os.rename(keepers, keepers + ".old")  # crash window on one subdir
-    _dup_flow_ingest(docs_df([(4, "d", "f1")]), 2, dstore)
+    _ingest(_DUP_FLOW, docs_df([(4, "d", "f1")]), 2, dstore)
     got = [tuple(r) for r in dup_flow_matrix_from_store(spark, dstore).collect()]
     # keeper history healed: doc 4 is a DUP of keeper source 'a', never a
     # fresh keeper (which is what a lost keeper store would make it)
@@ -1791,7 +1790,8 @@ def test_dup_flow_folded_replay_manufactures_no_self_edges(spark, tmp_path):
     folded keeper entry by keeper_doc_id and never emits itself as a
     duplicate (VERDICT r10 item 7)."""
     from big_data_computing_final_project_spark.streaming.events import (
-        _dup_flow_ingest,
+        _DUP_FLOW,
+        _ingest,
         compact_dup_flow_store,
         dup_flow_matrix_from_store,
     )
@@ -1801,7 +1801,7 @@ def test_dup_flow_folded_replay_manufactures_no_self_edges(spark, tmp_path):
         [(1, "srcA", "x"), (2, "srcB", "x")],
         "doc_id long, source string, fp string",
     )
-    _dup_flow_ingest(batch, 0, store)
+    _ingest(_DUP_FLOW, batch, 0, store)
     before = {
         (r.keeper_source, r.dup_source): (r.n_docs, r.n_groups)
         for r in dup_flow_matrix_from_store(spark, store).collect()
@@ -1809,7 +1809,7 @@ def test_dup_flow_folded_replay_manufactures_no_self_edges(spark, tmp_path):
     assert before == {("srcA", "srcB"): (1, 1)}
 
     compact_dup_flow_store(spark, store)  # folds batch 0, writes the floor
-    _dup_flow_ingest(batch, 0, store)  # the window-contract-violating replay
+    _ingest(_DUP_FLOW, batch, 0, store)  # the window-contract-violating replay
 
     after = {
         (r.keeper_source, r.dup_source): (r.n_docs, r.n_groups)
@@ -1828,7 +1828,7 @@ def test_neardup_labels_store_budget_equals_batch_q226_any_arrival(spark, tmp_pa
     min-label fold is commutative."""
     from big_data_computing_final_project_spark.streaming.events import (
         dedup_adjusted_budget_from_labels_store,
-        run_stream_neardup_ingest_suite,
+        run_stream_ingest_suite,
     )
 
     corpus = _write_corpus_nd(tmp_path / "ndl_corpus")
@@ -1844,10 +1844,11 @@ def test_neardup_labels_store_budget_equals_batch_q226_any_arrival(spark, tmp_pa
 
     for case, order in (("fwd", _ND_DROPS), ("rev", list(reversed(_ND_DROPS)))):
         src_dir = _write_doc_drops(tmp_path / f"ndl_arrivals_{case}", order)
-        _, labels_dir = run_stream_neardup_ingest_suite(
+        *_, labels_dir = run_stream_ingest_suite(
             _docs_stream(spark, src_dir),
             str(tmp_path / f"ndl_root_{case}"),
             str(tmp_path / f"ndl_ckpt_{case}"),
+            near_dup=True,
         )
         got = [
             tuple(r)
@@ -1866,7 +1867,7 @@ def test_neardup_labels_store_compaction_and_continued_ingest(spark, tmp_path):
         compact_lsh_dedup_store,
         compact_near_dup_labels_store,
         dedup_adjusted_budget_from_labels_store,
-        run_stream_neardup_ingest_suite,
+        run_stream_ingest_suite,
     )
 
     corpus = _write_corpus_nd(tmp_path / "ndl_corpus_c")
@@ -1876,9 +1877,9 @@ def test_neardup_labels_store_compaction_and_continued_ingest(spark, tmp_path):
     ckpt = str(tmp_path / "ndl_ckpt_c")
 
     def _go():
-        return run_stream_neardup_ingest_suite(
-            _docs_stream(spark, str(src_dir)), root, ckpt
-        )
+        return run_stream_ingest_suite(
+            _docs_stream(spark, str(src_dir)), root, ckpt, near_dup=True
+        )[-2:]
 
     lsh_dir, labels_dir = _go()
     before = [

@@ -1,10 +1,14 @@
-"""Archive every registered query's physical plan for plan-diff review.
+"""Archive the compared queries' physical plans for plan-diff review.
 
 Writes ``plans_snapshot/<query>.txt`` (explain mode=formatted, scan paths
-normalized so snapshots are SF-independent). Re-run after a refactor and
+normalized so snapshots are SF-independent) for every query
+tests/test_plan_snapshots.py compares (plan_text.pinned: the pure-plan
+queries); a query whose builder runs jobs has a plan that varies with
+session history, so no archive of it is kept. Re-run after a refactor and
 `git diff plans_snapshot/` shows exactly which physical plans moved —
 catching regressions subtler than the assertions in test_plan_shape.py
-(a lost broadcast, a new exchange, a widened ReadSchema).
+(a lost broadcast, a new exchange, a widened ReadSchema). Naming queries
+writes exactly those instead (the sf0.1 headline archive).
 
 Usage:  python tools/snapshot_plans.py [sf_dir] [out_dir] [query ...]
 """
@@ -16,7 +20,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from big_data_computing_final_project_spark.plan_text import plan_text  # noqa: E402
+from big_data_computing_final_project_spark.plan_text import pinned, plan_text  # noqa: E402
 from big_data_computing_final_project_spark.plans import all_queries  # noqa: E402
 from big_data_computing_final_project_spark.session import get_spark  # noqa: E402
 
@@ -24,12 +28,13 @@ from big_data_computing_final_project_spark.session import get_spark  # noqa: E4
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "plans_snapshot"
-    only = set(sys.argv[3:])  # optional query-name subset
+    only = set(sys.argv[3:])  # explicit query names; default: the pinned set
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark("plan-snapshot")
     spark.sparkContext.setLogLevel("ERROR")
     for name, fn in sorted(all_queries().items()):
-        if only and name not in only:
+        wanted = name in only if only else pinned(name)
+        if not wanted:
             continue
         try:
             df = fn(spark, sf_dir)
