@@ -105,7 +105,7 @@ def roc_auc_exact(
     # strict prefix (cnt of strictly-lower scores); scores are unique after
     # the groupBy, the strict-mode precondition. First row: empty frame ->
     # NULL -> 0 strictly-lower rows.
-    r = prefix_agg(g, ["s"], "cnt", "cum_before", agg="sum", bucket=b, strict=True)
+    r = prefix_agg(g, ["s"], [("cnt", "cum_before", "sum")], bucket=b, strict=True)
     r = r.withColumn("cum_before", F.coalesce(F.col("cum_before"), F.lit(0)))
     t = r.agg(
         F.sum(F.col("pos") * (2 * F.col("cum_before") + F.col("cnt") + 1)).alias("s2"),

@@ -50,7 +50,7 @@ def exact_quantiles(
     qs: list[float],
     *,
     mode: str = "linear",
-    bucket: Column | str | None = None,
+    bucket: Column | None = None,
     group_cols: list[str] | None = None,
     weight: Column | None = None,
 ) -> DataFrame:
@@ -63,12 +63,9 @@ def exact_quantiles(
     holds every distinct value).
 
     ``bucket`` must be monotone non-decreasing in ``val`` with a bounded
-    domain (it splits the prefix scan); default ``floor(val/1000)`` suits
-    price-scaled data — override for other ranges, or pass
-    ``bucket="auto"`` to probe ~64 approximate-quantile edges from the
-    data (ONE eager job at plan-build time — same caller contract as the
-    ranking operator's hot-bucket detection: cache expensive inputs, or
-    supply an explicit bucket to stay fully lazy).
+    domain (it splits the prefix scan); the default ``floor(val/1000)``
+    suits price-scaled data — pass an expression over ``val`` for other
+    ranges. The plan runs no job before the action.
     """
     if mode not in ("linear", "lower"):
         raise ValueError(f"mode must be 'linear' or 'lower', got {mode!r}")
@@ -95,24 +92,8 @@ def exact_quantiles(
     # The frame is bounded by distinct-value cardinality, far below the
     # fact: cache it, scan the fact once.
     c = vals.groupBy(*groups, "val").agg(n_agg).cache()
-    if isinstance(bucket, str):
-        if bucket != "auto":
-            raise ValueError(f"bucket must be a Column, None, or 'auto', got {bucket!r}")
-        probe = vals.agg(
-            F.percentile_approx(
-                "val", F.array(*[F.lit(i / 64.0) for i in range(1, 64)])
-            ).alias("e")
-        ).collect()[0].e
-        edges = sorted(set(probe or []))
-        bucket = (
-            F.size(F.filter(F.array(*[F.lit(e) for e in edges]), lambda e: e <= F.col("val")))
-            if edges
-            else F.lit(0)
-        )
     b = bucket if bucket is not None else F.floor(F.col("val") / 1000).cast("bigint")
-    w = prefix_agg(
-        c, ["val"], "n", "cum", agg="sum", bucket=b, partition_cols=groups or None
-    )
+    w = prefix_agg(c, ["val"], [("n", "cum", "sum")], bucket=b, partition_cols=groups)
     if mode == "linear":
         # linear mode probes the cumulative frame twice (lo + hi ranks);
         # cache it so the prefix join/window runs once (same row count as

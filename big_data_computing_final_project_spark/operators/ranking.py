@@ -3,17 +3,15 @@ single-partition window.
 
 `Window.orderBy(...)` with no partition key moves EVERY row into one task:
 correct, and unbounded at scale — the cliff the sf1x stress caught in q170
-and a review pass then found in q172/q173/q177. The exact global rank
-decomposes whenever a coarse BUCKET that is monotone in the sort order is
-available:
+and a review pass then found in q172/q173/q177. ROW_NUMBER over a total
+order is a running COUNT over a ROWS frame, so the exact global rank is a
+``count`` spec on the bucketed prefix scan (operators/prefix.py):
 
     global_rank(row) = (# rows in earlier buckets) + (rank within bucket)
 
-Bucket row-counts are one partial-aggregated groupBy; their cumulative
-offsets are a window over DISTINCT BUCKET VALUES ONLY (bounded by the
-bucket domain, not the table — e.g. epoch days, cents-div-1000 price
-bands); the within-bucket row_number parallelizes across bucket
-partitions. Same numbers as the naive form, no single-partition stage.
+and the total row count is that scan's ``total`` spec, read off its
+distinct-bucket offsets frame. This module adds only the hot-bucket guard,
+which hands the scan a finer monotone bucket when one bucket is too big.
 
 NTILE then follows from the global rank in closed form (standard SQL
 semantics: the first n mod k tiles get one extra row):
@@ -28,35 +26,28 @@ shuffled inputs, including the n < k and all-ties edges.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
 
-_BKT = "__rank_bucket"
-_SUB = "__rank_sub"
-_OFF = "__rank_offset"
-_N = "__rank_n"
+from .prefix import prefix_agg
 
-# Hot-bucket guard defaults: a bucket holding more than HOT_BUCKET_ROWS
-# rows gets subdivided into SUB_BUCKETS quantile slices (its within-bucket
-# row_number is otherwise one task — the exact cliff this operator exists
-# to remove, recreated by a degenerate bucket such as one epoch-day holding
+_BKT = "__rank_bucket"
+
+# Hot-bucket guard: a bucket holding more than _HOT_BUCKET_ROWS rows gets
+# subdivided into _SUB_BUCKETS quantile slices (its within-bucket running
+# count is otherwise one task — the exact cliff this operator exists to
+# remove, recreated by a degenerate bucket such as one epoch-day holding
 # half the table). 1M rows ≈ tens of MB per task of (key, order-col) pairs.
 _HOT_BUCKET_ROWS = 1_000_000
 _SUB_BUCKETS = 32
 _MAX_HOT_BUCKETS = 64
 
 
-def _hot_bucket_subs(
-    tagged: DataFrame,
-    grp: DataFrame,
-    order_cols: list[str],
-    hot_bucket_rows: int,
-    sub_buckets: int,
-) -> Column | None:
-    """Detect degenerate buckets and return the secondary-bucket expression
-    (or None when no bucket is hot — the common case, which must keep the
-    exact original plan).
+def _hot_bucket_subs(tagged: DataFrame, order_cols: list[str]) -> Column | None:
+    """Detect degenerate buckets of ``tagged`` (bucketed in ``_BKT``) and
+    return the slice expression that subdivides them, or None when no
+    bucket is hot — the common case, which keeps the plain bucket.
 
     For each hot bucket, the subdivider is the FIRST order column that
     VARIES within the bucket (any type): columns before it are constant
@@ -73,7 +64,9 @@ def _hot_bucket_subs(
     construction.
     """
     hot = (
-        grp.filter(F.col("__gcnt") > hot_bucket_rows)
+        tagged.groupBy(_BKT)
+        .agg(F.count(F.lit(1)).alias("__gcnt"))
+        .filter(F.col("__gcnt") > _HOT_BUCKET_ROWS)
         .orderBy(F.col("__gcnt").desc(), F.asc_nulls_first(_BKT))
         .limit(_MAX_HOT_BUCKETS)
         .select(_BKT)
@@ -91,7 +84,7 @@ def _hot_bucket_subs(
     cond = F.col(_BKT).isin([v for v in hot_vals if v is not None])
     if any(v is None for v in hot_vals):
         cond = cond | F.col(_BKT).isNull()
-    qs = [float(i) / sub_buckets for i in range(1, sub_buckets)]
+    qs = [float(i) / _SUB_BUCKETS for i in range(1, _SUB_BUCKETS)]
     aggs = []
     for c in order_cols:
         aggs += [
@@ -133,8 +126,8 @@ def _hot_bucket_subs(
         match = F.col(_BKT).isNull() if v is None else F.col(_BKT).eqNullSafe(F.lit(v))
         expr = F.when(match, sub).otherwise(expr)
         subdivided = True
-    # if every hot bucket was skipped, the guarded plan would add its
-    # composite key, wider window, and join conjunct for zero subdivision
+    # if every hot bucket was skipped, a composite bucket would widen the
+    # scan's keys for zero subdivision
     return expr if subdivided else None
 
 
@@ -144,68 +137,32 @@ def global_rank(
     bucket: Column | None = None,
     rank_col: str = "rank",
     n_col: str | None = None,
-    hot_bucket_rows: int | None = _HOT_BUCKET_ROWS,
-    sub_buckets: int = _SUB_BUCKETS,
 ) -> DataFrame:
     """Exact global ROW_NUMBER() over ``order_cols`` (ties broken by the
-    full column list — pass a unique suffix for determinism), computed
-    distributively via ``bucket`` (default: the first order column). The
-    bucket expression MUST be monotone non-decreasing in the sort order
-    and should have a bounded value domain. Optionally also attaches the
-    total row count as ``n_col`` (needed by ntile).
+    full column list — pass a unique suffix for determinism) as
+    ``rank_col``: a running count on the bucketed prefix scan, bucketed by
+    ``bucket`` (default: the first order column). The bucket expression
+    MUST be monotone non-decreasing in the sort order and should have a
+    bounded value domain. Optionally also attaches the total row count as
+    ``n_col`` (needed by ntile), taken from the scan's offsets frame.
 
-    Skew guard: buckets holding more than ``hot_bucket_rows`` rows are
-    subdivided into ``sub_buckets`` per-bucket quantile slices of the
+    Skew guard: buckets holding more than ``_HOT_BUCKET_ROWS`` rows are
+    subdivided into ``_SUB_BUCKETS`` per-bucket quantile slices of the
     first numeric order column that varies within the bucket (see
-    _hot_bucket_subs), bounding the largest within-bucket row_number task.
-    Detection costs 1-2 eager jobs over ``df`` at plan-build time; when no
-    bucket is hot the emitted plan is byte-identical to the unguarded one.
+    _hot_bucket_subs); the scan then runs on the finer monotone bucket
+    ``struct(bucket, slice)``, bounding the largest within-bucket task.
+    Detection costs 1-2 eager jobs over ``df`` at plan-build time, so
     CALLERS SHOULD CACHE ``df`` when it is an expensive pipeline (q170/
-    q198/q40 do), or pass ``hot_bucket_rows=None`` to skip detection
-    entirely for buckets known to be uniform (e.g. a hash-derived bucket)
-    — then no job runs before the action.
+    q198/q40 do).
     """
-    b = bucket if bucket is not None else F.col(order_cols[0])
-    tagged = df.withColumn(_BKT, b)
-    grp = tagged.groupBy(_BKT).agg(F.count(F.lit(1)).alias("__gcnt"))
-    sub_expr = (
-        None
-        if hot_bucket_rows is None
-        else _hot_bucket_subs(tagged, grp, order_cols, hot_bucket_rows, sub_buckets)
-    )
-    if sub_expr is not None:
-        tagged = tagged.withColumn(_SUB, sub_expr)
-        grp = tagged.groupBy(_BKT, _SUB).agg(F.count(F.lit(1)).alias("__gcnt"))
-    # asc_nulls_first matches Window.orderBy's default NULL placement, so a
-    # NULL bucket (from a NULL leading sort key) ranks first, not dropped
-    order_keys = [F.asc_nulls_first(_BKT)] + ([F.col(_SUB)] if sub_expr is not None else [])
-    cum = Window.orderBy(*order_keys).rowsBetween(Window.unboundedPreceding, -1)
-    sel = [F.col(_BKT).alias("__obkt")] + (
-        [F.col(_SUB).alias("__osub")] if sub_expr is not None else []
-    )
-    offs = grp.select(
-        *sel,
-        F.coalesce(F.sum("__gcnt").over(cum), F.lit(0)).alias(_OFF),
-        F.sum("__gcnt").over(Window.partitionBy()).alias(_N),
-    )
-    part = [_BKT] + ([_SUB] if sub_expr is not None else [])
-    rn = F.row_number().over(Window.partitionBy(*part).orderBy(*order_cols))
-    # eqNullSafe: a plain equi-join silently DELETES null-bucket rows
-    join_cond = F.col(_BKT).eqNullSafe(F.col("__obkt"))
-    if sub_expr is not None:
-        join_cond = join_cond & (F.col(_SUB) == F.col("__osub"))
-    out = (
-        tagged.join(F.broadcast(offs), join_cond)
-        .withColumn(rank_col, (F.col(_OFF) + rn).cast("bigint"))
-        .drop(_BKT, "__obkt", _OFF)
-    )
-    if sub_expr is not None:
-        out = out.drop(_SUB, "__osub")
-    if n_col is not None:
-        out = out.withColumnRenamed(_N, n_col)
-    else:
-        out = out.drop(_N)
-    return out
+    tagged = df.withColumn(_BKT, bucket if bucket is not None else F.col(order_cols[0]))
+    sub = _hot_bucket_subs(tagged, order_cols)
+    specs = [("*", rank_col, "count")] + ([("*", n_col, "total")] if n_col else [])
+    if sub is None:
+        return prefix_agg(df, order_cols, specs, bucket=bucket)
+    # struct order puts a NULL field first, so a NULL bucket still ranks first
+    fine = F.struct(F.col(_BKT), sub)
+    return prefix_agg(tagged, order_cols, specs, bucket=fine).drop(_BKT)
 
 
 def ntile_from_rank(rank: Column, n: Column, tiles: int) -> Column:
@@ -235,15 +192,10 @@ def distributed_ntile(
     tiles: int,
     bucket: Column | None = None,
     out_col: str = "ntile",
-    hot_bucket_rows: int = _HOT_BUCKET_ROWS,
-    sub_buckets: int = _SUB_BUCKETS,
 ) -> DataFrame:
     """NTILE(tiles) over a global ordering, without a single-partition
     window (see module docstring)."""
-    ranked = global_rank(
-        df, order_cols, bucket=bucket, rank_col="__rank", n_col="__n",
-        hot_bucket_rows=hot_bucket_rows, sub_buckets=sub_buckets,
-    )
+    ranked = global_rank(df, order_cols, bucket=bucket, rank_col="__rank", n_col="__n")
     return ranked.withColumn(
         out_col, ntile_from_rank(F.col("__rank"), F.col("__n"), tiles)
     ).drop("__rank", "__n")

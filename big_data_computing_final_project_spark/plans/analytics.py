@@ -700,9 +700,7 @@ def q196_skyline_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     sm = prefix_agg(
         grp,
         ["p_retailprice"],
-        "__mx",
-        "__m_strict",
-        agg="max",
+        [("__mx", "__m_strict", "max")],
         bucket=F.floor(F.col("p_retailprice") / 100).cast("bigint"),
         strict=True,
     )
@@ -769,9 +767,7 @@ def q197_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     cum = prefix_agg(
         pa,
         ["val"],
-        "w",
-        "cumw",
-        agg="sum",
+        [("w", "cumw", "sum")],
         partition_cols=["brand"],
         bucket=F.floor(F.col("val") / 1000).cast("bigint"),
     )

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from ..catalog import epoch_us, load_table
 from ..functions.stats import sql_dec_sum
 from ..operators.sizing import broadcast_if_small
+from ..sources.io import local_frame
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -763,7 +764,7 @@ def q188_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"))
         .withColumn("total", F.sum("n").over(Window.partitionBy()))
     )
-    bf = spark.createDataFrame(_BENFORD, "d bigint, expected double")
+    bf = local_frame(spark, _BENFORD, "d bigint, expected double")
     share = F.coalesce(F.col("n"), F.lit(0)).cast("double") / F.col("total_all")
     total_all = counts.agg(F.max("total").alias("total_all"))
     return (

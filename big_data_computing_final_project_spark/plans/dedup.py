@@ -161,26 +161,28 @@ def _exact_jaccard_pairs(
 
 
 def _verify_candidate_pairs(
-    sh: DataFrame, candidates: DataFrame, threshold: float = _JACCARD_T
+    sh: DataFrame, candidates: DataFrame, threshold: float = _JACCARD_T, sort: bool = True
 ) -> DataFrame:
     """Exact-Jaccard verification restricted to candidate pairs: join each
     pair to its two shingle ARRAYS and intersect per pair. Cost is
     O(|candidates| · shingles-per-doc) — independent of the corpus-wide
     shingle collision structure, which is the whole point of LSH. (The
     explode/self-join of _exact_jaccard_pairs over ALL co-shingled pairs
-    would throw the LSH pruning away.)"""
+    would throw the LSH pruning away.) ``sort=False`` skips the trailing
+    pair sort for consumers that write the pairs unordered (the streaming
+    LSH store's staged delta)."""
     sh_a = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sh_b = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
     union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - common
     jac = common.cast("double") / union
-    return (
+    pairs = (
         candidates.join(sh_a, "doc_a")
         .join(sh_b, "doc_b")
         .select("doc_a", "doc_b", jac.alias("jac"))
         .filter(F.col("jac") >= threshold)
-        .orderBy("doc_a", "doc_b")
     )
+    return pairs.orderBy("doc_a", "doc_b") if sort else pairs
 
 
 @register("q35_ngram_jaccard_dedup", oracle=_Q35_ORACLE)

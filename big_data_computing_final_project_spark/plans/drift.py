@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import text as X
-from ..operators.prefix import prefix_agg, prefix_agg_multi
+from ..operators.prefix import prefix_agg
 from ..sources.io import local_frame
 from .registry import register
 
@@ -223,7 +223,7 @@ def q152_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = orders.select(
         F.col("o_totalprice").alias("v"), (_obucket() < 80).alias("is_ref")
     )
-    # Both cumsums ride ONE bucketed pass (prefix_agg_multi — they share
+    # Both cumsums ride ONE bucketed pass (two prefix_agg specs — they share
     # the partial groupBy, offset window, within-bucket sort and join), and
     # the distinct-value frame is cached for its three consumers (partials
     # + row join + totals), so the orders scan + collapse runs once. The cache is bounded by the value domain, the same
@@ -238,7 +238,7 @@ def q152_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     bkt = F.floor(F.col("v") / 1000).cast("bigint")
-    c = prefix_agg_multi(
+    c = prefix_agg(
         per, ["v"], [("nr", "cr", "sum"), ("nc", "cc", "sum")], bucket=bkt
     )
     tot = per.agg(F.sum("nr").alias("tr"), F.sum("nc").alias("tc"))

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..catalog import epoch_us, load_table
 from ..functions.stats import dec_sum, sql_dec_sum
 from ..operators.temporal import asof_join
+from ..sources.io import local_frame
 from .registry import register
 
 # ---------------------------------------------------------------------------
@@ -99,7 +100,7 @@ ORDER BY band_id
 @register("q66_range_band_join", oracle=_Q66_ORACLE)
 def q66_range_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    bands = spark.createDataFrame(_BANDS, "band_id int, lo double, hi double")
+    bands = local_frame(spark, _BANDS, "band_id int, lo double, hi double")
     joined = ev.join(
         F.broadcast(bands),
         (F.col("value") >= F.col("lo")) & (F.col("value") < F.col("hi")),

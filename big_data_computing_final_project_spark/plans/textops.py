@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import text as X
+from ..sources.io import local_frame
 from .registry import register
 
 # DuckDB equivalent of functions.text.normalize / tokens
@@ -468,9 +469,7 @@ def q82_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     placed = prefix_agg(
         d,
         ["doc_id"],
-        "n_tokens",
-        "cum_tokens",
-        agg="sum",
+        [("n_tokens", "cum_tokens", "sum")],
         bucket=F.floor(F.col("doc_id") / 4096).cast("bigint"),
         partition_cols=["source"],
     ).withColumn("start_off", F.col("cum_tokens") - F.col("n_tokens"))
@@ -656,9 +655,7 @@ def q100_vocab_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         # phase 2: exact counts for candidates only; the collected
         # candidate list (<= cand_max) broadcasts as a local relation
-        cand = spark.createDataFrame(
-            [(t,) for t in cand_items], "term string"
-        )
+        cand = local_frame(spark, [(t,) for t in cand_items], "term string")
         src = terms.join(F.broadcast(cand), "term")
     exact = src.groupBy("term").agg(F.count(F.lit(1)).alias("n_occurrences"))
     return exact.orderBy(F.desc("n_occurrences"), "term").limit(20)
@@ -1137,7 +1134,7 @@ ORDER BY v.vocab_size
 
 @register("q221_vocab_coverage", oracle=_Q221_ORACLE)
 def q221_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.prefix import prefix_agg_multi
+    from ..operators.prefix import prefix_agg
 
     docs = load_table(spark, sf_dir, "documents")
     tf = (
@@ -1153,7 +1150,6 @@ def q221_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         "token",
         "freq",
         (-F.col("freq")).alias("neg_freq"),
-        F.lit(1).alias("one"),
         (
             F.lit(1) - F.length(F.conv(F.col("freq").cast("string"), 10, 2))
         ).cast("bigint").alias("neg_octave"),
@@ -1161,12 +1157,12 @@ def q221_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the corpus explode + token count; the vocab-sized frame is the
     # natural cache point.
     # Rank + cumulative mass share ONE bucketed prefix pass
-    # (prefix_agg_multi): one partial groupBy, one offset window, one
+    # (two prefix_agg specs): one partial groupBy, one offset window, one
     # within-bucket sort, one join
-    ranked = prefix_agg_multi(
+    ranked = prefix_agg(
         tf,
         ["neg_freq", "token"],
-        [("one", "rk", "sum"), ("freq", "cum", "sum")],
+        [("*", "rk", "count"), ("freq", "cum", "sum")],
         bucket=F.col("neg_octave"),
     )
     tot = tf.agg(

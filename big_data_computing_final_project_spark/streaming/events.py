@@ -1958,7 +1958,7 @@ def _lsh_step(
     near-dup label store there — the batch must then carry (source,
     n_toks)."""
     from ..functions import text as X
-    from ..plans.dedup import _JACCARD_T, band_key_structs
+    from ..plans.dedup import _verify_candidate_pairs, band_key_structs
 
     spark = batch.sparkSession
     # null-shingle docs (null text) can never verify; drop like batch q36
@@ -2012,16 +2012,7 @@ def _lsh_step(
     # exact verify on candidates only (the q36 contract): shingle lookup
     # spans this batch plus the stored state
     sh_all = cur.select("doc_id", "sh").unionByName(state.select("doc_id", "sh"))
-    sh_a = sh_all.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sh_b = sh_all.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    common = F.size(F.array_intersect(F.col("sh_a"), F.col("sh_b")))
-    union = F.size(F.col("sh_a")) + F.size(F.col("sh_b")) - common
-    pairs = (
-        candidates.join(sh_a, "doc_a")
-        .join(sh_b, "doc_b")
-        .select("doc_a", "doc_b", (common.cast("double") / union).alias("jac"))
-        .filter(F.col("jac") >= _JACCARD_T)
-    )
+    pairs = _verify_candidate_pairs(sh_all, candidates, sort=False)
     pairs_part = _LSH.part("pairs")
     pairs_delta = _stage(pairs, pairs_part.path(store_dir), eff_id)
     _stage(cur.select("doc_id", "sh", "bands"), _LSH.part("state").path(store_dir), eff_id)

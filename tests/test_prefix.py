@@ -4,6 +4,7 @@ inclusive frames, with and without partition keys — on shuffled input."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -20,7 +21,7 @@ def test_prefix_sum_equals_window(spark):
     df = _df(spark, vals)
     got = {
         r.uid: r.cum
-        for r in prefix_agg(df, ["v", "uid"], "v", "cum", agg="sum").collect()
+        for r in prefix_agg(df, ["v", "uid"], [("v", "cum", "sum")]).collect()
     }
     want = {
         r.uid: r.cum
@@ -44,9 +45,7 @@ def test_prefix_max_strict_with_coarse_bucket(spark):
         for r in prefix_agg(
             df,
             ["v"],
-            "uid",
-            "m",
-            agg="max",
+            [("uid", "m", "max")],
             bucket=(F.col("v") / 10).cast("bigint"),
             strict=True,
         ).collect()
@@ -71,9 +70,7 @@ def test_prefix_sum_partitioned_equals_window(spark):
         for r in prefix_agg(
             df,
             ["v", "uid"],
-            "v",
-            "cum",
-            agg="sum",
+            [("v", "cum", "sum")],
             partition_cols=["g"],
             bucket=(F.col("v") / 4).cast("bigint"),
         ).collect()
@@ -95,7 +92,7 @@ def test_prefix_sum_partitioned_equals_window(spark):
 def test_prefix_min_null_bucket_rows_survive(spark):
     rows = [(None if i % 4 == 0 else (i * 7) % 30, i) for i in range(40)]
     df = spark.createDataFrame(rows, "v long, uid long").repartition(5, "uid")
-    out = prefix_agg(df, ["v", "uid"], "uid", "m", agg="min").collect()
+    out = prefix_agg(df, ["v", "uid"], [("uid", "m", "min")]).collect()
     assert len(out) == 40
     want = {
         r.uid: r.m
@@ -109,6 +106,50 @@ def test_prefix_min_null_bucket_rows_survive(spark):
         ).collect()
     }
     assert {r.uid: r.m for r in out} == want
+
+
+_FRAMES = {
+    "sum": F.sum,
+    "max": F.max,
+    "min": F.min,
+    "count": F.count,
+}
+
+
+@pytest.mark.parametrize(
+    "specs",
+    [
+        [("v", "out0", "sum")],
+        [("v", "out0", "sum"), ("uid", "out1", "max"), ("uid", "out2", "min")],
+        [("*", "out0", "count"), ("*", "out1", "total"), ("v", "out2", "sum")],
+    ],
+    ids=["one", "sum_max_min", "count_total_sum"],
+)
+@pytest.mark.parametrize("parts", [None, ["g"]], ids=["global", "partitioned"])
+def test_prefix_specs_equal_windows(spark, specs, parts):
+    """Several specs over one ordering: every output column equals its own
+    single-partition window form on shuffled input (``total`` is the
+    whole-group count)."""
+    vals = [5, 3, 3, 9, 1, 3, 9, 0, 7, 7, 2, 2, 2, 8, 4, 6, 11, 10, 12]
+    df = _df(spark, vals)
+    got = prefix_agg(
+        df, ["v", "uid"], specs, bucket=(F.col("v") / 4).cast("bigint"),
+        partition_cols=parts,
+    ).collect()
+    by_group = Window.partitionBy(*(parts or []))
+    running = by_group.orderBy("v", "uid").rowsBetween(Window.unboundedPreceding, 0)
+    want = df.select(
+        "uid",
+        *[
+            (F.count(vc).over(by_group) if agg == "total" else _FRAMES[agg](vc).over(running))
+            .alias(oc)
+            for vc, oc, agg in specs
+        ],
+    ).collect()
+    assert len(got) == len(vals)
+    assert got[0].__fields__[: len(df.columns)] == df.columns  # input columns kept
+    for _, oc, _ in specs:
+        assert {r.uid: r[oc] for r in got} == {r.uid: r[oc] for r in want}, oc
 
 
 # operators/quantiles.exact_quantiles — the distributed exact-quantile
@@ -169,20 +210,19 @@ def test_prefix_strict_duplicate_keys_raise(spark):
     """ADVICE r6: strict mode's unique-order-key precondition is enforced
     in-plan — duplicate keys raise instead of returning order-dependent
     prefixes. Unique keys on the same shape still succeed."""
-    import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
     dup = spark.createDataFrame(
         [(1, 5), (1, 7), (2, 9)], "k long, v long"
     ).repartition(3)
-    bad = prefix_agg(dup, ["k"], "v", "p", strict=True, bucket=F.col("k"))
+    bad = prefix_agg(dup, ["k"], [("v", "p", "sum")], strict=True, bucket=F.col("k"))
     with pytest.raises(SparkRuntimeException, match="unique order keys"):
         bad.collect()
     ok = spark.createDataFrame([(1, 5), (2, 7), (3, 9)], "k long, v long")
     got = {
         r.k: r.p
         for r in prefix_agg(
-            ok, ["k"], "v", "p", strict=True, bucket=F.col("k")
+            ok, ["k"], [("v", "p", "sum")], strict=True, bucket=F.col("k")
         ).collect()
     }
     assert got == {1: None, 2: 5, 3: 12}
@@ -212,31 +252,6 @@ def test_exact_quantiles_grouped_matches_spark_percentile(spark, sf_dir):
         for q, v in zip(qs, row.p):
             want[(row.l_returnflag, q)] = v
     assert got == want  # bit-exact per group
-
-
-def test_exact_quantiles_auto_bucket(spark, sf_dir):
-    """bucket='auto' probes quantile edges so a 0-1-ranged column (where
-    the default floor(val/1000) collapses to ONE bucket) still splits the
-    prefix scan; results stay bit-equal to percentile() on real data."""
-    from big_data_computing_final_project_spark.catalog import load_table
-    from big_data_computing_final_project_spark.operators.quantiles import (
-        exact_quantiles,
-    )
-
-    li = load_table(spark, sf_dir, "lineitem")
-    # 0-1 ranged column
-    got = {
-        r.q: r.value
-        for r in exact_quantiles(li, "l_discount", [0.25, 0.5, 0.9], bucket="auto").collect()
-    }
-    want = li.agg(
-        F.expr("percentile(l_discount, array(0.25, 0.5, 0.9))").alias("p")
-    ).collect()[0].p
-    assert [got[0.25], got[0.5], got[0.9]] == list(want)
-    import pytest
-
-    with pytest.raises(ValueError, match="auto"):
-        exact_quantiles(li, "l_discount", [0.5], bucket="median")
 
 
 def test_exact_quantiles_weighted_equals_expansion(spark):
@@ -303,7 +318,6 @@ def test_prefix_strict_cross_bucket_duplicates_raise(spark):
     duplicates that straddle bucket partitions (a bucket that is not a
     pure function of the order keys) — previously only same-bucket
     duplicates raised, so a passing plan wasn't a uniqueness proof."""
-    import pytest
     from pyspark.errors.exceptions.captured import SparkRuntimeException
 
     # same key k=1 lands in buckets 0 and 1: adjacent-in-bucket lag never
@@ -311,7 +325,7 @@ def test_prefix_strict_cross_bucket_duplicates_raise(spark):
     dup = spark.createDataFrame(
         [(1, 5, 0), (1, 7, 1), (2, 9, 1)], "k long, v long, b long"
     ).repartition(3)
-    bad = prefix_agg(dup, ["k"], "v", "p", strict=True, bucket=F.col("b"))
+    bad = prefix_agg(dup, ["k"], [("v", "p", "sum")], strict=True, bucket=F.col("b"))
     with pytest.raises(SparkRuntimeException, match="straddling buckets"):
         bad.collect()
     # unique keys with a coarse (non-injective but monotone) bucket pass
@@ -321,7 +335,7 @@ def test_prefix_strict_cross_bucket_duplicates_raise(spark):
     got = {
         r.k: r.p
         for r in prefix_agg(
-            ok, ["k"], "v", "p", strict=True, bucket=F.col("b")
+            ok, ["k"], [("v", "p", "sum")], strict=True, bucket=F.col("b")
         ).collect()
     }
     assert got == {1: None, 2: 5, 3: 12}

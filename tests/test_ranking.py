@@ -7,10 +7,18 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from big_data_computing_final_project_spark.operators import ranking
 from big_data_computing_final_project_spark.operators.ranking import (
     distributed_ntile,
     global_rank,
 )
+
+
+def _force_guard(monkeypatch, rows, subs):
+    # the guard's thresholds are module constants; tests lower them so a
+    # small frame has hot buckets
+    monkeypatch.setattr(ranking, "_HOT_BUCKET_ROWS", rows)
+    monkeypatch.setattr(ranking, "_SUB_BUCKETS", subs)
 
 
 def _df(spark, vals):
@@ -84,16 +92,15 @@ def test_distributed_ntile_all_ties(spark):
     assert got == want
 
 
-def test_hot_bucket_guard_exactness(spark):
+def test_hot_bucket_guard_exactness(spark, monkeypatch):
     """Planted one-hot-bucket skew (one v value holds ~60% of rows): the
     guarded rank must still equal the single-window row_number exactly."""
+    _force_guard(monkeypatch, 50, 8)
     vals = [7] * 600 + [(i * 13) % 40 for i in range(400)]
     df = _df(spark, vals)
     got = {
         r.uid: r.rank
-        for r in global_rank(
-            df, ["v", "uid"], rank_col="rank", hot_bucket_rows=50, sub_buckets=8
-        ).collect()
+        for r in global_rank(df, ["v", "uid"], rank_col="rank").collect()
     }
     want = {
         r.uid: r.rn
@@ -104,7 +111,7 @@ def test_hot_bucket_guard_exactness(spark):
     assert got == want
 
 
-def test_hot_bucket_guard_bounds_partition_share(spark):
+def test_hot_bucket_guard_bounds_partition_share(spark, monkeypatch):
     """The hot bucket's within-bucket window must be split across quantile
     slices: the largest (bucket, sub) slice carries a bounded share of the
     hot bucket, not all of it."""
@@ -113,11 +120,11 @@ def test_hot_bucket_guard_bounds_partition_share(spark):
         _BKT,
     )
 
+    _force_guard(monkeypatch, 50, 8)
     vals = [7] * 900 + [(i * 13) % 40 for i in range(100)]
     df = _df(spark, vals)
     tagged = df.withColumn(_BKT, F.col("v"))
-    grp = tagged.groupBy(_BKT).agg(F.count(F.lit(1)).alias("__gcnt"))
-    sub = _hot_bucket_subs(tagged, grp, ["v", "uid"], 50, 8)
+    sub = _hot_bucket_subs(tagged, ["v", "uid"])
     assert sub is not None
     sizes = (
         tagged.withColumn("__s", sub)
@@ -131,9 +138,10 @@ def test_hot_bucket_guard_bounds_partition_share(spark):
     assert max(r["count"] for r in hot) <= 900 * 2 // 8
 
 
-def test_hot_bucket_guard_coarse_bucket_nulls(spark):
+def test_hot_bucket_guard_coarse_bucket_nulls(spark, monkeypatch):
     """Guard + coarse bucket + NULL order keys: nulls rank first and no
     row is lost through the composite null-safe join."""
+    _force_guard(monkeypatch, 20, 4)
     rows = [(None if i % 5 == 0 else (i * 7) % 50, i) for i in range(300)]
     df = spark.createDataFrame(rows, "v long, uid long").repartition(7, "uid")
     got = {
@@ -143,8 +151,6 @@ def test_hot_bucket_guard_coarse_bucket_nulls(spark):
             ["v", "uid"],
             bucket=(F.col("v") / 10).cast("bigint"),
             rank_col="rank",
-            hot_bucket_rows=20,
-            sub_buckets=4,
         ).collect()
     }
     want = {
@@ -156,17 +162,17 @@ def test_hot_bucket_guard_coarse_bucket_nulls(spark):
     assert len(got) == 300 and got == want
 
 
-def test_hot_bucket_guard_skips_string_led_bucket(spark):
+def test_hot_bucket_guard_skips_string_led_bucket(spark, monkeypatch):
     """Review fix: a hot bucket whose FIRST varying order column is a
     string must stay whole — subdividing on a later numeric column would
     reorder ranks (name-major order vs uid slices)."""
+    _force_guard(monkeypatch, 50, 8)
     rows = [("n%03d" % ((i * 17) % 50), i, 0) for i in range(400)]
     df = spark.createDataFrame(rows, "name string, uid long, b int").repartition(7, "uid")
     got = {
         r.uid: r.rank
         for r in global_rank(
-            df, ["name", "uid"], bucket=F.col("b"), rank_col="rank",
-            hot_bucket_rows=50, sub_buckets=8,
+            df, ["name", "uid"], bucket=F.col("b"), rank_col="rank"
         ).collect()
     }
     want = {
@@ -178,17 +184,17 @@ def test_hot_bucket_guard_skips_string_led_bucket(spark):
     assert got == want
 
 
-def test_hot_bucket_guard_null_mix_counts_as_varying(spark):
+def test_hot_bucket_guard_null_mix_counts_as_varying(spark, monkeypatch):
     """Review fix: an earlier numeric column holding {NULL, x} within the
     hot bucket VARIES (NULLs sort first) — NULL-blind min==max must not
     make the guard slice on a later column and scramble ranks."""
+    _force_guard(monkeypatch, 40, 4)
     rows = [(None if i % 2 == 0 else 5, i, 0) for i in range(300)]
     df = spark.createDataFrame(rows, "v long, uid long, b int").repartition(7, "uid")
     got = {
         r.uid: r.rank
         for r in global_rank(
-            df, ["v", "uid"], bucket=F.col("b"), rank_col="rank",
-            hot_bucket_rows=40, sub_buckets=4,
+            df, ["v", "uid"], bucket=F.col("b"), rank_col="rank"
         ).collect()
     }
     want = {
@@ -201,45 +207,21 @@ def test_hot_bucket_guard_null_mix_counts_as_varying(spark):
     assert got == want
 
 
-def test_global_rank_detection_opt_out_runs_no_job(spark):
-    """ADVICE r6: hot_bucket_rows=None must skip hot-bucket detection —
-    no eager job at plan-build time. Pinned by building over a frame that
-    RAISES when any task evaluates it: detection-on raises at build,
-    detection-off builds the plan silently (and the guard-free plan still
-    computes correct ranks on a benign frame)."""
-    import pytest
-    from pyspark.sql import functions as F
-
-    from big_data_computing_final_project_spark.operators.ranking import global_rank
-
-    booby = spark.range(10).select(
-        F.when(F.col("id") < 100, F.assert_true(F.lit(False), F.lit("scanned")))
-        .otherwise(F.lit(1.0))
-        .alias("v"),
-        F.col("id"),
-    )
-    with pytest.raises(Exception, match="scanned"):
-        global_rank(booby, ["v", "id"], bucket=F.col("id") % 4).collect()
-    # plan-build with detection off: no job, no error
-    df = global_rank(booby, ["v", "id"], bucket=F.col("id") % 4, hot_bucket_rows=None)
-    assert "rank" in df.columns  # built lazily without scanning
-
-    benign = spark.range(100).select(
-        (F.col("id") * 37 % 100).alias("v"), "id"
-    ).repartition(7)
+def test_distributed_ntile_with_hot_bucket_guard(spark, monkeypatch):
+    """Guard on: the tiles come from the rank and the total count of the
+    scan over the finer struct(bucket, slice) bucket; both must still
+    match F.ntile, NULL order keys included."""
+    _force_guard(monkeypatch, 50, 8)
+    rows = [(None if i % 9 == 0 else (7 if i < 600 else i % 40), i) for i in range(1000)]
+    df = spark.createDataFrame(rows, "v long, uid long").repartition(7, "uid")
     got = {
-        r.id: r.rank
-        for r in global_rank(
-            benign, ["v", "id"], bucket=(F.col("v") / 10).cast("int"),
-            hot_bucket_rows=None,
-        ).collect()
+        r.uid: r.t
+        for r in distributed_ntile(df, ["v", "uid"], 7, out_col="t").collect()
     }
-    from pyspark.sql import Window
-
     want = {
-        r.id: r.rank
-        for r in benign.withColumn(
-            "rank", F.row_number().over(Window.orderBy("v", "id"))
+        r.uid: r.t
+        for r in df.withColumn(
+            "t", F.ntile(7).over(Window.orderBy(F.asc_nulls_first("v"), "uid"))
         ).collect()
     }
-    assert got == want
+    assert len(got) == 1000 and got == want
