@@ -20,7 +20,9 @@ The scan is four steps, shared by every value column of one call:
 Same numbers as the naive window form, no single-partition stage. A
 running COUNT over a ROWS frame of a total order is ROW_NUMBER, so the
 exact global rank (operators/ranking.py) is a ``count`` spec here; a
-``total`` spec reads the group's row count off the offsets frame alone.
+``total`` spec reads the group's whole sum (or row count) off the offsets
+frame alone, so a caller needing both a running and a whole-group figure
+scans its input once.
 
 STRICT mode (frame ending at the previous ROW) additionally requires the
 scan keys to be unique — pre-aggregate to one row per key first (the
@@ -45,6 +47,11 @@ def _add(a: Column, b: Column) -> Column:
     return F.coalesce(a + b, a, b)
 
 
+def _whole(vc: str) -> Column:
+    # "*" has nothing to sum: its whole-group figure is the row count
+    return F.count(vc) if vc == "*" else F.sum(vc)
+
+
 # agg -> (aggregate over a bucket's rows, fold of earlier buckets' partials,
 # merge of that offset with the within-bucket prefix)
 _AGGS = {
@@ -52,7 +59,7 @@ _AGGS = {
     "count": (F.count, F.sum, _add),
     "max": (F.max, F.max, F.greatest),
     "min": (F.min, F.min, F.least),
-    "total": (F.count, F.sum, None),
+    "total": (_whole, F.sum, None),
 }
 
 
@@ -78,8 +85,9 @@ def prefix_agg(
     Each spec ``(value_col, out_col, agg)`` adds ``out_col``, the running
     ``agg`` of ``value_col``: ``sum``, ``max``, ``min`` or ``count``
     (``value_col="*"`` counts rows). ``total`` is instead the group's
-    whole COUNT of ``value_col``, with no within-bucket window. All specs
-    share one pass of the four steps.
+    whole SUM of ``value_col`` (its row COUNT for ``"*"``), read off the
+    offsets frame with no within-bucket window. All specs share one pass
+    of the four steps.
 
     ``strict=True`` excludes the current row (frame ... AND 1 PRECEDING);
     the first row's strict prefix is NULL (empty frame), matching the

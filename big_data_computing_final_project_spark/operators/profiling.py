@@ -14,7 +14,7 @@ Every function is a single aggregation pass; nothing collects raw rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -25,7 +25,6 @@ from ..functions.stats import (
     power_sums,
     skewness_g1,
 )
-from ..sources.io import local_frame
 
 
 def numeric_columns(df: DataFrame) -> list[str]:
@@ -133,11 +132,11 @@ def describe(df: DataFrame, columns: list[str] | None = None, exact: bool = Fals
             # scan the input twice but each pass is the cheap shape.
             #
             # NOTE exact mode exists for oracle parity; the at-scale
-            # default is the sketch mode above. For exact quantiles of
-            # LOW-CARDINALITY fixed-point columns at scale, use
-            # exact_quantiles_hist (shuffles (value,count) pairs instead
-            # of serializing every row — wins when distinct ≪ rows, which
-            # local SF cannot show).
+            # default is the sketch mode above. For exact quantiles at
+            # scale, use operators/quantiles.exact_quantiles (the
+            # percentile()-identical distributed form: distinct values
+            # collapse map-side and the bucketed prefix scan ranks them,
+            # so no buffer ever holds every row).
             distinct_aggs.append(F.countDistinct(col).alias(f"{c}__distinct"))
         else:
             aggs.append(F.approx_count_distinct(col).alias(f"{c}__distinct"))
@@ -161,91 +160,6 @@ def describe(df: DataFrame, columns: list[str] | None = None, exact: bool = Fals
             )
         )
     return one.select(F.explode(F.array(*rows)).alias("s")).select("s.*").orderBy("column_name")
-
-
-def exact_quantiles_hist(
-    df: DataFrame, columns: list[str], probs: list[float]
-) -> DataFrame:
-    """Exact interpolated quantiles via a value histogram — the scale-safe
-    exact path.
-
-    Spark's ``percentile`` (and any sort-based exact quantile) serializes
-    EVERY row into per-partition aggregation buffers — at 100 TB that is
-    the whole fact table through one aggregate. Real-world measure columns
-    are fixed-point decimals with bounded distinct values, so the exact
-    quantile only needs the (value → count) histogram: one melt +
-    groupBy(column, value) with map-side combine, a cumulative-rank window
-    over the (tiny) distinct-value frame, then order-statistic lookup.
-    Shuffle volume is O(distinct values), not O(rows).
-
-    Interpolation reproduces ``percentile(col, p)`` exactly: 0-based rank
-    ``pos = p·(n−1)``; result = ``v[floor] + (v[ceil] − v[floor])·frac``
-    (nulls excluded from n, matching SQL semantics).
-
-    Returns one row per column: (column_name, qs array<double>, ordered as
-    ``probs``).
-    """
-    melt = F.explode_outer(
-        F.array(
-            *[
-                F.struct(F.lit(c).alias("m"), F.col(c).cast("double").alias("v"))
-                for c in columns
-            ]
-        )
-    )
-    pairs = df.select(melt.alias("s")).select("s.*").filter(F.col("v").isNotNull())
-    hist = pairs.groupBy("m", "v").agg(F.count(F.lit(1)).alias("cnt"))
-    w_cum = Window.partitionBy("m").orderBy("v")
-    w_all = Window.partitionBy("m")
-    cum = (
-        hist.withColumn("hi", F.sum("cnt").over(w_cum))  # ranks < hi
-        .withColumn("lo", F.col("hi") - F.col("cnt"))  # ranks >= lo
-        .withColumn("n", F.sum("cnt").over(w_all))
-    )
-    # each 0-based rank r in [lo, hi) is this row's value; for every prob,
-    # pick the rows covering floor(pos) and ceil(pos) and interpolate
-    aggs = []
-    for i, p in enumerate(probs):
-        pos = F.lit(float(p)) * (F.col("n") - F.lit(1)).cast("double")
-        lf = F.floor(pos)
-        cf = F.ceil(pos)
-        covers = lambda k: (F.col("lo") <= k) & (k < F.col("hi"))  # noqa: E731
-        aggs.append(F.max(F.when(covers(lf), F.col("v"))).alias(f"_lo{i}"))
-        aggs.append(F.max(F.when(covers(cf), F.col("v"))).alias(f"_hi{i}"))
-        aggs.append(F.max(pos - lf.cast("double")).alias(f"_fr{i}"))
-    # distinct count and min/max ride along free: the histogram has one
-    # row per distinct value, already partitioned by column
-    aggs += [
-        F.count(F.lit(1)).alias("_nd"),
-        F.min("v").alias("_vmin"),
-        F.max("v").alias("_vmax"),
-    ]
-    per_col = cum.groupBy("m").agg(*aggs)
-    qs = F.array(
-        *[
-            F.when(F.col(f"_fr{i}") == 0.0, F.col(f"_lo{i}")).otherwise(
-                F.col(f"_lo{i}")
-                + (F.col(f"_hi{i}") - F.col(f"_lo{i}")) * F.col(f"_fr{i}")
-            )
-            for i in range(len(probs))
-        ]
-    )
-    out = per_col.select(
-        F.col("m").alias("column_name"),
-        qs.alias("qs"),
-        F.col("_nd").alias("n_distinct"),
-        F.col("_vmin").alias("vmin"),
-        F.col("_vmax").alias("vmax"),
-    )
-    # an all-null column has no histogram rows at all — re-emit it with
-    # null quantiles (matching percentile()'s null result row) instead of
-    # silently dropping it from the output
-    spine = local_frame(df.sparkSession, [(c,) for c in columns], "column_name string")
-    return (
-        spine.join(out, "column_name", "left")
-        .withColumn("n_distinct", F.coalesce("n_distinct", F.lit(0)))
-        .orderBy("column_name")
-    )
 
 
 def skew_kurt(df: DataFrame, columns: list[str], base_scale: int = 4) -> DataFrame:

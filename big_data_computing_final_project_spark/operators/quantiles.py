@@ -7,8 +7,8 @@ here never concentrates state:
 
 1. collapse to distinct values with counts (one partial-aggregated
    groupBy — state bounded by distinct-value cardinality per partition),
-2. cumulative counts via the bucketed prefix scan (operators/prefix.py —
-   no single-partition window),
+2. cumulative counts and the total via ONE bucketed prefix scan
+   (operators/prefix.py — no single-partition window),
 3. each quantile is then a rank lookup against the cumulative counts.
 
 Two semantics, matching the two engines' exact aggregates:
@@ -65,13 +65,20 @@ def exact_quantiles(
     ``bucket`` must be monotone non-decreasing in ``val`` with a bounded
     domain (it splits the prefix scan); the default ``floor(val/1000)``
     suits price-scaled data — pass an expression over ``val`` for other
-    ranges. The plan runs no job before the action.
+    ranges. Every ``qs`` entry must lie in [0, 1]; others raise
+    ``ValueError``, as Spark's ``percentile()`` rejects them. The plan runs
+    no job before the action.
     """
     if mode not in ("linear", "lower"):
         raise ValueError(f"mode must be 'linear' or 'lower', got {mode!r}")
-    # duplicate / float-colliding entries in qs would multiply rows through
-    # the lo/hi equi-join below — the distinct sorted set is
-    # the only sensible contract
+    # Spark's percentile() rejects these too; a rank lookup would invent
+    # a value below 0 and find none above 1
+    bad = [q for q in qs if not 0.0 <= float(q) <= 1.0]
+    if bad:
+        raise ValueError(f"quantiles must lie in [0, 1], got {bad}")
+    # duplicate / float-colliding entries in qs would multiply output rows
+    # through the per-(group, q) lookups below — the distinct sorted set
+    # is the only sensible contract
     qs = sorted({float(q) for q in qs})
     groups = list(group_cols or [])
     wsel = [] if weight is None else [weight.cast("bigint").alias("__w")]
@@ -84,63 +91,49 @@ def exact_quantiles(
     n_agg = (
         F.count(F.lit(1)) if weight is None else F.sum("__w")
     ).alias("n")
-    # the collapsed (group, val, n) frame is consumed
-    # by the prefix scan TWICE (bucket partials + tagged rows), the total
-    # count, and — in linear mode — two rank lookups; uncached, each
-    # consumer would re-execute the full fact scan + collapse (3-5
-    # traversals).
-    # The frame is bounded by distinct-value cardinality, far below the
-    # fact: cache it, scan the fact once.
+    # the collapsed (group, val, n) frame is consumed by the prefix scan
+    # twice (bucket partials + tagged rows); uncached, each would
+    # re-execute the full fact scan + collapse. The frame is bounded by
+    # distinct-value cardinality, far below the fact: cache it, scan the
+    # fact once.
     c = vals.groupBy(*groups, "val").agg(n_agg).cache()
     b = bucket if bucket is not None else F.floor(F.col("val") / 1000).cast("bigint")
-    w = prefix_agg(c, ["val"], [("n", "cum", "sum")], bucket=b, partition_cols=groups)
+    # the running rank and the group's total weight share one scan
+    w = prefix_agg(
+        c,
+        ["val"],
+        [("n", "cum", "sum"), ("n", "tot", "total")],
+        bucket=b,
+        partition_cols=groups,
+    )
     if mode == "linear":
         # linear mode probes the cumulative frame twice (lo + hi ranks);
         # cache it so the prefix join/window runs once (same row count as
         # the cached collapse — narrow)
         w = w.cache()
-    spark = df.sparkSession
-    qf = spark.range(1).select(
+    qf = df.sparkSession.range(1).select(
         F.explode(F.array(*[F.lit(float(q)) for q in qs])).alias("q")
     )
-    if groups:
-        tot = c.groupBy(*groups).agg(F.sum("n").alias("tot"))
-        ranked = tot.crossJoin(F.broadcast(qf))
-        gjoin = groups
-    else:
-        tot = c.agg(F.sum("n").alias("tot"))
-        ranked = qf.crossJoin(F.broadcast(tot))
-        gjoin = []
+    ranked = w.crossJoin(F.broadcast(qf))
     if mode == "lower":
-        ranked = ranked.withColumn("lo_rank", F.ceil(F.col("q") * F.col("tot")))
         return (
-            w.join(F.broadcast(ranked), gjoin) if gjoin else w.crossJoin(F.broadcast(ranked))
-        ).filter(F.col("cum") >= F.col("lo_rank")).groupBy(*groups, "q").agg(
-            F.min("val").alias("value")
-        ).orderBy(*groups, "q")
+            ranked.filter(F.col("cum") >= F.ceil(F.col("q") * F.col("tot")))
+            .groupBy(*groups, "q")
+            .agg(F.min("val").alias("value"))
+            .orderBy(*groups, "q")
+        )
     # linear: position h = (n-1)*q over the sorted multiset; 0-based row k
     # lives at cumulative rank k+1
-    ranked = (
-        ranked.withColumn("h", (F.col("tot") - F.lit(1)).cast("double") * F.col("q"))
-        .withColumn("lo_rank", F.floor(F.col("h")) + F.lit(1))
-        .withColumn("hi_rank", F.ceil(F.col("h")) + F.lit(1))
+    ranked = ranked.withColumn(
+        "h", (F.col("tot") - F.lit(1)).cast("double") * F.col("q")
     )
-
-    def _rank_join(rk_frame, rank_col):
-        j = (
-            w.join(F.broadcast(rk_frame), gjoin)
-            if gjoin
-            else w.crossJoin(F.broadcast(rk_frame))
-        )
-        return j.filter(F.col("cum") >= F.col(rank_col))
-
     lo = (
-        _rank_join(ranked, "lo_rank")
+        ranked.filter(F.col("cum") >= F.floor(F.col("h")) + F.lit(1))
         .groupBy(*groups, "q", "h")
         .agg(F.min("val").alias("v_lo"))
     )
     hi = (
-        _rank_join(ranked.select(*groups, "q", "hi_rank"), "hi_rank")
+        ranked.filter(F.col("cum") >= F.ceil(F.col("h")) + F.lit(1))
         .groupBy(*groups, "q")
         .agg(F.min("val").alias("v_hi"))
     )

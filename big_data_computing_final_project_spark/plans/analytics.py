@@ -761,20 +761,18 @@ def q197_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast_if_small(part), "l_partkey")
         .groupBy("brand", "val")
         .agg(F.sum(F.col("l_quantity").cast("decimal(38,4)")).alias("w"))
-        .cache()  # three consumers (prefix-scan partials + tagged
-        # rows + brand totals) — the lineitem join/collapse runs once
+        .cache()  # two consumers (prefix-scan partials + tagged rows)
+        # — the lineitem join/collapse runs once
     )
     cum = prefix_agg(
         pa,
         ["val"],
-        [("w", "cumw", "sum")],
+        [("w", "cumw", "sum"), ("w", "tot", "total")],
         partition_cols=["brand"],
         bucket=F.floor(F.col("val") / 1000).cast("bigint"),
     )
-    tot = pa.groupBy("brand").agg(F.sum("w").alias("tot"))
     return (
-        cum.join(F.broadcast(tot), "brand")
-        .where(F.lit(2) * F.col("cumw") >= F.col("tot"))
+        cum.where(F.lit(2) * F.col("cumw") >= F.col("tot"))
         .groupBy("brand")
         .agg(
             F.min("val").alias("weighted_median"),

@@ -33,7 +33,7 @@ from .registry import register
 # oracles can never drift from the tokenization / split-bucket definitions
 # the dedup/text queries certify
 from .dedup import _SQL_BUCKET  # noqa: E402
-from .textops import _SQL_NORM, _SQL_TOKS  # noqa: E402
+from .textops import _SQL_NORM, _SQL_TOKS, fertility, fertility_cols  # noqa: E402
 
 _TWO_60 = float(1 << 60)
 
@@ -778,27 +778,37 @@ ORDER BY source
 @register("q157_corpus_report_card", oracle=_Q157_ORACLE)
 def q157_corpus_report_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
+    d = docs.select("source", "lang", "n_chars", *dup_cols())
+    return dup_exposure(
+        d,
+        (F.sum("n_chars").cast("double") / F.count(F.lit(1))).alias("avg_chars"),
+        F.countDistinct("lang").alias("n_langs"),
+    ).orderBy("source")
+
+
+def dup_cols() -> list[Column]:
+    """Per-document inputs of the dup-exposure signal: token count
+    ``n_toks`` and ``grp_sz``, the number of documents corpus-wide that
+    share the text's fingerprint (a window keyed on it)."""
     w = Window.partitionBy(X.fingerprint(F.col("text")))
-    d = docs.select(
-        "source",
-        "lang",
-        "n_chars",
+    return [
         X.token_count(F.col("text")).cast("bigint").alias("n_toks"),
         F.count(F.lit(1)).over(w).alias("grp_sz"),
-    )
+    ]
+
+
+def dup_exposure(d: DataFrame, *volume: Column) -> DataFrame:
+    """Per-source exact-dup exposure of a ``(source, *dup_cols())`` frame:
+    n_docs, n_tokens, the caller's further ``volume`` aggregates, dup_docs
+    and dup_rate — q157's table and q232's signal."""
     n_docs = F.count(F.lit(1))
     dup_docs = F.count(F.when(F.col("grp_sz") > 1, 1))
-    return (
-        d.groupBy("source")
-        .agg(
-            n_docs.alias("n_docs"),
-            F.sum("n_toks").cast("bigint").alias("n_tokens"),
-            (F.sum("n_chars").cast("double") / n_docs).alias("avg_chars"),
-            F.countDistinct("lang").alias("n_langs"),
-            dup_docs.alias("dup_docs"),
-            (dup_docs.cast("double") / n_docs).alias("dup_rate"),
-        )
-        .orderBy("source")
+    return d.groupBy("source").agg(
+        n_docs.alias("n_docs"),
+        F.sum("n_toks").cast("bigint").alias("n_tokens"),
+        *volume,
+        dup_docs.alias("dup_docs"),
+        (dup_docs.cast("double") / n_docs).alias("dup_rate"),
     )
 
 
@@ -1082,43 +1092,23 @@ def q232_curation_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.multimodal import attach_media_mix, decode_health
     from .dedup import q225_ngram_novelty
 
-    # the dup-exposure signal (q157's fingerprint window) and the
-    # fertility signal (q210's normalize + tokenize sums) share ONE cached
-    # per-doc frame instead of two corpus scans that each run the
-    # tokenizer (narrow,
-    # corpus-linear — SCALING.md persist-vs-recompute policy, the
-    # q127/q132 precedent). The aggregate expressions are q157's/q210's
-    # verbatim, so the scorecard columns are value-identical
-    # (oracle-gated at both SFs). The remaining passes genuinely cannot
-    # merge: the decode pass reads media bytes, the novelty pass needs
-    # the token ARRAYS (shingle posting lists), this one only counts.
+    # the dup-exposure signal (q157's) and the fertility signal (q210's)
+    # share ONE cached per-doc frame instead of two corpus scans that each
+    # run the tokenizer (narrow, corpus-linear — SCALING.md
+    # persist-vs-recompute policy, the q127/q132 precedent); both
+    # aggregates are the registered queries' own functions. The remaining
+    # passes genuinely cannot merge: the decode pass reads media bytes,
+    # the novelty pass needs the token ARRAYS (shingle posting lists),
+    # this one only counts.
     tdocs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy(X.fingerprint(F.col("text")))
     d = tdocs.select(
         "source",
-        X.token_count(F.col("text")).cast("bigint").alias("n_toks"),
-        F.count(F.lit(1)).over(w).alias("grp_sz"),
-        F.length(X.normalize(F.col("text"))).cast("bigint").alias("norm_chars"),
-        F.size(X.tokens(F.col("text"))).cast("bigint").alias("n_words"),
+        *dup_cols(),
+        *fertility_cols(),
         F.col("text").isNotNull().alias("has_text"),
     ).cache()
-    n_docs = F.count(F.lit(1))
-    dup_docs = F.count(F.when(F.col("grp_sz") > 1, 1))
-    rep = d.groupBy("source").agg(
-        n_docs.alias("n_docs"),
-        F.sum("n_toks").cast("bigint").alias("n_tokens"),
-        (dup_docs.cast("double") / n_docs).alias("dup_rate"),
-    )
-    fert = (
-        d.filter(F.col("has_text"))
-        .groupBy("source")
-        .agg(
-            (
-                F.sum("norm_chars").cast("bigint").cast("double")
-                / F.sum("n_words").cast("bigint")
-            ).alias("chars_per_word")
-        )
-    )
+    rep = dup_exposure(d).drop("dup_docs")
+    fert = fertility(d.filter(F.col("has_text"))).select("source", "chars_per_word")
     # the REAL decode path (q220's contract), not the oracle's planted
     # restatement — the scorecard stays honest about what the decoders saw
     docs = load_table(spark, sf_dir, "documents", fan_out_ok=False)  # see q51

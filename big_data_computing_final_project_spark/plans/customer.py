@@ -195,10 +195,21 @@ def q178_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("p1", "p2")
         .agg(F.count(F.lit(1)).alias("n_both"))
     )
-    i1 = item.select(F.col("p").alias("p1"), F.col("n_p").alias("n_ante_fwd"))
-    i2 = item.select(F.col("p").alias("p2"), F.col("n_p").alias("n_cons_fwd"))
+    return basket_rules(pair, item, baskets, _Q178_MIN_BOTH, _Q178_TOPK)
+
+
+def basket_rules(
+    pairs: DataFrame, items: DataFrame, baskets: DataFrame, min_both: int, topk: int
+) -> DataFrame:
+    """q178's rule table from pair counts ``(p1, p2, n_both)``, item counts
+    ``(p, n_p)`` and the one-row basket count ``(n_orders)``: both rule
+    directions, ``n_both >= min_both``, the deterministic (lift,
+    antecedent, consequent) top-k — ONE formula serving batch q178 and the
+    store fold (streaming/events.basket_rules_from_store)."""
+    i1 = items.select(F.col("p").alias("p1"), F.col("n_p").alias("n_ante_fwd"))
+    i2 = items.select(F.col("p").alias("p2"), F.col("n_p").alias("n_cons_fwd"))
     enriched = (
-        pair.join(broadcast_if_small(i1), "p1")
+        pairs.join(broadcast_if_small(i1), "p1")
         .join(broadcast_if_small(i2), "p2")
         .crossJoin(F.broadcast(baskets))
     )
@@ -218,7 +229,7 @@ def q178_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_ante_fwd").alias("n_cons"),
         "n_orders",
     )
-    rules = fwd.unionAll(rev).filter(F.col("n_both") >= _Q178_MIN_BOTH)
+    rules = fwd.unionAll(rev).filter(F.col("n_both") >= min_both)
     lift = (F.col("n_both") * F.col("n_orders")).cast("double") / (
         F.col("n_ante") * F.col("n_cons")
     ).cast("double")
@@ -232,7 +243,7 @@ def q178_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             lift.alias("lift"),
         )
         .orderBy(F.col("lift").desc(), "antecedent", "consequent")
-        .limit(_Q178_TOPK)
+        .limit(topk)
     )
 
 

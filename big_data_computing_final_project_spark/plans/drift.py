@@ -36,7 +36,7 @@ evaluated on sketch quantiles instead of exact ECDFs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
@@ -107,6 +107,32 @@ def fold_mean_expr(flag: F.Column, val: F.Column) -> F.Column:
     return F.aggregate(vals, F.lit(0.0), lambda a, x: a + x) / F.count(F.when(flag, 1))
 
 
+def _split_counts() -> list[F.Column]:
+    """The reference/current row counts of the hash split (``is_ref``)."""
+    return [
+        F.count(F.when(F.col("is_ref"), 1)).alias("n_ref"),
+        F.count(F.when(~F.col("is_ref"), 1)).alias("n_cur"),
+    ]
+
+
+def _by_keys(left: DataFrame, right: DataFrame, keys: list[str]) -> DataFrame:
+    """Broadcast a per-key frame back onto ``left``: joined on ``keys``,
+    or crossed in as one row when there are none."""
+    if keys:
+        return left.join(F.broadcast(right), keys)
+    return left.crossJoin(F.broadcast(right))
+
+
+def with_split_totals(counts: DataFrame, keys: list[str]) -> DataFrame:
+    """``counts`` plus each key's split totals ``tr``/``tc`` (the sums of
+    its ``n_ref``/``n_cur``), the denominators of every drift share —
+    shared with streaming/events._psi_fold."""
+    tot = counts.groupBy(*keys).agg(
+        F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc")
+    )
+    return _by_keys(counts, tot, keys)
+
+
 # ---------------------------------------------------------------------------
 # q151 — PSI per bin. Bin width/origin come from the reference split's
 # min/max only (current rows outside clamp into the edge bins, exactly the
@@ -149,29 +175,31 @@ ORDER BY bin
 @register("q151_psi_drift", oracle=_Q151_ORACLE)
 def q151_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
-    d = orders.select(
-        F.col("o_totalprice").alias("v"), (_obucket() < 80).alias("is_ref")
+    return _psi_terms(
+        orders.select(F.col("o_totalprice").alias("v"), (_obucket() < 80).alias("is_ref")),
+        [],
     )
-    edges = d.where("is_ref").agg(
+
+
+def _psi_terms(d: DataFrame, keys: list[str]) -> DataFrame:
+    """Frozen-bin PSI terms of ``d(*keys, v, is_ref)``: edges, bins,
+    shares and totals per key — q151 unkeyed, q160 per segment."""
+    edges = d.where("is_ref").groupBy(*keys).agg(
         F.min("v").alias("lo"), F.max("v").alias("hi")
     )
     width = (F.col("hi") - F.col("lo")) / float(_N_BINS)
-    binned = d.crossJoin(F.broadcast(edges)).select(
+    binned = _by_keys(d, edges, keys).select(
+        *keys,
         bin_expr(F.col("v"), F.col("lo"), width).alias("bin"),
         "is_ref",
     )
-    counts = binned.groupBy("bin").agg(
-        F.count(F.when(F.col("is_ref"), 1)).alias("n_ref"),
-        F.count(F.when(~F.col("is_ref"), 1)).alias("n_cur"),
-    )
-    tot = counts.agg(
-        F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc")
-    )
+    counts = binned.groupBy(*keys, "bin").agg(*_split_counts())
     ref_share = F.col("n_ref").cast("double") / F.col("tr")
     cur_share = F.col("n_cur").cast("double") / F.col("tc")
     return (
-        counts.crossJoin(F.broadcast(tot))
+        with_split_totals(counts, keys)
         .select(
+            *keys,
             "bin",
             "n_ref",
             "n_cur",
@@ -179,7 +207,7 @@ def q151_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             cur_share.alias("cur_share"),
             F.round(psi_term_expr(ref_share, cur_share), 12).alias("psi_term"),
         )
-        .orderBy("bin")
+        .orderBy(*keys, "bin")
     )
 
 
@@ -223,12 +251,13 @@ def q152_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = orders.select(
         F.col("o_totalprice").alias("v"), (_obucket() < 80).alias("is_ref")
     )
-    # Both cumsums ride ONE bucketed pass (two prefix_agg specs — they share
-    # the partial groupBy, offset window, within-bucket sort and join), and
-    # the distinct-value frame is cached for its three consumers (partials
-    # + row join + totals), so the orders scan + collapse runs once. The cache is bounded by the value domain, the same
-    # cardinality argument as exact_quantiles' collapsed frame (SCALING.md
-    # persist-vs-recompute policy).
+    # Both cumsums and both split totals ride ONE bucketed pass (four
+    # prefix_agg specs share the partial groupBy, offset window,
+    # within-bucket sort and join), and the distinct-value frame is cached
+    # for its two consumers (partials + row join), so the orders scan +
+    # collapse runs once. The cache is bounded by the value domain, the
+    # same cardinality argument as exact_quantiles' collapsed frame
+    # (SCALING.md persist-vs-recompute policy).
     per = (
         d.groupBy("v")
         .agg(
@@ -238,22 +267,21 @@ def q152_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cache()
     )
     bkt = F.floor(F.col("v") / 1000).cast("bigint")
-    c = prefix_agg(
-        per, ["v"], [("nr", "cr", "sum"), ("nc", "cc", "sum")], bucket=bkt
-    )
-    tot = per.agg(F.sum("nr").alias("tr"), F.sum("nc").alias("tc"))
-    return (
-        c.crossJoin(F.broadcast(tot))
-        .agg(
-            F.max("tr").cast("bigint").alias("n_ref"),
-            F.max("tc").cast("bigint").alias("n_cur"),
-            F.max(
-                F.abs(
-                    F.col("cr").cast("double") / F.col("tr")
-                    - F.col("cc").cast("double") / F.col("tc")
-                )
-            ).alias("ks_stat"),
-        )
+    specs = [
+        ("nr", "cr", "sum"),
+        ("nc", "cc", "sum"),
+        ("nr", "tr", "total"),
+        ("nc", "tc", "total"),
+    ]
+    return prefix_agg(per, ["v"], specs, bucket=bkt).agg(
+        F.max("tr").cast("bigint").alias("n_ref"),
+        F.max("tc").cast("bigint").alias("n_cur"),
+        F.max(
+            F.abs(
+                F.col("cr").cast("double") / F.col("tr")
+                - F.col("cc").cast("double") / F.col("tc")
+            )
+        ).alias("ks_stat"),
     )
 
 
@@ -295,10 +323,7 @@ def q153_chi2_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = orders.select(
         F.col("o_orderpriority").alias("cat"), (_obucket() < 80).alias("is_ref")
     )
-    counts = d.groupBy("cat").agg(
-        F.count(F.when(F.col("is_ref"), 1)).alias("n_ref"),
-        F.count(F.when(~F.col("is_ref"), 1)).alias("n_cur"),
-    )
+    counts = d.groupBy("cat").agg(*_split_counts())
     tot = counts.agg(
         F.sum("n_ref").alias("tr"),
         F.sum("n_cur").alias("tc"),
@@ -363,21 +388,28 @@ FROM c ORDER BY dim
 
 @register("q154_embedding_drift", oracle=_Q154_ORACLE)
 def q154_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _centroid_shift(spark, sf_dir, [])
+
+
+def _centroid_shift(spark: SparkSession, sf_dir: str, keys: list[str]) -> DataFrame:
+    """Per-(key..., dim) sorted-fold centroids of the embeddings split
+    and their shift — q154 unkeyed, q162 per label."""
     from .similarity import as_double
 
     v = load_table(spark, sf_dir, "embeddings").select(
+        *keys,
         (_bucket("vec_id") < 80).alias("is_ref"),
         as_double(F.col("embedding")).alias("e"),
     )
-    ex = v.select("is_ref", F.posexplode("e").alias("dim", "val"))
-    c = ex.groupBy("dim").agg(
-        F.count(F.when(F.col("is_ref"), 1)).alias("n_ref"),
-        F.count(F.when(~F.col("is_ref"), 1)).alias("n_cur"),
+    ex = v.select(*keys, "is_ref", F.posexplode("e").alias("dim", "val"))
+    c = ex.groupBy(*keys, "dim").agg(
+        *_split_counts(),
         fold_mean_expr(F.col("is_ref"), F.col("val")).alias("c_ref"),
         fold_mean_expr(~F.col("is_ref"), F.col("val")).alias("c_cur"),
     )
     shift = F.col("c_cur") - F.col("c_ref")
     return c.select(
+        *keys,
         "dim",
         "n_ref",
         "n_cur",
@@ -385,7 +417,7 @@ def q154_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_cur",
         shift.alias("shift"),
         (shift * shift).alias("shift2"),
-    ).orderBy("dim")
+    ).orderBy(*keys, "dim")
 
 
 # ---------------------------------------------------------------------------
@@ -436,8 +468,6 @@ ORDER BY term
 
 @register("q155_token_js_drift", oracle=_q155_oracle())
 def q155_token_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import text as X
-
     docs = load_table(spark, sf_dir, "documents")
     toks = docs.select(
         (_bucket("doc_id") < 80).alias("is_ref"), X.tokens(F.col("text")).alias("toks")
@@ -445,22 +475,19 @@ def q155_token_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = toks.select(
         "is_ref", F.explode_outer("toks").alias("term")
     ).where(F.col("term").isNotNull() & (F.col("term") != ""))
-    counts = tok.groupBy("term").agg(
-        F.count(F.when(F.col("is_ref"), 1)).alias("n_ref"),
-        F.count(F.when(~F.col("is_ref"), 1)).alias("n_cur"),
-    )
-    tot = counts.agg(F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc"))
+    return _js_terms(tok, [])
+
+
+def _js_terms(tok: DataFrame, keys: list[str]) -> DataFrame:
+    """Per-(key..., term) JS terms of a ``(*keys, is_ref, term)`` token
+    frame, shares over each key's totals — q155 unkeyed, q161 per source."""
+    counts = tok.groupBy(*keys, "term").agg(*_split_counts())
     p = F.col("n_ref").cast("double") / F.col("tr")
     q = F.col("n_cur").cast("double") / F.col("tc")
     return (
-        counts.crossJoin(F.broadcast(tot))
-        .select(
-            "term",
-            "n_ref",
-            "n_cur",
-            F.round(js_term_expr(p, q), 12).alias("js_term"),
-        )
-        .orderBy("term")
+        with_split_totals(counts, keys)
+        .select(*keys, "term", "n_ref", "n_cur", F.round(js_term_expr(p, q), 12).alias("js_term"))
+        .orderBy(*keys, "term")
     )
 
 
@@ -566,37 +593,7 @@ def q160_psi_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").alias("v"),
         (_obucket() < 80).alias("is_ref"),
     )
-    edges = d.where("is_ref").groupBy("segment").agg(
-        F.min("v").alias("lo"), F.max("v").alias("hi")
-    )
-    width = (F.col("hi") - F.col("lo")) / float(_N_BINS)
-    binned = d.join(F.broadcast(edges), "segment").select(
-        "segment",
-        bin_expr(F.col("v"), F.col("lo"), width).alias("bin"),
-        "is_ref",
-    )
-    counts = binned.groupBy("segment", "bin").agg(
-        F.count(F.when(F.col("is_ref"), 1)).alias("n_ref"),
-        F.count(F.when(~F.col("is_ref"), 1)).alias("n_cur"),
-    )
-    tot = counts.groupBy("segment").agg(
-        F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc")
-    )
-    ref_share = F.col("n_ref").cast("double") / F.col("tr")
-    cur_share = F.col("n_cur").cast("double") / F.col("tc")
-    return (
-        counts.join(F.broadcast(tot), "segment")
-        .select(
-            "segment",
-            "bin",
-            "n_ref",
-            "n_cur",
-            ref_share.alias("ref_share"),
-            cur_share.alias("cur_share"),
-            F.round(psi_term_expr(ref_share, cur_share), 12).alias("psi_term"),
-        )
-        .orderBy("segment", "bin")
-    )
+    return _psi_terms(d, ["segment"])
 
 
 # ---------------------------------------------------------------------------
@@ -643,34 +640,13 @@ ORDER BY counts.source, term
 
 @register("q161_token_js_by_source", oracle=_q161_oracle())
 def q161_token_js_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..functions import text as X
-
     docs = load_table(spark, sf_dir, "documents")
     tok = docs.select(
         "source",
         (_bucket("doc_id") < 80).alias("is_ref"),
         F.explode_outer(X.tokens(F.col("text"))).alias("term"),
     ).where(F.col("term").isNotNull() & (F.col("term") != ""))
-    counts = tok.groupBy("source", "term").agg(
-        F.count(F.when(F.col("is_ref"), 1)).alias("n_ref"),
-        F.count(F.when(~F.col("is_ref"), 1)).alias("n_cur"),
-    )
-    tot = counts.groupBy("source").agg(
-        F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc")
-    )
-    p = F.col("n_ref").cast("double") / F.col("tr")
-    q = F.col("n_cur").cast("double") / F.col("tc")
-    return (
-        counts.join(F.broadcast(tot), "source")
-        .select(
-            "source",
-            "term",
-            "n_ref",
-            "n_cur",
-            F.round(js_term_expr(p, q), 12).alias("js_term"),
-        )
-        .orderBy("source", "term")
-    )
+    return _js_terms(tok, ["source"])
 
 
 # ---------------------------------------------------------------------------
@@ -711,28 +687,4 @@ FROM c ORDER BY label, dim
 
 @register("q162_embedding_drift_by_label", oracle=_Q162_ORACLE)
 def q162_embedding_drift_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .similarity import as_double
-
-    v = load_table(spark, sf_dir, "embeddings").select(
-        "label",
-        (_bucket("vec_id") < 80).alias("is_ref"),
-        as_double(F.col("embedding")).alias("e"),
-    )
-    ex = v.select("label", "is_ref", F.posexplode("e").alias("dim", "val"))
-    c = ex.groupBy("label", "dim").agg(
-        F.count(F.when(F.col("is_ref"), 1)).alias("n_ref"),
-        F.count(F.when(~F.col("is_ref"), 1)).alias("n_cur"),
-        fold_mean_expr(F.col("is_ref"), F.col("val")).alias("c_ref"),
-        fold_mean_expr(~F.col("is_ref"), F.col("val")).alias("c_cur"),
-    )
-    shift = F.col("c_cur") - F.col("c_ref")
-    return c.select(
-        "label",
-        "dim",
-        "n_ref",
-        "n_cur",
-        "c_ref",
-        "c_cur",
-        shift.alias("shift"),
-        (shift * shift).alias("shift2"),
-    ).orderBy("label", "dim")
+    return _centroid_shift(spark, sf_dir, ["label"])

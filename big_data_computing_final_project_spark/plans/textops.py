@@ -1067,28 +1067,35 @@ ORDER BY source
 )
 def q210_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    d = docs.filter(F.col("text").isNotNull()).select(
-        "source",
+    d = docs.filter(F.col("text").isNotNull()).select("source", *fertility_cols())
+    return fertility(d).orderBy("source")
+
+
+def fertility_cols() -> list[F.Column]:
+    """Per-document inputs of the fertility signal: normalized characters
+    ``n_chars`` and whitespace words ``n_words`` of ``text``."""
+    return [
         F.length(X.normalize(F.col("text"))).cast("bigint").alias("n_chars"),
         F.size(X.tokens(F.col("text"))).cast("bigint").alias("n_words"),
-    )
-    return (
-        d.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-            F.sum("n_words").cast("bigint").alias("total_words"),
-        )
-        .select(
-            "source",
-            "n_docs",
-            "total_chars",
-            "total_words",
-            (
-                F.col("total_chars").cast("double") / F.col("total_words")
-            ).alias("chars_per_word"),
-        )
-        .orderBy("source")
+    ]
+
+
+def fertility(d: DataFrame) -> DataFrame:
+    """Per-source tokenizer fertility of a ``(source, *fertility_cols())``
+    frame of non-null texts: n_docs, total_chars, total_words and
+    chars_per_word — q210's table and q232's signal."""
+    return d.groupBy("source").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("n_chars").cast("bigint").alias("total_chars"),
+        F.sum("n_words").cast("bigint").alias("total_words"),
+    ).select(
+        "source",
+        "n_docs",
+        "total_chars",
+        "total_words",
+        (
+            F.col("total_chars").cast("double") / F.col("total_words")
+        ).alias("chars_per_word"),
     )
 
 
@@ -1096,11 +1103,11 @@ def q210_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
 # q221 — vocabulary coverage curve: for candidate vocabulary sizes V, the
 # share of total token mass covered by the top-V tokens (frequency desc,
 # token asc tiebreak) — the sizing primitive behind "how big does the
-# tokenizer vocab need to be for 99% coverage of this corpus". Ranks and
-# cumulative mass ride the bucketed prefix scan (operators/prefix.py,
-# bucket = NEGATED frequency octave, monotone in the freq-desc scan and
-# bounded by 64 bands — q207's spectrum argument), so no stage serializes
-# the vocabulary into one task. All counts are exact BIGINTs; each
+# tokenizer vocab need to be for 99% coverage of this corpus". Ranks,
+# cumulative mass and the vocabulary totals ride the bucketed prefix scan
+# (operators/prefix.py, bucket = NEGATED frequency octave, monotone in
+# the freq-desc scan and bounded by 64 bands — q207's spectrum argument),
+# so no stage serializes the vocabulary into one task. All counts are exact BIGINTs; each
 # coverage share is one bigint/bigint division per output row.
 # ---------------------------------------------------------------------------
 
@@ -1153,20 +1160,22 @@ def q221_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.lit(1) - F.length(F.conv(F.col("freq").cast("string"), 10, 2))
         ).cast("bigint").alias("neg_octave"),
-    ).cache()  # the prefix pass and the totals agg would each re-execute
-    # the corpus explode + token count; the vocab-sized frame is the
-    # natural cache point.
-    # Rank + cumulative mass share ONE bucketed prefix pass
-    # (two prefix_agg specs): one partial groupBy, one offset window, one
-    # within-bucket sort, one join
+    ).cache()  # the prefix pass reads it twice (partials + row join),
+    # and each read would re-execute the corpus explode + token count; the
+    # vocab-sized frame is the natural cache point.
+    # Rank, cumulative mass and both vocabulary totals share ONE bucketed
+    # prefix pass (four prefix_agg specs): one partial groupBy, one offset
+    # window, one within-bucket sort, one join
     ranked = prefix_agg(
         tf,
         ["neg_freq", "token"],
-        [("*", "rk", "count"), ("freq", "cum", "sum")],
+        [
+            ("*", "rk", "count"),
+            ("freq", "cum", "sum"),
+            ("*", "n_vocab", "total"),
+            ("freq", "total_occ", "total"),
+        ],
         bucket=F.col("neg_octave"),
-    )
-    tot = tf.agg(
-        F.sum("freq").alias("total_occ"), F.count(F.lit(1)).alias("n_vocab")
     )
     sizes = spark.range(1).select(
         F.explode(
@@ -1182,8 +1191,11 @@ def q221_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(sizes))
         .filter(F.col("rk") <= F.col("vocab_size"))
         .groupBy("vocab_size")
-        .agg(F.max("cum").cast("bigint").alias("covered_occurrences"))
-        .crossJoin(F.broadcast(tot))
+        .agg(
+            F.max("cum").cast("bigint").alias("covered_occurrences"),
+            F.max("n_vocab").alias("n_vocab"),
+            F.max("total_occ").alias("total_occ"),
+        )
         .select(
             F.col("vocab_size").cast("int").alias("vocab_size"),
             F.least(F.col("vocab_size").cast("bigint"), F.col("n_vocab"))

@@ -1117,7 +1117,7 @@ def _psi_fold(
       drift would never alert. Shares are 0.0 when their total is 0, so
       the eps floor turns total loss into the LARGEST signal instead.
     """
-    from ..plans.drift import psi_term_expr
+    from ..plans.drift import psi_term_expr, with_split_totals
 
     # zero micro-batches processed: empty fold -> ref-only bins, n_cur = 0
     # via the full_outer + fill below (uniform empty-store contract)
@@ -1133,13 +1133,7 @@ def _psi_fold(
         .join(cur, [*key_cols, "bin"], "full_outer")
         .na.fill(0, ["n_ref", "n_cur"])
     )
-    totals = [F.sum("n_ref").alias("tr"), F.sum("n_cur").alias("tc")]
-    if key_cols:
-        tot = joined.groupBy(*key_cols).agg(*totals)
-        with_tot = joined.join(F.broadcast(tot), list(key_cols))
-    else:
-        tot = joined.agg(*totals)
-        with_tot = joined.crossJoin(F.broadcast(tot))
+    with_tot = with_split_totals(joined, key_cols)
     ref_share = F.when(
         F.col("tr") > 0, F.col("n_ref").cast("double") / F.col("tr")
     ).otherwise(F.lit(0.0))
@@ -2694,46 +2688,10 @@ def basket_rules_from_store(
 ) -> DataFrame:
     """Fold the partials into q178's rule table (same thresholds, same
     deterministic (lift, antecedent, consequent) top-k)."""
+    from ..plans.customer import basket_rules
+
     pairs, items, baskets = (p.fold(spark, store_dir) for p in _BASKET.parts)
-    i1 = items.select(F.col("p").alias("p1"), F.col("n_p").alias("n_ante_fwd"))
-    i2 = items.select(F.col("p").alias("p2"), F.col("n_p").alias("n_cons_fwd"))
-    enriched = (
-        pairs.join(F.broadcast(i1), "p1")
-        .join(F.broadcast(i2), "p2")
-        .crossJoin(F.broadcast(baskets))
-    )
-    fwd = enriched.select(
-        F.col("p1").alias("antecedent"),
-        F.col("p2").alias("consequent"),
-        "n_both",
-        F.col("n_ante_fwd").alias("n_ante"),
-        F.col("n_cons_fwd").alias("n_cons"),
-        "n_orders",
-    )
-    rev = enriched.select(
-        F.col("p2").alias("antecedent"),
-        F.col("p1").alias("consequent"),
-        "n_both",
-        F.col("n_cons_fwd").alias("n_ante"),
-        F.col("n_ante_fwd").alias("n_cons"),
-        "n_orders",
-    )
-    rules = fwd.unionAll(rev).filter(F.col("n_both") >= min_both)
-    lift = (F.col("n_both") * F.col("n_orders")).cast("double") / (
-        F.col("n_ante") * F.col("n_cons")
-    ).cast("double")
-    return (
-        rules.select(
-            "antecedent",
-            "consequent",
-            F.col("n_both").cast("bigint").alias("n_both"),
-            (F.col("n_both").cast("double") / F.col("n_orders")).alias("support"),
-            (F.col("n_both").cast("double") / F.col("n_ante")).alias("confidence"),
-            lift.alias("lift"),
-        )
-        .orderBy(F.col("lift").desc(), "antecedent", "consequent")
-        .limit(topk)
-    )
+    return basket_rules(pairs, items, baskets, min_both, topk)
 
 
 # ---------------------------------------------------------------------------

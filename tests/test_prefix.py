@@ -122,16 +122,19 @@ _FRAMES = {
         [("v", "out0", "sum")],
         [("v", "out0", "sum"), ("uid", "out1", "max"), ("uid", "out2", "min")],
         [("*", "out0", "count"), ("*", "out1", "total"), ("v", "out2", "sum")],
+        [("v", "out0", "total"), ("w", "out1", "total"), ("w", "out2", "sum")],
     ],
-    ids=["one", "sum_max_min", "count_total_sum"],
+    ids=["one", "sum_max_min", "count_total_sum", "sum_totals"],
 )
 @pytest.mark.parametrize("parts", [None, ["g"]], ids=["global", "partitioned"])
 def test_prefix_specs_equal_windows(spark, specs, parts):
     """Several specs over one ordering: every output column equals its own
     single-partition window form on shuffled input (``total`` is the
-    whole-group count)."""
+    whole-group row count for ``"*"`` and the whole-group sum otherwise;
+    ``w`` is ``v`` with one null)."""
     vals = [5, 3, 3, 9, 1, 3, 9, 0, 7, 7, 2, 2, 2, 8, 4, 6, 11, 10, 12]
     df = _df(spark, vals)
+    df = df.withColumn("w", F.when(F.col("uid") != 4, F.col("v")))
     got = prefix_agg(
         df, ["v", "uid"], specs, bucket=(F.col("v") / 4).cast("bigint"),
         partition_cols=parts,
@@ -141,7 +144,11 @@ def test_prefix_specs_equal_windows(spark, specs, parts):
     want = df.select(
         "uid",
         *[
-            (F.count(vc).over(by_group) if agg == "total" else _FRAMES[agg](vc).over(running))
+            (
+                (F.count if vc == "*" else F.sum)(vc).over(by_group)
+                if agg == "total"
+                else _FRAMES[agg](vc).over(running)
+            )
             .alias(oc)
             for vc, oc, agg in specs
         ],
@@ -156,24 +163,39 @@ def test_prefix_specs_equal_windows(spark, specs, parts):
 # operator (VERDICT r6 item 2: q21's percentile() buffer replaced)
 
 
-def test_exact_quantiles_linear_matches_spark_percentile(spark, sf_dir):
+@pytest.mark.parametrize("col", ["l_quantity", "l_discount", "l_extendedprice"])
+def test_exact_quantiles_linear_matches_spark_percentile(spark, sf_dir, col):
+    """Bit-exact against percentile(), the edge probabilities included;
+    l_quantity carries injected nulls, which both skip."""
     from big_data_computing_final_project_spark.catalog import load_table
     from big_data_computing_final_project_spark.operators.quantiles import (
         exact_quantiles,
     )
 
-    li = load_table(spark, sf_dir, "lineitem")
-    qs = [0.01, 0.25, 0.5, 0.75, 0.99]
-    got = {
-        r.q: r.value for r in exact_quantiles(li, "l_extendedprice", qs).collect()
-    }
+    li = load_table(spark, sf_dir, "lineitem").withColumn(
+        "l_quantity",
+        F.when(F.col("l_extendedprice") <= 40000, F.col("l_quantity")),
+    )
+    qs = [0.0, 0.01, 0.25, 0.5, 0.75, 0.99, 1.0]
+    got = {r.q: r.value for r in exact_quantiles(li, col, qs).collect()}
     arr = ", ".join(str(q) for q in qs)
-    want = li.agg(
-        F.expr(f"percentile(l_extendedprice, array({arr}))").alias("p")
-    ).collect()[0].p
+    want = li.agg(F.expr(f"percentile({col}, array({arr}))").alias("p")).collect()[0].p
     assert len(got) == len(qs)
     for q, w in zip(qs, want):
         assert got[q] == w, (q, got[q], w)  # bit-exact, not approx
+
+
+@pytest.mark.parametrize("mode", ["linear", "lower"])
+def test_exact_quantiles_rejects_out_of_range_qs(spark, mode):
+    """percentile() refuses probabilities outside [0, 1]; a rank lookup
+    would invent a value below 0 and drop one above 1."""
+    from big_data_computing_final_project_spark.operators.quantiles import (
+        exact_quantiles,
+    )
+
+    df = spark.range(10).select(F.col("id").cast("double").alias("x"))
+    with pytest.raises(ValueError, match=r"\[-0\.5, 1\.5\]"):
+        exact_quantiles(df, "x", [-0.5, 0.5, 1.5], mode=mode, bucket=F.col("val"))
 
 
 def test_exact_quantiles_lower_is_smallest_reaching_rank(spark):

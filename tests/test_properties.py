@@ -102,54 +102,6 @@ def test_macro_f1_matches_python_on_random_confusions(spark, pairs):
     assert abs(got - expected) < 1e-12, (got, expected)
 
 
-def test_exact_quantiles_hist_matches_percentile_bitwise(spark, sf_dir):
-    """The value-histogram exact quantile must reproduce percentile()'s
-    interpolation bit-for-bit (incl. edge probs and a null-bearing col)."""
-    from pyspark.sql import functions as F
-
-    from big_data_computing_final_project_spark.catalog import load_table
-    from big_data_computing_final_project_spark.operators.profiling import exact_quantiles_hist
-
-    cols = ["l_quantity", "l_discount", "l_extendedprice"]
-    probs = [0.0, 0.01, 0.25, 0.5, 0.75, 0.999, 1.0]
-    li = load_table(spark, sf_dir, "lineitem").select(*cols)
-    # inject nulls into one column: percentile ignores them, so must we
-    li = li.withColumn(
-        "l_quantity", F.when(F.col("l_extendedprice") > 40000, None).otherwise(F.col("l_quantity"))
-    )
-    plist = ",".join(map(str, probs))
-    ref = li.agg(
-        *[F.expr(f"percentile({c}, array({plist}))").alias(c) for c in cols]
-    ).collect()[0]
-    got = {r.column_name: r for r in exact_quantiles_hist(li, cols, probs).collect()}
-    for c in cols:
-        assert list(ref[c]) == list(got[c].qs), c
-    # distinct/min/max ride-alongs
-    nd = li.agg(*[F.countDistinct(c).alias(c) for c in cols]).collect()[0]
-    for c in cols:
-        assert got[c].n_distinct == nd[c]
-
-
-def test_exact_quantiles_hist_keeps_all_null_columns(spark, sf_dir):
-    """An all-null column must come back as a row with null quantiles
-    (percentile() returns a null result row), not silently vanish."""
-    import pyspark.sql.functions as F
-
-    from big_data_computing_final_project_spark.operators.profiling import (
-        exact_quantiles_hist,
-    )
-
-    df = spark.range(10).select(
-        F.col("id").cast("double").alias("x"),
-        F.lit(None).cast("double").alias("all_null"),
-    )
-    rows = {r.column_name: r for r in exact_quantiles_hist(df, ["x", "all_null"], [0.5]).collect()}
-    assert set(rows) == {"x", "all_null"}
-    assert rows["x"].qs == [4.5]
-    assert rows["all_null"].qs is None
-    assert rows["all_null"].n_distinct == 0
-
-
 vec_floats = st.floats(
     min_value=-100.0, max_value=100.0, allow_nan=False, allow_infinity=False, width=32
 )

@@ -65,11 +65,11 @@ def main() -> int:
             srows = sdf.collect()
             scols = sdf.columns
         except Exception as e:
-            print(f"FAIL  {name}: spark error: {e}")
+            print(f"FAIL  {name}: spark error: {e}", flush=True)
             n_fail += 1
             continue
         if name not in oracles:
-            print(f"ROWS  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]")
+            print(f"ROWS  {name}: {len(srows)} rows (no oracle) [{time.time()-t0:.1f}s]", flush=True)
             n_noracle += 1
             continue
         try:
@@ -84,12 +84,12 @@ def main() -> int:
                    if str(t) in ("HUGEINT", "UHUGEINT")]
             if hug:
                 print(f"FAIL  {name}: oracle emits HUGEINT cols {hug} "
-                      "(cast to BIGINT; pandas harnesses read these as float64)")
+                      "(cast to BIGINT; pandas harnesses read these as float64)", flush=True)
                 n_fail += 1
                 continue
             drows = ddf.fetchall()
         except Exception as e:
-            print(f"FAIL  {name}: duckdb error: {e}")
+            print(f"FAIL  {name}: duckdb error: {e}", flush=True)
             n_fail += 1
             continue
         problems = []
@@ -113,10 +113,10 @@ def main() -> int:
                         problems.append(f"  duckdb: {b[:200]}")
                         break
         if problems:
-            print(f"FAIL  {name}: " + "; ".join(problems))
+            print(f"FAIL  {name}: " + "; ".join(problems), flush=True)
             n_fail += 1
         else:
-            print(f"PASS  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]")
+            print(f"PASS  {name}: {len(srows)} rows [{time.time()-t0:.1f}s]", flush=True)
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail, {n_noracle} rows-only")
     return 1 if n_fail else 0

@@ -12,8 +12,8 @@ falls on both sides alike. Metric names, their direction and
 For each end-to-end metric it prints both sides' median and inclusive
 quartiles, the change of the median, in how many pairs B was better
 ("wins"), and the gap between the medians against A's interquartile
-range. Then the failed-op count and attempted ops of every run, and, last,
-one JSON line with every run's values.
+range. Then the failed-op count, attempted ops and warm-pass count of
+every run, and, last, one JSON line with every run's values.
 """
 
 from __future__ import annotations
@@ -38,13 +38,19 @@ def run_once(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     lines = [ln for ln in proc.stdout.splitlines() if ln.startswith("{")]
     try:
         res = json.loads(lines[-1])
+        # the run's record file lists its passes: the cold one, then the
+        # warm ones whose median pass_cpu_s is
+        record = [json.loads(ln)["record"] for ln in lines if '"record"' in ln][-1]
+        with open(record) as f:
+            warm_passes = len(json.load(f)["passes"]) - 1
         return {
             "seed": seed,
             "failed": res["failed"],
             "attempted": res["attempted"],
+            "warm_passes": warm_passes,
             "metrics": {k: v["value"] for k, v in res["metrics"].items()},
         }
-    except (IndexError, KeyError, ValueError):
+    except (IndexError, KeyError, ValueError, OSError):
         tail = proc.stderr.strip().splitlines()[-5:]
         return {"seed": seed, "failed": None, "attempted": None, "metrics": {},
                 "error": f"exit {proc.returncode}: " + " | ".join(tail)}
@@ -111,7 +117,8 @@ def main() -> int:
               f"wins {row['wins']}/{row['pairs']}, |gap| / A IQR {row['gap_over_a_iqr']:.2f}")
     for side in ("A", "B"):
         print(f"  {side} failed per run: {[r['failed'] for r in runs[side]]}, "
-              f"attempted: {sorted({r['attempted'] for r in runs[side]}, key=str)}")
+              f"attempted: {sorted({r['attempted'] for r in runs[side]}, key=str)}, "
+              f"warm passes per run: {[r.get('warm_passes') for r in runs[side]]}")
     print(json.dumps({"workload": args.workload, "seed0": args.seed0, "runs": runs}))
     return 0 if all(r["failed"] == 0 for side in runs.values() for r in side) else 1
 
