@@ -39,8 +39,7 @@ def _parse_bytes(v: str) -> int:
 # entry, which is exactly right for the bench/gate pattern of re-building
 # identical plans every round. The cache assumes source relations are
 # immutable within an application (true here: driver-supplied parquet
-# snapshots); call _clear_estimate_cache() if a test rewrites a table
-# in place. The decision is still frozen at build time — runtime
+# snapshots). The decision is still frozen at build time — runtime
 # re-planning is AQE's job, and these hints only override Catalyst where
 # its estimate is structurally unusable (post-explode stats).
 # semanticHash() is only 32 bits, so the key also carries the output
@@ -50,10 +49,6 @@ def _parse_bytes(v: str) -> int:
 # is ~0.2% birthday probability).
 _EST_CACHE: dict[tuple[str, int, str], int] = {}
 _EST_CACHE_MAX = 4096
-
-
-def _clear_estimate_cache() -> None:
-    _EST_CACHE.clear()
 
 
 def plan_size_estimate(df: DataFrame) -> int:

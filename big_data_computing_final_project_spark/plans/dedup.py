@@ -364,33 +364,9 @@ def q36_minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `('0x'||hex)::BIGINT` in DuckDB), so the oracle can rebuild the exact
 # signatures with explode × bit-position SQL. The production-scale variant
 # would swap md5 for xxhash64 (cheaper, JVM-side) with identical structure —
-# `simhash64` + the pytest python-reference covers that path.
+# `simhash_votes` over xxhash64 hashes + the pytest python-reference covers
+# that path.
 # ---------------------------------------------------------------------------
-
-
-def simhash(hashes: F.Column, nbits: int = 64) -> F.Column:
-    """SimHash from an array of token hashes: per-bit majority vote,
-    assembled with literal shifts (shiftright needs a literal shift
-    amount, so bits unroll as a Python loop — nbits aggregate
-    expressions, each consuming the shared hash array)."""
-    def vote_fn(j: int):
-        # closure factory: F.aggregate requires an exactly-2-parameter
-        # lambda, so the bit index binds here rather than as a default arg
-        return lambda acc, h: acc + (
-            F.shiftright(h, j).bitwiseAND(F.lit(1)).cast("int") * F.lit(2) - F.lit(1)
-        )
-
-    sig = F.lit(0).cast("bigint")
-    for j in range(nbits):
-        bit_val = (1 << j) if j < 63 else -(1 << 63)  # bit 63 = sign bit in a signed long
-        vote = F.aggregate(hashes, F.lit(0), vote_fn(j))
-        sig = sig + F.when(vote > 0, F.lit(bit_val).cast("bigint")).otherwise(F.lit(0).cast("bigint"))
-    return sig
-
-
-def simhash64(hashes: F.Column) -> F.Column:
-    """64-bit SimHash (scale path: pair with xxhash64 token hashes)."""
-    return simhash(hashes, 64)
 
 
 _SIMHASH_BITS = 60
@@ -424,9 +400,9 @@ def simhash_votes(tok: DataFrame, id_col: str = "doc_id", hash_col: str = "h",
                   nbits: int = 60) -> DataFrame:
     """(id, sig) from exploded (id, token_hash) rows via ONE codegen'd hash
     aggregate: 60 ±1-vote sums per id, then bit assembly on the id-level
-    frame. Same math as `simhash` but the hot loop is whole-stage-codegen
-    sums over rows instead of 60 interpreted array folds per document —
-    ~20x at sf0.1. Vote sums are integer, so any reduction order is exact.
+    frame: the hot loop is whole-stage-codegen sums over rows, ~20x faster
+    at sf0.1 than 60 interpreted array folds per document. Vote sums are
+    integer, so any reduction order is exact.
     """
     aggs = []
     for j in range(nbits):

@@ -468,19 +468,21 @@ ORDER BY term
 
 @register("q155_token_js_drift", oracle=_q155_oracle())
 def q155_token_js_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select(
-        (_bucket("doc_id") < 80).alias("is_ref"), X.tokens(F.col("text")).alias("toks")
+    return _js_terms(spark, sf_dir, [])
+
+
+def _js_terms(spark: SparkSession, sf_dir: str, keys: list[str]) -> DataFrame:
+    """Per-(key..., term) JS terms of the documents' ``(*keys, is_ref,
+    term)`` token frame, shares over each key's totals — q155 unkeyed,
+    q161 per source."""
+    # the split bucket is projected before the explode: one md5 per
+    # document, not one per token
+    toks = load_table(spark, sf_dir, "documents").select(
+        *keys, (_bucket("doc_id") < 80).alias("is_ref"), X.tokens(F.col("text")).alias("toks")
     )
     tok = toks.select(
-        "is_ref", F.explode_outer("toks").alias("term")
+        *keys, "is_ref", F.explode_outer("toks").alias("term")
     ).where(F.col("term").isNotNull() & (F.col("term") != ""))
-    return _js_terms(tok, [])
-
-
-def _js_terms(tok: DataFrame, keys: list[str]) -> DataFrame:
-    """Per-(key..., term) JS terms of a ``(*keys, is_ref, term)`` token
-    frame, shares over each key's totals — q155 unkeyed, q161 per source."""
     counts = tok.groupBy(*keys, "term").agg(*_split_counts())
     p = F.col("n_ref").cast("double") / F.col("tr")
     q = F.col("n_cur").cast("double") / F.col("tc")
@@ -640,13 +642,7 @@ ORDER BY counts.source, term
 
 @register("q161_token_js_by_source", oracle=_q161_oracle())
 def q161_token_js_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    tok = docs.select(
-        "source",
-        (_bucket("doc_id") < 80).alias("is_ref"),
-        F.explode_outer(X.tokens(F.col("text"))).alias("term"),
-    ).where(F.col("term").isNotNull() & (F.col("term") != ""))
-    return _js_terms(tok, ["source"])
+    return _js_terms(spark, sf_dir, ["source"])
 
 
 # ---------------------------------------------------------------------------

@@ -32,8 +32,7 @@ ORDER BY c_mktsegment
 def q59_group_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The driver surface emits the set as a comma-joined scalar string
     # (numeric sort order preserved) — the comparison harness hashes column
-    # values with pandas, which cannot hash list cells. group_collect_list()
-    # below keeps the true array-typed operator for library users.
+    # values with pandas, which cannot hash list cells.
     customer = load_table(spark, sf_dir, "customer")
     return (
         customer.groupBy("c_mktsegment")
@@ -41,20 +40,6 @@ def q59_group_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(
                 ",", F.sort_array(F.collect_set("c_nationkey")).cast("array<string>")
             ).alias("nations"),
-            F.countDistinct("c_nationkey").alias("n_nations"),
-        )
-        .orderBy("c_mktsegment")
-    )
-
-
-def group_collect_list(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Array-typed variant of q59 (A10): sorted distinct nation set per
-    market segment as a real ``array<int>`` column."""
-    customer = load_table(spark, sf_dir, "customer")
-    return (
-        customer.groupBy("c_mktsegment")
-        .agg(
-            F.sort_array(F.collect_set("c_nationkey")).alias("nations"),
             F.countDistinct("c_nationkey").alias("n_nations"),
         )
         .orderBy("c_mktsegment")

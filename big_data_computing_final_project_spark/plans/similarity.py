@@ -50,6 +50,72 @@ def embedding_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# The retrieval core every ranker below is built from: norms staged per
+# row, the query slice, the pair scorer and the per-query top-k cut.
+# ---------------------------------------------------------------------------
+
+
+def _normed(emb: DataFrame) -> DataFrame:
+    """``emb`` plus each vector's norm ``nc``, staged per SIDE before any
+    pair join: a norm inside the pair projection would re-fold each
+    candidate's self-dot once per query."""
+    return emb.select(*emb.columns, norm(F.col("e")).alias("nc"))
+
+
+def _queries(emb: DataFrame, *extra: F.Column) -> DataFrame:
+    """(q_id, qe, nq, *extra): the query rows (vec_id < _N_QUERIES) of a
+    normed frame."""
+    return emb.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("e").alias("qe"),
+        F.col("nc").alias("nq"),
+        *extra,
+    )
+
+
+def _not_self() -> F.Column:
+    return F.col("vec_id") != F.col("q_id")
+
+
+def _cos_sim() -> F.Column:
+    """Query × candidate cosine over the staged norms — the oracle's
+    dot / (sqrt(nq) * sqrt(nc)), since norm() IS sqrt(self-dot)."""
+    return (dot(F.col("qe"), F.col("e")) / (F.col("nq") * F.col("nc"))).alias("cos_sim")
+
+
+def _cos_scored(
+    q: DataFrame, emb: DataFrame, on: F.Column, *extra: str | F.Column
+) -> DataFrame:
+    """(q_id, cand_id, cos_sim, *extra): the broadcast query block joined
+    to the normed corpus on ``on`` and scored."""
+    return (
+        F.broadcast(q)
+        .join(emb, on)
+        .select("q_id", F.col("vec_id").alias("cand_id"), _cos_sim(), *extra)
+    )
+
+
+def _top_k(df: DataFrame, k: int, score: str, tie: str) -> DataFrame:
+    """Each query's first ``k`` rows of ``df`` by ``score`` descending,
+    ties to the smaller ``tie``, numbered ``rk`` 1..k — the one per-query
+    cut of every ranker here."""
+    w = Window.partitionBy("q_id").orderBy(F.col(score).desc(), F.col(tie))
+    return df.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
+def cos_topk(scored: DataFrame) -> DataFrame:
+    """(q_id, cand_id, cos_sim, rk): the per-query top-_K of a cosine-scored
+    pair frame — the output of q38, q39, q64, q200 and the store- and
+    index-built IVF rankers (streaming ivf_topk_from_store,
+    sources/ann_index.ivf_topk_from_index)."""
+    return (
+        _top_k(scored, _K, "cos_sim", "cand_id")
+        .select("q_id", "cand_id", "cos_sim", "rk")
+        .orderBy("q_id", "rk")
+    )
+
+
+# ---------------------------------------------------------------------------
 # q38 — brute-force cosine top-k (k=5) for 20 query vectors against the full
 # table. Scale shape: queries broadcast against candidates (narrow map +
 # per-query top-k via ranking window partitioned on the query id).
@@ -77,25 +143,8 @@ ORDER BY q_id, rk
 
 @register("q38_cosine_topk", oracle=_Q38_ORACLE)
 def q38_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # norms staged per SIDE (aliased columns referenced again post-join):
-    # computing norm(e) inside the pair projection would re-fold each
-    # candidate's self-dot once per query (n_queries x redundant work)
-    emb = embedding_vectors(spark, sf_dir)
-    emb = emb.select("vec_id", "e", norm(F.col("e")).alias("nc"))
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nc").alias("nq")
-    )
-    scored = (
-        F.broadcast(q)
-        .join(emb, F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            # same structure as the oracle: dot / (sqrt(nq) * sqrt(nc));
-            # norm() IS sqrt(self-dot), so staged columns keep the value
-            (dot(F.col("qe"), F.col("e")) / (F.col("nq") * F.col("nc"))).alias("cos_sim"),
-        )
-    )
+    emb = _normed(embedding_vectors(spark, sf_dir))
+    scored = _cos_scored(_queries(emb), emb, _not_self())
     # two-phase top-k: a per-(query, salt) partial
     # top-k first, so the per-query window never sees the full corpus —
     # the q_id-partitioned shuffle carries <= _TOPK_SALT*k rows per query
@@ -103,22 +152,15 @@ def q38_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_queries*_TOPK_SALT partitions. The global top-k is a subset of the
     # union of salt-local top-ks under the same ordering, so results are
     # identical to the single-window form.
-    order = [F.col("cos_sim").desc(), F.col("cand_id")]
     lw = Window.partitionBy("q_id", F.pmod(F.col("cand_id"), _TOPK_SALT)).orderBy(
-        *order
+        F.col("cos_sim").desc(), F.col("cand_id")
     )
     pruned = (
         scored.withColumn("lrk", F.row_number().over(lw))
         .filter(F.col("lrk") <= _K)
         .drop("lrk")
     )
-    w = Window.partitionBy("q_id").orderBy(*order)
-    return (
-        pruned.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _K)
-        .select("q_id", "cand_id", "cos_sim", "rk")
-        .orderBy("q_id", "rk")
-    )
+    return cos_topk(pruned)
 
 
 # ---------------------------------------------------------------------------
@@ -131,11 +173,6 @@ def q38_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _DIM = 64  # expected embedding width; verified against the data at runtime
 _N_PLANES = 4
-
-
-def _hyperplanes(seed: int = 42) -> list[list[float]]:
-    rng = random.Random(seed)
-    return [[rng.gauss(0.0, 1.0) for _ in range(_DIM)] for _ in range(_N_PLANES)]
 
 
 def bucket_of(e: F.Column, planes: list[list[float]]) -> F.Column:
@@ -165,46 +202,31 @@ def assert_dim(e: F.Column, dim: int) -> F.Column:
     )
 
 
-@register("q39_ann_lsh_topk")
-def q39_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    planes = _hyperplanes()
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", assert_dim(as_double(F.col("embedding")), _DIM).alias("e")
-    )
-    # stage per-row norm + bucket before the probe join (see q38: a norm
-    # inside the pair projection re-folds per probe hit)
-    emb = emb.select("vec_id", "e", norm(F.col("e")).alias("nc")).withColumn(
-        "bucket", bucket_of(F.col("e"), planes)
-    )
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("e").alias("qe"),
-        F.col("nc").alias("nq"),
-        F.col("bucket").alias("qb"),
-    )
-    # multi-probe: query bucket plus its _N_PLANES Hamming-1 neighbors
+def _multi_probe(q: DataFrame) -> DataFrame:
+    """One row per probe of each query: its bucket ``qb`` plus the
+    _N_PLANES Hamming-1 neighbours. A candidate sits in one bucket and the
+    probe values are pairwise distinct, so a probe join on
+    :func:`_probe_hit` matches each (q_id, cand_id) pair at most once and
+    needs no distinct."""
     probes = F.array(
         F.col("qb"), *[F.col("qb").bitwiseXOR(F.lit(1 << i)) for i in range(_N_PLANES)]
     )
-    q = q.withColumn("probe", F.explode(probes))
-    scored = (
-        F.broadcast(q)
-        .join(emb, (F.col("bucket") == F.col("probe")) & (F.col("vec_id") != F.col("q_id")))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot(F.col("qe"), F.col("e")) / (F.col("nq") * F.col("nc"))).alias("cos_sim"),
-        )
-        # no distinct needed: one bucket per candidate, 5 pairwise-distinct
-        # probe values -> each (q_id, cand_id) pair matches at most once
+    return q.withColumn("probe", F.explode(probes))
+
+
+def _probe_hit() -> F.Column:
+    return (F.col("bucket") == F.col("probe")) & _not_self()
+
+
+@register("q39_ann_lsh_topk")
+def q39_ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    planes = _plane_tables(1, _N_PLANES, _DIM)[0]
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", assert_dim(as_double(F.col("embedding")), _DIM).alias("e")
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _K)
-        .select("q_id", "cand_id", "cos_sim", "rk")
-        .orderBy("q_id", "rk")
-    )
+    emb = _normed(emb).withColumn("bucket", bucket_of(F.col("e"), planes))
+    q = _multi_probe(_queries(emb, F.col("bucket").alias("qb")))
+    return cos_topk(_cos_scored(q, emb, _probe_hit()))
 
 
 # ---------------------------------------------------------------------------
@@ -258,36 +280,34 @@ ORDER BY vec_a, vec_b
 
 _LSH_BITS = 4
 _LSH_DELTA = 1e-3  # per-pair miss bound at cosine == threshold
+_LSH_SEED = 42  # the one seeded hyperplane stream (q39, q133 and q40's tables)
+# _band_params accepts a band width only within these two bounds
+_MAX_TABLES = 128
+_MAX_RAND_FRAC = 0.15  # expected candidate fraction of random pairs
 
 
-def _n_tables_for(threshold: float, n_bits: int = _LSH_BITS, delta: float = _LSH_DELTA) -> int:
-    """Smallest L with (1 - p^b)^L <= delta at cosine == threshold."""
+def _n_tables_for(threshold: float, n_bits: int) -> int:
+    """Smallest L with (1 - p^b)^L <= _LSH_DELTA at cosine == threshold."""
     p = 1.0 - math.acos(threshold) / math.pi
-    return max(1, math.ceil(math.log(delta) / math.log(1.0 - p**n_bits)))
+    return max(1, math.ceil(math.log(_LSH_DELTA) / math.log(1.0 - p**n_bits)))
 
 
-def _band_params(
-    threshold: float,
-    delta: float = _LSH_DELTA,
-    max_tables: int = 128,
-    max_rand_frac: float = 0.15,
-) -> tuple[int, int] | None:
+def _band_params(threshold: float) -> tuple[int, int] | None:
     """Closed-form (n_bits, n_tables) chooser — or None when banding
     cannot prune at this threshold (the DENSE regime).
 
     A random pair (cosine ~ 0) collides per table with probability 0.5^b,
     so the expected candidate fraction is 1 - (1 - 0.5^b)^L. Pick the
     narrowest band width whose L (from the recall bound) keeps that
-    fraction under ``max_rand_frac`` at sane table counts. When no width
+    fraction under _MAX_RAND_FRAC within _MAX_TABLES tables. When no width
     qualifies — e.g. the 0.4 gate threshold, where p = 0.63 forces either
     ~93% candidate fraction or hundreds of tables — LSH is strictly worse
     than enumerating the pairs, and the caller should switch to the dense
     block join (the OUTPUT is pair-dense at such thresholds anyway)."""
-    p = 1.0 - math.acos(threshold) / math.pi
     for b in (4, 8, 12, 16):
-        n_tables = max(1, math.ceil(math.log(delta) / math.log(1.0 - p**b)))
+        n_tables = _n_tables_for(threshold, b)
         rand_frac = 1.0 - (1.0 - 0.5**b) ** n_tables
-        if n_tables <= max_tables and rand_frac <= max_rand_frac:
+        if n_tables <= _MAX_TABLES and rand_frac <= _MAX_RAND_FRAC:
             return b, n_tables
     return None
 
@@ -333,11 +353,11 @@ def _rep_dense_pairs(
     )
 
 
-def _plane_tables(n_tables: int, n_bits: int, dim: int, seed: int = 42) -> list:
+def _plane_tables(n_tables: int, n_bits: int, dim: int) -> list:
     """n_tables x n_bits Gaussian hyperplanes from ONE seeded stream —
     prefix-stable, so a larger L strictly grows the candidate set (the
     recall pin on a 32-table prefix transfers to any L >= 32)."""
-    rng = random.Random(seed)
+    rng = random.Random(_LSH_SEED)
     return [
         [[rng.gauss(0.0, 1.0) for _ in range(dim)] for _ in range(n_bits)]
         for _ in range(n_tables)
@@ -371,8 +391,6 @@ def _rep_band_pairs(
     emb: DataFrame,
     threshold: float,
     n_bits: int = _LSH_BITS,
-    delta: float = _LSH_DELTA,
-    seed: int = 42,
     reps: DataFrame | None = None,
 ) -> DataFrame:
     """Rep-level candidate pairs (ga < gb) from the banded postings
@@ -380,8 +398,7 @@ def _rep_band_pairs(
     exact copies cannot widen this join (pinned by
     test_q40_exact_dup_collapse_guard, the q36 pattern). Pass ``reps``
     (gid, e) to reuse an already-built rep frame."""
-    n_tables = _n_tables_for(threshold, n_bits, delta)
-    tables = _plane_tables(n_tables, n_bits, _DIM, seed)
+    tables = _plane_tables(_n_tables_for(threshold, n_bits), n_bits, _DIM)
     if reps is None:
         reps = emb.groupBy("e").agg(F.min("vec_id").alias("gid"))
     postings = reps.select(
@@ -404,8 +421,6 @@ def _rep_pairs_for(
     emb: DataFrame,
     threshold: float,
     n_bits: int | None = None,
-    delta: float = _LSH_DELTA,
-    seed: int = 42,
     reps: DataFrame | None = None,
 ) -> DataFrame:
     """The ONE regime decision (review finding: q40 and lsh_candidate_pairs
@@ -413,19 +428,15 @@ def _rep_pairs_for(
     prune, the distributed dense block join when it can't, explicit
     ``n_bits`` forcing banding at that width."""
     if n_bits is not None:
-        return _rep_band_pairs(emb, threshold, n_bits, delta, seed, reps=reps)
-    params = _band_params(threshold, delta)
+        return _rep_band_pairs(emb, threshold, n_bits, reps=reps)
+    params = _band_params(threshold)
     if params is None:
         return _rep_dense_pairs(emb, reps=reps)
-    return _rep_band_pairs(emb, threshold, params[0], delta, seed, reps=reps)
+    return _rep_band_pairs(emb, threshold, params[0], reps=reps)
 
 
 def lsh_candidate_pairs(
-    emb: DataFrame,
-    threshold: float,
-    n_bits: int | None = None,
-    delta: float = _LSH_DELTA,
-    seed: int = 42,
+    emb: DataFrame, threshold: float, n_bits: int | None = None
 ) -> DataFrame:
     """Candidate (vec_a, vec_b) pairs, vec_a < vec_b, for cosine >= threshold
     under banded hyperplane LSH, with q36's exact-dup collapse guard.
@@ -452,7 +463,7 @@ def lsh_candidate_pairs(
     m_b = mem.select(F.col("vec_id").alias("vec_b"), F.col("gid").alias("g"))
     within = m_a.join(m_b, "g").filter(F.col("vec_a") < F.col("vec_b")).drop("g")
 
-    rep_pairs = _rep_pairs_for(emb, threshold, n_bits, delta, seed)
+    rep_pairs = _rep_pairs_for(emb, threshold, n_bits)
     # expand rep pairs to member pairs (groups are disjoint, so each
     # unordered member pair appears exactly once; least/greatest orients it)
     ea = mem.select(F.col("gid").alias("ga"), F.col("vec_id").alias("va"))
@@ -477,8 +488,9 @@ def embedding_near_dup_pairs(
     retired GEMM twin below). ``threshold`` parameterizes the gate so the
     growth harness can measure BOTH regimes on the same replica: at the
     registered 0.4 the dense block join runs (banding cannot prune —
-    q40), at >= ~0.75 (delta 0.01) _band_params prunes and the banded
-    path carries the same downstream rescore/expansion.
+    q40); from ~0.8 up (_band_params gives 8 bits x 40 tables at 0.8 and
+    0.75 is still dense at _LSH_DELTA) the banded path prunes and carries
+    the same downstream rescore/expansion.
 
     Cosine depends only on content, so byte-identical embeddings rescore
     ONCE per distinct pair and only VERIFIED pairs expand to members —
@@ -680,12 +692,10 @@ def ivf_probe_scored(
     so the serving and the incrementally-maintained index probe through
     the SAME code."""
     centroids = centers_frame(spark, centers)
-    q = assigned.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nc").alias("nq")
-    )
     # rank centroids per query by cosine, keep the top nprobe cells
     qc = (
-        q.join(F.broadcast(centroids))
+        _queries(assigned)
+        .join(F.broadcast(centroids))
         .select(
             "q_id",
             "qe",
@@ -695,21 +705,11 @@ def ivf_probe_scored(
              / (F.col("nq") * norm(F.col("centroid")))).alias("c_sim"),
         )
     )
-    wq = Window.partitionBy("q_id").orderBy(F.col("c_sim").desc(), F.col("cell"))
-    probes = (
-        qc.withColumn("rk", F.row_number().over(wq))
-        .filter(F.col("rk") <= nprobe)
-        .select("q_id", "qe", "nq", "cell")
-    )
+    probes = _top_k(qc, nprobe, "c_sim", "cell").select("q_id", "qe", "nq", "cell")
     return (
         probes.join(assigned, "cell")
-        .filter(F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot(F.col("qe"), F.col("e")) / (F.col("nq") * F.col("nc"))).alias("cos_sim"),
-            "e",
-        )
+        .filter(_not_self())
+        .select("q_id", F.col("vec_id").alias("cand_id"), _cos_sim(), "e")
     )
 
 
@@ -723,21 +723,9 @@ def _ivf_scored(
     return ivf_probe_scored(spark, centers, assigned, nprobe)
 
 
-def ivf_topk(scored: DataFrame) -> DataFrame:
-    """Exact rerank of a probe frame to the per-query top-_K — shared by
-    q64 and the store-built index path (streaming ivf_topk_from_store)."""
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _K)
-        .select("q_id", "cand_id", "cos_sim", "rk")
-        .orderBy("q_id", "rk")
-    )
-
-
 @register("q64_ann_ivf_topk")
 def q64_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return ivf_topk(_ivf_scored(spark, sf_dir))
+    return cos_topk(_ivf_scored(spark, sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -1102,70 +1090,68 @@ ORDER BY q_id, rk
 """
 
 
-@register("q131_int8_cosine_topk", oracle=_Q131_ORACLE)
-def q131_int8_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _int8_coded(e: DataFrame, *extra: F.Column) -> DataFrame:
+    """(vec_id, qv, q2, *extra): q125's int8 codes of a (vec_id, e) frame
+    as bigint (so products never touch int overflow — 127*127*64 fits
+    easily, but mirror the oracle's BIGINT lists) and their self-dot.
+    maxabs is its own aliased projection so array_max runs once per ROW,
+    not once per element (see quantize_int8_of). The zero-vector guard
+    filters on it — equivalent to the oracle's q2 > 0: maxabs = 0 <=> all
+    codes 0, maxabs > 0 => the max element's code is exactly 127 => q2 >=
+    127^2 — as a cheap O(d) predicate instead of the full code array."""
     from ..operators.quantize import max_abs, quantize_int8_of
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    # Staged quantization (see quantize_int8_of): maxabs as its own
-    # aliased projection so array_max runs once per ROW, not once per
-    # element; the zero-vector guard filters on maxabs (equivalent to the
-    # oracle's q2 > 0: maxabs = 0 <=> all codes 0, maxabs > 0 => the max
-    # element's code is exactly 127 => q2 >= 127^2) and pushes to the scan
-    # as a cheap O(d) predicate instead of recomputing the full code array.
-    e = emb.select("vec_id", as_double(F.col("embedding")).alias("e"))
-    # zero-vector guard filters on the STAGED maxabs column — one O(d)
-    # array_max per row, shared with the quantizer scale
     staged = e.select("vec_id", "e", max_abs(F.col("e")).alias("maxabs")).filter(
         F.col("maxabs") > 0
     )
-    # bigint codes so products never touch int overflow (127*127*64 fits
-    # easily, but mirror the oracle's BIGINT lists)
     coded = staged.select(
         "vec_id",
         F.transform(
             quantize_int8_of(F.col("e"), F.col("maxabs")), lambda c: c.cast("bigint")
         ).alias("qv"),
     )
-    n = coded.select(
-        "vec_id",
-        "qv",
-        F.aggregate(
-            F.col("qv"), F.lit(0).cast("bigint"), lambda acc, x: acc + x * x
-        ).alias("q2"),
+    q2 = F.aggregate(F.col("qv"), F.lit(0).cast("bigint"), lambda acc, x: acc + x * x)
+    return coded.select("vec_id", "qv", q2.alias("q2"), *extra)
+
+
+def _int8_queries(n: DataFrame, *extra: F.Column) -> DataFrame:
+    """(q_id, qqv, qq2, *extra): the query rows of a coded frame."""
+    return n.filter(F.col("vec_id") < _N_QUERIES).select(
+        F.col("vec_id").alias("q_id"),
+        F.col("qv").alias("qqv"),
+        F.col("q2").alias("qq2"),
+        *extra,
     )
-    q = n.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("qv").alias("qqv"), F.col("q2").alias("qq2")
-    )
-    # integer dot staged once per pair; cos8's second reference keeps it
+
+
+def _int8_scored(q: DataFrame, n: DataFrame, on: F.Column) -> DataFrame:
+    """(q_id, cand_id, dotq, cos8): the query codes ``q`` broadcast
+    against the code store ``n`` on ``on``. The integer dot is its own
+    projection, so q131's output column and cos8 share one fold per pair."""
+    from ..operators.quantize import int8_dot
+
     pairs = (
         F.broadcast(q)
-        .join(n, F.col("vec_id") != F.col("q_id"))
+        .join(n, on)
         .select(
             "q_id",
             F.col("vec_id").alias("cand_id"),
-            F.aggregate(
-                F.zip_with(F.col("qqv"), F.col("qv"), lambda a, b: a * b),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("dotq"),
+            int8_dot(F.col("qqv"), F.col("qv")).alias("dotq"),
             "qq2",
             "q2",
         )
     )
-    scored = pairs.select(
-        "q_id",
-        "cand_id",
-        "dotq",
-        (
-            F.col("dotq").cast("double")
-            / (F.sqrt(F.col("qq2").cast("double")) * F.sqrt(F.col("q2").cast("double")))
-        ).alias("cos8"),
+    cos8 = F.col("dotq").cast("double") / (
+        F.sqrt(F.col("qq2").cast("double")) * F.sqrt(F.col("q2").cast("double"))
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos8").desc(), F.col("cand_id"))
+    return pairs.select("q_id", "cand_id", "dotq", cos8.alias("cos8"))
+
+
+@register("q131_int8_cosine_topk", oracle=_Q131_ORACLE)
+def q131_int8_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    n = _int8_coded(embedding_vectors(spark, sf_dir))
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _K)
+        _top_k(_int8_scored(_int8_queries(n), n, _not_self()), _K, "cos8", "cand_id")
         .select("q_id", "cand_id", "dotq", "cos8", "rk")
         .orderBy("q_id", "rk")
     )
@@ -1187,73 +1173,16 @@ def q131_int8_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("q133_int8_ann_topk")
 def q133_int8_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.quantize import max_abs, quantize_int8_of
-
-    planes = _hyperplanes()
-    emb = load_table(spark, sf_dir, "embeddings")
-    e = emb.select(
+    planes = _plane_tables(1, _N_PLANES, _DIM)[0]
+    e = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", assert_dim(as_double(F.col("embedding")), _DIM).alias("e")
     )
-    staged = e.select("vec_id", "e", max_abs(F.col("e")).alias("maxabs")).filter(
-        F.col("maxabs") > 0
-    )
-    coded = staged.select(
-        "vec_id",
-        F.transform(
-            quantize_int8_of(F.col("e"), F.col("maxabs")), lambda c: c.cast("bigint")
-        ).alias("qv"),
-    )
-    # everything below this line touches ONLY the code store
+    # everything past the coding touches ONLY the code store
     qd = F.transform(F.col("qv"), lambda c: c.cast("double"))
-    n = coded.select(
-        "vec_id",
-        "qv",
-        F.aggregate(
-            F.col("qv"), F.lit(0).cast("bigint"), lambda acc, x: acc + x * x
-        ).alias("q2"),
-        bucket_of(qd, planes).alias("bucket"),
-    )
-    q = n.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("qv").alias("qqv"),
-        F.col("q2").alias("qq2"),
-        F.col("bucket").alias("qb"),
-    )
-    probes = F.array(
-        F.col("qb"), *[F.col("qb").bitwiseXOR(F.lit(1 << i)) for i in range(_N_PLANES)]
-    )
-    q = q.withColumn("probe", F.explode(probes))
-    pairs = (
-        F.broadcast(q)
-        .join(n, (F.col("bucket") == F.col("probe")) & (F.col("vec_id") != F.col("q_id")))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            F.aggregate(
-                F.zip_with(F.col("qqv"), F.col("qv"), lambda a, b: a * b),
-                F.lit(0).cast("bigint"),
-                lambda acc, x: acc + x,
-            ).alias("dotq"),
-            "qq2",
-            "q2",
-        )
-        # no distinct: a candidate sits in exactly one bucket and the 5
-        # probe values (qb, qb^1, qb^2, qb^4, qb^8) are pairwise distinct,
-        # so each (q_id, cand_id) pair matches at most one probe — a
-        # dedup here would only add a full shuffle of the scored pairs
-    )
-    scored = pairs.select(
-        "q_id",
-        "cand_id",
-        (
-            F.col("dotq").cast("double")
-            / (F.sqrt(F.col("qq2").cast("double")) * F.sqrt(F.col("q2").cast("double")))
-        ).alias("cos8"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos8").desc(), F.col("cand_id"))
+    n = _int8_coded(e, bucket_of(qd, planes).alias("bucket"))
+    q = _multi_probe(_int8_queries(n, F.col("bucket").alias("qb")))
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _K)
+        _top_k(_int8_scored(q, n, _probe_hit()), _K, "cos8", "cand_id")
         .select("q_id", "cand_id", "cos8", "rk")
         .orderBy("q_id", "rk")
     )
@@ -1391,45 +1320,21 @@ ORDER BY v.q_id
 
 @register("q186_knn_classifier", oracle=_Q186_ORACLE)
 def q186_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", as_double(F.col("embedding")).alias("e")
-    )
-    emb = emb.select("vec_id", "label", "e", norm(F.col("e")).alias("nc"))
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("label").alias("true_label"),
-        F.col("e").alias("qe"),
-        F.col("nc").alias("nq"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(emb, F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            "true_label",
-            F.col("vec_id").alias("cand_id"),
-            F.col("label").alias("cand_label"),
-            (dot(F.col("qe"), F.col("e")) / (F.col("nq") * F.col("nc"))).alias(
-                "cos_sim"
-            ),
+    emb = _normed(
+        load_table(spark, sf_dir, "embeddings").select(
+            "vec_id", "label", as_double(F.col("embedding")).alias("e")
         )
     )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    topk = scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= _KNN_K
+    q = _queries(emb, F.col("label").alias("true_label"))
+    scored = _cos_scored(
+        q, emb, _not_self(), "true_label", F.col("label").alias("cand_label")
     )
-    votes = (
-        topk.groupBy("q_id", "true_label", "cand_label")
-        .agg(F.count(F.lit(1)).alias("n_votes"))
-        .withColumn(
-            "vrk",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(
-                    F.col("n_votes").desc(), "cand_label"
-                )
-            ),
-        )
+    topk = _top_k(scored, _KNN_K, "cos_sim", "cand_id")
+    counts = topk.groupBy("q_id", "true_label", "cand_label").agg(
+        F.count(F.lit(1)).alias("n_votes")
     )
+    # the winning label: most votes, ties to the smaller label
+    votes = _top_k(counts, 1, "n_votes", "cand_label")
     # rank-ordered exact fold of the K sims (see oracle note)
     pair = F.sort_array(F.collect_list(F.struct("rk", "cos_sim")))
     sims = topk.groupBy("q_id").agg(
@@ -1441,8 +1346,7 @@ def q186_knn_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("mean_sim")
     )
     return (
-        votes.filter(F.col("vrk") == 1)
-        .join(sims, "q_id")
+        votes.join(sims, "q_id")
         .select(
             "q_id",
             F.col("true_label").cast("bigint").alias("true_label"),
@@ -1522,25 +1426,10 @@ def mmr_rerank(
 
 
 def _scored_pool(spark: SparkSession, sf_dir: str, pool: int = _MMR_POOL) -> DataFrame:
-    emb = embedding_vectors(spark, sf_dir)
-    emb = emb.select("vec_id", "e", norm(F.col("e")).alias("nc"))
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), F.col("nc").alias("nq")
-    )
-    scored = (
-        F.broadcast(q)
-        .join(emb, F.col("vec_id") != F.col("q_id"))
-        .select(
-            "q_id",
-            F.col("vec_id").alias("cand_id"),
-            (dot(F.col("qe"), F.col("e")) / (F.col("nq") * F.col("nc"))).alias("cos_sim"),
-            "e",
-        )
-    )
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return scored.withColumn("rk", F.row_number().over(w)).filter(
-        F.col("rk") <= pool
-    ).drop("rk")
+    """(q_id, cand_id, cos_sim, e): each query's brute-force cosine top-``pool``."""
+    emb = _normed(embedding_vectors(spark, sf_dir))
+    scored = _cos_scored(_queries(emb), emb, _not_self(), "e")
+    return _top_k(scored, pool, "cos_sim", "cand_id").drop("rk")
 
 
 @register("q199_mmr_rerank")
@@ -1562,12 +1451,7 @@ def q205_mmr_ivf_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     wants higher recall than a top-5 lookup, so this probes 8/16 cells
     (double q64's serving nprobe — the standard IVF knob)."""
     scored = _ivf_scored(spark, sf_dir, nprobe=_MMR_IVF_NPROBE)
-    w = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    pool = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _MMR_POOL)
-        .drop("rk")
-    )
+    pool = _top_k(scored, _MMR_POOL, "cos_sim", "cand_id").drop("rk")
     return mmr_rerank(pool).orderBy("q_id", "mmr_rank")
 
 
@@ -1933,19 +1817,14 @@ def _pq_adc_rank(
     collected once at plan-build time — O(queries) rows, the same bounded
     driver transfer the previous broadcast build paid — and ships to the
     ADC kernel as frozen LUT state."""
-    q = emb.filter(F.col("vec_id") < _N_QUERIES).select(
-        F.col("vec_id").alias("q_id"), F.col("e").alias("qe"), norm(F.col("e")).alias("nq")
-    )
+    q = _queries(_normed(emb))
     q_rows = sorted(
         (r["q_id"], [float(x) for x in r["qe"]])
         for r in q.select("q_id", "qe").collect()
     )
     scored = _pq_adc_scored(store, books, q_rows, _PQ_SHORTLIST)
-    w = Window.partitionBy("q_id").orderBy(F.col("adc_score").desc(), F.col("cand_id"))
-    shortlist = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _PQ_SHORTLIST)
-        .select("q_id", "cand_id")
+    shortlist = _top_k(scored, _PQ_SHORTLIST, "adc_score", "cand_id").select(
+        "q_id", "cand_id"
     )
     # exact rerank: float vectors touched for shortlist rows only
     cand = emb.select(F.col("vec_id").alias("cand_id"), F.col("e").alias("ce"))
@@ -1960,13 +1839,7 @@ def _pq_adc_rank(
             ),
         )
     )
-    w2 = Window.partitionBy("q_id").orderBy(F.col("cos_sim").desc(), F.col("cand_id"))
-    return (
-        exact.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= _K)
-        .select("q_id", "cand_id", "cos_sim", "rk")
-        .orderBy("q_id", "rk")
-    )
+    return cos_topk(exact)
 
 
 # ---------------------------------------------------------------------------

@@ -163,9 +163,9 @@ def ivf_topk_from_index(
 ) -> DataFrame:
     """q64's ranking served from the persisted index through the session
     fit's probe-and-rerank core, with no fitting."""
-    from ..plans.similarity import ivf_probe_scored, ivf_topk
+    from ..plans.similarity import cos_topk, ivf_probe_scored
 
-    return ivf_topk(ivf_probe_scored(spark, *load_ivf_index(spark, index_dir, sf_dir)))
+    return cos_topk(ivf_probe_scored(spark, *load_ivf_index(spark, index_dir, sf_dir)))
 
 
 # ---------------------------------------------------------------------------

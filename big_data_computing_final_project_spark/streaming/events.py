@@ -3077,12 +3077,12 @@ def ivf_topk_from_store(
     spark: SparkSession, sf_dir: str, store_dir: str, nprobe: int | None = None
 ) -> DataFrame:
     """q64's probe-and-rerank over the store-built index, through the
-    session fit's core (plans/similarity.ivf_probe_scored / ivf_topk), so
+    session fit's core (plans/similarity.ivf_probe_scored / cos_topk), so
     recall can only differ through the assignment itself."""
-    from ..plans.similarity import _IVF_NPROBE, ivf_probe_scored, ivf_topk
+    from ..plans.similarity import _IVF_NPROBE, cos_topk, ivf_probe_scored
 
     centers, lists = load_ivf_store(spark, sf_dir, store_dir)
-    return ivf_topk(
+    return cos_topk(
         ivf_probe_scored(spark, centers, lists, _IVF_NPROBE if nprobe is None else nprobe)
     )
 

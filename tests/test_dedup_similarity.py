@@ -23,18 +23,21 @@ def _xxhash64_unavailable():
 
 def test_simhash_matches_python_reference(spark, sf_dir):
     """Recompute SimHash in Python from Spark's own xxhash64 token hashes;
-    the signature assembly (majority vote + bit packing) must agree."""
+    simhash_votes' signature assembly (majority vote + bit packing) must
+    agree at 64 bits, where bit 63 is the sign bit of the long."""
     from pyspark.sql import functions as F
 
     from big_data_computing_final_project_spark.functions import text as X
-    from big_data_computing_final_project_spark.plans.dedup import simhash64
+    from big_data_computing_final_project_spark.plans.dedup import simhash_votes
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(20)
-    token_hashes = F.transform(X.tokens(F.col("text")), lambda t: F.xxhash64(t))
-    rows = docs.select(
-        "doc_id", token_hashes.alias("hashes"), simhash64(token_hashes).alias("sig")
-    ).collect()
+    tok = docs.select("doc_id", F.explode(X.tokens(F.col("text"))).alias("t")).select(
+        "doc_id", F.xxhash64("t").alias("h")
+    )
+    hashes = tok.groupBy("doc_id").agg(F.collect_list("h").alias("hashes"))
+    rows = hashes.join(simhash_votes(tok, nbits=64), "doc_id").collect()
     assert rows
+    assert any(r.sig < 0 for r in rows), "no signature exercises the sign bit"
     for r in rows:
         sig = 0
         for j in range(64):
@@ -1860,3 +1863,37 @@ def test_q235_leak_attribution_planted(spark, tmp_path):
     assert frame_digest(sdf.columns, [tuple(r) for r in got_rows]) == frame_digest(
         dcols, drows
     )
+
+
+@pytest.mark.parametrize(
+    "name, score",
+    [
+        ("q38_cosine_topk", "cos_sim"),
+        ("q39_ann_lsh_topk", "cos_sim"),
+        ("q64_ann_ivf_topk", "cos_sim"),
+        ("q131_int8_cosine_topk", "cos8"),
+        ("q133_int8_ann_topk", "cos8"),
+        ("q200_pq_ann_topk", "cos_sim"),
+    ],
+)
+def test_ranker_contract(spark, sf_dir, name, score):
+    """Every ranker's per-query output is a top-k cut: rk runs 1..n with
+    no gaps and n <= _K, scores never increase down the ranking, equal
+    scores are ordered by cand_id, and no query retrieves itself."""
+    from big_data_computing_final_project_spark.plans.similarity import _K
+
+    rows = _Q[name](spark, sf_dir).select("q_id", "cand_id", score, "rk").collect()
+    assert rows, f"{name} returned nothing"
+    by_q: dict = {}
+    for r in rows:
+        assert r.cand_id != r.q_id, f"{name}: query {r.q_id} retrieved itself"
+        by_q.setdefault(r.q_id, []).append(r)
+    for q_id, hits in by_q.items():
+        hits.sort(key=lambda r: r.rk)
+        assert [r.rk for r in hits] == list(range(1, len(hits) + 1)), (name, q_id)
+        assert len(hits) <= _K, (name, q_id)
+        for a, b in zip(hits, hits[1:]):
+            sa, sb = a[score], b[score]
+            assert sa >= sb, f"{name}: q {q_id} score rises at rk {b.rk}"
+            if sa == sb:
+                assert a.cand_id < b.cand_id, f"{name}: q {q_id} tie out of cand_id order"

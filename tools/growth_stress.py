@@ -90,8 +90,8 @@ BOUNDED_QUERIES = [
     "q208_near_dup_source_matrix",
     "q82_pack_sequences",
     "q40_embedding_near_dup",
-    # round-10 (VERDICT r9 item 3): q40's OTHER regime on the same replica —
-    # at threshold 0.8 (delta 0.01) _band_params returns (8, 27) and banded
+    # q40's OTHER regime on the same replica: at threshold 0.8
+    # (_LSH_DELTA 1e-3) _band_params returns (8, 40) and banded
     # LSH prunes; within-group cosine stays exactly 1.0 under the sign-flip
     # replica, so the groups pass this gate too and the output stays linear
     # in the tier. The dense 0.4 entry above keeps measuring the

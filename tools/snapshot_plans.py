@@ -11,6 +11,9 @@ catching regressions subtler than the assertions in test_plan_shape.py
 writes exactly those instead (the sf0.1 headline archive).
 
 Usage:  python tools/snapshot_plans.py [sf_dir] [out_dir] [query ...]
+
+Exits 1 when any requested query fails to build (its archive is left as
+it was).
 """
 
 from __future__ import annotations
@@ -25,25 +28,32 @@ from big_data_computing_final_project_spark.plans import all_queries  # noqa: E4
 from big_data_computing_final_project_spark.session import get_spark  # noqa: E402
 
 
-def main() -> None:
+def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     out_dir = sys.argv[2] if len(sys.argv) > 2 else "plans_snapshot"
     only = set(sys.argv[3:])  # explicit query names; default: the pinned set
     os.makedirs(out_dir, exist_ok=True)
+    queries = all_queries()
+    failed = sorted(only - set(queries))
+    for name in failed:
+        print(f"ERROR {name}: no such query")
     spark = get_spark("plan-snapshot")
     spark.sparkContext.setLogLevel("ERROR")
-    for name, fn in sorted(all_queries().items()):
+    for name, fn in sorted(queries.items()):
         wanted = name in only if only else pinned(name)
         if not wanted:
             continue
         try:
-            df = fn(spark, sf_dir)
-            with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
-                f.write(plan_text(df))
-            print(f"ok    {name}")
+            text = plan_text(fn(spark, sf_dir))
         except Exception as e:
             print(f"ERROR {name}: {e}")
+            failed.append(name)
+            continue
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as f:
+            f.write(text)
+        print(f"ok    {name}")
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
