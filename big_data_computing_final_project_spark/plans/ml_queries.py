@@ -184,6 +184,13 @@ def _embedding_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _fit_eval(spark: SparkSession, sf_dir: str, estimator, binarize: bool = False) -> DataFrame:
+    """Fit ``estimator`` on a seeded stratified 80/20 split of the embedding
+    features and score the held-out fifth. The L1 LR (q47) fits through
+    ``one_partition_if_small`` like q49 and q124 (one single-stage job per
+    OWL-QN loss evaluation); the tree ensembles keep the split's layout,
+    because their models depend on the partitioning."""
+    from pyspark.ml.classification import LogisticRegression
+
     from ..ml.pipeline import stratified_split
 
     df = _embedding_features(spark, sf_dir)
@@ -191,7 +198,10 @@ def _fit_eval(spark: SparkSession, sf_dir: str, estimator, binarize: bool = Fals
         df = df.withColumn("label", (F.col("label") > 0).cast("double"))
     train, test = stratified_split(df, "label", 0.2, seed=42)
     train = train.cache()
-    model = estimator.fit(train)
+    if isinstance(estimator, LogisticRegression):
+        model = estimator.fit(one_partition_if_small(train))
+    else:
+        model = estimator.fit(train)
     n_train = train.count()
     cc = confusion_counts(model.transform(test)).collect()
     train.unpersist()

@@ -315,19 +315,15 @@ def _band_params(threshold: float) -> tuple[int, int] | None:
 _DENSE_BLOCKS = 8
 
 
-def _rep_dense_pairs(
-    emb: DataFrame, n_blocks: int = _DENSE_BLOCKS, reps: DataFrame | None = None
-) -> DataFrame:
-    """All rep-level pairs (ga < gb) as a DISTRIBUTED block-nested-loop:
-    reps hash into ``n_blocks`` blocks; the tiny block-pair table
-    broadcast-joins each side, so every unordered block pair is one
-    equi-join partition of work — no CartesianProduct node, no driver
-    loop, and the O(n^2) work (which equals the output size in the dense
-    regime) spreads across block pairs. Pass ``reps`` (gid, e) to reuse an
-    already-built (ideally cached) rep frame instead of re-aggregating."""
-    spark = emb.sparkSession
-    if reps is None:
-        reps = emb.groupBy("e").agg(F.min("vec_id").alias("gid"))
+def _rep_dense_pairs(reps: DataFrame, n_blocks: int = _DENSE_BLOCKS) -> DataFrame:
+    """All rep-level pairs (ga < gb) of the rep frame ``reps`` (gid, e, see
+    _dup_reps) as a DISTRIBUTED block-nested-loop: reps hash into
+    ``n_blocks`` blocks; the tiny block-pair table broadcast-joins each
+    side, so every unordered block pair is one equi-join partition of work
+    — no CartesianProduct node, no driver loop, and the O(n^2) work (which
+    equals the output size in the dense regime) spreads across block
+    pairs."""
+    spark = reps.sparkSession
     reps = reps.select(
         "gid", F.pmod(F.xxhash64("gid"), F.lit(n_blocks)).cast("int").alias("blk")
     )
@@ -380,27 +376,24 @@ def _bucket_signatures(e: F.Column, tables: list) -> F.Column:
     )
 
 
-def _dup_groups(emb: DataFrame) -> DataFrame:
-    """(vec_id, gid): each vector tagged with the min vec_id among
-    byte-identical embeddings (grouping directly on the array column)."""
-    grp = emb.groupBy("e").agg(F.min("vec_id").alias("gid"))
-    return emb.join(grp, "e").select("vec_id", "gid")
+def _dup_reps(emb: DataFrame) -> DataFrame:
+    """(e, gid): one row per distinct embedding, tagged with the min vec_id
+    among its byte-identical copies (grouping directly on the array
+    column) — the dup-collapse aggregate, built once per caller and cached
+    lazily (no plan-build job): membership and the candidate generator
+    both read it."""
+    return emb.groupBy("e").agg(F.min("vec_id").alias("gid")).cache()
 
 
 def _rep_band_pairs(
-    emb: DataFrame,
-    threshold: float,
-    n_bits: int = _LSH_BITS,
-    reps: DataFrame | None = None,
+    reps: DataFrame, threshold: float, n_bits: int = _LSH_BITS
 ) -> DataFrame:
     """Rep-level candidate pairs (ga < gb) from the banded postings
-    self-join — one posting per DISTINCT embedding per table, so planted
-    exact copies cannot widen this join (pinned by
-    test_q40_exact_dup_collapse_guard, the q36 pattern). Pass ``reps``
-    (gid, e) to reuse an already-built rep frame."""
+    self-join over the rep frame ``reps`` (gid, e) — one posting per
+    DISTINCT embedding per table, so planted exact copies cannot widen
+    this join (pinned by test_q40_exact_dup_collapse_guard, the q36
+    pattern)."""
     tables = _plane_tables(_n_tables_for(threshold, n_bits), n_bits, _DIM)
-    if reps is None:
-        reps = emb.groupBy("e").agg(F.min("vec_id").alias("gid"))
     postings = reps.select(
         "gid",
         F.posexplode(_bucket_signatures(assert_dim(F.col("e"), _DIM), tables)).alias(
@@ -418,21 +411,19 @@ def _rep_band_pairs(
 
 
 def _rep_pairs_for(
-    emb: DataFrame,
-    threshold: float,
-    n_bits: int | None = None,
-    reps: DataFrame | None = None,
+    reps: DataFrame, threshold: float, n_bits: int | None = None
 ) -> DataFrame:
     """The ONE regime decision (review finding: q40 and lsh_candidate_pairs
-    had drifted copies): banded LSH at the closed-form width when it can
-    prune, the distributed dense block join when it can't, explicit
-    ``n_bits`` forcing banding at that width."""
+    had drifted copies) over the rep frame ``reps`` (gid, e): banded LSH at
+    the closed-form width when it can prune, the distributed dense block
+    join when it can't, explicit ``n_bits`` forcing banding at that
+    width."""
     if n_bits is not None:
-        return _rep_band_pairs(emb, threshold, n_bits, reps=reps)
+        return _rep_band_pairs(reps, threshold, n_bits)
     params = _band_params(threshold)
     if params is None:
-        return _rep_dense_pairs(emb, reps=reps)
-    return _rep_band_pairs(emb, threshold, params[0], reps=reps)
+        return _rep_dense_pairs(reps)
+    return _rep_band_pairs(reps, threshold, params[0])
 
 
 def lsh_candidate_pairs(
@@ -455,7 +446,8 @@ def lsh_candidate_pairs(
     representative BEFORE banding, so a corpus of N copies costs one
     posting, not a C(N,2) hot bucket; dup-group pairs re-enter via an
     output-bounded group self-join and rep-pair expansion."""
-    mem = _dup_groups(emb)
+    reps = _dup_reps(emb)
+    mem = emb.join(reps, "e").select("vec_id", "gid")
 
     # within-dup-group pairs (cos == 1 after rescore, always >= threshold;
     # output-bounded: a group of k members owes k*(k-1)/2 result rows anyway)
@@ -463,7 +455,7 @@ def lsh_candidate_pairs(
     m_b = mem.select(F.col("vec_id").alias("vec_b"), F.col("gid").alias("g"))
     within = m_a.join(m_b, "g").filter(F.col("vec_a") < F.col("vec_b")).drop("g")
 
-    rep_pairs = _rep_pairs_for(emb, threshold, n_bits)
+    rep_pairs = _rep_pairs_for(reps, threshold, n_bits)
     # expand rep pairs to member pairs (groups are disjoint, so each
     # unordered member pair appears exactly once; least/greatest orients it)
     ea = mem.select(F.col("gid").alias("ga"), F.col("vec_id").alias("va"))
@@ -507,12 +499,12 @@ def embedding_near_dup_pairs(
     emb = embedding_vectors(spark, sf_dir)
     # the array-keyed dup-collapse aggregate is the expensive shared input
     # of ALL four consumers (membership, rep vectors, candidate generator's
-    # two legs) — build it ONCE and cache lazily (no plan-build job, so the
-    # pure-plan pin holds)
-    reps_full = emb.groupBy("e").agg(F.min("vec_id").alias("gid")).cache()
+    # two legs) — build it ONCE (no plan-build job, so the pure-plan pin
+    # holds)
+    reps_full = _dup_reps(emb)
     mem = emb.join(reps_full.select("gid", "e"), "e").select("vec_id", "gid")
     erep = reps_full.select("gid", "e", norm(F.col("e")).alias("n"))
-    rep_pairs = _rep_pairs_for(emb, threshold, reps=reps_full.select("gid", "e"))
+    rep_pairs = _rep_pairs_for(reps_full.select("gid", "e"), threshold)
     ra = erep.select(F.col("gid").alias("ga"), F.col("e").alias("ea"), F.col("n").alias("na"))
     rb = erep.select(F.col("gid").alias("gb"), F.col("e").alias("eb"), F.col("n").alias("nb"))
     verified = (

@@ -24,6 +24,14 @@ _LOCAL_CORES = os.environ.get("SPARK_GRAFT_CPUS", "32")
 # measured for one pass (see get_spark).
 _CODEGEN_CACHE_ENTRIES = "2000"
 
+# The driver JVM's JIT policy: C2 (tier 4) thresholds at ten times the JDK
+# 17 defaults, so methods run as C1 code and only code that stays hot pays
+# for a C2 compile (see get_spark).
+_DRIVER_JIT_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=50000 -XX:Tier4MinInvocationThreshold=6000 "
+    "-XX:Tier4CompileThreshold=150000 -XX:Tier4BackEdgeThreshold=400000"
+)
+
 
 def get_spark(app_name: str = "big-data-computing-spark", master: str | None = None) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -49,6 +57,24 @@ def get_spark(app_name: str = "big-data-computing-spark", master: str | None = N
       made every warm run recompile (Janino) and re-JIT all of them. It is
       a static conf: a session someone else already started (for example
       ``tools/check_bare_session.py``) keeps its own value.
+    - ``spark.driver.defaultJavaOptions``: the driver JVM's JIT policy,
+      ``_DRIVER_JIT_OPTIONS`` (C2 thresholds at ten times the defaults).
+      The engine's local work is many short jobs over small inputs, and a
+      per-thread CPU probe of the driver JVM (4 cores, the ``ml_pipeline``
+      workload of ``perfbench/run.py``, default JIT) put the C1/C2 compiler
+      threads at 7.5 of 18.3 CPU-s during set-up, 22.5 of 46.8 CPU-s in
+      the cold pass (executor tasks: 5.0) and 2.9 of 15.6 CPU-s in the
+      first warm pass. With the raised thresholds most methods stay C1
+      code, and only code that stays hot (a 10x query's generated loops)
+      is compiled by C2. C1 only (``-XX:TieredStopAtLevel=1``) saved more
+      CPU but doubled the wall time of the compute-bound 10x queries (see
+      SCALING.md, "JVM warm-up"). It is set as ``defaultJavaOptions``, not
+      ``extraJavaOptions``: PySpark puts builder confs on the
+      ``spark-submit`` line ahead of ``PYSPARK_SUBMIT_ARGS``, so a caller
+      that sets ``spark.driver.extraJavaOptions`` there (perfbench does)
+      would override it, while the default options are prepended to the
+      extra ones and both reach the JVM. Like the codegen cache it is
+      static: it only applies to a JVM this call launches.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -60,6 +86,7 @@ def get_spark(app_name: str = "big-data-computing-spark", master: str | None = N
         .config("spark.sql.shuffle.partitions", _LOCAL_CORES)
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.codegen.cache.maxEntries", _CODEGEN_CACHE_ENTRIES)
+        .config("spark.driver.defaultJavaOptions", _DRIVER_JIT_OPTIONS)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.sql.legacy.timeParserPolicy", "CORRECTED")
         # legacy events.parquet generations store TIMESTAMP(NANOS) which the

@@ -449,6 +449,7 @@ def test_q40_exact_dup_collapse_guard(spark):
     from pyspark.sql import functions as F
 
     from big_data_computing_final_project_spark.plans.similarity import (
+        _dup_reps,
         _rep_band_pairs,
         lsh_candidate_pairs,
     )
@@ -464,7 +465,10 @@ def test_q40_exact_dup_collapse_guard(spark):
 
     # 1. banding sees one representative per distinct content: rep-level
     # candidate count is IDENTICAL to the unplanted corpus
-    assert _rep_band_pairs(planted, 0.95).count() == _rep_band_pairs(emb, 0.95).count()
+    assert (
+        _rep_band_pairs(_dup_reps(planted), 0.95).count()
+        == _rep_band_pairs(_dup_reps(emb), 0.95).count()
+    )
 
     # 2. the answer is still complete: all C(200,2) copy pairs (vec 0 plus
     # its 199 clones) are candidates on the planted corpus
@@ -473,6 +477,26 @@ def test_q40_exact_dup_collapse_guard(spark):
     for i, a in enumerate(group):
         for b in group[i + 1 :]:
             assert (min(a, b), max(a, b)) in cands
+
+
+def test_lsh_candidate_pairs_builds_dup_collapse_once(spark):
+    """Membership and both generator regimes read ONE cached dup-collapse
+    aggregate: the optimized plan holds no aggregate keyed on the
+    embedding array outside that cached relation."""
+    import re
+
+    from big_data_computing_final_project_spark.plans.similarity import (
+        lsh_candidate_pairs,
+    )
+
+    emb = spark.range(12).selectExpr(
+        "id AS vec_id", "array(cast(id % 9 AS double), 1.0d) AS e"
+    )
+    for threshold, n_bits in ((0.95, 8), (0.4, None)):
+        plan = lsh_candidate_pairs(emb, threshold, n_bits)._jdf.queryExecution()
+        text = plan.optimizedPlan().toString()
+        assert not re.search(r"^\W*Aggregate \[e#\d+\]", text, re.M), text
+        assert len(set(re.findall(r"HashAggregate\(keys=\[(e#\d+)\]", text))) == 1, text
 
 
 def test_q36_planted_copies_bounded_and_exact(spark, sf_dir, tmp_path):
@@ -1306,6 +1330,7 @@ def test_q40_dense_pairs_complete(spark):
     """The distributed block join must enumerate every unordered rep pair
     exactly once (no misses at block boundaries, no double counting)."""
     from big_data_computing_final_project_spark.plans.similarity import (
+        _dup_reps,
         _rep_dense_pairs,
     )
 
@@ -1313,7 +1338,7 @@ def test_q40_dense_pairs_complete(spark):
     emb = spark.range(n).selectExpr(
         "id AS vec_id", "array(cast(id AS double), 1.0d) AS e"
     )
-    got = [(r.ga, r.gb) for r in _rep_dense_pairs(emb, n_blocks=4).collect()]
+    got = [(r.ga, r.gb) for r in _rep_dense_pairs(_dup_reps(emb), n_blocks=4).collect()]
     assert len(got) == len(set(got)) == n * (n - 1) // 2
     assert all(a < b for a, b in got)
 
