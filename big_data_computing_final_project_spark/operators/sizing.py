@@ -106,6 +106,16 @@ def one_partition_if_small(df: DataFrame) -> DataFrame:
     stage of one task. Only for fits whose model does not depend on the
     partitioning beyond float summation order (not RF bootstrap, GBT
     subsampling, CV folds, KMeans init or approxQuantile).
+
+    For the streaming store runner and its delta reader
+    (streaming/events.py ``_run_stores`` and ``_read_store_deltas``): a
+    micro-batch or store of a few hundred rows then plans no Exchange, so
+    each write or fold runs as one stage (see the staged-store contract
+    there).
+
+    The decision reads the ``plan_size_estimate`` memo, so a stale entry
+    (a store read whose directory list is unchanged but whose files grew)
+    can only change whether the frame is coalesced, never its rows.
     """
     raw = df.sparkSession.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m")
     return df.coalesce(1) if plan_size_estimate(df) <= _parse_bytes(raw) else df

@@ -16,6 +16,8 @@ model — SURVEY §4 notes there is no reference behavior to copy.
 from __future__ import annotations
 
 import os
+import re
+import shutil
 from collections.abc import Callable
 from functools import partial
 from typing import NamedTuple
@@ -25,6 +27,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import _stored_as_nanos, epoch_us, normalize_events_ts
 from ..functions.stats import dec_sum
+from ..operators.sizing import one_partition_if_small
 from ..operators.sketches import _HH_PARTIAL_SCHEMA, _SKETCH_SCHEMA
 from ..plans.cdc import CDC_OPS_SCHEMA, latest_cdc_ops
 from ..sources.ann_index import (
@@ -251,6 +254,16 @@ def run_stream_upsert(
 # - Per micro-batch the runner projects the batch once (``enrich``), caches
 #   it only when more than one step reads it, runs every step and then
 #   unpersists.
+# - Small frames run on one partition: the runner's projected batch and
+#   every delta read (_read_store_deltas) go through
+#   operators.sizing.one_partition_if_small. Such a frame reports
+#   SinglePartition, which satisfies every clustered and ordered
+#   distribution, so the steps' and folds' aggregates, windows, sorts and
+#   same-side joins plan no Exchange: each staged write or fold collect is
+#   one stage instead of a chain of AQE stage jobs. A frame above the
+#   advisory partition size keeps its layout. Rows never depend on it:
+#   every _summed merge sums integers or decimals, and the dup-flow window
+#   orders by the unique doc_id.
 # - A step stages under ``batch_id=N`` with an overwrite, so a replayed
 #   batch overwrites its own delta: at-least-once in, exactly-once effect.
 # - N is the raw micro-batch id remapped above the store's compaction
@@ -380,15 +393,14 @@ def _read_store_deltas(spark: SparkSession, store_dir: str, schema: str) -> Data
     INFERENCE over zero parquet files raises; the declared schema reads it
     as simply empty. A store that has never been written returns an empty
     frame of the same shape, so every fold's zero-batch contract is
-    uniform."""
+    uniform. A store small enough for one AQE partition reads as one
+    partition (see the section contract)."""
     _recover_compaction(store_dir)
     full = schema + ", batch_id bigint"
     if not os.path.exists(store_dir):
         return local_frame(spark, [], full)
-    return (
-        spark.read.schema(full)
-        .option("basePath", store_dir)
-        .parquet(f"{store_dir}/batch_id=*")
+    return one_partition_if_small(
+        spark.read.schema(full).option("basePath", store_dir).parquet(f"{store_dir}/batch_id=*")
     )
 
 
@@ -418,6 +430,7 @@ def _run_stores(
     def run(batch: DataFrame, batch_id: int) -> None:
         if enrich is not None:
             batch = enrich(batch)
+        batch = one_partition_if_small(batch)
         shared = len(steps) > 1
         if shared:
             batch = batch.cache()
@@ -507,8 +520,6 @@ def _recover_compaction(store_dir: str) -> None:
     by every store fold) and by the upsert sink, so a crashed swap can never
     read as an empty store — at worst the next compaction redoes the
     merge."""
-    import shutil
-
     old = store_dir + ".old"
     if os.path.exists(store_dir):
         if os.path.exists(old):  # completed swap, stale backup
@@ -523,8 +534,6 @@ def _swap(live: str, built: str) -> None:
     ``live.old``, rename ``built`` to ``live``, drop the backup. A crash
     between the renames leaves every byte of the old ``live`` in `.old`,
     which _recover_compaction restores."""
-    import shutil
-
     old = live + ".old"
     shutil.rmtree(old, ignore_errors=True)
     if os.path.exists(live):
@@ -540,9 +549,6 @@ def _compact_partitioned(spark: SparkSession, store_dir: str, part: _Part) -> in
     overwrites at most an empty low-id delta instead of the whole
     compacted history (run this in the maintenance window — no concurrent
     readers/writers)."""
-    import re
-    import shutil
-
     live = part.path(store_dir)
     _recover_compaction(live)
     if not os.path.exists(live):

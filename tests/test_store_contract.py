@@ -13,10 +13,12 @@ the last tests check the monitor log ids and the upsert sink's swap."""
 from __future__ import annotations
 
 import os
+import re
 from decimal import Decimal
 from typing import NamedTuple
 
 import pytest
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from big_data_computing_final_project_spark.streaming import events as E
@@ -160,6 +162,69 @@ def test_basket_and_revenue_folds_heal_a_crashed_compaction(spark, tmp_path):
     assert want  # the day-35 spike flags
     os.rename(partials, partials + ".old")
     assert _rows(E.revenue_anomalies_from_store(spark, revenue)) == want
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _shuffles(df) -> list[str]:
+    """The shuffle ``Exchange`` nodes of ``df``'s physical plan, with their
+    partitioning (BroadcastExchange and ReusedExchange do not match)."""
+    return re.findall(r"\bExchange \w+", _plan(df))
+
+
+def test_small_store_folds_run_on_one_partition(spark, tmp_path):
+    """A store below the advisory partition size reads as one partition, so
+    its folds plan no shuffle: q146's fold holds no Exchange at all and
+    q157's only broadcasts. Past the advisory size the same fold shuffles
+    again with the same rows, and the dup-flow step's ``batch_id < N``
+    keeper lookup still prunes partitions through the coalesce."""
+    flow, volume = str(tmp_path / "flow"), str(tmp_path / "volume")
+    deltas = {
+        (flow, E._DUP_FLOW.part("keepers")): [
+            [("f1", "srcA", 1), ("f2", "srcB", 2)],
+            [("f3", "srcA", 5)],
+            [("f4", "srcC", 8)],
+        ],
+        (flow, E._DUP_FLOW.part("edges")): [
+            [("f1", "srcA", "srcB", 1)],
+            [("f1", "srcA", "srcC", 2), ("f2", "srcB", "srcA", 1)],
+            [("f3", "srcA", "srcA", 1)],
+        ],
+        (volume, E._VOLUME.part()): [
+            [("srcA", "en", 2, 20, 100), ("srcB", "de", 1, 7, 40)],
+            [("srcA", "en", 3, 30, 150), ("srcC", "en", 2, 9, 60)],
+            [("srcB", "de", 2, 11, 70)],
+        ],
+    }
+    for (store, part), batches in deltas.items():
+        for d, rows in enumerate(batches):
+            E._stage(spark.createDataFrame(rows, part.schema), part.path(store), d)
+
+    matrix = E.dup_flow_matrix_from_store(spark, flow)
+    assert "Exchange" not in _plan(matrix)
+    assert _shuffles(E.report_card_from_store(spark, volume, flow)) == []
+    want = _rows(matrix)
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    old = spark.conf.get(key, None)
+    spark.conf.set(key, "1")
+    try:
+        wide = E.dup_flow_matrix_from_store(spark, flow)
+        assert any("hashpartitioning" in s for s in _shuffles(wide))
+        assert _rows(wide) == want
+    finally:
+        if old is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, old)
+
+    lookup = E._DUP_FLOW.part("keepers").read(spark, flow).where(F.col("batch_id") < 2)
+    plan = _plan(lookup)
+    assert "Coalesce" in plan
+    assert re.search(r"PartitionFilters: \[[^\]]*batch_id", plan), plan
+    assert sorted(r.fp for r in lookup.collect()) == ["f1", "f2", "f3"]
 
 
 # -- the declared steps, driven through the runner's helper ------------------

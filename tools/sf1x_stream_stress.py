@@ -220,7 +220,7 @@ def _body(spark, queries, work, timings, checks) -> None:
         .parquet(docs_arrivals)
     )
     t0 = time.time()
-    flow_dir, vol_dir = run_stream_ingest_suite(
+    flow_dir, vol_dir, _ = run_stream_ingest_suite(
         suite_stream,
         os.path.join(work, "suite_stores"),
         os.path.join(work, "ckpt_suite"),
