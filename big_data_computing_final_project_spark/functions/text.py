@@ -5,6 +5,11 @@ All hot-path logic is built-in Column expressions (split / regexp / md5 /
 higher-order array functions) so it runs JVM-side under whole-stage codegen —
 no Python UDFs. At 100 TB the documents table is the biggest input; every
 function here is a narrow map (no shuffle).
+
+Shingles are built only from staged tokens: a caller projects
+``tokens(text).alias("toks")`` first and applies ``shingles_of_tokens`` to
+that column, so the tokenizer runs once per document, not once per shingle.
+There is no shingle builder that takes the text itself.
 """
 
 from __future__ import annotations
@@ -223,26 +228,21 @@ def pii_hits(text: Column) -> Column:
 
 def shingles_of_tokens(toks: Column, k: int = 3) -> Column:
     """Word k-shingles of a pre-tokenized array column -> array<string>
-    (distinct). ``toks`` MUST be a plain column reference (select
-    ``tokens(text).alias("toks")`` in a prior projection): passing the
-    tokenizer *expression* here would inline it into size() and every
-    transform element — re-running the regex split once per shingle.
-    CollapseProject keeps the staging projection because the alias is
-    referenced more than once, so the tokens evaluate exactly once per row
-    (measured ~8x on q102's shingle build at sf0.1)."""
+    (distinct); the only shingle builder. Documents shorter than k words
+    yield their whole text as the single shingle.
+
+    ``toks`` MUST be a plain column reference: select
+    ``tokens(text).alias("toks")`` in a prior projection and shingle that
+    column. The tokenizer *expression* passed here would be inlined into
+    size() and every transform element, re-running the normalize+split
+    regex once per shingle. CollapseProject keeps the staging projection
+    because the alias is referenced more than once, so the tokens evaluate
+    exactly once per row (measured ~8x on q102's shingle build at sf0.1).
+    Explode the result with ``explode_outer``: a plain explode lets
+    InferFiltersFromGenerate re-inline the shingle expression below the
+    staging projection."""
     n = F.size(toks)
     idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
     return F.array_distinct(
         F.transform(idx, lambda i: F.concat_ws(" ", F.slice(toks, i + 1, k)))
     )
-
-
-def shingles(text: Column, k: int = 3) -> Column:
-    """Word k-shingles of the normalized text -> array<string> (distinct).
-
-    Built with transform over token indices — stays JVM-side. Documents
-    shorter than k words yield their whole text as the single shingle.
-    NOTE: inlines the tokenizer into each shingle element; prefer a
-    two-step select with ``shingles_of_tokens`` on hot paths.
-    """
-    return shingles_of_tokens(tokens(text), k)

@@ -412,23 +412,23 @@ def _mix_blob(doc_id: int) -> bytes:
     return mk.build_mp4(1000, doc_id % 9000 + 1000, n_traks=1)
 
 
+def _plant(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One Arrow batch of (doc_id, source) -> (doc_id, source, content)."""
+    return pd.DataFrame(
+        {
+            "doc_id": pdf["doc_id"].values,
+            "source": pdf["source"].values,
+            "content": [_mix_blob(int(d)) for d in pdf["doc_id"]],
+        }
+    )
+
+
 def attach_media_mix(docs: DataFrame) -> DataFrame:
     """(doc_id, source) -> (doc_id, source, content): plant the
     deterministic real-format mix of :func:`_mix_blob` as a binary column.
     Arrow-batched; the binary is born distributed, one blob per doc."""
-
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "source": pdf["source"].values,
-                    "content": [_mix_blob(int(d)) for d in pdf["doc_id"]],
-                }
-            )
-
     return docs.select("doc_id", "source").mapInPandas(
-        _batches, "doc_id long, source string, content binary"
+        lambda it: map(_plant, it), "doc_id long, source string, content binary"
     )
 
 
@@ -465,22 +465,34 @@ def _health_one(content: bytes) -> tuple[str, str]:
         return fmt, str(e)
 
 
+def _classify(pdf: pd.DataFrame) -> pd.DataFrame:
+    """One Arrow batch of (doc_id, source, content) -> (doc_id, source,
+    fmt, status) through :func:`_health_one`."""
+    verdicts = [_health_one(c) for c in pdf["content"]]
+    return pd.DataFrame(
+        {
+            "doc_id": pdf["doc_id"].values,
+            "source": pdf["source"].values,
+            "fmt": [v[0] for v in verdicts],
+            "status": [v[1] for v in verdicts],
+        }
+    )
+
+
 def decode_health(media: DataFrame) -> DataFrame:
     """mapInPandas decode-health classification: every (doc_id, source,
     content) row becomes (doc_id, source, fmt, status) through
     :func:`_health_one` — the corpus-quality audit the strict decoders
     can't provide (they raise; this reports)."""
+    return media.mapInPandas(lambda it: map(_classify, it), HEALTH_SCHEMA)
 
-    def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            verdicts = [_health_one(c) for c in pdf["content"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values,
-                    "source": pdf["source"].values,
-                    "fmt": [v[0] for v in verdicts],
-                    "status": [v[1] for v in verdicts],
-                }
-            )
 
-    return media.mapInPandas(_batches, HEALTH_SCHEMA)
+def media_health(docs: DataFrame) -> DataFrame:
+    """(doc_id, source) -> (doc_id, source, fmt, status): the rows of
+    ``decode_health(attach_media_mix(docs))`` in ONE mapInPandas pass.
+    Each Arrow batch is planted and classified in the same Python worker,
+    so a partition pays one Arrow round trip, not two, and the blobs never
+    cross to the JVM."""
+    return docs.select("doc_id", "source").mapInPandas(
+        lambda it: (_classify(_plant(pdf)) for pdf in it), HEALTH_SCHEMA
+    )

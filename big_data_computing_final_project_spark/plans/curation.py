@@ -1089,7 +1089,7 @@ ORDER BY source
 
 @register("q232_curation_scorecard", oracle=_Q232_ORACLE)
 def q232_curation_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.multimodal import attach_media_mix, decode_health
+    from ..operators.multimodal import media_health
     from .dedup import q225_ngram_novelty
 
     # the dup-exposure signal (q157's) and the fertility signal (q210's)
@@ -1113,7 +1113,7 @@ def q232_curation_scorecard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # restatement — the scorecard stays honest about what the decoders saw
     docs = load_table(spark, sf_dir, "documents", fan_out_ok=False)  # see q51
     med = (
-        decode_health(attach_media_mix(docs))
+        media_health(docs)
         .groupBy("source")
         .agg(
             (

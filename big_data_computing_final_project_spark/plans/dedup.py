@@ -121,7 +121,8 @@ ORDER BY doc_a, doc_b
 
 def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    return docs.select("doc_id", X.shingles(F.col("text"), 3).alias("sh"))
+    toks = docs.select("doc_id", X.tokens(F.col("text")).alias("toks"))
+    return toks.select("doc_id", X.shingles_of_tokens(F.col("toks"), 3).alias("sh"))
 
 
 def _exact_jaccard_pairs(
@@ -1540,7 +1541,7 @@ ORDER BY source
 """
 # Docs with NULL text are excluded on both sides; docs shorter than 3
 # words yield their whole text as the single shingle (the
-# functions.text.shingles contract), so n_sh >= 1 and the divisions are
+# functions.text.shingles_of_tokens contract), so n_sh >= 1 and the divisions are
 # safe. The oracle reuses q35's _SQL_SHINGLES builder over _SQL_TOKS.
 
 

@@ -71,12 +71,12 @@ def q52_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # q220 — decode-health audit: per-source media decode
-# error rates over a planted real-format mix. attach_media_mix builds one
+# error rates over a planted real-format mix. media_health builds one
 # REAL png/jpeg/gif/wav/mp4 blob per doc (format = doc_id % 5) with every
 # 7th doc malformed in a format-specific way and every 11th (precedence)
 # magic-less garbage — the truncated-download blob a crawl sees most
-# often, classified 'unknown'; decode_health runs the real header
-# decoders and folds each NotImplementedError into a status row.
+# often, classified 'unknown' — and, in the same Arrow pass, runs the real
+# header decoders and folds each NotImplementedError into a status row.
 # The oracle restates the planting rule directly — if a decoder's guard,
 # the sniffer, or the Arrow plumbing drifts, a status string (and its
 # count) moves and the hash breaks. share_of_fmt is one exact
@@ -119,10 +119,10 @@ ORDER BY source, fmt, status
 def q220_decode_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from ..operators.multimodal import attach_media_mix, decode_health
+    from ..operators.multimodal import media_health
 
     docs = load_table(spark, sf_dir, "documents", fan_out_ok=False)  # see q51
-    health = decode_health(attach_media_mix(docs))
+    health = media_health(docs)
     counts = health.groupBy("source", "fmt", "status").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
@@ -200,10 +200,10 @@ def q227_decode_quality_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from ..functions import text as X
-    from ..operators.multimodal import attach_media_mix, decode_health
+    from ..operators.multimodal import media_health
 
     docs = load_table(spark, sf_dir, "documents", fan_out_ok=False)  # see q51
-    health = decode_health(attach_media_mix(docs)).select(
+    health = media_health(docs).select(
         "doc_id", "source", (F.col("status") != "ok").cast("int").alias("malformed")
     )
     band = (

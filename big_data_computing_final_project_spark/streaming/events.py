@@ -254,8 +254,8 @@ def run_stream_upsert(
 # - Per micro-batch the runner projects the batch once (``enrich``), caches
 #   it only when more than one step reads it, runs every step and then
 #   unpersists.
-# - Small frames run on one partition: the runner's projected batch and
-#   every delta read (_read_store_deltas) go through
+# - Small frames run on one partition: the runner's raw batch (sized
+#   before ``enrich``) and every delta read (_read_store_deltas) go through
 #   operators.sizing.one_partition_if_small. Such a frame reports
 #   SinglePartition, which satisfies every clustered and ordered
 #   distribution, so the steps' and folds' aggregates, windows, sorts and
@@ -428,9 +428,12 @@ def _run_stores(
     ``evaluate(spark, N)`` under the monitor's N."""
 
     def run(batch: DataFrame, batch_id: int) -> None:
+        # sized before enrich: the raw batch's plan is one LogicalRDD leaf,
+        # so its estimate costs no optimizer run over the projection, and
+        # enrich's narrow projection keeps the raw batch's partitioning
+        batch = one_partition_if_small(batch)
         if enrich is not None:
             batch = enrich(batch)
-        batch = one_partition_if_small(batch)
         shared = len(steps) > 1
         if shared:
             batch = batch.cache()
@@ -1628,7 +1631,12 @@ def _run_suite(
     log: tuple[_Part, str, Callable[[SparkSession, int], DataFrame]] | None = None,
 ) -> None:
     """The document suite's stores under ``root_dir``, fed by one cached
-    projection of each batch."""
+    projection of each batch. The projection carries the fingerprint and
+    the token count every store reads, plus the text for the steps that
+    read it: the shingle steps (LSH, the scorecard's shingle counts) each
+    stage the tokens in their own projection and shingle that column, and
+    the media-health step plants and classifies its blobs in one Arrow
+    pass."""
     from ..functions import text as X
 
     path = lambda name: os.path.join(root_dir, name)  # noqa: E731
@@ -1646,7 +1654,7 @@ def _run_suite(
 
     def enrich(batch: DataFrame) -> DataFrame:
         # fingerprint + token count computed once per micro-batch for every
-        # store; LSH shingles / the scorecard tokenizer need the text
+        # store; the shingle steps and the fert step read the text
         return batch.select(
             "doc_id",
             *(["text"] if near_dup or scorecard else []),
@@ -1701,10 +1709,8 @@ def _shingles_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> Non
 
     _stage(
         batch.filter(F.col("text").isNotNull())
-        .select(
-            "source",
-            F.explode_outer(X.shingles_of_tokens(X.tokens(F.col("text")), 3)).alias("s"),
-        )
+        .select("source", X.tokens(F.col("text")).alias("toks"))
+        .select("source", F.explode_outer(X.shingles_of_tokens(F.col("toks"), 3)).alias("s"))
         .groupBy(F.xxhash64("s").alias("sh"), "source")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt")),
         store_dir,
@@ -1963,7 +1969,8 @@ def _lsh_step(
     spark = batch.sparkSession
     # null-shingle docs (null text) can never verify; drop like batch q36
     cur = (
-        batch.select("doc_id", X.shingles(F.col("text"), 3).alias("sh"))
+        batch.select("doc_id", X.tokens(F.col("text")).alias("toks"))
+        .select("doc_id", X.shingles_of_tokens(F.col("toks"), 3).alias("sh"))
         .where(F.col("sh").isNotNull())
         .withColumn("bands", F.array(*band_key_structs(F.col("sh"))))
     )
@@ -2709,6 +2716,17 @@ def basket_rules_from_store(
 # counts per batch_id, plain-sum fold.
 # ---------------------------------------------------------------------------
 
+def _stage_health(health: DataFrame, store_dir: str, eff_id: int) -> None:
+    """Stage the additive (source, fmt, status) counts of classified blobs."""
+    _stage(
+        health.groupBy("source", "fmt", "status").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_docs")
+        ),
+        store_dir,
+        eff_id,
+    )
+
+
 def _decode_health_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
     """One micro-batch of the decode-health store: classify every blob
     through the real header decoders (operators/multimodal.decode_health —
@@ -2716,22 +2734,17 @@ def _decode_health_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -
     additive (source, fmt, status) counts."""
     from ..operators.multimodal import decode_health
 
-    _stage(
-        decode_health(batch.select("doc_id", "source", "content"))
-        .groupBy("source", "fmt", "status")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs")),
-        store_dir,
-        eff_id,
-    )
+    _stage_health(decode_health(batch.select("doc_id", "source", "content")), store_dir, eff_id)
 
 
-def _media_health_step(batch: DataFrame, eff_id: int, store_dir: str, raw_id: int) -> None:
+def _media_health_step(batch: DataFrame, eff_id: int, store_dir: str, _: int) -> None:
     """Decode-health counts of the batch's media (q220's contract): the
-    decode-health step over the media mix attached per doc."""
-    from ..operators.multimodal import attach_media_mix
+    media mix is planted per doc and classified in one Arrow pass
+    (operators/multimodal.media_health), so the blobs never leave the
+    Python worker."""
+    from ..operators.multimodal import media_health
 
-    media = attach_media_mix(batch.select("doc_id", "source"))
-    _decode_health_step(media, eff_id, store_dir, raw_id)
+    _stage_health(media_health(batch), store_dir, eff_id)
 
 
 _HEALTH = _Store(

@@ -182,3 +182,73 @@ def test_dynamic_partition_pruning_on_partitioned_fact(spark, sf_dir, tmp_path):
     got = {r["event_type"]: r["count"] for r in j.collect()}
     want = ev.filter(F.col("event_type") == "click").count()
     assert got == {"click": want}
+
+
+def _in_lambda(plan: str, token: str) -> bool:
+    """Whether any occurrence of ``token`` in ``plan`` sits inside the
+    parentheses of a ``lambdafunction(...)``."""
+    stack: list[bool] = []  # per open paren: does it open a lambdafunction
+    i = 0
+    while i < len(plan):
+        if plan.startswith(token, i) and any(stack):
+            return True
+        c = plan[i]
+        if c == "(":
+            stack.append(plan.endswith("lambdafunction", 0, i))
+        elif c == ")" and stack:
+            stack.pop()
+        elif c == "\n":
+            stack.clear()
+        i += 1
+    return False
+
+
+def test_tokenizer_runs_once_per_document(spark, sf_dir, tmp_path, monkeypatch):
+    """Every shingle builder stages the tokens in its own projection, so the
+    optimized plan holds the tokenizer's regexp_replace once and never inside
+    the shingle transform's lambdafunction, where it would run once per
+    shingle. Covers dedup._shingled (q35, q36, q68, q122, q159) and the
+    streaming shingle and LSH steps. The LSH step checkpoints its shingled
+    frame, so its tokenizer is seen in the frame it checkpoints."""
+    import os
+
+    from big_data_computing_final_project_spark.plans.dedup import _shingled
+    from big_data_computing_final_project_spark.streaming import events as E
+
+    def optimized(df) -> str:
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    sf001 = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    plans = {"dedup._shingled": [optimized(_shingled(spark, sf001))]}
+
+    seen: list[str] = []
+    stage, checkpoint = E._stage, type(spark.range(1)).localCheckpoint
+
+    def capture_stage(df, delta_root, batch_id):
+        seen.append(optimized(df))
+        return stage(df, delta_root, batch_id)
+
+    def capture_checkpoint(df, *args, **kwargs):
+        seen.append(optimized(df))
+        return checkpoint(df, *args, **kwargs)
+
+    monkeypatch.setattr(E, "_stage", capture_stage)
+    monkeypatch.setattr(type(spark.range(1)), "localCheckpoint", capture_checkpoint)
+    batch = spark.createDataFrame(
+        [
+            (1, "The quick brown fox jumps over the lazy dog", "web"),
+            (2, "the quick brown fox jumps over the lazy cat", "web"),
+            (3, "Lorem ipsum dolor sit amet", "books"),
+        ],
+        "doc_id bigint, text string, source string",
+    )
+    for name, step in (("_shingles_step", E._shingles_step), ("_lsh_step", E._lsh_step)):
+        seen.clear()
+        step(batch, 0, str(tmp_path / name), 0)
+        plans[name] = [p for p in seen if "regexp_replace" in p]
+
+    for name, texts in plans.items():
+        assert texts, f"{name}: no captured plan runs the tokenizer"
+        for plan in texts:
+            assert plan.count("regexp_replace(") == 1, f"{name}:\n{plan}"
+            assert not _in_lambda(plan, "regexp_replace("), f"{name}:\n{plan}"

@@ -332,8 +332,10 @@ def test_text_fragments_cross_engine_fuzz(spark):
             "doc_id",
             X.fingerprint(F.col("text")).alias("fp"),
             X.quality_score(F.col("text")).alias("q"),
-            X.shingles(F.col("text"), 3).alias("sh"),
-        ).collect()
+            X.tokens(F.col("text")).alias("toks"),
+        )
+        .select("doc_id", "fp", "q", X.shingles_of_tokens(F.col("toks"), 3).alias("sh"))
+        .collect()
     }
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")

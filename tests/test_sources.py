@@ -464,6 +464,33 @@ def test_decode_health_classifies_planted_mix(spark):
     assert wav_meta(_mix_blob(3))[:3] == (1, 8000, 16)
 
 
+def test_media_health_equals_two_pass_chain(spark):
+    """media_health plants and classifies in one mapInPandas pass; its rows
+    equal the two-pass decode_health(attach_media_mix(docs)) row for row
+    over doc ids 0-80: all five formats, the % 7 malformed blobs, the % 11
+    garbage blobs and doc 0."""
+    from big_data_computing_final_project_spark.operators.multimodal import (
+        attach_media_mix,
+        decode_health,
+        media_health,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, "srcA" if i % 2 else "srcB") for i in range(81)], "doc_id long, source string"
+    )
+    fused = media_health(docs)
+    assert fused.schema == decode_health(attach_media_mix(docs)).schema
+    got = sorted(tuple(r) for r in fused.collect())
+    want = sorted(tuple(r) for r in decode_health(attach_media_mix(docs)).collect())
+    assert got == want
+    assert [r[0] for r in got] == list(range(81))
+    fmts = {r[2] for r in got}
+    assert fmts == {"png", "jpeg", "gif", "wav", "mp4", "unknown"}, fmts
+    assert {r[2] for r in got if r[3] != "ok"} == fmts
+    assert "MapInPandas" in fused._jdf.queryExecution().optimizedPlan().toString()
+    assert fused._jdf.queryExecution().optimizedPlan().toString().count("MapInPandas") == 1
+
+
 def test_wav_meta_adpcm_and_truncated_fmt_raise_not_implemented(spark):
     """ADVICE r7 guards: a valid-but-compressed 4-bit ADPCM WAVE must raise
     NotImplementedError (not ZeroDivisionError from bits//8 == 0), and an
