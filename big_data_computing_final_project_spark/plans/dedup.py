@@ -1541,8 +1541,9 @@ ORDER BY source
 """
 # Docs with NULL text are excluded on both sides; docs shorter than 3
 # words yield their whole text as the single shingle (the
-# functions.text.shingles_of_tokens contract), so n_sh >= 1 and the divisions are
-# safe. The oracle reuses q35's _SQL_SHINGLES builder over _SQL_TOKS.
+# functions.text.shingles_of_tokens contract), so n_sh >= 1 and the
+# divisions are safe. The oracle reuses q35's _SQL_SHINGLES builder over
+# _SQL_TOKS.
 
 
 @register("q225_ngram_novelty", oracle=_Q225_ORACLE)

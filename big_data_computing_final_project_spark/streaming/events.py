@@ -429,7 +429,7 @@ def _run_stores(
 
     def run(batch: DataFrame, batch_id: int) -> None:
         # sized before enrich: the raw batch's plan is one LogicalRDD leaf,
-        # so its estimate costs no optimizer run over the projection, and
+        # so the estimate optimizes that leaf, not the projection, and
         # enrich's narrow projection keeps the raw batch's partitioning
         batch = one_partition_if_small(batch)
         if enrich is not None:

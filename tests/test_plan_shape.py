@@ -222,7 +222,8 @@ def test_tokenizer_runs_once_per_document(spark, sf_dir, tmp_path, monkeypatch):
     plans = {"dedup._shingled": [optimized(_shingled(spark, sf001))]}
 
     seen: list[str] = []
-    stage, checkpoint = E._stage, type(spark.range(1)).localCheckpoint
+    frame_cls = type(spark.range(1))
+    stage, checkpoint = E._stage, frame_cls.localCheckpoint
 
     def capture_stage(df, delta_root, batch_id):
         seen.append(optimized(df))
@@ -233,7 +234,7 @@ def test_tokenizer_runs_once_per_document(spark, sf_dir, tmp_path, monkeypatch):
         return checkpoint(df, *args, **kwargs)
 
     monkeypatch.setattr(E, "_stage", capture_stage)
-    monkeypatch.setattr(type(spark.range(1)), "localCheckpoint", capture_checkpoint)
+    monkeypatch.setattr(frame_cls, "localCheckpoint", capture_checkpoint)
     batch = spark.createDataFrame(
         [
             (1, "The quick brown fox jumps over the lazy dog", "web"),
