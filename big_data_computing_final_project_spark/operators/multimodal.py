@@ -423,15 +423,6 @@ def _plant(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def attach_media_mix(docs: DataFrame) -> DataFrame:
-    """(doc_id, source) -> (doc_id, source, content): plant the
-    deterministic real-format mix of :func:`_mix_blob` as a binary column.
-    Arrow-batched; the binary is born distributed, one blob per doc."""
-    return docs.select("doc_id", "source").mapInPandas(
-        lambda it: map(_plant, it), "doc_id long, source string, content binary"
-    )
-
-
 HEALTH_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -488,11 +479,12 @@ def decode_health(media: DataFrame) -> DataFrame:
 
 
 def media_health(docs: DataFrame) -> DataFrame:
-    """(doc_id, source) -> (doc_id, source, fmt, status): the rows of
-    ``decode_health(attach_media_mix(docs))`` in ONE mapInPandas pass.
+    """(doc_id, source) -> (doc_id, source, fmt, status): plant each doc's
+    blob of the deterministic real-format mix (:func:`_mix_blob`) and
+    classify it (:func:`decode_health`'s rows) in ONE mapInPandas pass.
     Each Arrow batch is planted and classified in the same Python worker,
-    so a partition pays one Arrow round trip, not two, and the blobs never
-    cross to the JVM."""
+    so a partition pays one Arrow round trip and the blobs never cross to
+    the JVM."""
     return docs.select("doc_id", "source").mapInPandas(
         lambda it: (_classify(_plant(pdf)) for pdf in it), HEALTH_SCHEMA
     )

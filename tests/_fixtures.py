@@ -1,7 +1,9 @@
 """Shared planted-corpus builders for the documents-table tests: ONE
 definition of the (doc_id, text, lang, source, n_chars=len(text)) pyarrow
-shape so the per-suite fixtures cannot drift apart schema-wise. Also a
-job-group runner for tests that count the Spark jobs a call runs.
+shape so the per-suite fixtures cannot drift apart schema-wise. Also the
+planted media mix that the media-health tests compare the fused operator
+against, and a job-group runner for tests that count the Spark jobs a call
+runs.
 
 Not collected by pytest (leading underscore); test modules import it via
 pytest's rootdir sys.path insertion.
@@ -53,6 +55,19 @@ def planted_media_table(rows):
             "source": pa.array([s for _, s in rows], pa.string()),
             "content": pa.array([_mix_blob(i) for i, _ in rows], pa.binary()),
         }
+    )
+
+
+def attach_media_mix(docs):
+    """(doc_id, source) -> (doc_id, source, content): plant the
+    deterministic real-format mix (operators.multimodal._mix_blob) as a
+    binary column, one blob per doc. ``decode_health(attach_media_mix(docs))``
+    is the two-pass reference that operators.multimodal.media_health fuses
+    into one pass."""
+    from big_data_computing_final_project_spark.operators.multimodal import _plant
+
+    return docs.select("doc_id", "source").mapInPandas(
+        lambda it: map(_plant, it), "doc_id long, source string, content binary"
     )
 
 

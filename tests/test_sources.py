@@ -414,9 +414,10 @@ def test_decode_health_classifies_planted_mix(spark):
     planted real-format mix classifies to the expected (fmt, status) —
     one good and one bad doc per format — and an unrecognized magic folds
     to ('unknown', ...) instead of failing the job."""
+    from _fixtures import attach_media_mix
+
     from big_data_computing_final_project_spark.operators.multimodal import (
         _mix_blob,
-        attach_media_mix,
         decode_health,
     )
 
@@ -469,8 +470,9 @@ def test_media_health_equals_two_pass_chain(spark):
     equal the two-pass decode_health(attach_media_mix(docs)) row for row
     over doc ids 0-80: all five formats, the % 7 malformed blobs, the % 11
     garbage blobs and doc 0."""
+    from _fixtures import attach_media_mix
+
     from big_data_computing_final_project_spark.operators.multimodal import (
-        attach_media_mix,
         decode_health,
         media_health,
     )

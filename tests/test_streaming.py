@@ -1304,11 +1304,9 @@ def test_stream_decode_health_equals_batch_q220_and_compaction(spark, tmp_path):
     batch report over the full set — for forward AND reversed arrival
     (counts additive) — and mid-stream compaction must preserve the fold."""
     import pyarrow.parquet as _pq
+    from _fixtures import attach_media_mix
 
-    from big_data_computing_final_project_spark.operators.multimodal import (
-        attach_media_mix,
-        decode_health,
-    )
+    from big_data_computing_final_project_spark.operators.multimodal import decode_health
     from big_data_computing_final_project_spark.streaming.events import (
         compact_decode_health_store,
         decode_health_report_from_store,
