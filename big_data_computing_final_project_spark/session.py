@@ -13,6 +13,8 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Local core count, $SPARK_GRAFT_CPUS: the test harness and perfbench set it
@@ -53,6 +55,48 @@ def _driver_jvm_options() -> str:
         kept = (t for t in _DRIVER_JVM_OPTIONS.split() if not _COLLECTOR_FLAG.fullmatch(t))
         return " ".join(kept)
     return _DRIVER_JVM_OPTIONS
+
+
+# Hadoop's local file system with permissions set through java.nio instead of
+# a forked ``chmod`` (see get_spark). The jar is built from the sources beside
+# it; rebuild it with:
+#   cd big_data_computing_final_project_spark/jvm && d=$(mktemp -d) &&
+#   javac --release 17 -cp "$(python -c 'import os, pyspark; print(os.path.dirname(pyspark.__file__))')/jars/*" \
+#     -d "$d" sparkgraft/fs/*.java &&
+#   jar --create --date=2026-01-01T00:00:00Z --file spark-graft-fs.jar -C "$d" . && rm -rf "$d"
+_NIO_FS_JAR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm", "spark-graft-fs.jar")
+_NIO_FS_CONFS = {
+    "spark.driver.extraClassPath": _NIO_FS_JAR,
+    "spark.hadoop.fs.file.impl": "sparkgraft.fs.NioLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl": "sparkgraft.fs.NioLocalFs",
+}
+_LOCAL_MASTER = re.compile(r"local(?:\[[^\]]*\])?")
+_CALLER_MASTER_OR_CLASSPATH = re.compile(
+    r"--master|spark\.master|--driver-class-path|spark\.driver\.extraClassPath"
+)
+
+
+def _caller_sets_master_or_classpath() -> bool:
+    """Whether the caller names a master or a driver class path of its own:
+    in ``PYSPARK_SUBMIT_ARGS`` either replaces get_spark's, and the jar's
+    class path would replace one in ``spark-defaults.conf``."""
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(_find_spark_home(), "conf")
+    try:
+        with open(os.path.join(conf_dir, "spark-defaults.conf")) as f:
+            defaults = f.read()
+    except OSError:
+        defaults = ""
+    submit_args = os.environ.get("PYSPARK_SUBMIT_ARGS", "")
+    return any(_CALLER_MASTER_OR_CLASSPATH.search(s) for s in (submit_args, defaults))
+
+
+def _local_fs_confs(master: str | None) -> dict[str, str]:
+    """``_NIO_FS_CONFS`` when this call launches a local driver JVM that will
+    have the jar on its class path; otherwise none."""
+    launches_jvm = SparkContext._gateway is None and not os.environ.get("PYSPARK_GATEWAY_PORT")
+    if master is None or not _LOCAL_MASTER.fullmatch(master) or not launches_jvm:
+        return {}
+    return {} if _caller_sets_master_or_classpath() else _NIO_FS_CONFS
 
 
 def get_spark(app_name: str = "big-data-computing-spark", master: str | None = None) -> SparkSession:
@@ -120,6 +164,32 @@ def get_spark(app_name: str = "big-data-computing-spark", master: str | None = N
       override it, while the default options are prepended to the extra
       ones and both reach the JVM. Like the codegen cache it is
       static: it only applies to a JVM this call launches.
+    - ``spark.hadoop.fs.file.impl`` and
+      ``spark.hadoop.fs.AbstractFileSystem.file.impl``, with the jar on
+      ``spark.driver.extraClassPath`` (``_NIO_FS_CONFS``), for a local
+      master only: Hadoop's local file system, checksummed as before, whose
+      raw layer sets permission bits with ``Files.setPosixFilePermissions``.
+
+      A local session loads no ``libhadoop``, so Hadoop's
+      ``RawLocalFileSystem`` forks ``chmod`` for every file and directory a
+      write creates, and no conf turns that off: 9 forks per parquet write
+      (five directories, the part file, ``_SUCCESS`` and their two ``.crc``
+      sidecars), 214 per warm ``stream_ingest`` pass of
+      ``perfbench/run.py`` (7 staged writes per micro-batch, the streaming
+      checkpoint through ``FileContext``, the five compactions); without
+      them that pass takes about 10% less CPU on 4 cores (SCALING.md,
+      "Writes without forks"). The plugin overrides only
+      ``setPermission``: it sets the same nine bits without a fork and hands
+      a mode with the sticky bit, or a platform without POSIX permissions,
+      to Hadoop. Files, ``.crc`` sidecars, ``_SUCCESS``
+      markers, permission bits and store layout stay the stock ones.
+
+      Local masters only: a cluster's nodes load ``libhadoop``, which sets
+      permissions without a fork, and its executors would not have the jar.
+      The confs are also left out when the driver JVM is already running
+      (it has no jar on its class path) and when the caller names its own
+      master or driver class path (see ``_caller_sets_master_or_classpath``):
+      a bare or cluster session gets Hadoop's own file system.
     """
     builder = (
         SparkSession.builder.appName(app_name)
@@ -139,8 +209,8 @@ def get_spark(app_name: str = "big-data-computing-spark", master: str | None = N
         # in the catalog loader (no-op for native-micros files)
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
+    if master is None and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{_LOCAL_CORES}]"
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{_LOCAL_CORES}]")
-    return builder.getOrCreate()
+    return builder.config(map=_local_fs_confs(master)).getOrCreate()
