@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..functions import text as X
+from ..operators.banding import bucket_pairs, expand_groups, explode_bands
 from ..operators.sizing import broadcast_if_small
 from .registry import register
 
@@ -233,33 +234,16 @@ def band_key_structs(sh: F.Column, bands: int = _BANDS, rows: int = _ROWS_PER_BA
     return out
 
 
-def _lsh_band_candidates(
+def _band_postings(
     sh: DataFrame, bands: int = _BANDS, rows: int = _ROWS_PER_BAND
 ) -> DataFrame:
-    """(doc_a, doc_b) pairs sharing >=1 LSH band bucket — the banded
-    candidate self-join over a shingled frame."""
+    """(id, band, key) MinHash band postings of a shingled frame, cached:
+    both legs of the bucket join read them, and recomputing them would
+    re-run the full MinHash pass."""
     sig = sh.select(
         "doc_id", F.array(*band_key_structs(F.col("sh"), bands, rows)).alias("bk")
     )
-    # cache the exploded band keys: both legs of the candidate self-join
-    # consume them, and recomputation would re-run the full MinHash pass
-    ex = (
-        sig.select("doc_id", F.explode_outer("bk").alias("b"))  # outer: skip InferFiltersFromGenerate re-inlining the MinHash pass
-        .select("doc_id", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-        .cache()
-    )
-    a = ex.select(F.col("doc_id").alias("doc_a"), "band", "key")
-    b = ex.select(F.col("doc_id").alias("doc_b"), F.col("band").alias("band2"), F.col("key").alias("key2"))
-    return (
-        a.join(
-            b,
-            (F.col("band") == F.col("band2"))
-            & (F.col("key") == F.col("key2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "doc_b")
-        .distinct()
-    )
+    return explode_bands(sig, "doc_id", F.col("bk")).cache()
 
 
 def _dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -325,31 +309,16 @@ def lsh_jaccard_pairs(
         .where(F.col("sh").isNotNull())
         .cache()
     )
+    candidates = bucket_pairs(_band_postings(sh, bands, rows))
     rep_pairs = _verify_candidate_pairs(
-        sh, _lsh_band_candidates(sh, bands, rows), threshold
+        sh, candidates.withColumnsRenamed({"a": "doc_a", "b": "doc_b"}), threshold
     )
-
-    # (a) intra-group pairs: every ordered pair of same-content docs
-    m1 = groups.select(F.col("rep"), F.col("doc_id").alias("doc_a"))
-    m2 = groups.select(F.col("rep").alias("rep2"), F.col("doc_id").alias("doc_b"))
-    intra = (
-        m1.join(m2, (F.col("rep") == F.col("rep2")) & (F.col("doc_a") < F.col("doc_b")))
-        .select("doc_a", "doc_b", F.lit(1.0).alias("jac"))
-    )
-    # (b) verified rep pairs expanded across their groups (disjoint, so
-    # least/greatest orients each unordered pair exactly once)
-    ga = groups.select(F.col("rep").alias("doc_a"), F.col("doc_id").alias("xa"))
-    gb = groups.select(F.col("rep").alias("doc_b"), F.col("doc_id").alias("xb"))
-    inter = (
-        rep_pairs.join(ga, "doc_a")
-        .join(gb, "doc_b")
-        .select(
-            F.least("xa", "xb").alias("doc_a"),
-            F.greatest("xa", "xb").alias("doc_b"),
-            "jac",
-        )
-    )
-    out = intra.unionByName(inter)
+    # same-content docs pair at jac = 1.0; verified rep pairs cross their
+    # groups' members
+    members = groups.select(F.col("doc_id").alias("id"), "rep", F.lit(1.0).alias("jac"))
+    out = expand_groups(
+        members, rep_pairs.withColumnsRenamed({"doc_a": "a", "doc_b": "b"})
+    ).withColumnsRenamed({"a": "doc_a", "b": "doc_b"})
     return out.orderBy("doc_a", "doc_b") if sort else out
 
 
@@ -430,10 +399,12 @@ _SIMHASH_BAND_BITS = _SIMHASH_BITS // _SIMHASH_BANDS
 
 @register("q37_simhash_pairs", oracle=_Q37_ORACLE)
 def q37_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    md5_60 = X.md5_60
+    # null text has no tokens (the oracle's unnest emits no row); voting
+    # over a null token would give it signature 0 and pair it with every
+    # other null-text document
+    docs = load_table(spark, sf_dir, "documents").where(F.col("text").isNotNull())
     tok = docs.select("doc_id", F.explode_outer(X.tokens(F.col("text"))).alias("t")).select(
-        "doc_id", md5_60(F.col("t")).alias("h")
+        "doc_id", X.md5_60(F.col("t")).alias("h")
     )
     sigs = simhash_votes(tok, nbits=_SIMHASH_BITS).cache()
     band_mask = (1 << _SIMHASH_BAND_BITS) - 1
@@ -448,28 +419,15 @@ def q37_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             for i in range(_SIMHASH_BANDS)
         ]
     )
-    ex = (
-        sigs.select("doc_id", "sig", F.explode_outer(bands).alias("b"))
-        .select("doc_id", "sig", F.col("b.band").alias("band"), F.col("b.key").alias("key"))
-    )
-    a = ex.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"), "band", "key")
-    b = ex.select(
-        F.col("doc_id").alias("doc_b"),
-        F.col("sig").alias("sig_b"),
-        F.col("band").alias("band2"),
-        F.col("key").alias("key2"),
-    )
+    candidates = bucket_pairs(explode_bands(sigs, "doc_id", bands))
+    sa = sigs.select(F.col("doc_id").alias("a"), F.col("sig").alias("sig_a"))
+    sb = sigs.select(F.col("doc_id").alias("b"), F.col("sig").alias("sig_b"))
     ham = F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
     return (
-        a.join(
-            b,
-            (F.col("band") == F.col("band2"))
-            & (F.col("key") == F.col("key2"))
-            & (F.col("doc_a") < F.col("doc_b")),
-        )
-        .select("doc_a", "doc_b", ham.alias("hamming"))
+        candidates.join(sa, "a")
+        .join(sb, "b")
+        .select(F.col("a").alias("doc_a"), F.col("b").alias("doc_b"), ham.alias("hamming"))
         .filter(F.col("hamming") <= _SIMHASH_MAX_HAMMING)
-        .distinct()
         .orderBy("doc_a", "doc_b")
     )
 

@@ -17,6 +17,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..operators.banding import bucket_pairs, expand_groups
 from ..sources.ann_index import CODES_SCHEMA, centers_frame
 from .registry import register
 
@@ -316,7 +317,7 @@ _DENSE_BLOCKS = 8
 
 
 def _rep_dense_pairs(reps: DataFrame, n_blocks: int = _DENSE_BLOCKS) -> DataFrame:
-    """All rep-level pairs (ga < gb) of the rep frame ``reps`` (gid, e, see
+    """All rep-level pairs (a < b) of the rep frame ``reps`` (gid, e, see
     _dup_reps) as a DISTRIBUTED block-nested-loop: reps hash into
     ``n_blocks`` blocks; the tiny block-pair table broadcast-joins each
     side, so every unordered block pair is one equi-join partition of work
@@ -343,9 +344,7 @@ def _rep_dense_pairs(reps: DataFrame, n_blocks: int = _DENSE_BLOCKS) -> DataFram
         a.join(bp, "ba")
         .join(b, "bb")
         .filter((F.col("ba") < F.col("bb")) | (F.col("ga") < F.col("gb")))
-        .select(
-            F.least("ga", "gb").alias("ga"), F.greatest("ga", "gb").alias("gb")
-        )
+        .select(F.least("ga", "gb").alias("a"), F.greatest("ga", "gb").alias("b"))
     )
 
 
@@ -388,86 +387,29 @@ def _dup_reps(emb: DataFrame) -> DataFrame:
 def _rep_band_pairs(
     reps: DataFrame, threshold: float, n_bits: int = _LSH_BITS
 ) -> DataFrame:
-    """Rep-level candidate pairs (ga < gb) from the banded postings
-    self-join over the rep frame ``reps`` (gid, e) — one posting per
+    """Rep-level candidate pairs (a < b) sharing an ``n_bits``-wide bucket
+    in any table, over the rep frame ``reps`` (gid, e) — one posting per
     DISTINCT embedding per table, so planted exact copies cannot widen
-    this join (pinned by test_q40_exact_dup_collapse_guard, the q36
+    the bucket join (pinned by test_q40_exact_dup_collapse_guard, the q36
     pattern)."""
     tables = _plane_tables(_n_tables_for(threshold, n_bits), n_bits, _DIM)
     postings = reps.select(
-        "gid",
+        F.col("gid").alias("id"),
         F.posexplode(_bucket_signatures(assert_dim(F.col("e"), _DIM), tables)).alias(
-            "tbl", "bucket"
+            "band", "key"
         ),
     )
-    pa = postings.select(F.col("gid").alias("ga"), "tbl", "bucket")
-    pb = postings.select(F.col("gid").alias("gb"), "tbl", "bucket")
-    return (
-        pa.join(pb, ["tbl", "bucket"])
-        .filter(F.col("ga") < F.col("gb"))
-        .select("ga", "gb")
-        .distinct()
-    )
+    return bucket_pairs(postings)
 
 
-def _rep_pairs_for(
-    reps: DataFrame, threshold: float, n_bits: int | None = None
-) -> DataFrame:
-    """The ONE regime decision (review finding: q40 and lsh_candidate_pairs
-    had drifted copies) over the rep frame ``reps`` (gid, e): banded LSH at
-    the closed-form width when it can prune, the distributed dense block
-    join when it can't, explicit ``n_bits`` forcing banding at that
-    width."""
-    if n_bits is not None:
-        return _rep_band_pairs(reps, threshold, n_bits)
+def _rep_pairs_for(reps: DataFrame, threshold: float) -> DataFrame:
+    """The regime decision over the rep frame ``reps`` (gid, e): banded
+    LSH at the closed-form width when it can prune, the distributed dense
+    block join when it can't."""
     params = _band_params(threshold)
     if params is None:
         return _rep_dense_pairs(reps)
     return _rep_band_pairs(reps, threshold, params[0])
-
-
-def lsh_candidate_pairs(
-    emb: DataFrame, threshold: float, n_bits: int | None = None
-) -> DataFrame:
-    """Candidate (vec_a, vec_b) pairs, vec_a < vec_b, for cosine >= threshold
-    under banded hyperplane LSH, with q36's exact-dup collapse guard.
-
-    ``n_bits=None`` (default) picks the band width in closed form
-    (_band_params) — and when NO width can prune at this threshold (the
-    dense regime: candidate fraction near 1 or absurd table counts), the
-    rep-level generator degenerates deliberately to the distributed block
-    join (_rep_dense_pairs): at such thresholds the answer itself is
-    pair-dense, so enumeration IS the optimal plan, and banding overhead
-    (L postings + band self-join + distinct) would only be added on top.
-    Passing ``n_bits`` explicitly forces banding at that width.
-
-    ``emb`` must carry (vec_id, e) with e array<double> of width _DIM.
-    Guard: byte-identical embeddings collapse to their min-vec_id
-    representative BEFORE banding, so a corpus of N copies costs one
-    posting, not a C(N,2) hot bucket; dup-group pairs re-enter via an
-    output-bounded group self-join and rep-pair expansion."""
-    reps = _dup_reps(emb)
-    mem = emb.join(reps, "e").select("vec_id", "gid")
-
-    # within-dup-group pairs (cos == 1 after rescore, always >= threshold;
-    # output-bounded: a group of k members owes k*(k-1)/2 result rows anyway)
-    m_a = mem.select(F.col("vec_id").alias("vec_a"), F.col("gid").alias("g"))
-    m_b = mem.select(F.col("vec_id").alias("vec_b"), F.col("gid").alias("g"))
-    within = m_a.join(m_b, "g").filter(F.col("vec_a") < F.col("vec_b")).drop("g")
-
-    rep_pairs = _rep_pairs_for(reps, threshold, n_bits)
-    # expand rep pairs to member pairs (groups are disjoint, so each
-    # unordered member pair appears exactly once; least/greatest orients it)
-    ea = mem.select(F.col("gid").alias("ga"), F.col("vec_id").alias("va"))
-    eb = mem.select(F.col("gid").alias("gb"), F.col("vec_id").alias("vb"))
-    expanded = (
-        rep_pairs.join(ea, "ga")
-        .join(eb, "gb")
-        .select(
-            F.least("va", "vb").alias("vec_a"), F.greatest("va", "vb").alias("vec_b")
-        )
-    )
-    return within.unionByName(expanded)
 
 
 def embedding_near_dup_pairs(
@@ -476,13 +418,12 @@ def embedding_near_dup_pairs(
     """Regime-chosen candidates (banded LSH / dense block join, see
     _band_params) -> exact sequential-fold rescore AT THE REP LEVEL ->
     verified pairs expanded to members (the q36 structure). One lazy
-    DataFrame, no driver-side embedding collect anywhere (contrast the
-    retired GEMM twin below). ``threshold`` parameterizes the gate so the
-    growth harness can measure BOTH regimes on the same replica: at the
-    registered 0.4 the dense block join runs (banding cannot prune —
-    q40); from ~0.8 up (_band_params gives 8 bits x 40 tables at 0.8 and
-    0.75 is still dense at _LSH_DELTA) the banded path prunes and carries
-    the same downstream rescore/expansion.
+    DataFrame, no driver-side embedding collect anywhere. ``threshold``
+    parameterizes the gate so the growth harness can measure BOTH regimes
+    on the same replica: at the registered 0.4 the dense block join runs
+    (banding cannot prune — q40); from ~0.8 up (_band_params gives 8 bits
+    x 40 tables at 0.8 and 0.75 is still dense at _LSH_DELTA) the banded
+    path prunes and carries the same downstream rescore/expansion.
 
     Cosine depends only on content, so byte-identical embeddings rescore
     ONCE per distinct pair and only VERIFIED pairs expand to members —
@@ -502,17 +443,16 @@ def embedding_near_dup_pairs(
     # two legs) — build it ONCE (no plan-build job, so the pure-plan pin
     # holds)
     reps_full = _dup_reps(emb)
-    mem = emb.join(reps_full.select("gid", "e"), "e").select("vec_id", "gid")
     erep = reps_full.select("gid", "e", norm(F.col("e")).alias("n"))
     rep_pairs = _rep_pairs_for(reps_full.select("gid", "e"), threshold)
-    ra = erep.select(F.col("gid").alias("ga"), F.col("e").alias("ea"), F.col("n").alias("na"))
-    rb = erep.select(F.col("gid").alias("gb"), F.col("e").alias("eb"), F.col("n").alias("nb"))
+    ra = erep.select(F.col("gid").alias("a"), F.col("e").alias("ea"), F.col("n").alias("na"))
+    rb = erep.select(F.col("gid").alias("b"), F.col("e").alias("eb"), F.col("n").alias("nb"))
     verified = (
-        rep_pairs.join(ra, "ga")
-        .join(rb, "gb")
+        rep_pairs.join(ra, "a")
+        .join(rb, "b")
         .select(
-            "ga",
-            "gb",
+            "a",
+            "b",
             F.try_divide(
                 dot(F.col("ea"), F.col("eb")), F.col("na") * F.col("nb")
             ).alias("cos_sim"),
@@ -525,37 +465,19 @@ def embedding_near_dup_pairs(
     # try_divide, not /: ANSI division raises on a zero-norm vector, and
     # the oracle's 0/0 is NULL (filtered); NaN flows through >= like the
     # oracle's (both engines order NaN above every number)
-    self_cos = erep.select(
-        F.col("gid").alias("g"),
-        F.try_divide(dot(F.col("e"), F.col("e")), F.col("n") * F.col("n")).alias(
-            "cos_sim"
-        ),
+    self_cos = F.try_divide(dot(F.col("e"), F.col("e")), F.col("n") * F.col("n"))
+    members = emb.join(erep.select("gid", "e", self_cos.alias("cos_sim")), "e").select(
+        F.col("vec_id").alias("id"), F.col("gid").alias("rep"), "cos_sim"
     )
-    m1 = mem.select(F.col("gid").alias("g"), F.col("vec_id").alias("vec_a"))
-    m2 = mem.select(F.col("gid").alias("g"), F.col("vec_id").alias("vec_b"))
-    intra = (
-        m1.join(m2, "g")
-        .filter(F.col("vec_a") < F.col("vec_b"))
-        .join(self_cos, "g")
-        .select("vec_a", "vec_b", "cos_sim")
+    return (
+        expand_groups(members, verified)
         # degenerate duplicates (zero-norm -> NULL self-cosine, NaN-bearing
         # -> NaN) must not leak rows the threshold-filtered oracle never
         # emits; for normal vectors self-cosine ~1.0 always passes
         .filter(F.col("cos_sim") >= threshold)
+        .withColumnsRenamed({"a": "vec_a", "b": "vec_b"})
+        .orderBy("vec_a", "vec_b")
     )
-    # verified rep pairs expanded across their (disjoint) groups
-    xa = mem.select(F.col("gid").alias("ga"), F.col("vec_id").alias("va"))
-    xb = mem.select(F.col("gid").alias("gb"), F.col("vec_id").alias("vb"))
-    expanded = (
-        verified.join(xa, "ga")
-        .join(xb, "gb")
-        .select(
-            F.least("va", "vb").alias("vec_a"),
-            F.greatest("va", "vb").alias("vec_b"),
-            "cos_sim",
-        )
-    )
-    return intra.unionByName(expanded).orderBy("vec_a", "vec_b")
 
 
 @register("q40_embedding_near_dup", oracle=_Q40_ORACLE)

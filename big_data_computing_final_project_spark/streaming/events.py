@@ -1964,6 +1964,7 @@ def _lsh_step(
     near-dup label store there — the batch must then carry (source,
     n_toks)."""
     from ..functions import text as X
+    from ..operators.banding import bucket_pairs, explode_bands
     from ..plans.dedup import _verify_candidate_pairs, band_key_structs
 
     spark = batch.sparkSession
@@ -1985,37 +1986,14 @@ def _lsh_step(
     cur = cur.join(state.select("doc_id"), "doc_id", "left_anti")
     cur = cur.localCheckpoint(eager=True)  # four consumers; shingling is the cost
 
-    def exploded(df: DataFrame, side: str) -> DataFrame:
-        return df.select(F.col("doc_id").alias(side), F.explode("bands").alias("b")).select(
-            side, F.col("b.band").alias(f"band_{side}"), F.col("b.key").alias(f"key_{side}")
-        )
-
-    exb = exploded(cur, "doc_a").localCheckpoint(eager=True)  # both joins consume it
-    # within-batch candidates (doc_a < doc_b orients each pair once)
-    exb2 = exb.select(
-        F.col("doc_a").alias("doc_b"),
-        F.col("band_doc_a").alias("band_doc_b"),
-        F.col("key_doc_a").alias("key_doc_b"),
+    # postings of the batch feed both legs of the within-batch join and
+    # the batch-vs-store join; the store's own pairs were emitted by the
+    # batch that completed them, so only pairs with a new side are sought
+    new = explode_bands(cur, "doc_id", F.col("bands")).localCheckpoint(eager=True)
+    old = explode_bands(state, "doc_id", F.col("bands"))
+    candidates = bucket_pairs(new, against=old).withColumnsRenamed(
+        {"a": "doc_a", "b": "doc_b"}
     )
-    intra = exb.join(
-        exb2,
-        (F.col("band_doc_a") == F.col("band_doc_b"))
-        & (F.col("key_doc_a") == F.col("key_doc_b"))
-        & (F.col("doc_a") < F.col("doc_b")),
-    ).select("doc_a", "doc_b")
-    # batch-vs-store candidates: exactly one side is new, so every stored
-    # pair is emitted exactly once — by the batch that completes it
-    exs = exploded(state, "doc_b")
-    cross = exb.join(
-        exs,
-        (F.col("band_doc_a") == F.col("band_doc_b"))
-        & (F.col("key_doc_a") == F.col("key_doc_b"))
-        & (F.col("doc_a") != F.col("doc_b")),  # no self-pairs, ever
-    ).select(
-        F.least("doc_a", "doc_b").alias("doc_a"),
-        F.greatest("doc_a", "doc_b").alias("doc_b"),
-    )
-    candidates = intra.unionByName(cross).distinct()
     # exact verify on candidates only (the q36 contract): shingle lookup
     # spans this batch plus the stored state
     sh_all = cur.select("doc_id", "sh").unionByName(state.select("doc_id", "sh"))

@@ -420,7 +420,8 @@ def test_q40_planted_high_threshold_prunes(spark):
     catching every planted near-dup pair (the regime the operator exists
     for; the 0.4 gate threshold is the documented low-selectivity edge)."""
     from big_data_computing_final_project_spark.plans.similarity import (
-        lsh_candidate_pairs,
+        _dup_reps,
+        _rep_band_pairs,
     )
 
     emb, planted = _planted_corpus(spark)
@@ -428,11 +429,9 @@ def test_q40_planted_high_threshold_prunes(spark):
     # 8-bit bands: at t=0.95 the formula gives L=13 tables; random pairs
     # collide at ~0.4%/table, so the band join touches a few percent of the
     # pair space (b=4 is the low-threshold default where selectivity is
-    # impossible anyway; band width is the knob, same L-formula)
-    cands = {
-        (r.vec_a, r.vec_b)
-        for r in lsh_candidate_pairs(emb, 0.95, n_bits=8).collect()
-    }
+    # impossible anyway; band width is the knob, same L-formula). No two
+    # vectors are byte-identical, so each representative is its own vec_id.
+    cands = {(r.a, r.b) for r in _rep_band_pairs(_dup_reps(emb), 0.95, 8).collect()}
     for pair in planted:
         assert pair in cands, f"planted near-dup {pair} missed by banding"
     all_pairs = n * (n - 1) // 2
@@ -448,10 +447,10 @@ def test_q40_exact_dup_collapse_guard(spark):
 
     from pyspark.sql import functions as F
 
+    from big_data_computing_final_project_spark.operators.banding import expand_groups
     from big_data_computing_final_project_spark.plans.similarity import (
         _dup_reps,
         _rep_band_pairs,
-        lsh_candidate_pairs,
     )
 
     rng = np.random.default_rng(3)
@@ -471,29 +470,39 @@ def test_q40_exact_dup_collapse_guard(spark):
     )
 
     # 2. the answer is still complete: all C(200,2) copy pairs (vec 0 plus
-    # its 199 clones) are candidates on the planted corpus
-    cands = {(r.vec_a, r.vec_b) for r in lsh_candidate_pairs(planted, 0.95).collect()}
+    # its 199 clones) are candidates on the planted corpus once the
+    # rep-level pairs expand to members
+    reps = _dup_reps(planted)
+    members = planted.join(reps, "e").select(F.col("vec_id").alias("id"), F.col("gid").alias("rep"))
+    cands = {(r.a, r.b) for r in expand_groups(members, _rep_band_pairs(reps, 0.95)).collect()}
     group = [0] + list(range(50, 249))
     for i, a in enumerate(group):
         for b in group[i + 1 :]:
             assert (min(a, b), max(a, b)) in cands
 
 
-def test_lsh_candidate_pairs_builds_dup_collapse_once(spark):
-    """Membership and both generator regimes read ONE cached dup-collapse
-    aggregate: the optimized plan holds no aggregate keyed on the
-    embedding array outside that cached relation."""
+def test_embedding_near_dup_pairs_builds_dup_collapse_once(spark, tmp_path):
+    """Membership, the rep vectors and both generator regimes read ONE
+    cached dup-collapse aggregate: the optimized plan holds no aggregate
+    keyed on the embedding array outside that cached relation."""
     import re
 
+    import pyarrow as pa
+
     from big_data_computing_final_project_spark.plans.similarity import (
-        lsh_candidate_pairs,
+        embedding_near_dup_pairs,
     )
 
-    emb = spark.range(12).selectExpr(
-        "id AS vec_id", "array(cast(id % 9 AS double), 1.0d) AS e"
+    tbl = pa.table(
+        {
+            "vec_id": pa.array(range(12), pa.int64()),
+            "embedding": pa.array([[float(i % 9), 1.0] for i in range(12)], pa.list_(pa.float32())),
+        }
     )
-    for threshold, n_bits in ((0.95, 8), (0.4, None)):
-        plan = lsh_candidate_pairs(emb, threshold, n_bits)._jdf.queryExecution()
+    pq.write_table(tbl, str(tmp_path / "embeddings.parquet"))
+    # 0.95 bands at 8 bits; at 0.4 no width prunes and the dense join runs
+    for threshold in (0.95, 0.4):
+        plan = embedding_near_dup_pairs(spark, str(tmp_path), threshold)._jdf.queryExecution()
         text = plan.optimizedPlan().toString()
         assert not re.search(r"^\W*Aggregate \[e#\d+\]", text, re.M), text
         assert len(set(re.findall(r"HashAggregate\(keys=\[(e#\d+)\]", text))) == 1, text
@@ -507,6 +516,7 @@ def test_q36_planted_copies_bounded_and_exact(spark, sf_dir, tmp_path):
     oracle twin on the same corpus."""
     import pyspark.sql.functions as F
 
+    from big_data_computing_final_project_spark.operators.banding import bucket_pairs
     from big_data_computing_final_project_spark.plans import dedup as D
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -528,7 +538,7 @@ def test_q36_planted_copies_bounded_and_exact(spark, sf_dir, tmp_path):
         groups = D._dup_groups(spark, d)
         rep_ids = groups.filter(F.col("doc_id") == F.col("rep")).select("doc_id")
         sh = D._shingled(spark, d).join(rep_ids, "doc_id")
-        return D._lsh_band_candidates(sh).count()
+        return bucket_pairs(D._band_postings(sh)).count()
 
     assert rep_candidates(planted_dir) == rep_candidates(sf_dir)
 
@@ -689,6 +699,42 @@ def test_bench_broadcast_is_size_guarded(spark, sf_dir, name):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     assert got == expected
+
+
+def test_q37_null_text_documents_pair_with_nothing(spark, sf_dir, tmp_path):
+    """A null-text document has no tokens, so it has no SimHash signature
+    and pairs with nothing (the oracle's unnest emits no row for it). The
+    gate corpora hold no null text; this one adds three null-text copies
+    to the first 30 documents, and q37 must still hash-match its oracle."""
+    import duckdb
+    import pyarrow as pa
+
+    from big_data_computing_final_project_spark.plans import all_oracles
+    from tools.check_oracle import frame_digest
+
+    base = pq.read_table(f"{sf_dir}/documents.parquet").sort_by("doc_id").slice(0, 30)
+    nulls = pa.table(
+        {
+            "doc_id": pa.array([100000, 100001, 100002], pa.int64()),
+            "text": pa.array([None] * 3, pa.string()),
+            "lang": pa.array(["en"] * 3, pa.string()),
+            "source": pa.array(["web"] * 3, pa.string()),
+            "n_chars": pa.array([0] * 3, pa.int64()),
+        }
+    )
+    corpus = pa.concat_tables([base.select(nulls.column_names).cast(nulls.schema), nulls])
+    pq.write_table(corpus, str(tmp_path / "documents.parquet"))
+
+    got = [tuple(r) for r in _Q["q37_simhash_pairs"](spark, str(tmp_path)).collect()]
+    assert not [r for r in got if r[0] >= 100000 or r[1] >= 100000], got
+
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{tmp_path}/documents.parquet'")
+    res = con.sql(all_oracles()["q37_simhash_pairs"])
+    want = res.fetchall()
+    assert frame_digest(["doc_a", "doc_b", "hamming"], got) == frame_digest(
+        [d[0] for d in res.description], want
+    )
 
 
 def test_q146_dup_flow_on_planted_corpus(spark, tmp_path):
@@ -1338,7 +1384,7 @@ def test_q40_dense_pairs_complete(spark):
     emb = spark.range(n).selectExpr(
         "id AS vec_id", "array(cast(id AS double), 1.0d) AS e"
     )
-    got = [(r.ga, r.gb) for r in _rep_dense_pairs(_dup_reps(emb), n_blocks=4).collect()]
+    got = [(r.a, r.b) for r in _rep_dense_pairs(_dup_reps(emb), n_blocks=4).collect()]
     assert len(got) == len(set(got)) == n * (n - 1) // 2
     assert all(a < b for a, b in got)
 

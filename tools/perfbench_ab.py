@@ -12,8 +12,12 @@ falls on both sides alike. Metric names, their direction and
 For each end-to-end metric it prints both sides' median and inclusive
 quartiles, the change of the median, in how many pairs B was better
 ("wins"), and the gap between the medians against A's interquartile
-range. Then the failed-op count, attempted ops and warm-pass count of
-every run, and, last, one JSON line with every run's values.
+range. How many warm passes a run makes depends on its wall time, so
+the two runs of a pair can take their medians over different counts;
+the same summary is printed again over only the pairs whose two runs
+drew the same warm-pass count. Then the
+failed-op count, attempted ops and warm-pass count of every run, and,
+last, one JSON line with every run's values.
 """
 
 from __future__ import annotations
@@ -85,6 +89,14 @@ def summarize(runs_a: list[dict], runs_b: list[dict], metrics: list[dict]) -> li
     return rows
 
 
+def print_summary(runs_a: list[dict], runs_b: list[dict], metrics: list[dict]) -> None:
+    for row in summarize(runs_a, runs_b, metrics):
+        a, b = row["a"], row["b"]
+        print(f"  {row['metric']}: A {a[1]:.3f} ({a[0]:.3f}-{a[2]:.3f}) -> "
+              f"B {b[1]:.3f} ({b[0]:.3f}-{b[2]:.3f}), {row['change']:+.1%}, "
+              f"wins {row['wins']}/{row['pairs']}, |gap| / A IQR {row['gap_over_a_iqr']:.2f}")
+
+
 def main() -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("dir_a")
@@ -110,11 +122,11 @@ def main() -> int:
 
     print(f"{args.workload}: {args.pairs} pairs, seeds {args.seed0}-{args.seed0 + args.pairs - 1}; "
           f"A = {dirs['A']}, B = {dirs['B']}; median (q1-q3), wins = pairs where B is better")
-    for row in summarize(runs["A"], runs["B"], bench["end_to_end"]):
-        a, b = row["a"], row["b"]
-        print(f"  {row['metric']}: A {a[1]:.3f} ({a[0]:.3f}-{a[2]:.3f}) -> "
-              f"B {b[1]:.3f} ({b[0]:.3f}-{b[2]:.3f}), {row['change']:+.1%}, "
-              f"wins {row['wins']}/{row['pairs']}, |gap| / A IQR {row['gap_over_a_iqr']:.2f}")
+    print_summary(runs["A"], runs["B"], bench["end_to_end"])
+    equal = [(a, b) for a, b in zip(runs["A"], runs["B"])
+             if a.get("warm_passes") is not None and a.get("warm_passes") == b.get("warm_passes")]
+    print(f"equal warm-pass pairs only: {len(equal)} of {args.pairs}")
+    print_summary([a for a, _ in equal], [b for _, b in equal], bench["end_to_end"])
     for side in ("A", "B"):
         print(f"  {side} failed per run: {[r['failed'] for r in runs[side]]}, "
               f"attempted: {sorted({r['attempted'] for r in runs[side]}, key=str)}, "
